@@ -31,6 +31,46 @@ final case class KSV[K, S, V](key: K, sort: S, value: V) extends Emit[K, S, V] {
   def sortOpt: Option[S] = Some(sort)
 }
 
+/** One shuffled Layer A record: an emit's key, its sort element (when
+  * the emit has one), its value (once, also when the order uses it)
+  * and, under [[MapReduce.stable]], its arrival as (map-partition
+  * index, offset in the partition). It is the whole shuffle key; the
+  * shuffle value is null. Java serialization writes only a flag byte
+  * and the fields present: no tuples or options, no arrival unless it
+  * is numbered.
+  */
+private[mr] final class ShuffleRec[K, S, V](var key: K, var value: V)
+    extends java.io.Externalizable {
+  var flags: Int = 0
+  var sort: S = _
+  var part: Int = 0
+  var off: Long = 0L
+
+  def this() = this(null.asInstanceOf[K], null.asInstanceOf[V])
+  def hasSort: Boolean = (flags & ShuffleRec.HasSort) != 0
+  private def numbered: Boolean = (flags & ShuffleRec.Numbered) != 0
+
+  def writeExternal(out: java.io.ObjectOutput): Unit = {
+    out.writeByte(flags)
+    out.writeObject(key)
+    if (hasSort) out.writeObject(sort)
+    out.writeObject(value)
+    if (numbered) { out.writeInt(part); out.writeLong(off) }
+  }
+  def readExternal(in: java.io.ObjectInput): Unit = {
+    flags = in.readByte()
+    key = in.readObject().asInstanceOf[K]
+    if (hasSort) sort = in.readObject().asInstanceOf[S]
+    value = in.readObject().asInstanceOf[V]
+    if (numbered) { part = in.readInt(); off = in.readLong() }
+  }
+}
+
+private[mr] object ShuffleRec {
+  final val HasSort = 1
+  final val Numbered = 2
+}
+
 /** Layer A — the reference's execution contract, distributed.
   *
   * tinymr's pipeline (`/root/reference/tinymr.py:156-230`) is
@@ -40,11 +80,12 @@ final case class KSV[K, S, V](key: K, sort: S, value: V) extends Emit[K, S, V] {
   *   - map phase → `rdd.flatMap` (tinymr.py:196-199; the return-vs-yield
   *     dichotomy of the Python API unifies on `IterableOnce`, SURVEY §7.4)
   *   - partition + secondary sort → `repartitionAndSortWithinPartitions`
-  *     with a composite (key, sortKey) ordering and a partitioner that
-  *     hashes only the key — the shuffle's ExternalSorter sorts and can
-  *     SPILL, unlike the reference's driver-resident
-  *     `defaultdict(list)` + `list.sort` (tinymr.py:332-343) which is
-  *     the single-machine wall this build removes
+  *     of one flat [[ShuffleRec]] per emit, ordered by key then sort
+  *     key and partitioned by a hash of the key alone — the shuffle's
+  *     ExternalSorter sorts and can SPILL, unlike the reference's
+  *     driver-resident `defaultdict(list)` + `list.sort`
+  *     (tinymr.py:332-343) which is the single-machine wall this build
+  *     removes
   *   - reduce phase → streaming per-key iterators inside
   *     `mapPartitions` — values of one key never need to fit in a
   *     driver, only in one task
@@ -60,10 +101,14 @@ final case class KSV[K, S, V](key: K, sort: S, value: V) extends Emit[K, S, V] {
   * `KSV` + true → (sort, value).
   *
   * Decided divergences (SURVEY §7.4): arrival order and unsorted
-  * first-per-key are only deterministic under [[stable]] (which pays one
-  * `zipWithIndex` pass to add an arrival-index tiebreaker — Python's
-  * Timsort stability reproduced at cluster scale); empty input returns
-  * an empty result instead of leaking `StopIteration` (tinymr.py:302).
+  * first-per-key are only deterministic under [[stable]], which numbers
+  * each record's arrival as (partition index, offset in the partition)
+  * in the pass that builds it — the order of a global index, with no
+  * extra job — and breaks sort ties on it: Python's Timsort stability
+  * reproduced at cluster scale. On the second round the arrival order
+  * is the reducer's: keys by hash partition, then key order. Empty
+  * input returns an empty result instead of leaking `StopIteration`
+  * (tinymr.py:302).
   */
 abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     V: ClassTag: Ordering] extends Serializable {
@@ -83,12 +128,14 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
   def sortMapReverse: Boolean = false
   def sortReduceReverse: Boolean = false
 
-  /** Reproduce Python's stable sort + insertion order exactly, at the
-    * cost of a `zipWithIndex` pass per shuffle (SURVEY §7.4.3). */
+  /** Reproduce Python's stable sort + insertion order exactly (SURVEY
+    * §7.4.3): ties break on arrival, numbered per record in the pass
+    * that builds it, at the cost of 12 shuffled bytes a record. */
   def stable: Boolean = false
 
   /** Reduce-side parallelism; defaults to the input's partition count
-    * (the reference's analogue: pool size, `docs.rst:355-358`). */
+    * (the reference's analogue: pool size, `docs.rst:355-358`). A value
+    * below 1 is rejected when the job's RDD is built. */
   def numPartitions: Option[Int] = None
 
   /** Driver-side finalization hook (`tinymr.py:93-114`): "Anything!".
@@ -98,56 +145,72 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
 
   // ---------------------------------------------------------------------
 
-  private def parts(rdd: RDD[_]): Int =
-    numPartitions.getOrElse(math.max(rdd.getNumPartitions, 1))
+  private def parts(rdd: RDD[_]): Int = numPartitions match {
+    case Some(n) =>
+      require(n >= 1, s"numPartitions must be at least 1, got $n in ${getClass.getName}")
+      n
+    case None => math.max(rdd.getNumPartitions, 1)
+  }
 
   /** One partition+secondary-sort round (`tinymr.py:278-345`,
-    * distributed). Emits per-key streaming iterators grouped from a
-    * shuffle sorted on (key, sortKey[, arrivalIdx]).
+    * distributed): each emit becomes one [[ShuffleRec]], the whole
+    * shuffle key, sorted by [[recOrdering]] and partitioned by its key
+    * alone. Emits per-key streaming iterators. Under [[stable]] arrivals
+    * are numbered in the same pass, as (partition index, offset).
     */
   private def shuffle(emits: RDD[Emit[K, S, V]], withValue: Boolean,
       reverse: Boolean, n: Int): RDD[(K, Iterator[V])] = {
-    val kOrd = implicitly[Ordering[K]]
-    val sOrd = implicitly[Ordering[S]]
-    val vOrd = implicitly[Ordering[V]]
-
-    // Composite sort key: (Option[S] sort element, Option[V] value) —
-    // None sorts first, matching "absent" (never compared against Some
-    // in a homogeneous stream, which is the only defined behavior:
-    // mixed-arity streams are UB in the reference too [SURVEY §1.2]).
-    val sortPart: Ordering[(Option[S], Option[V])] = {
-      implicit val so: Ordering[Option[S]] = Ordering.Option(sOrd)
-      implicit val vo: Ordering[Option[V]] = Ordering.Option(vOrd)
-      Ordering.Tuple2(so, vo)
-    }
-    val dir = if (reverse) sortPart.reverse else sortPart
-
-    val indexed: RDD[(Emit[K, S, V], Long)] =
-      if (stable) emits.zipWithIndex()
-      else emits.map(e => (e, 0L))
-
-    type CK = (K, (Option[S], Option[V]), Long) // key, sortKey, arrival
-    val keyed: RDD[(CK, V)] = indexed.map { case (e, idx) =>
-      val sk = (e.sortOpt, if (withValue) Some(e.value) else None)
-      ((e.key, sk, idx), e.value)
+    val numbered = stable
+    val recs: RDD[(ShuffleRec[K, S, V], Null)] = emits.mapPartitionsWithIndex { (p, it) =>
+      var off = -1L
+      it.map { e =>
+        val r = new ShuffleRec[K, S, V](e.key, e.value)
+        e match {
+          case KSV(_, s, _) => r.flags = ShuffleRec.HasSort; r.sort = s
+          case _ =>
+        }
+        if (numbered) { off += 1; r.flags |= ShuffleRec.Numbered; r.part = p; r.off = off }
+        (r, null)
+      }
     }
     val partitioner = new HashPartitioner(n) {
       override def getPartition(key: Any): Int =
-        super.getPartition(key.asInstanceOf[CK]._1)
+        super.getPartition(key.asInstanceOf[ShuffleRec[K, S, V]].key)
     }
-    implicit val ck: Ordering[CK] = new Ordering[CK] {
-      def compare(a: CK, b: CK): Int = {
-        val c1 = kOrd.compare(a._1, b._1)
+    implicit val ord: Ordering[ShuffleRec[K, S, V]] = recOrdering(withValue, reverse)
+    val kOrd = implicitly[Ordering[K]]
+    recs.repartitionAndSortWithinPartitions(partitioner)
+      .mapPartitions(it => groupConsecutive(it.map(_._1))(kOrd), preservesPartitioning = true)
+  }
+
+  /** The shuffle's sort order: the key; then absent sort element before
+    * present, the sort element, and the value when `withValue`, this
+    * part reversed as a unit under `reverse`; then arrival ascending,
+    * never reversed (equal under no [[stable]]), so reversed ties keep
+    * arrival order as Python's stable `sort(reverse=True)` does.
+    */
+  private def recOrdering(withValue: Boolean,
+      reverse: Boolean): Ordering[ShuffleRec[K, S, V]] = {
+    val kOrd = implicitly[Ordering[K]]
+    val sOrd = implicitly[Ordering[S]]
+    val vOrd = implicitly[Ordering[V]]
+    val rev = reverse // `reverse` inside the Ordering is its own method
+    new Ordering[ShuffleRec[K, S, V]] {
+      private def sortPart(a: ShuffleRec[K, S, V], b: ShuffleRec[K, S, V]): Int =
+        if (a.hasSort != b.hasSort) { if (a.hasSort) 1 else -1 }
+        else {
+          val c = if (a.hasSort) sOrd.compare(a.sort, b.sort) else 0
+          if (c != 0 || !withValue) c else vOrd.compare(a.value, b.value)
+        }
+      def compare(a: ShuffleRec[K, S, V], b: ShuffleRec[K, S, V]): Int = {
+        val c1 = kOrd.compare(a.key, b.key)
         if (c1 != 0) return c1
-        val c2 = dir.compare(a._2, b._2)
+        val c2 = if (rev) sortPart(b, a) else sortPart(a, b)
         if (c2 != 0) return c2
-        java.lang.Long.compare(a._3, b._3) // arrival tiebreak (stable)
+        val c3 = Integer.compare(a.part, b.part)
+        if (c3 != 0) c3 else java.lang.Long.compare(a.off, b.off)
       }
     }
-    keyed.repartitionAndSortWithinPartitions(partitioner)
-      .mapPartitions({ it =>
-        groupConsecutive(it.map { case ((k, _, _), v) => (k, v) })(kOrd)
-      }, preservesPartitioning = true)
   }
 
   /** Group a key-sorted record iterator into per-key value iterators
@@ -155,7 +218,7 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     * consumed (or abandoned) before the outer advances — guaranteed by
     * construction here since we drain leftovers on advance.
     */
-  private def groupConsecutive(it: Iterator[(K, V)])(
+  private def groupConsecutive(it: Iterator[ShuffleRec[K, S, V]])(
       kOrd: Ordering[K]): Iterator[(K, Iterator[V])] =
     new Iterator[(K, Iterator[V])] {
       private val buf = it.buffered
@@ -163,10 +226,10 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
       def hasNext: Boolean = { while (current.hasNext) current.next(); buf.hasNext }
       def next(): (K, Iterator[V]) = {
         while (current.hasNext) current.next()
-        val k = buf.head._1
+        val k = buf.head.key
         current = new Iterator[V] {
-          def hasNext: Boolean = buf.hasNext && kOrd.equiv(buf.head._1, k)
-          def next(): V = buf.next()._2
+          def hasNext: Boolean = buf.hasNext && kOrd.equiv(buf.head.key, k)
+          def next(): V = buf.next().value
         }
         (k, current)
       }
@@ -223,7 +286,7 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
       ve: org.apache.spark.sql.Encoder[V]): Unit = {
     implicit val tupleEnc: org.apache.spark.sql.Encoder[(K, V)] =
       org.apache.spark.sql.Encoders.tuple(ke, ve)
-    spark.createDataset(run(rdd).flatMap { case (k, vs) => vs.map((k, _)) })
+    spark.createDataset(secondRound(rdd).flatMap { case (k, vs) => vs.map((k, _)) })
       .toDF("key", "value")
       .write.mode("overwrite").format(format).options(options).save(path)
   }

@@ -88,6 +88,10 @@ class FilterWC extends WC {
     if (line.contains("python")) Iterator.empty else super.mapper(line)
 }
 
+class FixedPartsWC(n: Int) extends WC {
+  override def numPartitions = Some(n)
+}
+
 class Top3WC extends WC {
   override def output(m: ListMap[String, Seq[Long]]): Any =
     m.view.mapValues(_.head).toSeq.sortBy(p => (-p._2, p._1)).take(3)
@@ -181,6 +185,46 @@ class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Seq("z", "x", "y", "w"))
   }
 
+  test("stable keeps input order of tied sort keys across input partitions, in one job") {
+    val recs = (0 until 40).map(i => (i % 2, s"v$i"))
+    val inOrder = recs.sortBy(_._1).map(_._2) // stable: ties keep input order
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("stable", "stable run")
+      val got = new SortElem().run(sc.parallelize(recs, 4)).collect().toMap.apply("k")
+      sc.setJobGroup("stable-reverse", "stable reverse run")
+      val rev = new SortElem(mapRev = true).run(sc.parallelize(recs, 4)).collect().toMap.apply("k")
+      sc.setJobGroup("sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      // listener events arrive in order: once the sentinel is seen, so is every run
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobGroups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(got == inOrder)
+      assert(rev == recs.sortBy(-_._1).map(_._2))
+      import scala.jdk.CollectionConverters._
+      for (g <- Seq("stable", "stable-reverse"))
+        assert(jobGroups.asScala.count(_ == g) == 1, s"jobs by group: $jobGroups")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("numPartitions below 1 is rejected when the job is built, naming the setting") {
+    for (n <- Seq(0, -2)) {
+      val ex = intercept[IllegalArgumentException] {
+        new FixedPartsWC(n).run(sc.parallelize(text, 2))
+      }
+      assert(ex.getMessage.contains("numPartitions") && ex.getMessage.contains(s"got $n") &&
+        ex.getMessage.contains("FixedPartsWC"), ex.getMessage)
+    }
+    val got = new FixedPartsWC(1).run(sc.parallelize(text, 2)).collect().toMap
+    assert(got("word") == Seq(2L))
+  }
+
   test("return-style collapse keeps first value per key; with sort = arg-min/max [verified]") {
     val data = Seq((2, "bbb"), (1, "a"), (3, "cc"))
     val asc = new CollapseJob(false).runCollapsed(sc.parallelize(data, 2)).collect().toMap
@@ -211,6 +255,15 @@ class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
     new WC().write(spark, sc.parallelize(text, 2), tmp)
     val back = spark.read.parquet(tmp).as[(String, Long)].collect().toMap
     assert(back("word") == 2L && back("python") == 1L)
+  }
+
+  test("write() emits every value of a multi-value key as its own row") {
+    import spark.implicits._
+    val data = (0 until 30).map(i => (if (i % 3 == 0) "a" else "b", i))
+    val tmp = graft.core.Staging.tempAtExit("graft_mr_rows_")
+    new PassThrough().write(spark, sc.parallelize(data, 3), tmp)
+    val back = spark.read.parquet(tmp).as[(String, Int)].collect()
+    assert(back.sorted.toSeq == data.sorted)
   }
 
   test("write() reaches the full connector matrix: CSV and ORC round-trip") {
