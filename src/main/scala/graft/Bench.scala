@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (a bare count() would let Catalyst prune computed columns),
@@ -11,25 +9,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // persistent (derby-backed) catalog anchored at the working dir:
-      // bucketed/partitioned layouts (q35/q36) are written once and
-      // survive JVMs, so steady-state runs pay only the join, not the
-      // layout. (Embedded derby is single-process — Bench and Verify
-      // must not run concurrently in one checkout.)
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("user.dir")}/spark-warehouse")
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${System.getProperty("user.dir")}/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.build(cpus, hive = true)
 
     def execOnce(name: String): Double = {
       val t0 = System.nanoTime()
@@ -252,7 +233,7 @@ object Bench {
       // (BenchPrior.intraCpuCompatible; artifacts predating the cpus
       // field pass, local sweeps are constant-core)
       .filter { p =>
-        val ok = try BenchPrior.intraCpuCompatible(readText(p), sfDir, cpus.toInt)
+        val ok = try BenchPrior.intraCpuCompatible(readText(p), sfDir, cpus)
           catch { case scala.util.control.NonFatal(_) => true }
         if (!ok) note(s"intra-round prior $p records a different core " +
           s"count — skipped (cross-cpu diffs are machine shape, not weather)")
@@ -297,7 +278,7 @@ object Bench {
     val fullLine = BenchPrior.renderFullLine(total, results, sfDir,
       calibStart, calibEnd, diskMbps, calibs.toSeq, flags, priorPaths,
       flagsIntra, intraPath, base = priorQ, retries = flagRetries,
-      cpus = cpus.toInt)
+      cpus = cpus)
     println(fullLine)
     // persist the full-precision line as the next round's driver-kind
     // prior — round-keyed (BENCH_full_driver_r{N}_{sf}.json, ADVICE

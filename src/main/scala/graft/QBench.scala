@@ -1,29 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (Bench's little sibling): time just the queries named on
   * the command line against SPARK_GRAFT_SF_DIR, two passes each
   * (report both), so a single operator can be iterated on without
   * paying the full 207-query suite. Same session config as Bench
   * minus the Hive catalog (none of the streaming/dedup gates need
-  * it, and skipping derby keeps concurrent use safe).
+  * it, and skipping derby keeps concurrent use safe). Cores come from
+  * `SPARK_GRAFT_CPUS` (default 4, see [[Session.cpus]]); export
+  * `SPARK_GRAFT_CPUS=32` to time a query as the SCALE and STORE
+  * series run it.
   */
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // dev-only A/B hook: GRAFT_CONF="k=v;k=v" applies session confs so
-    // a knob (spread width, store buckets, state partitions) can be
-    // A/B-measured same-boot without recompiling. Bench never reads it.
+    // a knob (e.g. store buckets) can be A/B-measured same-boot without
+    // recompiling. Bench never reads it.
     sys.env.get("GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (Bench/Plans' sibling): measured scale evidence for the
@@ -27,6 +26,9 @@ import org.apache.spark.sql.functions._
   * the fixed per-job overhead that makes 10× ratios sub-linear, so
   * healthy ratios sit near TRUE linearity (≈100× work for 100×
   * data) — the signal is anything well ABOVE ~100×.
+  *
+  * The SCALE series runs on 32 cores: export `SPARK_GRAFT_CPUS=32`
+  * (the default is [[Session.cpus]]' 4).
   */
 object ScaleProbe {
   /** The staging key for `src`'s synthesized twins — scheme version +
@@ -60,15 +62,7 @@ object ScaleProbe {
         val ps = pfx.split(','); n => ps.exists(n.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     val src = "/root/testdata/sf0.1"
     // EQUAL-LAYOUT baseline: the shipped sf0.1 documents.parquet is a
     // single file (one row group → ONE task owns every narrow stage),

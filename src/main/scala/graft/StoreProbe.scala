@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (ScaleProbe's streaming sibling): measured evidence that
@@ -29,6 +29,11 @@ import org.apache.spark.sql.functions._
   * Corpus: the ScaleProbe 10× twin when already staged (50k docs —
   * big enough that store growth, not fixed overhead, is what the
   * series measures), else the sf0.1 fixture.
+  *
+  * The STORE series runs on 32 cores: export `SPARK_GRAFT_CPUS=32`
+  * (the default is [[Session.cpus]]' 4). `SPARK_GRAFT_CENSUS=false`
+  * A/Bs the catalog-backed file index (build.sbt passes it to every
+  * forked main).
   */
 object StoreProbe {
   def main(args: Array[String]): Unit = {
@@ -59,23 +64,8 @@ object StoreProbe {
     // degrading with all of history
     val tomb = args.lift(4).contains("tomb")
     val tombMid = args.lift(4).contains("tombmid")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     buckets.foreach(b => spark.conf.set("spark.graft.storeBuckets", b.toString))
-    // SPARK_GRAFT_CENSUS=false A/Bs the catalog-backed file index
-    // itself (reads take the raw listing path; semantics unchanged)
-    sys.env.get("SPARK_GRAFT_CENSUS").foreach { v =>
-      require(v.equalsIgnoreCase("true") || v.equalsIgnoreCase("false"),
-        s"SPARK_GRAFT_CENSUS must be true or false, got '$v'")
-      spark.conf.set("spark.graft.storeCensus.enabled", v.toLowerCase)
-    }
     graft.functions.VectorExpressions.register(spark)
 
     // resolve the CURRENT scheme's 10× twin via ScaleProbe's staging

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,34 +12,7 @@ object Verify {
         val ps = pfx.split(','); n => ps.exists(n.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same persistent catalog as Bench — see Bench.scala
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("user.dir")}/spark-warehouse")
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${System.getProperty("user.dir")}/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CENSUS=false A/Bs the catalog-backed store file
-    // index at the CORRECTNESS gate itself (StoreProbe's hook,
-    // mirrored): the driver never sets it, so default runs are
-    // untouched; a local `st2` subset run both ways + a hash compare
-    // is the all-gates kill-switch equivalence artifact (CENSUS_AB)
-    // validate at SET time: the conf is read via .toBoolean inside
-    // lookup(), a probe path that is contractually never supposed to
-    // throw — a typo'd env var must fail HERE, next to its cause, not
-    // as an IllegalArgumentException out of a census probe (ADVICE r13)
-    sys.env.get("SPARK_GRAFT_CENSUS").foreach { v =>
-      require(v.equalsIgnoreCase("true") || v.equalsIgnoreCase("false"),
-        s"SPARK_GRAFT_CENSUS must be true or false, got '$v'")
-      spark.conf.set("spark.graft.storeCensus.enabled", v.toLowerCase)
-    }
+    val spark = Session.build(hive = true)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

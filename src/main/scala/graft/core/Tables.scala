@@ -30,19 +30,8 @@ object Tables {
     * no-op branch, so no shuffle is ever added at scale: this is
     * fixture-layout adaptation, not a plan change.
     */
-  /** Spread width: defaultParallelism (every core busy) unless the
-    * deployment overrides via spark.graft.spreadParts — the knob a
-    * cluster uses to size fixture-layout adaptation to its own core
-    * count/overhead trade (per-stage cost is tasks × rounds for the
-    * iterative consumers).
-    */
-  private def spreadWidth(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("spark.graft.spreadParts")
-      .map(_.toInt)
-      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-
   def spread(df: DataFrame): DataFrame = {
-    val cores = spreadWidth(df)
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     // probe the layout via inputFiles, NOT df.rdd: under AQE,
     // Dataset.rdd materializes every upstream query stage at
     // construction time (silent double execution for any frame with
@@ -69,7 +58,7 @@ object Tables {
     */
   def spreadRows(df: DataFrame): DataFrame = {
     val sp = df.sparkSession
-    val cores = spreadWidth(df)
+    val cores = sp.sparkContext.defaultParallelism
     if (df.inputFiles.length < cores)
       sp.createDataFrame(df.rdd.repartition(cores), df.schema)
     else df
@@ -92,7 +81,7 @@ object Tables {
     * generations of the test data load identically.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(s)
     val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -104,6 +93,12 @@ object Tables {
       case _ => raw // already a session-tz timestamp
     }
   }
+  /** Read parquet TIMESTAMP(NANOS) as a long for every later scan of
+    * this session. Set, not scoped: a returned scan reads it lazily at
+    * execution time, after any scope around the call has closed. */
+  private[graft] def readNanosAsLong(s: SparkSession): Unit =
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

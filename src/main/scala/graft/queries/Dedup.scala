@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Confs
 import graft.core.Tables
 
 /** Deduplication operators over `documents` — the core of any
@@ -324,15 +325,12 @@ object Dedup {
     // joins and the walk's per-iteration shuffles by ccBody's
     // edge-count formula, and run the walk EAGERLY inside the scope
     // (UnionLoop reads the conf at execution; a lazily-returned frame
-    // would execute after the finally restored it). The eager result
+    // would execute after the scope closed). The eager result
     // is component labels over pair-graph nodes only — tiny, cached,
     // released via the registry like ccBody's output.
     val sess = pairs.sparkSession
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = sess.conf.get(spKey)
-    sess.conf.set(spKey, math.max(1L, math.min(
-      sess.sparkContext.defaultParallelism.toLong, nPairs / 50000L + 1)).toString)
-    try {
+    Confs.shufflePartitionsAtMost(sess, math.min(
+      sess.sparkContext.defaultParallelism.toLong, nPairs / 50000L + 1).toInt) {
     // component labels via the same BSP loop d07 ships (ccBody: no
     // entry releaseCaches, which would drop the pair cache above)
     val labels = ccBody(pairs, reuseCallerCache = true,
@@ -402,7 +400,7 @@ object Dedup {
     out.count()
     registerRelease(() => { out.unpersist(); () })
     out
-    } finally sess.conf.set(spKey, spPrev)
+    }
   }
 
   /** Min-label propagation over an undirected pair list (doc_a, doc_b)
@@ -445,13 +443,9 @@ object Dedup {
     // magnitude smaller. Size the round shuffles by the SAME edge-count
     // formula as nParts (scale-adaptive, not a constant): at 32 cores
     // the 32-reducer rounds measured ~0.5 s/query slower than
-    // edge-sized ones for identical labels. Restored in finally —
-    // callers' own plans never see the override.
-    val sess = pairs.sparkSession
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = sess.conf.get(spKey)
-    sess.conf.set(spKey, math.min(spPrev.toInt, nParts).toString)
-    try {
+    // edge-sized ones for identical labels. Scoped — callers' own
+    // plans never see the override.
+    Confs.shufflePartitionsAtMost(pairs.sparkSession, nParts) {
     val edges = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst").repartition(nParts, col("dst")).cache()
     val base = edges.select(col("src").as("node")).distinct()
@@ -542,7 +536,7 @@ object Dedup {
     if (!reuseCallerCache) pairs.unpersist()
     registerRelease(() => out.unpersist())
     out
-    } finally sess.conf.set(spKey, spPrev)
+    }
   }
 
   /** INCREMENTAL near-dup detection — dedupe an arriving batch against

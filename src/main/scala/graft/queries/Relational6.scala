@@ -38,7 +38,6 @@ object Relational6 {
     * invocation here only because the gate is stateless.)
     */
   def q35BucketedJoin(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.sources.bucketing.enabled", "true")
     // Bucket tables are keyed by input dir and written once — the whole
     // point of bucketing is paying the layout cost once and joining
     // shuffle-free forever after.

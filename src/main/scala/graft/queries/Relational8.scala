@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Confs
 import graft.core.Tables
 
 /** Eighth tranche — the round-2 deferred list plus pipeline staples:
@@ -51,13 +52,8 @@ object Relational8 {
       .select(col("c_custkey"),
         (col("c_acctbal") + coalesce(col("dlt"), lit(0.0))).as("c_acctbal"),
         col("c_nationkey"))
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("c_nationkey").parquet(tmp)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    Confs.scoped(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+      merged.write.mode("overwrite").partitionBy("c_nationkey").parquet(tmp))
     s.read.parquet(tmp)
       .groupBy(col("c_nationkey").cast("long").as("nation"))
       .agg(count(lit(1)).as("n_customers"),
@@ -183,13 +179,8 @@ object Relational8 {
     val active = Tables.orders(s, d).select(col("o_custkey")).distinct()
     val survivors = base.filter(col("c_nationkey") < 5)
       .join(active, base("c_custkey") === active("o_custkey"), "left_semi")
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.mode("overwrite").partitionBy("c_nationkey").parquet(tmp)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    Confs.scoped(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+      survivors.write.mode("overwrite").partitionBy("c_nationkey").parquet(tmp))
     s.read.parquet(tmp)
       .groupBy(col("c_nationkey").cast("long").as("nation"))
       .agg(count(lit(1)).as("n_customers"),

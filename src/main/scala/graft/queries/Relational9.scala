@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Confs
 import graft.core.Tables
 
 /** Ninth tranche — lakehouse/table-maintenance staples: schema
@@ -203,22 +204,16 @@ object Relational9 {
       .groupBy(col("k"), col("brand"))
       .agg(count(lit(1)).as("n_rows"),
         round(sum(col("l_extendedprice")), 2).as("revenue"))
-    val keys = Seq(
+    Confs.scoped(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> thresholdBytes.toString,
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisoryBytes.toString,
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val out = joined.localCheckpoint() // materializes under the confs
       (out, joined.queryExecution.executedPlan.toString)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Confs
 import graft.core.Tables
 
 /** Structured Streaming extension (SURVEY §2.3: "streaming" has no
@@ -21,7 +22,7 @@ object EventStreams {
   private val EventsSchema =
     "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
 
-  /** Run `body` with shuffle partitions capped (default 4): every
+  /** Shuffle-partition cap for the stateful gates: every
     * stateful streaming operator instantiates one state store PER
     * shuffle partition PER micro-batch, so partition count here is a
     * fixed per-batch cost, not parallelism — at these gates' state
@@ -31,19 +32,14 @@ object EventStreams {
     * st13 5.65→4.14 s, st10 6.40→5.50, st04 5.74→4.94, st12
     * 2.44→1.92) — the commit cost keeps dominating until state
     * volume, not CPU, says otherwise. Production sizing is the same
-    * exercise against state volume via spark.graft.statePartitions
-    * (the cap never RAISES the session's own setting — a 4-core
-    * session keeps its 4). Restores the session's batch setting
-    * afterwards.
+    * exercise against state volume. The cap never RAISES the
+    * session's own setting — a 2-core session keeps its 2.
     */
-  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val cap = s.conf.getOption("spark.graft.statePartitions")
-      .map(_.toInt).getOrElse(4)
-    s.conf.set(key, math.min(cap, prev.toInt).toString)
-    try body finally s.conf.set(key, prev)
-  }
+  private val StatePartitions = 4
+
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Whole-file replay source (st01/st05/st06): the file stream source
     * requires a directory, so stage a symlink to the single
@@ -53,7 +49,7 @@ object EventStreams {
     * rebuild micros in-plan) and TIMESTAMP(MICROS) (native timestamp).
     */
   private def eventsFileStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.readNanosAsLong(s)
     val schema = s.read.parquet(s"$d/events.parquet").schema
     // registry deletion is symlink-safe (Staging.deleteTree): only the
     // LINK is removed at exit — the read-only source dataset behind it
@@ -193,7 +189,7 @@ object EventStreams {
     * The default HDFSBackedStateStoreProvider keeps every partition's
     * ENTIRE key map as JVM-heap objects: state capacity is bounded by
     * executor heap, and large maps stress GC (the same
-    * state-volume-not-CPU sizing argument as withStatePartitions
+    * state-volume-not-CPU sizing argument as StatePartitions
     * above). RocksDB keeps the working set in native memory backed by
     * local SST files with incremental snapshot upload — the standard
     * provider once keyed state (here: open sessions per user; at
@@ -202,17 +198,9 @@ object EventStreams {
     * state machine, so the result — and the oracle — is exactly
     * st04's.
     */
-  def st14RocksdbSessions(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try statefulSessions(s, d, "st14_sink")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def st14RocksdbSessions(s: SparkSession, d: String): DataFrame =
+    Confs.scoped(s, StateStoreProvider -> RocksDbProvider)(
+      statefulSessions(s, d, "st14_sink"))
 
   private def statefulSessions(s: SparkSession, d: String, name: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -789,11 +777,7 @@ object EventStreams {
   def st18TransformWithState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Confs.scoped(s, StateStoreProvider -> RocksDbProvider) {
       val stream = eventsChunkStream(s, d)
         .select(col("user_id"), unix_micros(col("ts")).as("tus"))
         .as[(Long, Long)]
@@ -808,9 +792,6 @@ object EventStreams {
         .agg(max(col("n_events")).as("n_events"),
           min(col("first_us")).as("first_us"),
           max(col("last_us")).as("last_us"))
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -935,8 +916,12 @@ object EventStreams {
     * dominating scan growth).
     */
   private[graft] def StoreBuckets: Int =
-    org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.storeBuckets").map(_.toInt).getOrElse(16)
+    Confs.posInt(SparkSession.active, "spark.graft.storeBuckets", 16)
+
+  /** Above this many candidate rows a micro-batch keeps its candidates
+    * distributed instead of staging them on the driver. */
+  private def candFunnelMax(s: SparkSession): Int =
+    Confs.posInt(s, "spark.graft.candFunnelMax", 100000)
 
   private[graft] def bucketOf(keys: Column*): Column =
     pmod(hash(keys: _*), lit(StoreBuckets))
@@ -1401,8 +1386,7 @@ object EventStreams {
             // with no broadcast of either unbounded side
             // (spec-pinned: both answer equality AND the no-hint plan
             // property).
-            val funnelMax = sp.conf.getOption("spark.graft.candFunnelMax")
-              .map(_.toInt).getOrElse(100000)
+            val funnelMax = candFunnelMax(sp)
             // STAGING SHAPE, third iteration (each measured): r8's
             // bare collect() was ONE job but unbounded driver intake;
             // r9's limit(max+1).collect() bounded intake but lowers
@@ -1771,9 +1755,7 @@ object EventStreams {
     // micro-batch, but a bulk-backfill batch must not ride the
     // driver/broadcast path; above the threshold both joins run
     // shuffle-side
-    val big = bcnt.map(_.getLong(1)).sum >
-      sp.conf.getOption("spark.graft.candFunnelMax")
-        .map(_.toLong).getOrElse(100000L)
+    val big = bcnt.map(_.getLong(1)).sum > candFunnelMax(sp)
     // cached: the slice feeds BOTH consumers below (prior-frequency
     // aggregate and cross-batch pair join) — without the cache the
     // two subplans would scan the pruned files twice per batch
@@ -2044,7 +2026,7 @@ object EventStreams {
   }
 
   private def gated(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => withStatePartitions(s)(fn(s, d))
+    (s, d) => Confs.shufflePartitionsAtMost(s, StatePartitions)(fn(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st27_cdc_refresh" -> gated(st27CdcRefresh),

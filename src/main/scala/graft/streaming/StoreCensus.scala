@@ -232,10 +232,10 @@ private[graft] object StoreCensus {
     * the deployment's kill switch, not treat it as unset. TOTAL by
     * construction: lookup() is a probe path that contractually never
     * throws, so only a case-insensitive "false" disables — any other
-    * value (a typo'd conf set programmatically, bypassing the
-    * operator-facing validation in Verify/StoreProbe) leaves the
-    * default ON rather than detonating .toBoolean inside a census
-    * probe far from the misconfiguration. */
+    * value (a typo'd conf set programmatically, bypassing build.sbt's
+    * validation of SPARK_GRAFT_CENSUS) leaves the default ON rather
+    * than detonating .toBoolean inside a census probe far from the
+    * misconfiguration. */
   private def enabled: Boolean =
     !org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)

@@ -14,18 +14,26 @@ import org.scalatest.BeforeAndAfterAll
 class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cpus = 4)
   override def afterAll(): Unit = spark.stop()
+
+  /** The one key a query may leave set: `Tables.events` and the events
+    * file stream set it for the scan they return, and that scan reads
+    * it lazily at execution time, after any scope around the call has
+    * closed. */
+  val confLeakAllowed = Set("spark.sql.legacy.parquet.nanosAsLong")
 
   test("every SparkEntry query executes at sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, sf).collect(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+      val before = spark.conf.getAll
+      val failed =
+        try { fn(spark, sf).collect(); None }
+        catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k) && !confLeakAllowed(k))
+      failed ++ Option.when(changed.nonEmpty)(
+        s"$name leaves session conf changed: ${changed.toSeq.sorted.mkString(", ")}")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
@@ -37,6 +45,53 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("Confs.scoped restores prior values and unsets new keys, also when body throws") {
+    val (k1, k2) = ("spark.graft.test.scopedA", "spark.graft.test.scopedB")
+    spark.conf.set(k1, "prior")
+    try for (fail <- Seq(false, true)) {
+      val r = scala.util.Try(Confs.scoped(spark, k1 -> "x", k2 -> "y") {
+        assert(spark.conf.get(k1) == "x" && spark.conf.get(k2) == "y")
+        if (fail) throw new IllegalStateException("body failed")
+      })
+      assert(r.isFailure == fail, r)
+      assert(spark.conf.get(k1) == "prior")
+      assert(!spark.conf.getAll.contains(k2))
+    } finally spark.conf.unset(k1)
+    // a registered key left at its default stays unset afterwards, not
+    // set explicitly to the default
+    val reg = "spark.sql.sources.partitionOverwriteMode"
+    assert(!spark.conf.getAll.contains(reg))
+    Confs.scoped(spark, reg -> "dynamic")(
+      assert(spark.conf.get(reg).equalsIgnoreCase("dynamic")))
+    assert(!spark.conf.getAll.contains(reg))
+  }
+
+  test("Confs.shufflePartitionsAtMost caps but never raises the session's value") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    Confs.scoped(spark, key -> "1") {
+      Confs.shufflePartitionsAtMost(spark, 3)(assert(spark.conf.get(key) == "1"))
+      assert(spark.conf.get(key) == "1")
+    }
+    Confs.shufflePartitionsAtMost(spark, 2)(assert(spark.conf.get(key) == "2"))
+    assert(spark.conf.get(key) == prior)
+  }
+
+  test("Confs.posInt rejects non-numeric and non-positive values, naming the key") {
+    val key = "spark.graft.test.posInt"
+    assert(Confs.posInt(spark, key, 7) == 7)
+    Confs.scoped(spark, key -> "12")(assert(Confs.posInt(spark, key, 7) == 12))
+    for (bad <- Seq("abc", "0", "-3")) Confs.scoped(spark, key -> bad) {
+      val e = intercept[IllegalArgumentException](Confs.posInt(spark, key, 7))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    // the store knob reads through it
+    Confs.scoped(spark, "spark.graft.storeBuckets" -> "0") {
+      val e = intercept[IllegalArgumentException](graft.streaming.EventStreams.StoreBuckets)
+      assert(e.getMessage.contains("spark.graft.storeBuckets"), e.getMessage)
+    }
   }
 
   test("BuildInfo exposes version metadata (tests/test_packaging.py analogue)") {

@@ -45,11 +45,7 @@ class GoldenKeyCount extends MapReduce[String, Int, String, String] {
   */
 class GoldenCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cpus = 4)
   override def afterAll(): Unit = spark.stop()
   def sc = spark.sparkContext
 

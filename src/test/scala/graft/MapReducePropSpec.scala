@@ -107,11 +107,7 @@ object SerialMR {
   */
 class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cpus = 4)
   override def afterAll(): Unit = spark.stop()
   def sc = spark.sparkContext
 

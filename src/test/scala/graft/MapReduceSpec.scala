@@ -106,11 +106,7 @@ class Top3WC extends WC {
   */
 class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cpus = 4)
   override def afterAll(): Unit = spark.stop()
   def sc = spark.sparkContext
 
@@ -310,11 +306,7 @@ class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
   * replaces the reference's pool matrix — Spark owns parallelism).
   */
 class ShapeMatrixSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cpus = 4)
   override def afterAll(): Unit = spark.stop()
   def sc = spark.sparkContext
 

@@ -129,12 +129,7 @@ object GraftTestFs {
 class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = {
-    val sp = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sp = Session.build(cpus = 4)
     // test schemes, installed at runtime so an already-running shared
     // session picks them up too: graftfs = counting/failing local FS;
     // s3a = the same class standing in for an object store, so the
