@@ -89,9 +89,18 @@ private[mr] object ShuffleRec {
   *   - reduce phase → streaming per-key iterators inside
   *     `mapPartitions` — values of one key never need to fit in a
   *     driver, only in one task
+  *   - optional map-side [[combiner]]: the reference's `Counter`
+  *     pre-aggregation idiom (`docs.rst:236-246`, SURVEY §2.2) as a job
+  *     member, folding each map task's emits per key before the first
+  *     shuffle
   *   - second shuffle round with independent flags (tinymr.py:217-221)
   *   - first-per-key collapse for return-style reducers
-  *     (tinymr.py:223-227) → `runCollapsed`
+  *     (tinymr.py:223-227) → `runCollapsed`, which also keeps, from
+  *     each run of consecutive equal-key reducer emits, only the least
+  *     under the second round's order before that round's shuffle: the
+  *     first value per key after the sort is the minimum under that
+  *     total order, so the answer is unchanged and a key-preserving
+  *     reducer ships one record per key
   *   - `output` driver hook (tinymr.py:93-114,230) → [[apply]]; at
   *     100 TB use [[run]] / [[runCollapsed]] which stay distributed.
   *
@@ -133,6 +142,19 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     * that builds it, at the cost of 12 shuffled bytes a record. */
   def stable: Boolean = false
 
+  /** Map-side combiner, the `Counter`-merge idiom of `docs.rst:236-246`
+    * made a job member. When set, each map task folds its emits per key
+    * (by `equals`/`hashCode`, as the hash partitioner already assumes)
+    * in insertion order before the first shuffle, so the reducer
+    * receives partial values: one per key per map task, more when a
+    * task holds [[MapReduce.CombineKeys]] keys at once and flushes.
+    * Contract: the function is associative and commutative, and the
+    * reducer gives the same answer on partial values as on the raw
+    * ones. Emits must be `KV`; a `KSV` emit under a combiner fails the
+    * task with an IllegalArgumentException naming the job class.
+    */
+  def combiner: Option[(V, V) => V] = None
+
   /** Reduce-side parallelism; defaults to the input's partition count
     * (the reference's analogue: pool size, `docs.rst:355-358`). A value
     * below 1 is rejected when the job's RDD is built. */
@@ -155,33 +177,91 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
   /** One partition+secondary-sort round (`tinymr.py:278-345`,
     * distributed): each emit becomes one [[ShuffleRec]], the whole
     * shuffle key, sorted by [[recOrdering]] and partitioned by its key
-    * alone. Emits per-key streaming iterators. Under [[stable]] arrivals
-    * are numbered in the same pass, as (partition index, offset).
+    * alone. Emits per-key streaming iterators. With `combine` the emits
+    * are folded per key first ([[combined]]); under [[stable]] the
+    * records are then numbered in the same pass, as (partition index,
+    * offset); with `collapse` only the least record of each run of
+    * equal keys is shipped ([[leastPerRun]]).
     */
   private def shuffle(emits: RDD[Emit[K, S, V]], withValue: Boolean,
-      reverse: Boolean, n: Int): RDD[(K, Iterator[V])] = {
+      reverse: Boolean, n: Int, combine: Option[(V, V) => V],
+      collapse: Boolean): RDD[(K, Iterator[V])] = {
     val numbered = stable
+    implicit val ord: Ordering[ShuffleRec[K, S, V]] = recOrdering(withValue, reverse)
+    val job = getClass.getName
     val recs: RDD[(ShuffleRec[K, S, V], Null)] = emits.mapPartitionsWithIndex { (p, it) =>
-      var off = -1L
-      it.map { e =>
-        val r = new ShuffleRec[K, S, V](e.key, e.value)
-        e match {
-          case KSV(_, s, _) => r.flags = ShuffleRec.HasSort; r.sort = s
-          case _ =>
+      val built = combine match {
+        case Some(f) => combined(it, f, job)
+        case None => it.map { e =>
+          val r = new ShuffleRec[K, S, V](e.key, e.value)
+          e match {
+            case KSV(_, s, _) => r.flags = ShuffleRec.HasSort; r.sort = s
+            case _ =>
+          }
+          r
         }
-        if (numbered) { off += 1; r.flags |= ShuffleRec.Numbered; r.part = p; r.off = off }
-        (r, null)
       }
+      var off = -1L
+      val arrived = if (!numbered) built else built.map { r =>
+        off += 1; r.flags |= ShuffleRec.Numbered; r.part = p; r.off = off; r
+      }
+      (if (collapse) leastPerRun(arrived, ord) else arrived).map((_, null))
     }
     val partitioner = new HashPartitioner(n) {
       override def getPartition(key: Any): Int =
         super.getPartition(key.asInstanceOf[ShuffleRec[K, S, V]].key)
     }
-    implicit val ord: Ordering[ShuffleRec[K, S, V]] = recOrdering(withValue, reverse)
     val kOrd = implicitly[Ordering[K]]
     recs.repartitionAndSortWithinPartitions(partitioner)
       .mapPartitions(it => groupConsecutive(it.map(_._1))(kOrd), preservesPartitioning = true)
   }
+
+  /** A map task's emits under a [[combiner]]: values folded per key in
+    * an insertion-ordered hash map, flushed whenever it holds
+    * [[MapReduce.CombineKeys]] keys, so the task's memory stays bounded.
+    */
+  private def combined(it: Iterator[Emit[K, S, V]], f: (V, V) => V,
+      job: String): Iterator[ShuffleRec[K, S, V]] =
+    new Iterator[ShuffleRec[K, S, V]] {
+      private var out: java.util.Iterator[java.util.Map.Entry[K, V]] =
+        java.util.Collections.emptyIterator()
+      def hasNext: Boolean = out.hasNext || (it.hasNext && { fill(); out.hasNext })
+      def next(): ShuffleRec[K, S, V] = {
+        if (!hasNext) throw new NoSuchElementException("next on an empty iterator")
+        val e = out.next()
+        new ShuffleRec[K, S, V](e.getKey, e.getValue)
+      }
+      private def fill(): Unit = {
+        val acc = new java.util.LinkedHashMap[K, V]()
+        while (acc.size < MapReduce.CombineKeys && it.hasNext) it.next() match {
+          case KV(k, v) =>
+            val old = acc.get(k)
+            acc.put(k, if (old == null && !acc.containsKey(k)) v else f(old, v))
+          case _ => throw new IllegalArgumentException(
+            s"$job declares a combiner, so its mapper must emit KV records, got a KSV")
+        }
+        out = acc.entrySet.iterator
+      }
+    }
+
+  /** From each run of consecutive records with equal keys, only the
+    * least under `ord`. Equal keys hash to the same reduce partition, so
+    * the least record per key after the shuffle is the same as without
+    * this pass. */
+  private def leastPerRun(it: Iterator[ShuffleRec[K, S, V]],
+      ord: Ordering[ShuffleRec[K, S, V]]): Iterator[ShuffleRec[K, S, V]] =
+    new Iterator[ShuffleRec[K, S, V]] {
+      private val buf = it.buffered
+      def hasNext: Boolean = buf.hasNext
+      def next(): ShuffleRec[K, S, V] = {
+        var least = buf.next()
+        while (buf.hasNext && buf.head.key == least.key) {
+          val r = buf.next()
+          if (ord.lt(r, least)) least = r
+        }
+        least
+      }
+    }
 
   /** The shuffle's sort order: the key; then absent sort element before
     * present, the sort element, and the value when `withValue`, this
@@ -240,7 +320,7 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     * 100 TB entry point (`.saveAs.../.toDF` downstream).
     */
   final def run(rdd: RDD[I]): RDD[(K, Seq[V])] =
-    secondRound(rdd).mapPartitions(
+    secondRound(rdd, collapse = false).mapPartitions(
       _.map { case (k, vs) => (k, vs.toVector) }, preservesPartitioning = true)
 
   /** Return-style collapse (`tinymr.py:223-227` [verified]): FIRST value
@@ -248,16 +328,16 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     * arg-min/arg-max; unsorted it is only deterministic under [[stable]].
     */
   final def runCollapsed(rdd: RDD[I]): RDD[(K, V)] =
-    secondRound(rdd).mapPartitions(
+    secondRound(rdd, collapse = true).mapPartitions(
       _.map { case (k, vs) => (k, vs.next()) }, preservesPartitioning = true)
 
-  private def secondRound(rdd: RDD[I]): RDD[(K, Iterator[V])] = {
+  private def secondRound(rdd: RDD[I], collapse: Boolean): RDD[(K, Iterator[V])] = {
     val n = parts(rdd)
     val mapped: RDD[Emit[K, S, V]] = rdd.flatMap(mapper)
-    val grouped = shuffle(mapped, sortMapWithValue, sortMapReverse, n)
+    val grouped = shuffle(mapped, sortMapWithValue, sortMapReverse, n, combiner, collapse = false)
     val reduced: RDD[Emit[K, S, V]] =
       grouped.mapPartitions(_.flatMap { case (k, vs) => reducer(k, vs) })
-    shuffle(reduced, sortReduceWithValue, sortReduceReverse, n)
+    shuffle(reduced, sortReduceWithValue, sortReduceReverse, n, None, collapse)
   }
 
   /** The reference's eager `__call__` (`tinymr.py:156-230`): run,
@@ -286,10 +366,16 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
       ve: org.apache.spark.sql.Encoder[V]): Unit = {
     implicit val tupleEnc: org.apache.spark.sql.Encoder[(K, V)] =
       org.apache.spark.sql.Encoders.tuple(ke, ve)
-    spark.createDataset(secondRound(rdd).flatMap { case (k, vs) => vs.map((k, _)) })
+    spark.createDataset(secondRound(rdd, collapse = false).flatMap { case (k, vs) => vs.map((k, _)) })
       .toDF("key", "value")
       .write.mode("overwrite").format(format).options(options).save(path)
   }
+}
+
+object MapReduce {
+  /** How many keys a map task's [[MapReduce.combiner]] folds at once
+    * before it flushes them to the shuffle. */
+  private[graft] final val CombineKeys = 1 << 16
 }
 
 /** Untyped row surface preserving the reference's runtime arity check

@@ -15,9 +15,13 @@ object MrQueries {
   /** The reference's canonical query: word count
     * (`/root/reference/docs.rst:139-159`), as a MapReduce job. The
     * reducer is mergeable, so values stream; no sort requested —
-    * exactly the serial path of SURVEY §3.1, distributed.
+    * exactly the serial path of SURVEY §3.1, distributed. The sum is
+    * also the map-side combiner (the `Counter` merge of
+    * `docs.rst:236-246`): each map task ships one partial count per
+    * distinct word, not one record per token.
     */
   class WordCount extends MapReduce[String, String, Int, Long] {
+    override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
     def mapper(line: String): IterableOnce[Emit[String, Int, Long]] =
       line.toLowerCase.split("\\s+").iterator.filter(_.nonEmpty)
         .map(w => KV(w, 1L))

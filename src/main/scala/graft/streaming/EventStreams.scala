@@ -518,9 +518,12 @@ object EventStreams {
     * frame re-aggregates the partials and must equal the plain batch
     * oracle over ALL events. This is exactly how a tinymr user's
     * existing job runs incrementally on a live stream: no rewrite,
-    * foreachBatch hands each micro-batch to the batch engine.
+    * foreachBatch hands each micro-batch to the batch engine. Like
+    * `MrQueries.WordCount` it declares the sum as its combiner, so each
+    * map task ships one partial count per event type.
     */
   class TypeCount extends graft.mr.MapReduce[String, String, Int, Long] {
+    override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
     def mapper(t: String): IterableOnce[graft.mr.Emit[String, Int, Long]] =
       Iterator.single(graft.mr.KV(t, 1L))
     def reducer(k: String, vs: Iterator[Long]): IterableOnce[graft.mr.Emit[String, Int, Long]] =

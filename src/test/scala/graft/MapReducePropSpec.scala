@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
@@ -12,17 +12,20 @@ import scala.collection.mutable
 import graft.mr._
 
 /** One generated Layer A job: emit arity, sort flags and direction on
-  * each side, `stable`, parallelism and the reducer's shape.
+  * each side, `stable`, parallelism, the reducer's shape and whether
+  * the job declares the sum as its map-side combiner.
   *
   * Reducers: 0 re-keys every value (`k % 3`, merging groups) with a
   * tie-heavy sort element `v % 4`; 1 numbers the values in the order
   * it receives them, so its output depends on the map-side order (only
-  * generated where that order is total); 2 emits one sum per key.
+  * generated where that order is total); 2 emits one sum per key, the
+  * only shape generated with the combiner, which needs `KV` emits.
   */
 final case class GenSpec(
     mapSort: Boolean, mapWithValue: Boolean, mapRev: Boolean,
     redSort: Boolean, redWithValue: Boolean, redRev: Boolean,
-    stable: Boolean, inParts: Int, outParts: Option[Int], reducerShape: Int) {
+    stable: Boolean, inParts: Int, outParts: Option[Int], reducerShape: Int,
+    combine: Boolean = false) {
   def n: Int = outParts.getOrElse(inParts)
 }
 
@@ -33,6 +36,7 @@ class GenJob(val spec: GenSpec) extends MapReduce[(Int, Int, Int), Int, Int, Int
   override def sortReduceReverse = spec.redRev
   override def stable = spec.stable
   override def numPartitions = spec.outParts
+  override def combiner: Option[(Int, Int) => Int] = if (spec.combine) Some(_ + _) else None
 
   private def emit(sort: Boolean, k: Int, s: Int, v: Int): Emit[Int, Int, Int] =
     if (sort) KSV(k, s, v) else KV(k, v)
@@ -99,11 +103,13 @@ object SerialMR {
     }
 }
 
-/** Differential spec: `run`, `runCollapsed` and `apply` of generated
-  * jobs against [[SerialMR]]. Under `stable` every per-key sequence must
-  * match exactly; otherwise each run of tied sort keys must hold the
-  * same multiset in the same place (so a total order is compared
-  * exactly), and a collapsed value must come from the first run.
+/** Differential spec: `run`, `runCollapsed`, `apply` and `write` of
+  * generated jobs against [[SerialMR]], which ignores the combiner.
+  * Under `stable` every per-key sequence must match exactly; otherwise
+  * each run of tied sort keys must hold the same multiset in the same
+  * place (so a total order is compared exactly), and a collapsed value
+  * must come from the first run. `write` is compared per key as a
+  * multiset, since parquet keeps no row order.
   */
 class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -137,8 +143,14 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
     v <- Gen.choose(1, 60)
   } yield (k, s, v)
 
-  val cases: Gen[(GenSpec, Seq[(Int, Int, Int)])] =
+  /** Jobs with the sum combiner: `KV` emits and the summing reducer,
+    * every other flag free. */
+  val combinerSpecs: Gen[GenSpec] =
+    specs.map(_.copy(mapSort = false, reducerShape = 2, combine = true))
+
+  def casesOf(specs: Gen[GenSpec]): Gen[(GenSpec, Seq[(Int, Int, Int)])] =
     for (s <- specs; n <- Gen.choose(0, 80); xs <- Gen.listOfN(n, item)) yield (s, xs)
+  val cases: Gen[(GenSpec, Seq[(Int, Int, Int)])] = casesOf(specs)
 
   def mismatches(spec: GenSpec, items: Seq[(Int, Int, Int)]): Seq[String] = {
     val job = new GenJob(spec)
@@ -181,15 +193,57 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
     errs.toSeq
   }
 
-  test("run, runCollapsed and apply agree with the serial tinymr interpreter") {
+  lazy val sink: String = graft.core.Staging.tempAtExit("graft_mr_prop_")
+
+  /** `write` to parquet, read back: each key's multiset of values. */
+  def writeMismatches(spec: GenSpec, items: Seq[(Int, Int, Int)]): Seq[String] = {
+    val job = new GenJob(spec)
+    val want = SerialMR.run(job, items).map { case (k, vs) => k -> vs.map(_._2).sorted }
+    job.write(spark, sc.parallelize(items, spec.inParts), sink)(Encoders.scalaInt, Encoders.scalaInt)
+    val back = spark.read.parquet(sink).collect().map(r => (r.getInt(0), r.getInt(1)))
+    val got = back.groupBy(_._1).map { case (k, kvs) => k -> kvs.map(_._2).toSeq.sorted }
+    if (got == want) Nil
+    else want.keySet.union(got.keySet).toSeq.sorted.collect {
+      case k if got.get(k) != want.get(k) => s"write key $k: got ${got.get(k)}, serial ${want.get(k)}"
+    }
+  }
+
+  def check(cases: Gen[(GenSpec, Seq[(Int, Int, Int)])], n: Int, seed: Long)(
+      errors: (GenSpec, Seq[(Int, Int, Int)]) => Seq[String]): Unit = {
     val prop = Prop.forAllNoShrink(cases) { case (spec, items) =>
-      val errs = mismatches(spec, items)
+      val errs = errors(spec, items)
       Prop(errs.isEmpty) :| s"$spec over ${items.size} items: ${errs.take(3).mkString("; ")}"
     }
     val params = Test.Parameters.default
-      .withMinSuccessfulTests(60).withWorkers(1).withInitialSeed(Seed(20261017L))
+      .withMinSuccessfulTests(n).withWorkers(1).withInitialSeed(Seed(seed))
     val res = Test.check(params, prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("run, runCollapsed and apply agree with the serial tinymr interpreter") {
+    check(cases, 60, 20261017L)(mismatches)
+  }
+
+  test("write to parquet reads back each key's values of the serial interpreter") {
+    check(cases, 30, 20261018L)(writeMismatches)
+  }
+
+  test("jobs with the sum combiner agree with the serial interpreter run without it") {
+    check(casesOf(combinerSpecs), 40, 20261019L)((spec, items) =>
+      mismatches(spec, items) ++ writeMismatches(spec, items))
+  }
+
+  test("the combiner flushes a map partition holding more keys than it folds at once") {
+    // one map partition whose items hold each key twice, the second
+    // time after the combiner has flushed
+    val keys = MapReduce.CombineKeys + MapReduce.CombineKeys / 2
+    val items = (0 until 2 * keys).map(i => (i % keys, 0, 1 + i % 60))
+    for (stable <- Seq(false, true)) {
+      val spec = GenSpec(false, false, false, false, false, false, stable, 1, Some(3), 2,
+        combine = true)
+      val errs = mismatches(spec, items)
+      assert(errs.isEmpty, s"$spec: ${errs.take(3).mkString("; ")}")
+    }
   }
 
   test("every flag combination agrees on a fixed skewed input") {

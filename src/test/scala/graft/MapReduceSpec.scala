@@ -83,6 +83,26 @@ class CollapseJob(rev: Boolean) extends MapReduce[(Int, String), String, Int, St
     vs.map(v => KSV(k, v.length, v)) // sort by length on round 2
 }
 
+/** Per word, the longest line holding it (ties broken by the line):
+  * a key-preserving reducer ahead of `runCollapsed`. */
+class LongestLine extends MapReduce[String, String, Int, String] {
+  override def sortReduceWithValue = true
+  override def sortReduceReverse = true
+  def mapper(line: String): IterableOnce[Emit[String, Int, String]] =
+    line.split(' ').iterator.map(w => KSV(w, line.length, line))
+  def reducer(w: String, vs: Iterator[String]): IterableOnce[Emit[String, Int, String]] =
+    vs.map(v => KSV(w, v.length, v))
+}
+
+/** Declares a combiner but emits `KSV` records, which it cannot fold. */
+class KsvCombiner extends MapReduce[String, String, Int, Long] {
+  override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
+  def mapper(line: String): IterableOnce[Emit[String, Int, Long]] =
+    line.split(' ').iterator.map(w => KSV(w, 0, 1L))
+  def reducer(w: String, vs: Iterator[Long]): IterableOnce[Emit[String, Int, Long]] =
+    Iterator.single(KV(w, vs.sum))
+}
+
 class FilterWC extends WC {
   override def mapper(line: String): IterableOnce[Emit[String, Int, Long]] =
     if (line.contains("python")) Iterator.empty else super.mapper(line)
@@ -181,32 +201,107 @@ class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Seq("z", "x", "y", "w"))
   }
 
-  test("stable keeps input order of tied sort keys across input partitions, in one job") {
-    val recs = (0 until 40).map(i => (i % 2, s"v$i"))
-    val inOrder = recs.sortBy(_._1).map(_._2) // stable: ties keep input order
-    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+  /** Runs `body` in its own job group; returns how many jobs it ran and
+    * the shuffle records each of their stages wrote, in stage order
+    * (for one Layer A job: shuffle 1, shuffle 2, then the result stage). */
+  def shuffleWrites(body: => Unit): (Int, Seq[Long]) = {
+    import org.apache.spark.scheduler._
+    val group = s"counted-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet(); e.stageIds.foreach(stages.add(_))
+          case g if g == s"$group-end" => done.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          written.merge(e.stageId, e.taskMetrics.shuffleWriteMetrics.recordsWritten, _ + _)
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("stable", "stable run")
-      val got = new SortElem().run(sc.parallelize(recs, 4)).collect().toMap.apply("k")
-      sc.setJobGroup("stable-reverse", "stable reverse run")
-      val rev = new SortElem(mapRev = true).run(sc.parallelize(recs, 4)).collect().toMap.apply("k")
-      sc.setJobGroup("sentinel", "sentinel")
+      sc.setJobGroup(group, group)
+      body
+      // listener events arrive in order: once the sentinel job is seen,
+      // so is every task of the counted jobs
+      sc.setJobGroup(s"$group-end", "sentinel")
       sc.parallelize(Seq(1), 1).count()
       sc.clearJobGroup()
-      // listener events arrive in order: once the sentinel is seen, so is every run
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobGroups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(got == inOrder)
-      assert(rev == recs.sortBy(-_._1).map(_._2))
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
       import scala.jdk.CollectionConverters._
-      for (g <- Seq("stable", "stable-reverse"))
-        assert(jobGroups.asScala.count(_ == g) == 1, s"jobs by group: $jobGroups")
+      (jobs.get, stages.asScala.toSeq.sorted.map(written.getOrDefault(_, 0L)))
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("stable keeps input order of tied sort keys across input partitions, in one job") {
+    val recs = (0 until 40).map(i => (i % 2, s"v$i"))
+    val inOrder = recs.sortBy(_._1).map(_._2) // stable: ties keep input order
+    var got, rev = Seq.empty[String]
+    val (jobs, _) = shuffleWrites {
+      got = new SortElem().run(sc.parallelize(recs, 4)).collect().toMap.apply("k")
+    }
+    val (revJobs, _) = shuffleWrites {
+      rev = new SortElem(mapRev = true).run(sc.parallelize(recs, 4)).collect().toMap.apply("k")
+    }
+    assert(got == inOrder)
+    assert(rev == recs.sortBy(-_._1).map(_._2))
+    assert(jobs == 1 && revJobs == 1, s"jobs: $jobs, $revJobs")
+  }
+
+  // two map partitions: {a, b, c, d} from 7 tokens and {a, d, e} from 7
+  val twoParts = Seq("a b a c", "b b d", "a d e", "e e a a")
+  def words(lines: Seq[String]): Seq[String] = lines.flatMap(_.split(' ')).distinct
+
+  test("the combiner ships one shuffle-1 record per distinct word of each map partition") {
+    var combined, plain = Map.empty[String, Long]
+    val (jobs, writes) = shuffleWrites {
+      combined = new graft.queries.MrQueries.WordCount().run(sc.parallelize(twoParts, 2))
+        .collect().map { case (w, vs) => (w, vs.head) }.toMap
+    }
+    val (plainJobs, plainWrites) = shuffleWrites {
+      plain = new WC().run(sc.parallelize(twoParts, 2))
+        .collect().map { case (w, vs) => (w, vs.head) }.toMap
+    }
+    val oracle = twoParts.flatMap(_.split(' ')).groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(combined == oracle && plain == oracle)
+    val perPartition = twoParts.grouped(2).map(words(_).size.toLong).sum
+    assert(perPartition == 7)
+    assert(writes.take(2) == Seq(perPartition, oracle.size.toLong), s"combiner: $writes")
+    assert(plainWrites.take(2) == Seq(14L, oracle.size.toLong), s"no combiner: $plainWrites")
+    assert(jobs == 1 && plainJobs == 1, s"jobs: $jobs, $plainJobs")
+  }
+
+  test("runCollapsed ships one shuffle-2 record per key after a key-preserving reducer") {
+    var collapsed = Map.empty[String, String]
+    var ran = Map.empty[String, Seq[String]]
+    val (jobs, writes) = shuffleWrites {
+      collapsed = new LongestLine().runCollapsed(sc.parallelize(twoParts, 2)).collect().toMap
+    }
+    val (runJobs, runWrites) = shuffleWrites {
+      ran = new LongestLine().run(sc.parallelize(twoParts, 2)).collect().toMap
+    }
+    val keys = words(twoParts)
+    val longest = keys.map(w => w -> twoParts.filter(_.split(' ').contains(w))
+      .maxBy(l => (l.length, l))).toMap
+    assert(collapsed == longest)
+    assert(ran.view.mapValues(_.head).toMap == longest)
+    assert(writes.take(2) == Seq(14L, keys.size.toLong), s"runCollapsed: $writes")
+    assert(runWrites.take(2) == Seq(14L, 14L), s"run: $runWrites")
+    assert(jobs == 1 && runJobs == 1, s"jobs: $jobs, $runJobs")
+  }
+
+  test("a combiner job whose mapper emits KSV fails naming the job class") {
+    val ex = intercept[org.apache.spark.SparkException] {
+      new KsvCombiner().run(sc.parallelize(twoParts, 2)).collect()
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
+    assert(causes(ex).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains(classOf[KsvCombiner].getName)), ex.toString)
   }
 
   test("numPartitions below 1 is rejected when the job is built, naming the setting") {
