@@ -1,9 +1,14 @@
 package graft.mr
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{HashPartitioner, SparkEnv}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.{UnsafeExternalRowSorter, UnsafeRowSerializer}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 /** Raised on the untyped surface when a record does not have 2 or 3
@@ -31,44 +36,12 @@ final case class KSV[K, S, V](key: K, sort: S, value: V) extends Emit[K, S, V] {
   def sortOpt: Option[S] = Some(sort)
 }
 
-/** One shuffled Layer A record: an emit's key, its sort element (when
-  * the emit has one), its value (once, also when the order uses it)
-  * and, under [[MapReduce.stable]], its arrival as (map-partition
-  * index, offset in the partition). It is the whole shuffle key; the
-  * shuffle value is null. Java serialization writes only a flag byte
-  * and the fields present: no tuples or options, no arrival unless it
-  * is numbered.
-  */
-private[mr] final class ShuffleRec[K, S, V](var key: K, var value: V)
-    extends java.io.Externalizable {
-  var flags: Int = 0
-  var sort: S = _
-  var part: Int = 0
-  var off: Long = 0L
-
-  def this() = this(null.asInstanceOf[K], null.asInstanceOf[V])
-  def hasSort: Boolean = (flags & ShuffleRec.HasSort) != 0
-  private def numbered: Boolean = (flags & ShuffleRec.Numbered) != 0
-
-  def writeExternal(out: java.io.ObjectOutput): Unit = {
-    out.writeByte(flags)
-    out.writeObject(key)
-    if (hasSort) out.writeObject(sort)
-    out.writeObject(value)
-    if (numbered) { out.writeInt(part); out.writeLong(off) }
-  }
-  def readExternal(in: java.io.ObjectInput): Unit = {
-    flags = in.readByte()
-    key = in.readObject().asInstanceOf[K]
-    if (hasSort) sort = in.readObject().asInstanceOf[S]
-    value = in.readObject().asInstanceOf[V]
-    if (numbered) { part = in.readInt(); off = in.readLong() }
-  }
-}
-
-private[mr] object ShuffleRec {
-  final val HasSort = 1
-  final val Numbered = 2
+/** One shuffled record on the object path ([[RecCodec]] writes the
+  * byte path's): an emit and, under [[MapReduce.stable]], its arrival
+  * as (map-partition index, offset), else (0, 0). It is the whole
+  * shuffle key and hashes as its key, so it is partitioned by it. */
+private[mr] final case class ShuffleRec[K, S, V](e: Emit[K, S, V], part: Int, off: Long) {
+  override def hashCode: Int = java.util.Objects.hashCode(e.key)
 }
 
 /** Layer A — the reference's execution contract, distributed.
@@ -79,13 +52,13 @@ private[mr] object ShuffleRec {
   *
   *   - map phase → `rdd.flatMap` (tinymr.py:196-199; the return-vs-yield
   *     dichotomy of the Python API unifies on `IterableOnce`, SURVEY §7.4)
-  *   - partition + secondary sort → `repartitionAndSortWithinPartitions`
-  *     of one flat [[ShuffleRec]] per emit, ordered by key then sort
-  *     key and partitioned by a hash of the key alone — the shuffle's
-  *     ExternalSorter sorts and can SPILL, unlike the reference's
-  *     driver-resident `defaultdict(list)` + `list.sort`
-  *     (tinymr.py:332-343) which is the single-machine wall this build
-  *     removes
+  *   - partition + secondary sort → one record per emit, ordered by
+  *     key then sort key and partitioned by a hash of the key alone:
+  *     order-preserving bytes ([[RecCodec]]) sorted by Spark's
+  *     `UnsafeExternalRowSorter`, or a [[ShuffleRec]] through
+  *     `repartitionAndSortWithinPartitions`. Both sorters can SPILL,
+  *     unlike the reference's driver-resident `defaultdict(list)` +
+  *     `list.sort` (tinymr.py:332-343), the wall this build removes
   *   - reduce phase → streaming per-key iterators inside
   *     `mapPartitions` — values of one key never need to fit in a
   *     driver, only in one task
@@ -139,14 +112,14 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
 
   /** Reproduce Python's stable sort + insertion order exactly (SURVEY
     * §7.4.3): ties break on arrival, numbered per record in the pass
-    * that builds it, at the cost of 12 shuffled bytes a record. */
+    * that builds it, at the cost of a few shuffled bytes a record. */
   def stable: Boolean = false
 
   /** Map-side combiner, the `Counter`-merge idiom of `docs.rst:236-246`
     * made a job member. When set, each map task folds its emits per key
-    * (by `equals`/`hashCode`, as the hash partitioner already assumes)
-    * in insertion order before the first shuffle, so the reducer
-    * receives partial values: one per key per map task, more when a
+    * (of one hash code and equal under the key ordering) in insertion
+    * order before the first shuffle, so the reducer receives partial
+    * values: one per key per map task, more when a
     * task holds [[MapReduce.CombineKeys]] keys at once and flushes.
     * Contract: the function is associative and commutative, and the
     * reducer gives the same answer on partial values as on the raw
@@ -174,94 +147,113 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     case None => math.max(rdd.getNumPartitions, 1)
   }
 
+  /** The codecs of K, S and V when all three orderings are natural
+    * ([[ByteCodec.of]]): then the shuffles carry bytes, else objects. */
+  private lazy val codecs = for (k <- ByteCodec.of(implicitly[Ordering[K]]);
+    s <- ByteCodec.of(implicitly[Ordering[S]]); v <- ByteCodec.of(implicitly[Ordering[V]])) yield (k, s, v)
+  private[graft] def sortsBytes: Boolean = codecs.isDefined
+
   /** One partition+secondary-sort round (`tinymr.py:278-345`,
-    * distributed): each emit becomes one [[ShuffleRec]], the whole
-    * shuffle key, sorted by [[recOrdering]] and partitioned by its key
-    * alone. Emits per-key streaming iterators. With `combine` the emits
-    * are folded per key first ([[combined]]); under [[stable]] the
-    * records are then numbered in the same pass, as (partition index,
-    * offset); with `collapse` only the least record of each run of
-    * equal keys is shipped ([[leastPerRun]]).
+    * distributed): each emit becomes one record, sorted by
+    * [[recOrdering]] and partitioned by a hash of its key alone. Emits
+    * per-key streaming iterators. With `combine` the emits are folded
+    * per key first ([[combined]]); under [[stable]] the records are
+    * then numbered in the same pass, as (partition index, offset); with
+    * `collapse` only the least record of each run of equal keys is
+    * shipped ([[runs]]).
     */
   private def shuffle(emits: RDD[Emit[K, S, V]], withValue: Boolean,
       reverse: Boolean, n: Int, combine: Option[(V, V) => V],
       collapse: Boolean): RDD[(K, Iterator[V])] = {
     val numbered = stable
-    implicit val ord: Ordering[ShuffleRec[K, S, V]] = recOrdering(withValue, reverse)
     val job = getClass.getName
-    val recs: RDD[(ShuffleRec[K, S, V], Null)] = emits.mapPartitionsWithIndex { (p, it) =>
-      val built = combine match {
-        case Some(f) => combined(it, f, job)
-        case None => it.map { e =>
-          val r = new ShuffleRec[K, S, V](e.key, e.value)
-          e match {
-            case KSV(_, s, _) => r.flags = ShuffleRec.HasSort; r.sort = s
-            case _ =>
-          }
-          r
+    val folded = (it: Iterator[Emit[K, S, V]]) => combine.fold(it)(combined(it, _, job))
+    // by K, also the result's; a byte record ships keyed by its p < n
+    val partitioner = new HashPartitioner(n)
+    codecs match {
+      case Some((kc, sc, vc)) =>
+        val codec = new RecCodec(kc, sc, vc, withValue, reverse)
+        val rows = emits.mapPartitionsWithIndex { (p, it) =>
+          val w = new codec.Writer(p, numbered)
+          runs(folded(it), collapse, e => (partitioner.getPartition(e.key), w.write(e, first = true)))(
+            (least, e) => (least._1, w.write(e, first = false)))
         }
-      }
-      var off = -1L
-      val arrived = if (!numbered) built else built.map { r =>
-        off += 1; r.flags |= ShuffleRec.Numbered; r.part = p; r.off = off; r
-      }
-      (if (collapse) leastPerRun(arrived, ord) else arrived).map((_, null))
+        // the RDD scope of the object path's shuffle, for listeners and the UI
+        val (ctx, scope) = (rows.sparkContext, "spark.rdd.scope")
+        val outer = ctx.getLocalProperty(scope)
+        ctx.setLocalProperty(scope, s"""{"id":"mr${rows.id}","name":"repartitionAndSortWithinPartitions"}""")
+        val shuffled = try new ShuffledRDD[Int, UnsafeRow, UnsafeRow](rows, partitioner)
+          finally ctx.setLocalProperty(scope, outer)
+        shuffled.setSerializer(new UnsafeRowSerializer(0)).mapPartitions({ it =>
+          // pages of at most 1/8192 of the heap: the task's 8192-entry page
+          // table still spans the heap, and no page is a G1 humongous object
+          val sorter = UnsafeExternalRowSorter.createWithRecordComparator(new StructType(),
+            () => RecCodec.Comparator, PrefixComparators.BINARY, RecCodec.prefixes(),
+            math.min(SparkEnv.get.memoryManager.pageSizeBytes, Runtime.getRuntime.maxMemory / 8192), false)
+          val r = new codec.Reader
+          grouped(sorter.sort(it.map(_._2)).map(_.asInstanceOf[UnsafeRow]))(r.open, r.same, r.value)
+        }, preservesPartitioning = true)
+      case None =>
+        implicit val ord: Ordering[ShuffleRec[K, S, V]] = recOrdering(withValue, reverse)
+        val recs = emits.mapPartitionsWithIndex { (p, it) =>
+          var off = -1L
+          def rec(e: Emit[K, S, V]) = if (!numbered) ShuffleRec(e, 0, 0L) else { off += 1; ShuffleRec(e, p, off) }
+          runs(folded(it), collapse, rec)((least, e) => { val r = rec(e); if (ord.lt(r, least)) r else least })
+            .map((_, null))
+        }
+        recs.repartitionAndSortWithinPartitions(partitioner).mapPartitions({ it =>
+          var k: K = null.asInstanceOf[K]
+          grouped(it.map(_._1.e))(e => { k = e.key; k }, e => kOrd.equiv(e.key, k), _.value)
+        }, preservesPartitioning = true)
     }
-    val partitioner = new HashPartitioner(n) {
-      override def getPartition(key: Any): Int =
-        super.getPartition(key.asInstanceOf[ShuffleRec[K, S, V]].key)
-    }
-    val kOrd = implicitly[Ordering[K]]
-    recs.repartitionAndSortWithinPartitions(partitioner)
-      .mapPartitions(it => groupConsecutive(it.map(_._1))(kOrd), preservesPartitioning = true)
   }
+
+  private def kOrd = implicitly[Ordering[K]]
+
+  /** A key as a hash-map key, equal to another when [[sameKey]]. */
+  private final class Key(val k: K) {
+    override def hashCode: Int = java.util.Objects.hashCode(k)
+    override def equals(o: Any): Boolean = sameKey(k, o.asInstanceOf[Key].k)
+  }
+
+  /** Whether keys meet in one group after a shuffle: of one hash code (so
+    * partition) and equal under the key ordering (-0.0 is not 0.0). */
+  private def sameKey(a: K, b: K): Boolean =
+    if (a == null || b == null) a == null && b == null
+    else a.hashCode == b.hashCode && kOrd.equiv(a, b)
+
+  /** One record per emit from `start`, or with `collapse` one per run of
+    * emits of the same key ([[sameKey]]), `add` folding in the rest. */
+  private def runs[R](it: Iterator[Emit[K, S, V]], collapse: Boolean, start: Emit[K, S, V] => R)(
+      add: (R, Emit[K, S, V]) => R): Iterator[R] =
+    if (!collapse) it.map(start) else new Iterator[R] {
+      private val buf = it.buffered
+      def hasNext: Boolean = buf.hasNext
+      def next(): R = {
+        val e = buf.next()
+        var r = start(e)
+        while (buf.hasNext && sameKey(buf.head.key, e.key)) r = add(r, buf.next())
+        r
+      }
+    }
 
   /** A map task's emits under a [[combiner]]: values folded per key in
     * an insertion-ordered hash map, flushed whenever it holds
-    * [[MapReduce.CombineKeys]] keys, so the task's memory stays bounded.
-    */
+    * [[MapReduce.CombineKeys]] keys, so the task's memory stays bounded. */
   private def combined(it: Iterator[Emit[K, S, V]], f: (V, V) => V,
-      job: String): Iterator[ShuffleRec[K, S, V]] =
-    new Iterator[ShuffleRec[K, S, V]] {
-      private var out: java.util.Iterator[java.util.Map.Entry[K, V]] =
-        java.util.Collections.emptyIterator()
-      def hasNext: Boolean = out.hasNext || (it.hasNext && { fill(); out.hasNext })
-      def next(): ShuffleRec[K, S, V] = {
-        if (!hasNext) throw new NoSuchElementException("next on an empty iterator")
-        val e = out.next()
-        new ShuffleRec[K, S, V](e.getKey, e.getValue)
+      job: String): Iterator[Emit[K, S, V]] =
+    Iterator.continually {
+      val acc = new java.util.LinkedHashMap[Key, V]()
+      while (acc.size < MapReduce.CombineKeys && it.hasNext) it.next() match {
+        case KV(k, v) =>
+          val key = new Key(k)
+          val old = acc.get(key)
+          acc.put(key, if (old == null && !acc.containsKey(key)) v else f(old, v))
+        case _ => throw new IllegalArgumentException(
+          s"$job declares a combiner, so its mapper must emit KV records, got a KSV")
       }
-      private def fill(): Unit = {
-        val acc = new java.util.LinkedHashMap[K, V]()
-        while (acc.size < MapReduce.CombineKeys && it.hasNext) it.next() match {
-          case KV(k, v) =>
-            val old = acc.get(k)
-            acc.put(k, if (old == null && !acc.containsKey(k)) v else f(old, v))
-          case _ => throw new IllegalArgumentException(
-            s"$job declares a combiner, so its mapper must emit KV records, got a KSV")
-        }
-        out = acc.entrySet.iterator
-      }
-    }
-
-  /** From each run of consecutive records with equal keys, only the
-    * least under `ord`. Equal keys hash to the same reduce partition, so
-    * the least record per key after the shuffle is the same as without
-    * this pass. */
-  private def leastPerRun(it: Iterator[ShuffleRec[K, S, V]],
-      ord: Ordering[ShuffleRec[K, S, V]]): Iterator[ShuffleRec[K, S, V]] =
-    new Iterator[ShuffleRec[K, S, V]] {
-      private val buf = it.buffered
-      def hasNext: Boolean = buf.hasNext
-      def next(): ShuffleRec[K, S, V] = {
-        var least = buf.next()
-        while (buf.hasNext && buf.head.key == least.key) {
-          val r = buf.next()
-          if (ord.lt(r, least)) least = r
-        }
-        least
-      }
-    }
+      acc
+    }.takeWhile(!_.isEmpty).flatMap(_.asScala.iterator.map(kv => KV(kv._1.k, kv._2)))
 
   /** The shuffle's sort order: the key; then absent sort element before
     * present, the sort element, and the value when `withValue`, this
@@ -271,21 +263,21 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
     */
   private def recOrdering(withValue: Boolean,
       reverse: Boolean): Ordering[ShuffleRec[K, S, V]] = {
-    val kOrd = implicitly[Ordering[K]]
     val sOrd = implicitly[Ordering[S]]
     val vOrd = implicitly[Ordering[V]]
     val rev = reverse // `reverse` inside the Ordering is its own method
     new Ordering[ShuffleRec[K, S, V]] {
-      private def sortPart(a: ShuffleRec[K, S, V], b: ShuffleRec[K, S, V]): Int =
-        if (a.hasSort != b.hasSort) { if (a.hasSort) 1 else -1 }
-        else {
-          val c = if (a.hasSort) sOrd.compare(a.sort, b.sort) else 0
-          if (c != 0 || !withValue) c else vOrd.compare(a.value, b.value)
+      private def sortPart(a: Emit[K, S, V], b: Emit[K, S, V]): Int = {
+        val c = (a, b) match {
+          case (KSV(_, x, _), KSV(_, y, _)) => sOrd.compare(x, y)
+          case _ => java.lang.Boolean.compare(a.isInstanceOf[KSV[_, _, _]], b.isInstanceOf[KSV[_, _, _]])
         }
+        if (c != 0 || !withValue) c else vOrd.compare(a.value, b.value)
+      }
       def compare(a: ShuffleRec[K, S, V], b: ShuffleRec[K, S, V]): Int = {
-        val c1 = kOrd.compare(a.key, b.key)
+        val c1 = kOrd.compare(a.e.key, b.e.key)
         if (c1 != 0) return c1
-        val c2 = if (rev) sortPart(b, a) else sortPart(a, b)
+        val c2 = if (rev) sortPart(b.e, a.e) else sortPart(a.e, b.e)
         if (c2 != 0) return c2
         val c3 = Integer.compare(a.part, b.part)
         if (c3 != 0) c3 else java.lang.Long.compare(a.off, b.off)
@@ -294,22 +286,22 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
   }
 
   /** Group a key-sorted record iterator into per-key value iterators
-    * without materializing a partition. The inner iterator must be
-    * consumed (or abandoned) before the outer advances — guaranteed by
-    * construction here since we drain leftovers on advance.
-    */
-  private def groupConsecutive(it: Iterator[ShuffleRec[K, S, V]])(
-      kOrd: Ordering[K]): Iterator[(K, Iterator[V])] =
+    * without materializing a partition (`open` reads a group's key off
+    * its first record, `same` tests a record against it; records may be
+    * reused). The inner iterator must be consumed (or abandoned) before
+    * the outer advances — guaranteed here since we drain leftovers. */
+  private def grouped[R](it: Iterator[R])(open: R => K, same: R => Boolean,
+      value: R => V): Iterator[(K, Iterator[V])] =
     new Iterator[(K, Iterator[V])] {
       private val buf = it.buffered
       private var current: Iterator[V] = Iterator.empty
       def hasNext: Boolean = { while (current.hasNext) current.next(); buf.hasNext }
       def next(): (K, Iterator[V]) = {
         while (current.hasNext) current.next()
-        val k = buf.head.key
+        val k = open(buf.head)
         current = new Iterator[V] {
-          def hasNext: Boolean = buf.hasNext && kOrd.equiv(buf.head.key, k)
-          def next(): V = buf.next().value
+          def hasNext: Boolean = buf.hasNext && same(buf.head)
+          def next(): V = value(buf.next())
         }
         (k, current)
       }

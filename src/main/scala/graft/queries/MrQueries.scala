@@ -12,6 +12,10 @@ import graft.mr.{Emit, KSV, KV, MapReduce, UntypedMapReduce}
   */
 object MrQueries {
 
+  /** Whitespace runs, compiled once: `String.split("\\s+")` compiles
+    * a `Pattern` per call, that is per mapped line. */
+  private val Blanks = java.util.regex.Pattern.compile("\\s+")
+
   /** The reference's canonical query: word count
     * (`/root/reference/docs.rst:139-159`), as a MapReduce job. The
     * reducer is mergeable, so values stream; no sort requested —
@@ -23,7 +27,7 @@ object MrQueries {
   class WordCount extends MapReduce[String, String, Int, Long] {
     override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
     def mapper(line: String): IterableOnce[Emit[String, Int, Long]] =
-      line.toLowerCase.split("\\s+").iterator.filter(_.nonEmpty)
+      Blanks.split(line.toLowerCase).iterator.filter(_.nonEmpty)
         .map(w => KV(w, 1L))
     def reducer(word: String, counts: Iterator[Long]): IterableOnce[Emit[String, Int, Long]] =
       Iterator.single(KV(word, counts.sum))
@@ -55,7 +59,7 @@ object MrQueries {
     // shipping every word twice through the job's dominant shuffle
     override def sortMapWithValue = true
     def mapper(doc: (Long, String)): IterableOnce[Emit[Long, String, String]] =
-      doc._2.toLowerCase.split("\\s+").iterator.filter(_.nonEmpty)
+      Blanks.split(doc._2.toLowerCase).iterator.filter(_.nonEmpty)
         .map(w => KV(doc._1 % 4, w))
     def reducer(k: Long, words: Iterator[String]): IterableOnce[Emit[Long, String, String]] = {
       var n = 0L; var prev: String = null
@@ -134,7 +138,7 @@ object MrQueries {
     */
   class FreqOfFreq extends UntypedMapReduce {
     def rawMapper(item: Seq[Any]): IterableOnce[Seq[Any]] =
-      item.head.asInstanceOf[String].toLowerCase.split("\\s+").iterator
+      Blanks.split(item.head.asInstanceOf[String].toLowerCase).iterator
         .filter(_.nonEmpty).map(w => Seq(w, 1L))
     def rawReducer(key: Any, values: Iterator[Any]): IterableOnce[Seq[Any]] =
       Iterator.single(Seq(values.size.toLong, 1L))

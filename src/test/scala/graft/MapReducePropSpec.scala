@@ -20,16 +20,27 @@ import graft.mr._
   * it receives them, so its output depends on the map-side order (only
   * generated where that order is total); 2 emits one sum per key, the
   * only shape generated with the combiner, which needs `KV` emits.
+  *
+  * `byObjects` gives the job an `Ordering[Int]` equal in order to
+  * `Ordering.Int` but not `==` to it, so its shuffles take the object
+  * path instead of the byte path.
   */
 final case class GenSpec(
     mapSort: Boolean, mapWithValue: Boolean, mapRev: Boolean,
     redSort: Boolean, redWithValue: Boolean, redRev: Boolean,
     stable: Boolean, inParts: Int, outParts: Option[Int], reducerShape: Int,
-    combine: Boolean = false) {
+    combine: Boolean = false, byObjects: Boolean = false) {
   def n: Int = outParts.getOrElse(inParts)
 }
 
-class GenJob(val spec: GenSpec) extends MapReduce[(Int, Int, Int), Int, Int, Int] {
+/** `Ordering.Int`'s order under another identity. */
+object IntOrder extends Ordering[Int] {
+  def compare(a: Int, b: Int): Int = Integer.compare(a, b)
+}
+
+class GenJob(val spec: GenSpec) extends MapReduce[(Int, Int, Int), Int, Int, Int]()(
+    scala.reflect.ClassTag.Int, GenJob.ord(spec), scala.reflect.ClassTag.Int, GenJob.ord(spec),
+    scala.reflect.ClassTag.Int, GenJob.ord(spec)) {
   override def sortMapWithValue = spec.mapWithValue
   override def sortReduceWithValue = spec.redWithValue
   override def sortMapReverse = spec.mapRev
@@ -57,6 +68,10 @@ class GenJob(val spec: GenSpec) extends MapReduce[(Int, Int, Int), Int, Int, Int
         val sum = vs.sum
         Iterator.single(emit(spec.redSort, k % 2, sum % 5, sum))
     }
+}
+
+object GenJob {
+  def ord(spec: GenSpec): Ordering[Int] = if (spec.byObjects) IntOrder else Ordering.Int
 }
 
 /** A serial interpreter of tinymr's `_partition_and_sort`
@@ -103,17 +118,18 @@ object SerialMR {
     }
 }
 
-/** Differential spec: `run`, `runCollapsed`, `apply` and `write` of
+/** Differential checks: `run`, `runCollapsed`, `apply` and `write` of
   * generated jobs against [[SerialMR]], which ignores the combiner.
   * Under `stable` every per-key sequence must match exactly; otherwise
   * each run of tied sort keys must hold the same multiset in the same
   * place (so a total order is compared exactly), and a collapsed value
   * must come from the first run. `write` is compared per key as a
-  * multiset, since parquet keeps no row order.
+  * multiset, since parquet keeps no row order. A job must take the
+  * shuffle path its spec asks for.
   */
-class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
+trait SerialDiff extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = Session.build(cpus = 4)
+  def spark: SparkSession
   override def afterAll(): Unit = spark.stop()
   def sc = spark.sparkContext
 
@@ -130,10 +146,11 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
     inParts <- parts
     outParts <- Gen.option(parts)
     shape <- Gen.oneOf(0, 1, 2)
+    byObjects <- Gen.oneOf(false, true)
   } yield GenSpec(mapSort, mapWithValue, mapRev, redSort, redWithValue, redRev, stable,
     inParts, outParts,
     // the numbering reducer needs a total map-side order
-    if (shape == 1 && !(stable || mapWithValue)) 0 else shape)
+    if (shape == 1 && !(stable || mapWithValue)) 0 else shape, byObjects = byObjects)
 
   /** Skewed keys (half the items on key 0) and sort elements from a
     * range of 3, so ties are common. */
@@ -156,6 +173,7 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
     val job = new GenJob(spec)
     val want = SerialMR.run(job, items)
     val errs = mutable.ArrayBuffer.empty[String]
+    if (job.sortsBytes == spec.byObjects) errs += s"sortsBytes is ${job.sortsBytes}"
     def seqOk(k: Int, got: Seq[Int]): Unit = {
       val exp = want(k)
       val ok =
@@ -219,6 +237,13 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = Test.check(params, prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
+}
+
+/** [[SerialDiff]] over generated jobs, each on a shuffle path drawn
+  * at random. */
+class MapReducePropSpec extends SerialDiff {
+
+  lazy val spark: SparkSession = Session.build(cpus = 4)
 
   test("run, runCollapsed and apply agree with the serial tinymr interpreter") {
     check(cases, 60, 20261017L)(mismatches)
@@ -238,9 +263,9 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
     // time after the combiner has flushed
     val keys = MapReduce.CombineKeys + MapReduce.CombineKeys / 2
     val items = (0 until 2 * keys).map(i => (i % keys, 0, 1 + i % 60))
-    for (stable <- Seq(false, true)) {
+    for (stable <- Seq(false, true); byObjects <- Seq(false, true)) {
       val spec = GenSpec(false, false, false, false, false, false, stable, 1, Some(3), 2,
-        combine = true)
+        combine = true, byObjects = byObjects)
       val errs = mismatches(spec, items)
       assert(errs.isEmpty, s"$spec: ${errs.take(3).mkString("; ")}")
     }
@@ -259,4 +284,60 @@ class MapReducePropSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(errs.isEmpty, s"$spec: ${errs.take(3).mkString("; ")}")
     }
   }
+}
+
+/** The reduce-side sorters of both shuffle paths spill: in a session
+  * whose sorters spill every [[MapReduceSpillSpec.SpillEvery]] records,
+  * generated jobs over a few hundred items agree with [[SerialMR]], and
+  * their tasks report bytes spilled from memory. */
+class MapReduceSpillSpec extends SerialDiff {
+  import MapReduceSpillSpec._
+
+  lazy val spark: SparkSession = {
+    System.setProperty(SpillKey, SpillEvery.toString)
+    try Session.build(cpus = 2) finally System.clearProperty(SpillKey)
+  }
+
+  /** Bytes the tasks of `body`'s jobs report spilled from memory. */
+  def spilledBy(body: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = s"spill-sentinel-${System.nanoTime}"
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) spilled.addAndGet(e.taskMetrics.memoryBytesSpilled)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel)) seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // listener events arrive in order: once the sentinel job is seen,
+      // so is every task of `body`
+      sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      spilled.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def bigCases(byObjects: Boolean): Gen[(GenSpec, Seq[(Int, Int, Int)])] = for {
+    s <- Gen.oneOf(specs, combinerSpecs)
+    n <- Gen.choose(100, 300)
+    xs <- Gen.listOfN(n, item)
+  } yield (s.copy(byObjects = byObjects), xs)
+
+  for ((path, byObjects) <- Seq("byte" -> false, "object" -> true))
+    test(s"$path-path jobs agree with the serial interpreter while their sorters spill") {
+      assert(sc.getConf.get(SpillKey) == SpillEvery.toString)
+      val spilled = spilledBy(check(bigCases(byObjects), 20, 20261021L)(mismatches))
+      assert(spilled > 0, s"$path path: no task spilled")
+    }
+}
+
+object MapReduceSpillSpec {
+  val SpillKey = "spark.shuffle.spill.numElementsForceSpillThreshold"
+  val SpillEvery = 16
 }

@@ -94,6 +94,22 @@ class LongestLine extends MapReduce[String, String, Int, String] {
     vs.map(v => KSV(w, v.length, v))
 }
 
+/** Keys through a key-preserving reducer, under `ord`, with the sum
+  * combiner when `combine`. */
+class KeepKeys[K: scala.reflect.ClassTag](ord: Ordering[K], combine: Boolean)
+    extends MapReduce[(K, Int), K, Int, Int]()(implicitly[scala.reflect.ClassTag[K]], ord,
+      scala.reflect.ClassTag.Int, Ordering.Int, scala.reflect.ClassTag.Int, Ordering.Int) {
+  override def numPartitions = Some(1)
+  override def combiner: Option[(Int, Int) => Int] = if (combine) Some(_ + _) else None
+  def mapper(r: (K, Int)): IterableOnce[Emit[K, Int, Int]] = Iterator.single(KV(r._1, r._2))
+  def reducer(k: K, vs: Iterator[Int]): IterableOnce[Emit[K, Int, Int]] = vs.map(KV(k, _))
+}
+
+/** `Ordering.Double.TotalOrdering`'s order under another identity. */
+object DoubleOrder extends Ordering[Double] {
+  def compare(a: Double, b: Double): Int = java.lang.Double.compare(a, b)
+}
+
 /** Declares a combiner but emits `KSV` records, which it cannot fold. */
 class KsvCombiner extends MapReduce[String, String, Int, Long] {
   override def combiner: Option[(Long, Long) => Long] = Some(_ + _)
@@ -294,6 +310,27 @@ class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs == 1 && runJobs == 1, s"jobs: $jobs, $runJobs")
   }
 
+  test("runCollapsed and the combiner keep -0.0 and 0.0 apart and NaN together, also in tuples, on both shuffle paths") {
+    val ds = Seq(-0.0, 0.0, Double.NaN, Double.NaN, -0.0)
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    def check[K: scala.reflect.ClassTag](keys: Seq[K], natural: Ordering[K], other: Ordering[K],
+        id: K => Any): Unit = {
+      val data = keys.zipWithIndex.map { case (k, i) => (k, i + 1) }
+      for (ord <- Seq(natural, other)) {
+        val job = new KeepKeys(ord, combine = false)
+        assert(job.sortsBytes == (ord eq natural))
+        val got = job.runCollapsed(sc.parallelize(data, 1)).collect().map(kv => (id(kv._1), kv._2))
+        assert(got.toSet == Set((id(keys(0)), 1), (id(keys(1)), 2), (id(keys(2)), 3)), s"$ord: ${got.toSeq}")
+        val sums = new KeepKeys(ord, combine = true).run(sc.parallelize(data, 1)).collect()
+          .map(kv => (id(kv._1), kv._2.sum))
+        assert(sums.toSet == Set((id(keys(0)), 6), (id(keys(1)), 2), (id(keys(2)), 7)), s"$ord: ${sums.toSeq}")
+      }
+    }
+    check[Double](ds, Ordering.Double.TotalOrdering, DoubleOrder, bits)
+    check[(Double, Int)](ds.map((_, 1)), Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int),
+      Ordering.Tuple2(DoubleOrder, Ordering.Int), k => bits(k._1))
+  }
+
   test("a combiner job whose mapper emits KSV fails naming the job class") {
     val ex = intercept[org.apache.spark.SparkException] {
       new KsvCombiner().run(sc.parallelize(twoParts, 2)).collect()
@@ -378,6 +415,51 @@ class MapReduceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val jsonBack = spark.read.schema("key STRING, value BIGINT").json(jsonDir)
       .as[(String, Long)].collect().toMap
     assert(jsonBack == expected)
+  }
+
+  test("shipped jobs with natural orderings shuffle bytes; untyped jobs shuffle objects") {
+    import graft.queries.{MrQueries, Relational3, Relational4}
+    val bytes: Seq[MapReduce[_, _, _, _]] = Seq(new MrQueries.WordCount, new MrQueries.KeyOverload,
+      new MrQueries.LongestDoc, new Relational3.GlobalSum, new Relational4.NationEnrich(null),
+      new MrQueries.OrdersTimeline, new graft.streaming.EventStreams.TypeCount)
+    val objects: Seq[MapReduce[_, _, _, _]] = Seq(new MrQueries.FreqOfFreq, new UntypedWC(bad = false))
+    assert(bytes.filterNot(_.sortsBytes).map(_.getClass.getSimpleName).isEmpty)
+    assert(objects.filter(_.sortsBytes).map(_.getClass.getSimpleName).isEmpty)
+  }
+
+  test("the result's partitioner places each key where it is, on both shuffle paths") {
+    val typed = new FixedPartsWC(3).run(sc.parallelize(text, 2))
+    val untyped = new UntypedWC(bad = false).run(sc.parallelize(text.map(Seq[Any](_)), 2))
+    for (res <- Seq(typed, untyped.asInstanceOf[org.apache.spark.rdd.RDD[(Any, Seq[Long])]])) {
+      val at = res.mapPartitionsWithIndex((i, it) => it.map(kv => (kv._1, i))).collect()
+      assert(at.nonEmpty && at.forall { case (k, i) => res.partitioner.get.getPartition(k) == i })
+    }
+    assert(typed.lookup("word") == Seq(Seq(2L)))
+  }
+
+  test("both shuffle paths read their shuffles under the repartitionAndSortWithinPartitions scope") {
+    import org.apache.spark.scheduler._
+    // a listener filing Layer A stages by RDD scope sees both rounds of either path
+    val group = s"scoped-${System.nanoTime}"
+    val scoped = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == s"$group-end")) done.countDown()
+        else scoped.addAndGet(e.stageInfos.count(_.rddInfos.exists(
+          _.scope.exists(_.name == "repartitionAndSortWithinPartitions"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      new FixedPartsWC(3).run(sc.parallelize(text, 2)).collect()
+      new UntypedWC(bad = false).run(sc.parallelize(text.map(Seq[Any](_)), 2)).collect()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      assert(new FixedPartsWC(3).sortsBytes && !new UntypedWC(bad = false).sortsBytes)
+      assert(scoped.get == 4, s"${scoped.get} stages read a scoped shuffle, expected 2 per job")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("untyped surface runs end-to-end and raises ElementCountError on bad arity") {
