@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * store's size. The known cost the series will show: a compaction
   * batch folds the whole store, so its spikes grow with accumulated
   * corpus (single-level fold economics, amortized O(corpus/K) per
-  * batch — see maybeCompactStore's scaladoc for why that trade is
+  * batch — see EventStreams.commitStores' scaladoc for why that trade is
   * taken over tiered levels at this store's scale).
   *
   * Corpus: the ScaleProbe 10× twin when already staged (50k docs —

@@ -41,29 +41,6 @@ object Tables {
     if (df.inputFiles.length < cores) df.repartition(cores) else df
   }
 
-  /** [[spread]] for a frame that is then CACHED and consumed by
-    * CONCURRENT jobs (the st2x micro-batch choreography): the
-    * round-robin goes through the RDD layer, so the cached plan keeps
-    * a LEAF under it instead of an AQE Exchange. With `spread`'s SQL
-    * repartition below the cache, two futures materializing the same
-    * cached partition race inside AQE stage materialization and a
-    * loser surfaces "Block rdd_N not found" (observed ~1/4 full-suite
-    * runs on st21); a leaf plan degrades that race to duplicate
-    * compute, exactly like the raw-scan plans the choreography was
-    * built on. Callers must pass an exchange-free frame (a scan/
-    * projection) — `Dataset.rdd` under AQE would otherwise execute
-    * upstream stages at construction (spread's docstring). The
-    * Row round-trip costs microseconds at micro-batch row counts;
-    * many-split production inputs take the no-op branch.
-    */
-  def spreadRows(df: DataFrame): DataFrame = {
-    val sp = df.sparkSession
-    val cores = sp.sparkContext.defaultParallelism
-    if (df.inputFiles.length < cores)
-      sp.createDataFrame(df.rdd.repartition(cores), df.schema)
-    else df
-  }
-
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = apply(s, d, "customer")

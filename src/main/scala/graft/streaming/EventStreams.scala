@@ -1027,26 +1027,88 @@ object EventStreams {
       }.foldLeft(0)(math.max)
     }
 
-  /** COMPACTION for the bucket-clustered append stores: each batch
-    * appends one file per bucket, so file count — and with it the
-    * driver-side listing every probe pays — grows linearly with batch
-    * count. When any bucket's file count reaches `threshold`, fold the
-    * whole store back to one file per bucket (read → recluster →
-    * rewrite → atomic-enough dir swap; foreachBatch is single-threaded
-    * per store, so the swap window races nothing). The economics are
-    * log-structured-storage's: a compaction reads the full store, but
-    * triggering every K batches amortizes that to O(corpus/K) per
-    * batch — the synchronous stand-in for the background compactor a
-    * production deployment runs; the per-batch DATA work stays
-    * O(batch). Threshold 8 keeps the 4–5-batch gates compaction-free
-    * (their stores never degrade enough to matter) while the
-    * ≥12-batch spec exercises the fold and the bounded-files law.
+  /** `GRAFT_PHASES=1` prints a micro-batch's per-phase wall times
+    * (stage → jobs → refresh → compact) to stderr as `[tag] name
+    * seconds` — the attribution tool that found r11's census-refresh
+    * fork-per-file tax in minutes after whole-batch numbers had only
+    * said "slower". Off, a phase is one clock read. */
+  private final class Phases(tag: String) {
+    private val on = tag.nonEmpty && sys.env.contains("GRAFT_PHASES")
+    private var t = System.nanoTime()
+    def apply(name: String): Unit = {
+      val now = System.nanoTime()
+      if (on) System.err.println(f"[$tag] $name%-8s ${(now - t) / 1e9}%6.2f s")
+      t = now
+    }
+  }
+
+  /** THE COMMIT of every store micro-batch (st20, st21, st24) and of
+    * st26's tombstone fold, written once:
+    *
+    *  1. every cache in `shared` is loaded before any write starts.
+    *     The writes read these caches from concurrent jobs (and AQE
+    *     runs a job's independent stages concurrently). Two tasks
+    *     computing one cache block at once made the loser fetch a
+    *     copy still locked by the winner ("Failed to fetch remote
+    *     block") and compute it again, which now and then failed as
+    *     "Block rdd_N does not exist" (st21's slice, about one
+    *     full-suite run in four). Loaded first, every consumer only
+    *     reads the block. A cache already loaded by the batch's
+    *     staging action costs no extra job;
+    *  2. the writes run as concurrent jobs: they touch disjoint dirs,
+    *     and a micro-batch's cost is dominated by fixed per-action
+    *     commit latency, which they then overlap (~1.5× on st20's gate
+    *     when introduced; against serial writes over loaded caches,
+    *     st20 and st21 at sf0.1 on 4 cpus measured a tie);
+    *  3. ALL writes settle before the first failure is rethrown:
+    *     propagating while a sibling still runs would leave a zombie
+    *     job racing the cache release below and holding executors;
+    *  4. each store's census is refreshed — the writes are the batch's
+    *     only store mutations, so one listing each replaces every
+    *     later probe's — and then COMPACTED when a bucket holds 8
+    *     files. Each batch appends one file per bucket, so file count
+    *     (and the listing every probe pays) grows with batch count;
+    *     folding the store back to one file per bucket every 8 batches
+    *     amortizes the full-store rewrite to O(corpus/8) per batch, the
+    *     synchronous stand-in for a production background compactor.
+    *     8 keeps the 4–5-batch gates compaction-free while the
+    *     ≥12-batch specs exercise the fold and the bounded-files law;
+    *  5. on ANY failure every store's census entry is dropped: a
+    *     sibling write that committed (bands landed, shingles failed)
+    *     must not leave a caller that catches and continues reading
+    *     the stale pre-write snapshot. Reads fall back to live
+    *     listings until the next successful refresh;
+    *  6. `shared` is released, blocking, once everything settled.
     */
-  private[graft] def maybeCompactStore(
-      sp: org.apache.spark.sql.SparkSession, dir: String,
-      threshold: Int = 8): Unit = {
-    if (maxFilesPerBucket(dir) >= threshold)
-      rewriteStore(sp, dir, StoreCensus.read(sp, dir))
+  private def commitStores(sp: SparkSession, stores: Seq[String],
+      shared: Seq[DataFrame] = Nil, ph: Phases = new Phases(""))(
+      writes: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val cache = sp.sharedState.cacheManager
+    try {
+      shared.foreach { df =>
+        val loaded = cache.lookupCachedData(
+          df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+          .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+        if (!loaded) df.count()
+      }
+      val jobs = writes.map(w => Future(w()))
+      jobs.foreach(Await.ready(_, Duration.Inf))
+      jobs.foreach(Await.result(_, Duration.Inf))
+      ph("jobs")
+      stores.foreach(StoreCensus.refresh(sp, _))
+      ph("refresh")
+      stores.foreach { dir =>
+        if (maxFilesPerBucket(dir) >= 8)
+          rewriteStore(sp, dir, StoreCensus.read(sp, dir))
+      }
+      ph("compact")
+    } catch { case e: Throwable =>
+      stores.foreach(StoreCensus.invalidate)
+      throw e
+    } finally shared.foreach(_.unpersist(blocking = true))
   }
 
   /** Fold `rows` back into `dir` as one file per bucket, swapping the
@@ -1268,10 +1330,10 @@ object EventStreams {
     * probe job — adversarial boilerplate-heavy batches never send
     * rows driver-ward at all); (3) the two store
     * appends and the probe→verify chain touch disjoint inputs and
-    * disjoint output dirs, so they are submitted as CONCURRENT jobs
-    * (sharing the already-materialized sigs cache) and awaited
-    * together — overlapping the commit latencies instead of paying
-    * them serially (measured ~1.5× on the gate). The store frames are
+    * disjoint output dirs, so [[commitStores]] runs them as
+    * CONCURRENT jobs over the batch's loaded caches — overlapping the
+    * commit latencies instead of paying them serially (measured ~1.5×
+    * on the gate). The store frames are
     * created (= file-listed) BEFORE the appends launch, so the probe
     * reads a pre-append snapshot; the final dropDuplicates is
     * belt-and-braces against a racing list ever seeing an own-batch
@@ -1280,30 +1342,19 @@ object EventStreams {
   private[graft] def st20Batch(batch: DataFrame, bandStore: String,
       shStore: String, outDir: String): Unit = {
         val sp = batch.sparkSession
-        // GRAFT_PHASES=1 prints per-phase wall times (stage → jobs →
-        // refresh → compact) to stderr — the attribution tool that
-        // found r11's census-refresh fork-per-file tax in minutes
-        // after whole-batch numbers had only said "slower". Env-gated;
-        // one AtomicLong swap per phase when off.
-        val phT = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-        def ph(name: String): Unit = if (sys.env.contains("GRAFT_PHASES")) {
-          val now = System.nanoTime()
-          System.err.println(f"[phase] $name%-8s ${(now - phT.getAndSet(now)) / 1e9}%6.2f s")
-        } else phT.set(System.nanoTime())
+        val ph = new Phases("phase")
         graft.functions.VectorExpressions.register(sp)
         import sp.implicits._
-        // spreadRows before the heavy narrow map (cdcOverlap's spread
+        // spread before the heavy narrow map (cdcOverlap's spread
         // discipline, applied to the micro-batch): each replay chunk is
         // ONE parquet file → one input split, so the shingle+banding
         // projection would run in a single task however many cores
         // exist. The batch rows are tiny (ids + text), so the
         // round-robin costs far less than the serialized shingling it
         // parallelizes (st21Batch's twin measured ~2× off the gate's
-        // stage phase at sf0.1 / 4 cores). RDD-level spread, not the
-        // SQL repartition: this frame is cached and read by concurrent
-        // jobs — see Tables.spreadRows. Production micro-batches
+        // stage phase at sf0.1 / 4 cores). Production micro-batches
         // arrive in many source splits and take the no-op branch.
-        val sigs = Tables.spreadRows(batch)
+        val sigs = Tables.spread(batch)
           .withColumn("sh", expr("graft_shingles(text)"))
           .filter(size(col("sh")) > 0)
           .select(col("doc_id"), col("is_new"), col("sh"))
@@ -1345,10 +1396,7 @@ object EventStreams {
         // have a single consumer, so caching would be pure overhead)
         val corpusBandsShared =
           if (kbs.nonEmpty) corpusBands.cache() else corpusBands
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val appendBands = Future {
+        val appendBands = () => {
           corpusBandsShared
             // cluster by bucket first: without this, every shuffle
             // task writes a sliver into every bucket dir (tasks x
@@ -1358,13 +1406,13 @@ object EventStreams {
             .repartition(StoreBuckets, col("bucket"))
             .write.partitionBy("bucket").mode("append").parquet(bandStore)
         }
-        val appendSh = Future {
+        val appendSh = () => {
           corpus.select(col("doc_id"), col("sh"))
             .withColumn("bucket", bucketOf(col("doc_id")))
             .repartition(StoreBuckets, col("bucket"))
             .write.partitionBy("bucket").mode("append").parquet(shStore)
         }
-        val probe = Future {
+        val probe = () => {
           if (kbs.nonEmpty) {
             val probeBands = corpusBandsShared
               .select(col("bucket"), col("band"), col("bv"), col("corpus_id"))
@@ -1451,40 +1499,9 @@ object EventStreams {
             } finally candShared.unpersist()
           }
         }
-        val jobs = Seq(appendBands, appendSh, probe)
-        try {
-          // settle ALL jobs before rethrowing the first failure:
-          // propagating while a sibling still runs would leave a
-          // zombie job racing the caller's cache cleanup and holding
-          // executors for the rest of the JVM
-          jobs.foreach(Await.ready(_, Duration.Inf))
-          jobs.foreach(Await.result(_, Duration.Inf))
-          ph("jobs")
-          // the appends are this batch's only store mutations: one
-          // census listing each replaces every later probe's
-          // re-listing (and feeds maybeCompactStore's file counts)
-          StoreCensus.refresh(sp, bandStore)
-          StoreCensus.refresh(sp, shStore)
-          ph("refresh")
-          maybeCompactStore(sp, bandStore)
-          maybeCompactStore(sp, shStore)
-          ph("compact")
-        } catch { case e: Throwable =>
-          // mirror rewriteStore's failure path: a sibling append that
-          // already committed (bands landed, sh failed) would leave the
-          // census serving the stale pre-append snapshot to any caller
-          // that catches this failure and keeps running — drop both
-          // entries so reads fall back to live listings until the next
-          // successful mutation
-          StoreCensus.invalidate(bandStore)
-          StoreCensus.invalidate(shStore)
-          throw e
-        } finally {
-          if (kbs.nonEmpty) corpusBandsShared.unpersist()
-          newBands.unpersist()
-          sigs.unpersist()
-        }
-        ()
+        commitStores(sp, Seq(bandStore, shStore),
+          Seq(sigs, newBands) ++ Option.when(kbs.nonEmpty)(corpusBandsShared),
+          ph)(appendBands, appendSh, probe)
   }
 
   /** Retention for the append-only pair logs (the st20/st21 `outDir`):
@@ -1504,18 +1521,40 @@ object EventStreams {
     // expires a tracked dir the cached file list must not outlive it
     StoreCensus.invalidate(dir)
     val cutoff = System.currentTimeMillis() - ttlMs
+    val (fs, _) = storeFs(dir)
+    logParts(dir).filter(_.getModificationTime < cutoff).foreach { f =>
+      if (!fs.delete(f.getPath, false)) throw new IllegalStateException(
+        s"log expiry: failed to delete ${f.getPath}")
+    }
+  }
+
+  /** Every part file under an append log, recursively. */
+  private def logParts(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val (fs, p) = storeFs(dir)
+    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
     if (fs.exists(p)) {
       val it = fs.listFiles(p, true)
       while (it.hasNext) {
         val f = it.next()
-        if (f.getPath.getName.startsWith("part-") &&
-            f.getModificationTime < cutoff) {
-          if (!fs.delete(f.getPath, false)) throw new IllegalStateException(
-            s"log expiry: failed to delete ${f.getPath}")
-        }
+        if (f.getPath.getName.startsWith("part-")) out += f
       }
     }
+    out.result()
+  }
+
+  /** Age EVERY part file now in `dir` out through [[expireAppendLog]]:
+    * first sleep until the newest one is older than `ttlMs`, so the
+    * cut falls after the last append however fast the caller got here
+    * (a wall-clock floor since the last append is a guess that a
+    * loaded box or a coarse mtime can beat). The tombstone fold that
+    * precedes st27's restart usually takes longer than `ttlMs`, and
+    * then this does not sleep at all. */
+  private[graft] def restartAppendLog(dir: String, ttlMs: Long): Unit = {
+    logParts(dir).map(_.getModificationTime).maxOption.foreach { newest =>
+      val wait = newest + ttlMs + 1 - System.currentTimeMillis()
+      if (wait > 0) Thread.sleep(wait)
+    }
+    expireAppendLog(dir, ttlMs)
   }
 
   /** st26: CORPUS-REFRESH DELETION over the standing dedup index —
@@ -1562,21 +1601,13 @@ object EventStreams {
     // stores (band keys by corpus_id, shingles by doc_id) — as
     // CONCURRENT jobs: the two folds touch disjoint store dirs and
     // each is dominated by the same fixed read→rewrite→swap commit
-    // machinery the batch jobs overlap (st20Batch's measured ~1.5×),
-    // so the second fold's latency hides behind the first's
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val deleted = Tables.documents(s, d)
-        .filter(!isNew && col("doc_id") % 7 === 3).select(col("doc_id"))
-      val folds = Seq(
-        Future { deleteFromStore(s, bandStore, "corpus_id", deleted) },
-        Future { deleteFromStore(s, shStore, "doc_id", deleted) })
-      // settle both before rethrowing (st20Batch's await discipline)
-      folds.foreach(Await.ready(_, Duration.Inf))
-      folds.foreach(Await.result(_, Duration.Inf))
-    }
+    // machinery the batch jobs overlap, so the second fold's latency
+    // hides behind the first's
+    val deleted = Tables.documents(s, d)
+      .filter(!isNew && col("doc_id") % 7 === 3).select(col("doc_id"))
+    commitStores(s, Seq(bandStore, shStore))(
+      () => deleteFromStore(s, bandStore, "corpus_id", deleted),
+      () => deleteFromStore(s, shStore, "doc_id", deleted))
     // the probe: all arrivals, against the post-delete store
     st20Batch(Tables.documents(s, d).filter(isNew)
       .select(col("doc_id"), col("text")).withColumn("is_new", lit(true)),
@@ -1638,18 +1669,9 @@ object EventStreams {
     try q.processAllAvailable() finally q.stop()
     val deleted = Tables.documents(s, d)
       .filter(!isNew && col("doc_id") % 7 === 3).select(col("doc_id"))
-    // the expiry boundary needs every pre-refresh append strictly
-    // older than the TTL cutoff; the last append finished before
-    // q.stop() returned, so the tombstone fold's own wall time (a
-    // full read→rewrite→swap, far above 100 ms) is the wait — sleep
-    // only for whatever remains of the 100 ms margin instead of
-    // serially on top of it
-    val tStop = System.currentTimeMillis()
     deleteFromStore(s, sigStore, "doc_id", deleted)
     // restart the quarantine window: every pre-refresh append ages out
-    val waited = System.currentTimeMillis() - tStop
-    if (waited < 100) Thread.sleep(100 - waited)
-    expireAppendLog(pairDir, ttlMs = 50)
+    restartAppendLog(pairDir, ttlMs = 50)
     st21Batch(Tables.documents(s, d).filter(isNew)
       .select(col("doc_id"), col("text")), sigStore, pairDir)
     val shared = s.read
@@ -1733,19 +1755,12 @@ object EventStreams {
   private[graft] def st21Batch(batch: DataFrame, sigStore: String,
       pairDir: String): Unit = {
     val sp = batch.sparkSession
-    // st20Batch's GRAFT_PHASES attribution timer, symmetric here
-    val phT = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    def ph(name: String): Unit = if (sys.env.contains("GRAFT_PHASES")) {
-      val now = System.nanoTime()
-      System.err.println(f"[phase21] $name%-8s ${(now - phT.getAndSet(now)) / 1e9}%6.2f s")
-    } else phT.set(System.nanoTime())
-    // spreadRows before the chunking map — the micro-batch arrives as
-    // one single-file split (see st20Batch's spread note); cdcSigs'
-    // rolling-hash projection is the batch's dominant narrow stage.
-    // RDD-level, not SQL repartition: cached + concurrent consumers
-    // (Tables.spreadRows' race note)
+    val ph = new Phases("phase21")
+    // spread before the chunking map — the micro-batch arrives as one
+    // single-file split (see st20Batch's spread note); cdcSigs'
+    // rolling-hash projection is the batch's dominant narrow stage
     val sigs = graft.queries.Dedup
-      .cdcSigs(Tables.spreadRows(batch.select(col("doc_id"), col("text"))))
+      .cdcSigs(Tables.spread(batch.select(col("doc_id"), col("text"))))
       .withColumn("bucket", bucketOf(col("h"))).cache()
     // ONE staging action yields both the bucket list (prunes the
     // store) and the batch signature count (arms the funnel guard)
@@ -1792,41 +1807,14 @@ object EventStreams {
       within.unionByName(cross)
     } else within
     // the pair write and the signature append share only the cached
-    // sigs (and the pair job's slice scan reads the PRE-append file
-    // index, snapshotted when the slice frame was created), so the
-    // two writes are submitted concurrently — st20Batch's measured
-    // overlap of fixed per-action commit latency
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val writePairs = Future { pairs.write.mode("append").parquet(pairDir) }
-    val appendSigs = Future {
-      sigs.select(col("bucket"), col("doc_id"), col("h"), col("clen"))
+    // sigs and slice (and the pair job's slice scan reads the
+    // PRE-append file index, snapshotted when the slice frame was
+    // created), so commitStores runs the two writes concurrently
+    commitStores(sp, Seq(sigStore), Seq(sigs) ++ Option(slice), ph)(
+      () => pairs.write.mode("append").parquet(pairDir),
+      () => sigs.select(col("bucket"), col("doc_id"), col("h"), col("clen"))
         .repartition(StoreBuckets, col("bucket")) // one file/bucket/batch
-        .write.partitionBy("bucket").mode("append").parquet(sigStore)
-    }
-    val jobs = Seq(writePairs, appendSigs)
-    try {
-      // settle both jobs before rethrowing (see st20Batch's await)
-      jobs.foreach(Await.ready(_, Duration.Inf))
-      jobs.foreach(Await.result(_, Duration.Inf))
-      ph("jobs")
-      // census refresh after the one mutation (see st20Batch)
-      StoreCensus.refresh(sp, sigStore)
-      ph("refresh")
-      maybeCompactStore(sp, sigStore)
-      ph("compact")
-    } catch { case e: Throwable =>
-      // st20Batch's failure discipline: a committed sibling write with
-      // a failed await must not leave the census pre-append stale for
-      // a caller that catches and continues
-      StoreCensus.invalidate(sigStore)
-      throw e
-    } finally {
-      if (slice != null) slice.unpersist()
-      sigs.unpersist()
-    }
-    ()
+        .write.partitionBy("bucket").mode("append").parquet(sigStore))
   }
 
 
@@ -1946,25 +1934,14 @@ object EventStreams {
   private[graft] def st24Batch(batch: DataFrame, store: String): Unit = {
     val sp = batch.sparkSession
     graft.functions.VectorExpressions.register(sp)
-    try {
-      batch
-        .selectExpr("vec_id",
-          "transform(embedding, x -> cast(x AS double)) AS v")
-        .selectExpr("vec_id", "v", "sqrt(graft_sumsq(v)) AS nrm",
-          "graft_lsh_bucket(v) AS lsh")
-        .withColumn("bucket", bucketOf(col("lsh")))
-        .repartition(col("bucket")) // one file per bucket per batch
-        .write.partitionBy("bucket").mode("append").parquet(store)
-      // census refresh after the one mutation (see st20Batch)
-      StoreCensus.refresh(sp, store)
-      maybeCompactStore(sp, store)
-    } catch { case e: Throwable =>
-      // a partially-committed append must not be served from a stale
-      // census (st20Batch's failure discipline)
-      StoreCensus.invalidate(store)
-      throw e
-    }
-    ()
+    commitStores(sp, Seq(store))(() => batch
+      .selectExpr("vec_id",
+        "transform(embedding, x -> cast(x AS double)) AS v")
+      .selectExpr("vec_id", "v", "sqrt(graft_sumsq(v)) AS nrm",
+        "graft_lsh_bucket(v) AS lsh")
+      .withColumn("bucket", bucketOf(col("lsh")))
+      .repartition(col("bucket")) // one file per bucket per batch
+      .write.partitionBy("bucket").mode("append").parquet(store))
   }
 
   /** The serve-time store read behind st24/st25 — bucket-pruned to

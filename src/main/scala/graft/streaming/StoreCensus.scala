@@ -91,11 +91,15 @@ import org.apache.spark.sql.types.StructType
   * partition components stay name-based by contract: their types are
   * derived from path VALUES at read time, not pinned per file.
   *
-  * Consistency with st20Batch's concurrency: the census entry a probe
-  * reads is by construction the PRE-append snapshot (refresh runs on
-  * the caller thread after the append futures settle), so the probe's
-  * "store accumulated from strictly earlier batches" read is now
-  * snapshot-exact rather than racing a live directory listing.
+  * Consistency with the micro-batches' concurrent writes: every store
+  * mutation of st20/st21/st24 and st26's fold commits through
+  * `EventStreams.commitStores`, which refreshes the census on the
+  * caller thread only after all of the batch's writes have settled
+  * (and drops the entry of every store it touched on any failure).
+  * The census entry a probe reads is therefore by construction the
+  * PRE-append snapshot, so the probe's "store accumulated from
+  * strictly earlier batches" read is snapshot-exact rather than
+  * racing a live directory listing.
   *
   * Scale note (100 TB): entries are driver memory — O(files) statuses
   * per store, bounded by compaction; at threshold 8 × 1024 buckets

@@ -99,20 +99,15 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(BuildInfo.scalaVersion.startsWith("2.13"))
   }
 
-  test("spreadRows raises a single-split scan to core parallelism, rows intact") {
+  test("spread raises a single-split scan to core parallelism, rows intact") {
     import graft.core.Tables
     // single-file fixture scan: one input split < defaultParallelism
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val out = Tables.spreadRows(docs)
+    val out = Tables.spread(docs)
     assert(out.rdd.getNumPartitions ==
       spark.sparkContext.defaultParallelism)
     // exact multiset equality — the spread is a pure re-layout
     assert(out.exceptAll(docs).isEmpty && docs.exceptAll(out).isEmpty)
-    // the spread plan stays a LEAF (no SQL Exchange): the property that
-    // keeps cached+concurrently-consumed micro-batch frames off the
-    // AQE stage-materialization race (Tables.spreadRows' doc)
-    assert(!out.queryExecution.executedPlan.toString.contains("Exchange"),
-      "spreadRows must not plan a SQL Exchange")
   }
 
   // --- native expressions --------------------------------------------
@@ -1944,36 +1939,15 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def mkWords(rnd: scala.util.Random): Int => String =
       n => Seq.fill(n)("w" + rnd.nextInt(100000)).mkString(" ")
     // 6 preload batches of diverse-vocab docs → chunks spread over all
-    // 16 buckets, many store files. Retried once on Spark's transient
-    // "Block rdd_N does not exist" — a documented unpersist/concurrent-
-    // read race inside BlockManager that full-suite cache pressure
-    // occasionally trips; the law this spec asserts (scan volume) is
-    // unaffected, and a genuine failure reproduces on the retry. The
-    // retry rebuilds BOTH stores from FRESH temp dirs: st21Batch's two
-    // writes run concurrently, so the failed batch's sibling append
-    // may already have committed — rerunning against the same dirs
-    // would double-append signatures/pairs. The caught exception is
-    // logged so recurring hits stay visible rather than silently
-    // masked.
-    def preload(): (String, String) = {
-      val sigStore = graft.core.Staging.tempAtExit("graft_st21met_sigs_")
-      val pairDir = graft.core.Staging.tempAtExit("graft_st21met_pairs_")
-      val words = mkWords(new scala.util.Random(43))
-      (0 until 6).foreach { b =>
-        val docs = ((b * 20 + 1) to (b * 20 + 15))
-          .map(i => (i.toLong, words(60))).toDF("doc_id", "text")
-        graft.streaming.EventStreams.st21Batch(docs, sigStore, pairDir)
-      }
-      (sigStore, pairDir)
+    // 16 buckets, many store files
+    val sigStore = graft.core.Staging.tempAtExit("graft_st21met_sigs_")
+    val pairDir = graft.core.Staging.tempAtExit("graft_st21met_pairs_")
+    val words = mkWords(new scala.util.Random(43))
+    (0 until 6).foreach { b =>
+      val docs = ((b * 20 + 1) to (b * 20 + 15))
+        .map(i => (i.toLong, words(60))).toDF("doc_id", "text")
+      graft.streaming.EventStreams.st21Batch(docs, sigStore, pairDir)
     }
-    val (sigStore, pairDir) =
-      try preload() catch {
-        case e: org.apache.spark.SparkException
-            if String.valueOf(e.getMessage).contains("does not exist") =>
-          info(s"transient BlockManager race during preload, rebuilding " +
-            s"stores from fresh dirs: ${e.getMessage}")
-          preload()
-      }
     def partFiles(f: java.io.File): Int =
       Option(f.listFiles()).map(_.map(c =>
         if (c.isDirectory) partFiles(c)
@@ -2010,8 +1984,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.listenerManager.register(listener)
     try {
       // a tiny probe batch: one doc, one long span → a handful of
-      // chunks → a handful of buckets (its own rng — the preload's is
-      // scoped inside preload() so a retry regenerates identically)
+      // chunks → a handful of buckets (its own rng)
       val probeWords = mkWords(new scala.util.Random(47))
       val probe = Seq((900L, probeWords(40))).toDF("doc_id", "text")
       graft.streaming.EventStreams.st21Batch(probe, sigStore, pairDir)
@@ -2238,8 +2211,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deleted.size == 10)
     graft.streaming.EventStreams.deleteFromStore(
       spark, sigStore, "doc_id", deleted.toDF("doc_id"))
-    Thread.sleep(100)
-    graft.streaming.EventStreams.expireAppendLog(pairDir, ttlMs = 50)
+    graft.streaming.EventStreams.restartAppendLog(pairDir, ttlMs = 50)
     graft.streaming.EventStreams.st21Batch(
       Seq((101L, span + " " + words(2))).toDF("doc_id", "text"),
       sigStore, pairDir)
@@ -2254,6 +2226,36 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.map(_._1).toSet == survivors,
       s"the cooled chunk must pair the arrival with EVERY survivor " +
         s"(got ${out.length} of ${survivors.size})")
+  }
+
+  test("st27's log restart expires every pre-refresh part file and no post-refresh one") {
+    import spark.implicits._
+    // restartAppendLog runs straight after the last append, with a
+    // TTL far above a batch's commit tail: without its mtime-derived
+    // wait, that append's files are younger than the TTL and would
+    // survive the restart
+    val es = graft.streaming.EventStreams
+    val sigStore = graft.core.Staging.tempAtExit("graft_restart_sigs_")
+    val pairDir = graft.core.Staging.tempAtExit("graft_restart_pairs_")
+    val shared = Seq.tabulate(40)(i => s"s$i").mkString(" ")
+    def batch(ids: Range) =
+      ids.map(i => (i.toLong, s"$shared tail$i")).toDF("doc_id", "text")
+    def parts(): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        Option(f.listFiles()).toSeq.flatten.flatMap(c =>
+          if (c.isDirectory) walk(c)
+          else if (c.getName.startsWith("part-")) Seq(c.getPath) else Nil)
+      walk(new java.io.File(pairDir)).toSet
+    }
+    es.st21Batch(batch(1 to 4), sigStore, pairDir)
+    es.st21Batch(batch(5 to 8), sigStore, pairDir)
+    assert(parts().nonEmpty, "the pre-refresh batches must log pairs")
+    es.restartAppendLog(pairDir, ttlMs = 1500)
+    assert(parts().isEmpty, s"pre-refresh part files survived: ${parts()}")
+    es.st21Batch(batch(9 to 12), sigStore, pairDir)
+    // the log now holds the post-refresh batch's pairs, and only those
+    val docB = spark.read.parquet(pairDir).select("doc_b").as[Long].collect()
+    assert(docB.nonEmpty && docB.forall(_ >= 9), docB.toSeq)
   }
 
   test("store machinery resolves scheme-qualified paths through the Hadoop FS API") {

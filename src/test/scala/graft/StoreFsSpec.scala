@@ -529,6 +529,34 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(StoreCensus.nonEmpty(store).contains(true))
     assert(StoreCensus.read(spark, store).collect().toSet ==
       spark.read.parquet(store).collect().toSet)
+
+    // the same rule over TWO stores (st20Batch): the shingle-store
+    // append fails while the band append and the probe run beside it.
+    // Both census entries go, no sibling job outlives the failure, and
+    // the batch's caches are released before the caller sees it.
+    val bands = "graftfs:" + tmpDir("graft_censfail_bands_")
+    val sh = "graftfs:" + tmpDir("graft_censfail_sh_")
+    val out = "graftfs:" + tmpDir("graft_censfail_out_")
+    def st20Docs(ids: Range) = docBatch(ids)
+      .withColumn("is_new", col("doc_id") % 4 === 0)
+    ES.st20Batch(st20Docs(0 until 30).filter(!col("is_new")), bands, sh, out)
+    assert(StoreCensus.nonEmpty(bands).contains(true) &&
+      StoreCensus.nonEmpty(sh).contains(true))
+    spark.catalog.clearCache()
+    GraftTestFs.failCreateUnder = "censfail_sh_"
+    val e2 = try intercept[Throwable] {
+      ES.st20Batch(st20Docs(30 until 60), bands, sh, out)
+    } finally GraftTestFs.reset()
+    assert(e2.getMessage != null)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a sibling job outlived the failed batch")
+    assert(StoreCensus.nonEmpty(bands).isEmpty && StoreCensus.nonEmpty(sh).isEmpty,
+      "both stores' census entries must go on a failed batch")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed batch left its caches registered")
+    for (dir <- Seq(bands, sh))
+      assert(StoreCensus.read(spark, dir).collect().toSet ==
+        spark.read.parquet(dir).collect().toSet)
   }
 
   test("unknown schemes without an atomic-rename capability claim are refused (fail-safe), a claim is honored") {
