@@ -33,8 +33,7 @@ object BenchPrior {
     * "parsed" carries only the slowest 20 — VERDICT r13 item 4).
     * Round-keyed since r15 (ADVICE r14): a stray same-sf manual run or
     * a re-run within a round overwrites only its OWN round's file, so
-    * the prior stays round-over-round instead of silently becoming
-    * intra-round. */
+    * the prior stays round-over-round. */
   private val Sidecar = "BENCH_full_driver_r(\\d+)_(.+)\\.json".r
 
   /** Canonical scale-factor identity: the basename ("sf0.1"), so
@@ -54,26 +53,9 @@ object BenchPrior {
     fileNames.collect { case DriverArtifact(n) => n.toInt }
       .maxOption.getOrElse(0) + 1
 
-  /** The round clock CANDIDATE SELECTION runs on. Driver kind:
-    * [[currentRound]] unchanged. Local kind: when the checkout has no
-    * driver artifact series at all (ADVICE r15 — e.g. a scratch dir
-    * holding only promoted local sweeps), [[currentRound]] pins at 1
-    * and the strictly-below filter would exclude EVERY local prior
-    * forever, including a genuine earlier round's; the local series'
-    * own max round then becomes the clock, so the NEWEST local is
-    * conservatively treated as this round's own (it becomes the
-    * intra-round prior via [[intraRoundPrior]], never the cross-round
-    * one — without a driver clock there is no way to prove it is not
-    * self) and every earlier local qualifies as a cross-round prior. */
-  private def clock(kind: String, fileNames: Seq[String]): Int = {
-    val cur = currentRound(fileNames)
-    if (kind == "local" && cur == 1)
-      fileNames.collect { case LocalArtifact(n) => n.toInt }
-        .maxOption.getOrElse(cur)
-    else cur
-  }
-
-  /** Prior-artifact candidates for the cross-round flags, best first.
+  /** Prior-artifact candidates for the regression flags, GROUPED BY
+    * PRIOR ROUND, newest round first; each inner list is best-first
+    * within its round.
     *
     * SELF-PRIOR EXCLUSION (the r14 defect): only rounds STRICTLY BELOW
     * [[currentRound]] qualify. Once a round's own artifact is
@@ -82,100 +64,31 @@ object BenchPrior {
     * go unflagged — exactly what happened to both r14 local windows.
     *
     * Kind routing (VERDICT r12 item 2): local sweeps diff only against
-    * the local series; driver runs order candidates by ROUND first
-    * (newest prior round wins), preferring the round-keyed full-map
-    * sidecar over the slowest-20 artifact WITHIN a round — so a
-    * missing round-16 sidecar degrades to BENCH_r16.json's slowest
-    * 20, never silently to a three-round-stale r14 sidecar (an
-    * independent-review finding on the first r15 cut, which ranked
-    * all sidecars ahead of all artifacts). The r14-era UNKEYED
-    * sidecar name is deliberately NOT read: it carries no round, so
-    * a stale pre-r15 binary could write the current round's own map
-    * into it and re-open the self-prior hole through that slot; the
-    * repo's one legacy file is renamed into the keyed series. A
-    * cross-kind diff is environment noise, never a fallback. Bench
-    * feeds the GROUPED form ([[priorPool]]) to [[resolvePriorPool]],
-    * which walks each round's group until a candidate yields a
-    * non-empty sf-matching map — so a corrupt or sf-mismatched
-    * sidecar degrades to the next candidate within its round instead
-    * of to zero coverage (ADVICE r14); this flattened form is the
-    * same candidates in the same order.
-    *
-    * Fresh-dir fallback: a working dir with NO committed driver
-    * artifacts has no round clock (currentRound is always 1), so the
-    * strictly-below filter would exclude even the previous run's own
-    * sidecar forever — strictly worse than the pre-r15 unkeyed flow.
-    * Only when the filtered candidate list is empty, the current
-    * round's sidecar (necessarily a PREVIOUS run's: each run reads
-    * before it writes) is offered as the last resort; with any
-    * artifact series present the normal rules apply unchanged. */
-  def priorCandidates(kind: String, fileNames: Seq[String],
-      sfName: String): Seq[String] =
-    priorPool(kind, fileNames, sfName, k = Int.MaxValue).flatten
-
-  /** Prior candidates GROUPED BY PRIOR ROUND, newest round first, up
-    * to `k` rounds — each inner list ordered best-first within its
-    * round (same ranking as [[priorCandidates]], which is exactly
-    * this pool flattened). This is the input shape the weather
-    * defense ([[resolvePriorPool]]) needs: one resolved map per prior
-    * round, merged per-query. The fresh-dir fallback (driver kind,
-    * no round clock) contributes a single group.
-    *
-    * `k` here caps the CANDIDATE groups, pre-resolution; the pool
-    * CONSUMER caps post-resolution (ADVICE r16: a round that resolves
-    * to nothing must fall through to round k+1, not shrink the merge)
-    * — so [[Bench]] passes `Int.MaxValue` here and lets
-    * [[resolvePriorPool]] take the first k NON-EMPTY rounds lazily. */
-  def priorPool(kind: String, fileNames: Seq[String], sfName: String,
-      k: Int = Int.MaxValue): Seq[Seq[String]] = {
-    val cur = clock(kind, fileNames)
-    val grouped: Seq[Seq[String]] =
-      if (kind == "local")
-        fileNames.collect { case f @ LocalArtifact(n) => (n.toInt, f) }
-          .filter(_._1 < cur).sortBy(-_._1).map(t => Seq(t._2))
-      else {
-        // rank within a round: sidecar (full map) before artifact
-        val ranked =
-          fileNames.collect {
-            case f @ Sidecar(n, sf) if sf == sfName => (n.toInt, 0, f)
-          } ++
-          fileNames.collect { case f @ DriverArtifact(n) => (n.toInt, 1, f) }
-        val prior = ranked.filter(_._1 < cur)
-        if (prior.nonEmpty)
-          prior.groupBy(_._1).toSeq.sortBy(-_._1)
-            .map(_._2.sortBy(_._2).map(_._3))
-        else {
-          val fallback = ranked.collect { case (n, 0, f) if n == cur => f }
-          if (fallback.isEmpty) Nil else Seq(fallback)
-        }
-      }
-    grouped.take(k)
-  }
-
-  /** The current round's own already-persisted artifact, if any — the
-    * optional SECOND prior (VERDICT r14 item 5, extended to driver
-    * kind per VERDICT r15 item 5): diffing against the round's own
-    * earlier window catches intra-round regressions the cross-round
-    * prior dilutes, and — because both sides are the same tree — any
-    * flag it raises is environment BY CONSTRUCTION, the cheapest
-    * weather attribution there is. Local kind: the round's promoted
-    * BENCH_r{cur}_local.json. Driver kind: the round's own sidecar
-    * (each run reads before it writes, so the file present at read
-    * time is a PREVIOUS run of this round). Reported as a separate
-    * flag set (`flags_intra`), never mixed into the cross-round
-    * series' flags; callers must skip it when it is already serving
-    * as the cross-round prior (the fresh-dir fallback). */
-  def intraRoundPrior(kind: String, fileNames: Seq[String],
-      sfName: String): Option[String] = {
-    val cur = clock(kind, fileNames)
+    * the local series; driver runs prefer the round-keyed full-map
+    * sidecar over the slowest-20 artifact WITHIN a round, and rounds
+    * stay ordered first — so a missing round-16 sidecar degrades to
+    * BENCH_r16.json's slowest 20, never silently to a stale r14
+    * sidecar. The r14-era UNKEYED sidecar name is deliberately NOT
+    * read: it carries no round, so a stale binary could write the
+    * current round's own map into it and re-open the self-prior hole
+    * through that slot. A cross-kind diff is environment noise, never
+    * a fallback. [[resolvePriorPool]] walks the groups. */
+  def priorPool(kind: String, fileNames: Seq[String],
+      sfName: String): Seq[Seq[String]] = {
+    val cur = currentRound(fileNames)
     if (kind == "local")
-      fileNames.collectFirst {
-        case f @ LocalArtifact(n) if n.toInt == cur => f
-      }
-    else
-      fileNames.collectFirst {
-        case f @ Sidecar(n, sf) if n.toInt == cur && sf == sfName => f
-      }
+      fileNames.collect { case f @ LocalArtifact(n) => (n.toInt, f) }
+        .filter(_._1 < cur).sortBy(-_._1).map(t => Seq(t._2))
+    else {
+      // rank within a round: sidecar (full map) before artifact
+      val ranked =
+        fileNames.collect {
+          case f @ Sidecar(n, sf) if sf == sfName => (n.toInt, 0, f)
+        } ++
+        fileNames.collect { case f @ DriverArtifact(n) => (n.toInt, 1, f) }
+      ranked.filter(_._1 < cur).groupBy(_._1).toSeq.sortBy(-_._1)
+        .map(_._2.sortBy(_._2).map(_._3))
+    }
   }
 
   /** The node both parse accessors read: covers both artifact shapes —
@@ -228,29 +141,6 @@ object BenchPrior {
       .flatMap(n => Option(n.get("base")).filter(_.isObject))
       .map(nodeToMap).getOrElse(Map.empty[String, Double])
 
-  /** The core count a prior artifact's readings were produced at
-    * (written by [[renderFullLine]] since r19; older artifacts carry
-    * no "cpus" → None). Read from the SAME node the other accessors
-    * select. */
-  def parsePriorCpus(text: String, sfDir: String): Option[Int] =
-    bestNode(text, sfDir)
-      .flatMap(n => Option(n.get("cpus")).filter(_.isInt))
-      .map(_.asInt())
-
-  /** Whether a candidate INTRA-round prior is a like-for-like core
-    * count for a run at `cpus`. The r18 session exposed the hole this
-    * closes: the driver's 8-cpu scaling run wrote its full map into
-    * the NEXT round's sidecar slot (its round clock had already
-    * advanced past the freshly-written 32-cpu artifact), so the next
-    * round's 32-cpu run would adopt an 8-CPU map as its "environment
-    * by construction" intra prior and flag every anti-scaling query
-    * against a different machine shape. Both sides known and unequal
-    * → incompatible; an artifact that predates the "cpus" field stays
-    * compatible (local sweeps run at a constant 4, and dropping their
-    * intra coverage for a missing field would be the bigger loss). */
-  def intraCpuCompatible(text: String, sfDir: String, cpus: Int): Boolean =
-    parsePriorCpus(text, sfDir).forall(_ == cpus)
-
   /** Walk the candidate list (paths, best first) and return the first
     * that parses to a NON-EMPTY sf-matching query map, with (path,
     * map); corrupt or empty candidates degrade to the next with a loud
@@ -275,65 +165,63 @@ object BenchPrior {
       (p, m)
     }.find(_._2.nonEmpty).getOrElse(("", Map.empty[String, Double]))
 
-  /** WEATHER DEFENSE for the cross-round flag base (VERDICT r15 item
-    * 1): resolve each prior round's group independently
-    * ([[resolvePrior]] within the group), keep the FIRST `k` rounds
-    * that resolve non-empty (lazy — a round whose every candidate is
-    * corrupt or sf-mismatched falls through to round k+1 instead of
-    * shrinking the pool to k−1 rounds, ADVICE r16), and take the
-    * PER-QUERY MIN across the resolved maps AND each resolved
-    * artifact's own recorded `base` map.
+  /** The flag base: the NEWEST prior round that resolves
+    * ([[resolvePrior]] within its group; a round whose every candidate
+    * is corrupt or sf-mismatched falls through to the next older
+    * round, ADVICE r16), merged per query with that artifact's own
+    * carried `base` map by the MIN of positive readings.
     *
-    * Why min, why K rounds: a single newest prior recorded in a
-    * degraded window (r15's driver sidecar: 339.9 s total, disk calib
-    * 340.8 vs 437.5 MB/s, q69 at 18.40 s vs its healthy 0.52) cannot
-    * produce false flags — it MASKS true ones, the worse direction
-    * for a regression gate, since a genuine regression to 2 s still
-    * reads as a 9× "improvement" against the inflated 18.40. The
-    * per-query min over the last few rounds is the healthiest reading
-    * any recent round achieved, so one bad-weather round can never
-    * lower the bar. Failed prior runs (negative seconds) never
-    * participate in the min — a query that failed in one prior round
-    * but ran healthily in another must still flag against the healthy
-    * reading.
+    * Why min (VERDICT r15 item 1): a prior recorded in a degraded
+    * window (r15's driver sidecar: q69 at 18.40 s vs its healthy 0.52)
+    * cannot produce false flags — it MASKS true ones, the worse
+    * direction for a regression gate. Failed runs (negative seconds)
+    * never participate, so a query that failed once but ran healthily
+    * elsewhere still flags against the healthy reading.
     *
-    * BASE CARRY (VERDICT r16 item 3): a round-windowed pool decays
-    * under persistent degradation — three consecutive soft windows
-    * rotate the last healthy round out and the bar quietly inflates.
-    * Each run therefore RECORDS the merged base it flagged against
-    * (the `"base"` map [[renderFullLine]] writes), and this merge
-    * mins it back in: base_N = min(newest-K readings, base_{N−1}
-    * transitively), so the healthiest reading ever achieved survives
-    * any run of bad weather. The deliberate trade: a slowdown ACCEPTED
-    * on purpose (a correctness fix that costs time) keeps flagging
-    * until the flag's adjudication note becomes part of the series'
-    * record — which is the discipline working, not a false positive;
-    * a flag is a to-verify marker, never a verdict.
+    * Why one prior is enough (BASE CARRY, VERDICT r16 item 3): each
+    * run RECORDS the merged base it flagged against (the `"base"` map
+    * [[renderFullLine]] writes), so base_N = min(readings_{N−1},
+    * base_{N−1}) holds, transitively, the healthiest reading every
+    * earlier round achieved; the bar stays monotone across any streak
+    * of bad weather. The deliberate trade: a slowdown ACCEPTED on
+    * purpose keeps flagging until a later prior records it — a flag
+    * is a to-verify marker, never a verdict.
     *
-    * Returns (paths actually merged, merged map); (Nil, empty) when
-    * nothing resolves. */
+    * Core count: a prior that records a `cpus` other than this run's
+    * (both known) is machine shape, not weather — stated, and it
+    * yields no base (no flags, and the carry restarts from this run's
+    * readings). Older rounds are not tried instead: they predate the
+    * field and cannot prove their core count.
+    *
+    * Returns (path merged, merged map); ("", empty) when nothing
+    * resolves or the core count differs. */
   def resolvePriorPool(pool: Seq[Seq[String]], sfDir: String,
       readText: String => String,
       note: String => Unit = _ => (),
-      k: Int = 3): (Seq[String], Map[String, Double]) = {
-    val resolved = pool.iterator
-      .map(g => resolvePrior(g, sfDir, readText, note))
-      .filter(_._2.nonEmpty).take(k).toList
-    // the resolved artifacts' own carried bases — readText already
-    // succeeded for these paths inside resolvePrior, but a re-read can
-    // still race a deletion; a base is an extra defense layer, so its
-    // read failure degrades to empty rather than failing the pool
-    val bases = resolved.map { case (p, _) =>
-      try parsePriorBase(readText(p), sfDir)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
+      cpus: Int = 0): (String, Map[String, Double]) =
+    pool.iterator.map(g => resolvePrior(g, sfDir, readText, note))
+      .find(_._2.nonEmpty) match {
+      case None => ("", Map.empty)
+      case Some((p, readings)) =>
+        // readText already succeeded for p inside resolvePrior, but a
+        // re-read can still race a deletion; the carried base is an
+        // extra defense layer, so its failure degrades to none
+        val text = try readText(p)
+          catch { case scala.util.control.NonFatal(_) => "" }
+        val priorCpus = bestNode(text, sfDir).flatMap(n => Option(n.get("cpus")))
+          .filter(_.isInt).map(_.asInt())
+        priorCpus.filter(c => cpus > 0 && c != cpus) match {
+          case Some(c) =>
+            note(s"prior $p was recorded at $c cpus, this run at $cpus " +
+              "— no flags (a cross-core-count diff is machine shape)")
+            ("", Map.empty)
+          case None =>
+            val base = parsePriorBase(text, sfDir)
+            (p, Seq(readings, base).flatten.groupMap(_._1)(_._2)
+              .map { case (q, vs) =>
+                q -> vs.filter(_ > 0).minOption.getOrElse(-1.0) })
+        }
     }
-    val merged = (resolved.map(_._2) ++ bases).flatten
-      .groupMap(_._1)(_._2)
-      .map { case (q, vs) =>
-        q -> vs.filter(_ > 0).minOption.getOrElse(-1.0)
-      }
-    (resolved.map(_._1), merged)
-  }
 
   /** Whether this run's full-map line may be persisted as a future
     * round's sidecar prior: never a local-kind sweep (wrong series),
@@ -343,7 +231,7 @@ object BenchPrior {
     kind != "local" && subset.isEmpty
 
   /** The round-keyed sidecar filename this run writes (and the next
-    * round's [[priorCandidates]] will prefer). */
+    * round's [[priorPool]] will prefer). */
   def sidecarName(round: Int, sfName: String): String =
     s"BENCH_full_driver_r${round}_$sfName.json"
 
@@ -411,20 +299,24 @@ object BenchPrior {
         s""""ratio":$ratio$retry}""" }
       .mkString("[", ",", "]")
 
+  /** The core count the readings were produced at, for both lines (0 =
+    * unknown, omitted): [[resolvePriorPool]] refuses a prior recorded
+    * at another count. */
+  private def cpusField(cpus: Int): String =
+    if (cpus > 0) s""""cpus":$cpus,""" else ""
+
   /** Render the full-precision artifact line — the EXACT shape
     * [[parsePriorQueries]] consumes next round. Writer and parser
     * live in this one unit so they cannot drift apart silently; the
     * round-trip law (render → parse recovers every query at full
     * precision, for the matching sf and only the matching sf) is
     * property-swept in BenchPriorSpec, including hostile names and
-    * non-finite values. `priorPaths` is the resolved pool
-    * ([[resolvePriorPool]]) — every artifact the flag base merged. */
+    * non-finite values. `priorPath` is the prior the flag base merged
+    * ([[resolvePriorPool]]), "" for none. */
   def renderFullLine(total: Double, queries: Seq[(String, Double)],
       sfDir: String, calibStart: Double, calibEnd: Double,
       diskMbps: Double, calibs: Seq[(String, Double, Double)],
-      flags: Seq[(String, Double, Double)], priorPaths: Seq[String],
-      flagsIntra: Seq[(String, Double, Double)],
-      intraPath: String,
+      flags: Seq[(String, Double, Double)], priorPath: String,
       base: Map[String, Double] = Map.empty,
       retries: Map[String, Double] = Map.empty,
       cpus: Int = 0): String = {
@@ -433,24 +325,19 @@ object BenchPrior {
     val calibArr = calibs.map { case (at, c, io) =>
       s"""{"at":${jstr(at)},"sec":${jnum(c)},"io_mbps":${jnum(io)}}""" }
       .mkString("[", ",", "]")
-    val priorArr = priorPaths.map(jstr).mkString("[", ",", "]")
+    val priorArr = Seq(priorPath).filter(_.nonEmpty).map(jstr)
+      .mkString("[", ",", "]")
     // the merged base this run flagged against, sorted for stable
     // diffs — what resolvePriorPool's base carry mins back in next
     // round, making the bar monotone across persistent bad weather
     val baseObj = base.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jnum(v) }
       .mkString("{", ",", "}")
-    // cpus: the core count these readings were produced at (0 =
-    // unknown, omitted) — lets next rounds refuse a cross-core-count
-    // intra prior (see intraCpuCompatible)
-    val cpusField = if (cpus > 0) s""""cpus":$cpus,""" else ""
-    s"""{"metric":"total","value":${jnum(total)},"unit":"sec",$cpusField"queries":$qs,""" +
+    s"""{"metric":"total","value":${jnum(total)},"unit":"sec",${cpusField(cpus)}"queries":$qs,""" +
       s""""sf":${jstr(sfDir)},"calib":{"start":${jnum(calibStart)},""" +
       s""""end":${jnum(calibEnd)},"disk_mbps":${jnum(diskMbps)}},""" +
       s""""calibs":$calibArr,""" +
       s""""flags":${flagsToJson(flags, retries)},"flags_prior":$priorArr,""" +
-      s""""flags_intra":${flagsToJson(flagsIntra, retries)},""" +
-      s""""flags_intra_prior":${jstr(intraPath)},""" +
       s""""base":$baseObj}"""
   }
 
@@ -460,7 +347,7 @@ object BenchPrior {
     * r16 item 1): the old inline renderer embedded EVERY flag name,
     * and an 80-flag soft window grew the line to ~2.6 KB — the tail
     * held a truncated fragment and the committed official artifact
-    * landed `parsed: null`. The stricter min-pool base raises MORE
+    * landed `parsed: null`. The min base raises MORE
     * flags on soft windows by design (55–111 measured in one r16
     * afternoon), so the line must be bounded STRUCTURALLY, not by
     * hoping flag counts stay small.
@@ -479,7 +366,7 @@ object BenchPrior {
   def renderCompactLine(total: Double, results: Seq[(String, Double)],
       sfDir: String, calibStart: Double, calibEnd: Double,
       diskMbps: Double, flags: Seq[(String, Double, Double)],
-      nFlagsIntra: Int, nRetryWeather: Int,
+      nRetryWeather: Int, cpus: Int = 0,
       budget: Int = 1900): String = {
     val nFailed = results.count(_._2 < 0)
     val slowAll = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
@@ -490,7 +377,7 @@ object BenchPrior {
       val fNote =
         if (nf == flags.size) "all"
         else s"first $nf of ${flags.size}; full set with priors/ratios/retries on the first metric line"
-      s"""{"metric":"total","value":${jnumF(total, 3)},"unit":"sec",""" +
+      s"""{"metric":"total","value":${jnumF(total, 3)},"unit":"sec",${cpusField(cpus)}""" +
         s""""n_queries":${results.size},"n_failed":$nFailed,""" +
         s""""queries":${slowAll.take(nq).mkString("{", ",", "}")},""" +
         s""""queries_note":${jstr(qNote)},"sf":${jstr(sfDir)},""" +
@@ -498,7 +385,7 @@ object BenchPrior {
         s""""disk_mbps":${jnumF(diskMbps, 1)}},""" +
         s""""n_flags":${flags.size},"flags":${flagNames.take(nf).mkString("[", ",", "]")},""" +
         s""""flags_note":${jstr(fNote)},""" +
-        s""""n_flags_retry_weather":$nRetryWeather,"n_flags_intra":$nFlagsIntra}"""
+        s""""n_flags_retry_weather":$nRetryWeather}"""
     }
     // greedy fit: all flags first, shedding flag names before query
     // entries (the slowest-20 map is what the driver's parsed view

@@ -144,7 +144,7 @@ object StoreProbe {
       }
     }
 
-    // Bench's calib discipline, ported: this box shows hour-scale
+    // Bench's calib discipline (graft.Probes): this box shows hour-scale
     // weather (same-code STORE100 series measured 1.3-1.4x apart),
     // so a drift number without bracketing box-health readings can't
     // be told from a real economics change. Every 8 batches the series
@@ -154,33 +154,10 @@ object StoreProbe {
     // cannot see — STORE100_r10's five same-code series scattered
     // 1.02–1.47 with no per-series IO trace to read the outlier
     // against. Now each drift number ships with its IO curve.
-    def calib(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1, 32)
-        .selectExpr("sum(cast(id AS double) * id)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def ioProbe(): Double = {
-      var f: java.io.File = null
-      try {
-        f = java.io.File.createTempFile("graft_store_io_", ".bin",
-          new java.io.File(work))
-        val t0 = System.nanoTime()
-        val out = new java.io.FileOutputStream(f)
-        val block = new Array[Byte](1 << 20)
-        try {
-          var i = 0
-          while (i < 64) { out.write(block); i += 1 }
-          out.getFD.sync()
-        } finally out.close()
-        64.0 / ((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[store] io probe failed: ${e.getMessage}"); -1.0
-      } finally if (f != null) f.delete()
-    }
     val calibs = scala.collection.mutable.ListBuffer[(Int, Double, Double)]()
     def probeCalib(at: Int): Unit = {
-      val c = calib(); val io = ioProbe(); calibs += ((at, c, io))
+      val c = Probes.cpu(spark); val io = Probes.disk(new java.io.File(work))
+      calibs += ((at, c, io))
       System.err.println(f"[store] calib @batch $at%3d  $c%6.2f s  io $io%7.1f MB/s")
     }
     val mainStore = gate match {

@@ -153,7 +153,7 @@ object AggQueries {
     val bound = exact.map(_._2).reduce(_ + _) / (kCounters + 1)
     // materialize the (tiny — one row per surviving key) result and
     // release the cache HERE: the other modules route caches through
-    // registerRelease, and leaving this one to the harness's
+    // graft.core.CacheReleases, and leaving this one to the harness's
     // per-query clearCache would leak it in any session reusing
     // AggQueries directly
     val rows = exact.map { case (key, cnt) =>

@@ -23,25 +23,13 @@ import graft.core.Tables
 object Dedup {
 
   /** Shared-scan caches (and CC checkpoint blocks) created by the most
-    * recent dedup query BUILD in this session. A query builder returns
-    * a lazy DataFrame, so its caches cannot be dropped inside the
-    * builder without defeating them — instead every cache-creating
-    * site first releases the PREVIOUS build's registrations, bounding
-    * live block storage to one query's worth for a user composing
-    * dedup ops in a long session (harnesses that clearCache() between
-    * queries drop the DataFrame caches anyway; the CC checkpoint
-    * blocks below clearCache does NOT reach). Contract: materialize a
-    * dedup result before building the next dedup query, or call
-    * [[releaseCaches]] explicitly when done.
+    * recent dedup query BUILD in this session, under the
+    * [[graft.core.CacheReleases]] contract (harnesses that clearCache()
+    * between queries drop the DataFrame caches anyway; the CC
+    * checkpoint blocks below clearCache does NOT reach).
     */
-  private val liveReleases =
-    new scala.collection.mutable.ArrayBuffer[() => Unit]
-  private def registerRelease(r: () => Unit): Unit =
-    synchronized { liveReleases += r }
-  def releaseCaches(): Unit = synchronized {
-    liveReleases.foreach(r => r())
-    liveReleases.clear()
-  }
+  private val releases = new graft.core.CacheReleases
+  def releaseCaches(): Unit = releases.releaseAll()
 
   /** documents + a word-3-gram shingle-set column, via the fused
     * native `graft_shingles` expression — see
@@ -90,7 +78,7 @@ object Dedup {
       .select(col("doc_id"), explode(col("sh")).as("s0"))
       .select(col("doc_id"), xxhash64(col("s0")).as("s"))
       .cache()
-    registerRelease(() => sh.unpersist())
+    releases.register(() => sh.unpersist())
     sh
   }
 
@@ -303,7 +291,7 @@ object Dedup {
     // a 100 TB corpus still only changes the EDGE count, and d07's
     // pointer-jumping loop is the design for graphs that aren't tiny.
     val pairs = pairs0.coalesce(1).cache()
-    registerRelease(() => { pairs.unpersist(); () })
+    releases.register(() => { pairs.unpersist(); () })
     // LOUD GUARD: the walk enumerates simple paths — factorial in
     // cluster size — so refuse inputs it cannot enumerate instead of
     // exploding. Two tiers: bound the edge count, then bound the
@@ -398,7 +386,7 @@ object Dedup {
         src = least(src, min(dst)) AS is_canonical
       FROM reach GROUP BY src""").cache()
     out.count()
-    registerRelease(() => { out.unpersist(); () })
+    releases.register(() => { out.unpersist(); () })
     out
     }
   }
@@ -534,7 +522,7 @@ object Dedup {
     releasePrev()
     edges.unpersist()
     if (!reuseCallerCache) pairs.unpersist()
-    registerRelease(() => out.unpersist())
+    releases.register(() => out.unpersist())
     out
     }
   }
@@ -694,7 +682,7 @@ object Dedup {
       .select(col("source"), xxhash64(col("g")).as("h"))
       .distinct()
       .cache() // feeds sizes plus both self-join inputs
-    registerRelease(() => sg.unpersist())
+    releases.register(() => sg.unpersist())
     val sizes = sg.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val a = sg.as("a"); val b = sg.as("b")
     a.join(b, col("a.h") === col("b.h") && col("a.source") < col("b.source"))
@@ -816,7 +804,7 @@ object Dedup {
         col("pos") <= expr("na - (na * 4 + 4) DIV 5 + 1"))
       .select(col("doc_id"), col("s"), col("is_prefix"))
       .cache()
-    registerRelease(() => ranked.unpersist())
+    releases.register(() => ranked.unpersist())
     ranked.filter(col("is_prefix"))
       .select(col("doc_id").as("pref_id"), col("s"))
       .join(ranked.select(col("doc_id").as("full_id"), col("s")), "s")
@@ -1224,7 +1212,7 @@ object Dedup {
     val truth = d02JaccardPairs(s, d)
       .select(col("doc_a"), col("doc_b"), col("jaccard")).cache()
     val cand = d17CdcChunkOverlap(s, d).select(col("doc_a"), col("doc_b")).cache()
-    registerRelease(() => { truth.unpersist(); cand.unpersist(); () })
+    releases.register(() => { truth.unpersist(); cand.unpersist(); () })
     // two regimes: the ≥0.5 near-dup tier (where CDC's 0.926 recall
     // at sf0.1 marks its complement boundary with d03) and the ≥0.8
     // planted-dup tier, where every pair shares long verbatim runs

@@ -107,19 +107,12 @@ object PipelineOps {
         col("sparsity_rank"), col("is_outlier"))
   }
 
-  /** e02's cache-release registry (Dedup's contract, mirrored): e04's
-    * NN-descent rounds cache per-round state the lazy result still
-    * reads; the next registering build or an explicit
-    * [[releaseCaches]] drops the previous blocks.
+  /** e02's cache-release registry ([[graft.core.CacheReleases]]):
+    * e04's NN-descent rounds cache per-round state the lazy result
+    * still reads.
     */
-  private val liveReleases =
-    new scala.collection.mutable.ArrayBuffer[() => Unit]
-  private def registerRelease(r: () => Unit): Unit =
-    synchronized { liveReleases += r }
-  def releaseCaches(): Unit = synchronized {
-    liveReleases.foreach(r => r())
-    liveReleases.clear()
-  }
+  private val releases = new graft.core.CacheReleases
+  def releaseCaches(): Unit = releases.releaseAll()
 
   /** e02's production twin at 100 TB — the SAME density score and flag
     * window, with the within-cell ALL-PAIRS join replaced by
@@ -330,7 +323,7 @@ object PipelineOps {
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(expr("graft_sumsq(v)")))
       .cache()
-    registerRelease(() => e.unpersist())
+    releases.register(() => e.unpersist())
     // ---- warm start: random BOUNDED blocks within each label (the
     // NN-descent paper's random-init kNN, made deterministic via
     // md5): nBlocks = ceil(n_label/24) per assignment round, so block
@@ -371,7 +364,7 @@ object PipelineOps {
       .cache()
     result.count()
     release()
-    registerRelease(() => { result.unpersist(); () })
+    releases.register(() => { result.unpersist(); () })
     result
   }
 
@@ -1076,7 +1069,7 @@ object PipelineOps {
       .select(col("doc_id"), xxhash64(col("g")).as("s0"))
       .join(splits, "doc_id")
       .cache()
-    registerRelease(() => { g.unpersist(); () })
+    releases.register(() => { g.unpersist(); () })
     // per-gram flags: does this hash occur in either policy's train set
     val flags = g.groupBy(col("s0")).agg(
       max(col("a_split") === "train").as("a_train"),

@@ -11,19 +11,12 @@ import graft.core.Tables
   */
 object Relational10 {
 
-  /** Dedup.registerRelease's contract, mirrored: twoLevelRank's tiny
-    * offset cache outlives its builder (results are lazy plans over
-    * it); the next registering build or an explicit [[releaseCaches]]
-    * drops the previous blocks.
+  /** twoLevelRank's tiny offset cache outlives its builder (results
+    * are lazy plans over it), under the [[graft.core.CacheReleases]]
+    * contract.
     */
-  private val liveReleases =
-    new scala.collection.mutable.ArrayBuffer[() => Unit]
-  private def registerRelease(r: () => Unit): Unit =
-    synchronized { liveReleases += r }
-  def releaseCaches(): Unit = synchronized {
-    liveReleases.foreach(r => r())
-    liveReleases.clear()
-  }
+  private val releases = new graft.core.CacheReleases
+  def releaseCaches(): Unit = releases.releaseAll()
 
   /** Sessionized funnel: q40's ordered-stage logic scoped to st02's
     * 30-minute-gap sessions — "did the user view → click → purchase
@@ -193,7 +186,7 @@ object Relational10 {
       .withColumn("n", sum(col("cnt")).over(wAll))
       .select(col("g"), col("bkt"), col("off"), col("n"))
       .cache()
-    registerRelease(() => { offs.unpersist(); () })
+    releases.register(() => { offs.unpersist(); () })
     val wIn = Window.partitionBy(col("g"), col("bkt"))
       .orderBy(col("v") +: tie: _*)
     val ranked = base.join(broadcast(offs), Seq("g", "bkt"))

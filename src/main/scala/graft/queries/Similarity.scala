@@ -16,19 +16,12 @@ object Similarity {
 
   private def toDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
-  /** Dedup.registerRelease's contract, mirrored: caches whose lifetime
-    * must outlast the building function (the result is a LAZY plan
-    * over them) register here; the next registering build — or an
-    * explicit [[releaseCaches]] — drops the previous one's blocks.
+  /** Caches whose lifetime must outlast the building function (the
+    * result is a LAZY plan over them), under the
+    * [[graft.core.CacheReleases]] contract.
     */
-  private val liveReleases =
-    new scala.collection.mutable.ArrayBuffer[() => Unit]
-  private def registerRelease(r: () => Unit): Unit =
-    synchronized { liveReleases += r }
-  def releaseCaches(): Unit = synchronized {
-    liveReleases.foreach(r => r())
-    liveReleases.clear()
-  }
+  private val releases = new graft.core.CacheReleases
+  def releaseCaches(): Unit = releases.releaseAll()
 
   /** Embeddings with the norm precomputed once per vector; cosine in
     * the joins below is then one native `graft_dot` per pair (the
@@ -1018,7 +1011,7 @@ object Similarity {
     // collected), so the cache outlives this builder — released by the
     // next registering build or an explicit releaseCaches()
     releaseCaches()
-    registerRelease(() => cand.unpersist())
+    releases.register(() => cand.unpersist())
     mmrSelect(cand, k = 5)
   }
 
@@ -1330,7 +1323,7 @@ object Similarity {
     // s17's discipline: a composed caller (or the next registering
     // build) can drop this deterministically instead of relying on
     // the harness's post-query clearCache
-    registerRelease(() => { sal.unpersist(); () })
+    releases.register(() => { sal.unpersist(); () })
     val qterms = sal.filter(col("doc_id") < 10)
       .select(col("doc_id").as("probe_id"), col("term"))
     val kw = sal.join(qterms, Seq("term"))

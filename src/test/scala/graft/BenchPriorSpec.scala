@@ -40,19 +40,19 @@ class BenchPriorSpec extends AnyFunSuite {
   test("local kind: self-prior excluded — the r14 defect") {
     // during round 15, with the round's own BENCH_r15_local.json
     // already committed, the prior must be r14_local, never r15_local
-    val c = BenchPrior.priorCandidates("local", midRound15, "sf0.1")
+    val c = BenchPrior.priorPool("local", midRound15, "sf0.1").flatten
     assert(c == Seq("BENCH_r14_local.json", "BENCH_r13_local.json"),
       s"a bare newest-first pick would put BENCH_r15_local.json (self) first; got $c")
   }
 
   test("local kind: only the local series, never driver artifacts or sidecars") {
-    val c = BenchPrior.priorCandidates("local",
+    val c = BenchPrior.priorPool("local",
       Seq("BENCH_r14.json", "BENCH_full_driver_r14_sf0.1.json"), "sf0.1")
     assert(c.isEmpty, s"cross-kind priors are noise, not a fallback; got $c")
   }
 
   test("driver kind: round-keyed sidecar preferred, self-round excluded, sf filtered, artifact fallback ordered") {
-    val c = BenchPrior.priorCandidates("driver", midRound15, "sf0.1")
+    val c = BenchPrior.priorPool("driver", midRound15, "sf0.1").flatten
     assert(c == Seq(
       "BENCH_full_driver_r14_sf0.1.json", // newest prior-round sidecar, right sf
       "BENCH_r14.json", "BENCH_r13.json"), // slowest-20 artifacts, newest first
@@ -63,6 +63,16 @@ class BenchPriorSpec extends AnyFunSuite {
       "another scale factor's sidecar must never be the prior")
   }
 
+  test("priorPool: candidates grouped by prior round, newest first; one group per round, the sidecar ahead of its round's artifact") {
+    val pool = BenchPrior.priorPool("driver", midRound15, "sf0.1")
+    assert(pool == Seq(
+      Seq("BENCH_full_driver_r14_sf0.1.json", "BENCH_r14.json"),
+      Seq("BENCH_r13.json")), s"got $pool")
+    // local kind: one candidate per round
+    assert(BenchPrior.priorPool("local", midRound15, "sf0.1") ==
+      Seq(Seq("BENCH_r14_local.json"), Seq("BENCH_r13_local.json")))
+  }
+
   test("driver kind: candidates ordered by round first — a missing newest sidecar degrades to that round's artifact, never to an older sidecar") {
     // independent-review finding on the first r15 cut: ranking ALL
     // sidecars ahead of ALL artifacts made a missing r16 sidecar fall
@@ -70,7 +80,7 @@ class BenchPriorSpec extends AnyFunSuite {
     // slowest-20 artifact
     val files = Seq("BENCH_r13.json", "BENCH_r14.json", "BENCH_r16.json",
       "BENCH_full_driver_r14_sf0.1.json") // r16 sidecar never written
-    val c = BenchPrior.priorCandidates("driver", files, "sf0.1")
+    val c = BenchPrior.priorPool("driver", files, "sf0.1").flatten
     assert(c == Seq("BENCH_r16.json", // round beats sidecar-ness…
       "BENCH_full_driver_r14_sf0.1.json", "BENCH_r14.json", // …within a round the full map wins
       "BENCH_r13.json"), s"got $c")
@@ -78,25 +88,8 @@ class BenchPriorSpec extends AnyFunSuite {
 
   test("driver kind: the legacy unkeyed sidecar name is never read (it carries no round, so it could self-prior)") {
     val files = Seq("BENCH_r14.json", "BENCH_full_driver_sf0.1.json")
-    assert(BenchPrior.priorCandidates("driver", files, "sf0.1") ==
-      Seq("BENCH_r14.json"))
-  }
-
-  test("driver kind: fresh-dir fallback — with no round clock, the previous run's same-round sidecar beats zero coverage") {
-    // a working dir without the committed BENCH_r*.json series:
-    // currentRound is pinned at 1, so the strictly-below filter alone
-    // would exclude the sidecar every run writes, forever
-    val fresh = Seq("BENCH_full_driver_r1_sf0.1.json", "SURVEY.md")
-    assert(BenchPrior.priorCandidates("driver", fresh, "sf0.1") ==
-      Seq("BENCH_full_driver_r1_sf0.1.json"))
-    // the fallback never fires when any prior-round candidate exists
-    val normal = Seq("BENCH_r14.json", "BENCH_full_driver_r15_sf0.1.json")
-    assert(BenchPrior.priorCandidates("driver", normal, "sf0.1") ==
-      Seq("BENCH_r14.json"),
-      "a same-round sidecar must stay excluded while a real prior exists")
-    // and never for local kind
-    assert(BenchPrior.priorCandidates("local",
-      Seq("BENCH_r1_local.json"), "sf0.1").isEmpty)
+    assert(BenchPrior.priorPool("driver", files, "sf0.1") ==
+      Seq(Seq("BENCH_r14.json")))
   }
 
   test("canonicalSf: absolute, relative, and trailing-slash spellings collapse to the basename") {
@@ -172,44 +165,6 @@ class BenchPriorSpec extends AnyFunSuite {
       "BENCH_full_driver_r15_sf0.1.json")
   }
 
-  test("intraRoundPrior: local kind sees this round's promoted window") {
-    assert(BenchPrior.intraRoundPrior("local", midRound15, "sf0.1") ==
-      Some("BENCH_r15_local.json"))
-    // not yet promoted this round → none
-    assert(BenchPrior.intraRoundPrior("local",
-      Seq("BENCH_r14.json", "BENCH_r14_local.json"), "sf0.1").isEmpty)
-  }
-
-  test("intraRoundPrior: driver kind sees this round's own sidecar (a previous same-round run), sf-filtered — VERDICT r15 item 5") {
-    assert(BenchPrior.intraRoundPrior("driver", midRound15, "sf0.1") ==
-      Some("BENCH_full_driver_r15_sf0.1.json"))
-    // never another scale factor's, never a prior round's
-    assert(BenchPrior.intraRoundPrior("driver", midRound15, "sf0.01").isEmpty,
-      "r15's sf0.01 sidecar does not exist; the sf0.01 file present is r14's (prior round)")
-    assert(BenchPrior.intraRoundPrior("driver",
-      Seq("BENCH_r14.json", "BENCH_full_driver_r14_sf0.1.json"),
-      "sf0.1").isEmpty,
-      "the prior round's sidecar is the CROSS prior, never the intra one")
-  }
-
-  test("local kind without a driver round clock: the local series' own max round is the clock (ADVICE r15)") {
-    // a checkout holding only promoted local sweeps: currentRound pins
-    // at 1, and pre-r16 the strictly-below filter excluded EVERY local
-    // prior — including a genuine earlier round's — zeroing coverage
-    val files = Seq("BENCH_r13_local.json", "BENCH_r14_local.json", "SURVEY.md")
-    assert(BenchPrior.priorCandidates("local", files, "sf0.1") ==
-      Seq("BENCH_r13_local.json"),
-      "the earlier local must qualify as the cross-round prior")
-    // the newest local can't be proven non-self without a driver
-    // clock, so it serves as the intra prior instead
-    assert(BenchPrior.intraRoundPrior("local", files, "sf0.1") ==
-      Some("BENCH_r14_local.json"))
-    // with any driver artifact present, the driver series is the clock
-    assert(BenchPrior.priorCandidates("local",
-      files :+ "BENCH_r14.json", "sf0.1") ==
-      Seq("BENCH_r14_local.json", "BENCH_r13_local.json"))
-  }
-
   test("round-trip law: renderFullLine → parsePriorQueries recovers every query at full precision (seeded sweep)") {
     // writer and parser live in the same unit; this law is what keeps
     // them from drifting apart silently — the failure mode behind the
@@ -232,7 +187,7 @@ class BenchPriorSpec extends AnyFunSuite {
       val flags = if (rnd.nextBoolean()) Seq(("q1", 1.0, 1.5)) else Nil
       val line = BenchPrior.renderFullLine(
         queries.map(_._2).filter(_ >= 0).sum, queries, sfDir,
-        0.35, 0.4, 450.0, calibs, flags, Seq("/p/prior.json"), Nil, "")
+        0.35, 0.4, 450.0, calibs, flags, "/p/prior.json")
       // any same-sf spelling recovers the exact map…
       assert(BenchPrior.parsePriorQueries(line, "/root/testdata/sf0.1") ==
         queries.toMap, s"round-trip failed for sfDir=$sfDir")
@@ -241,130 +196,151 @@ class BenchPriorSpec extends AnyFunSuite {
     }
   }
 
-  test("priorPool: candidates grouped by prior round, newest first, capped at k; flattening is priorCandidates") {
-    val pool = BenchPrior.priorPool("driver", midRound15, "sf0.1", k = 3)
-    assert(pool == Seq(
-      Seq("BENCH_full_driver_r14_sf0.1.json", "BENCH_r14.json"),
-      Seq("BENCH_r13.json")), s"got $pool")
-    assert(BenchPrior.priorPool("driver", midRound15, "sf0.1", k = 1) ==
-      Seq(Seq("BENCH_full_driver_r14_sf0.1.json", "BENCH_r14.json")))
-    // local kind: one candidate per round
-    assert(BenchPrior.priorPool("local", midRound15, "sf0.1", k = 3) ==
-      Seq(Seq("BENCH_r14_local.json"), Seq("BENCH_r13_local.json")))
-  }
-
   test("weather defense: a degraded newest prior must not mask a regression the healthy round-before would flag — VERDICT r15 item 1") {
     // the exact r15→r16 shape: the newest prior round's sidecar was
     // recorded in a degraded window (q69 at 18.40 s; its healthy r14
     // reading was 0.52 s). This run regresses q69 to 2.0 s — a real
     // 3.8× regression vs healthy that reads as a 9× "improvement" vs
-    // the degraded prior.
+    // the degraded prior. The r15 run recorded the base it flagged
+    // against, which holds r14's healthy reading.
     val texts = Map(
       "BENCH_full_driver_r15_sf0.1.json" ->
-        """{"queries":{"q69":18.40,"q01":0.9},"sf":"sf0.1"}""",
+        """{"queries":{"q69":18.40,"q01":0.9},"sf":"sf0.1","base":{"q69":0.52,"q01":0.95}}""",
       "BENCH_full_driver_r14_sf0.1.json" ->
         """{"queries":{"q69":0.52,"q01":0.95},"sf":"sf0.1"}""")
     val files = texts.keys.toSeq ++ Seq("BENCH_r14.json", "BENCH_r15.json")
     val pool = BenchPrior.priorPool("driver", files, "sf0.1")
-    val (paths, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1",
-      p => texts.getOrElse(p, """{"queries":{},"sf":"sf0.1"}"""))
-    assert(paths == Seq("BENCH_full_driver_r15_sf0.1.json",
-      "BENCH_full_driver_r14_sf0.1.json"))
-    // the merged base is the per-query min: the healthiest recent reading
+    val (path, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
+    assert(path == "BENCH_full_driver_r15_sf0.1.json")
+    // the merged base is the per-query min: the healthiest reading
     assert(merged("q69") == 0.52 && merged("q01") == 0.9)
     val flags = BenchPrior.computeFlags(merged, Seq("q69" -> 2.0, "q01" -> 1.0))
     assert(flags == Seq(("q69", 0.52, 2.0)),
-      "the regression must flag against the healthy r14 base")
-    // the r15-era mutation, red: a single newest prior masks it
-    val (_, newestOnly) = BenchPrior.resolvePriorPool(pool.take(1), "sf0.1",
-      p => texts.getOrElse(p, """{"queries":{},"sf":"sf0.1"}"""))
+      "the regression must flag against the healthy carried base")
+    // the r15-era mutation, red: the newest readings alone mask it
+    val stripped = texts.updated("BENCH_full_driver_r15_sf0.1.json",
+      """{"queries":{"q69":18.40,"q01":0.9},"sf":"sf0.1"}""")
+    val (_, newestOnly) = BenchPrior.resolvePriorPool(pool, "sf0.1", stripped(_))
     assert(BenchPrior.computeFlags(newestOnly, Seq("q69" -> 2.0)).isEmpty,
-      "this is the masking failure the pool exists to close")
+      "this is the masking failure the carried base exists to close")
   }
 
   test("weather defense: a failed prior run never participates in the min") {
-    val pool = Seq(Seq("a.json"), Seq("b.json"))
     val texts = Map(
-      "a.json" -> """{"queries":{"q1":-1.0},"sf":"sf0.1"}""",
-      "b.json" -> """{"queries":{"q1":0.5},"sf":"sf0.1"}""")
-    val (_, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
+      "a.json" -> """{"queries":{"q1":-1.0},"sf":"sf0.1","base":{"q1":0.5}}""",
+      "b.json" -> """{"queries":{"q1":-1.0},"sf":"sf0.1"}""")
+    val (_, merged) = BenchPrior.resolvePriorPool(Seq(Seq("a.json")), "sf0.1", texts(_))
     // min(-1, 0.5) = -1 would disable flagging for q1 entirely
     assert(merged("q1") == 0.5)
-    // …and a query that failed in EVERY prior stays unflaggable
+    // …and a query that failed everywhere stays unflaggable
     val (_, allFailed) = BenchPrior.resolvePriorPool(
-      Seq(Seq("a.json")), "sf0.1", texts(_))
+      Seq(Seq("b.json")), "sf0.1", texts(_))
+    assert(allFailed("q1") == -1.0)
     assert(BenchPrior.computeFlags(allFailed, Seq("q1" -> 100.0)).isEmpty)
   }
 
-  test("resolvePriorPool laws: union of keys, per-key min of positives, group-order-independent merge, more rounds never raise the base (seeded sweep)") {
+  test("resolvePriorPool laws: the base is the newest resolving prior merged with its carried base — union of keys, per-key min of positives, failed runs never in the min, older rounds never read (seeded sweep)") {
     val rnd = new scala.util.Random(163)
+    def randomMap(): Map[String, Double] =
+      (0 until rnd.nextInt(6)).map { i =>
+        s"q$i" -> (if (rnd.nextInt(4) == 0) -1.0 else rnd.nextDouble() * 10)
+      }.toMap
+    def json(m: Map[String, Double]) =
+      m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     (1 to 200).foreach { _ =>
-      // random pool: up to 4 round groups, each with one readable
-      // candidate carrying a random query map (negatives = failed
-      // runs); some groups corrupt entirely
+      // random pool: up to 4 round groups, each one candidate with a
+      // random reading map and carried base (negatives = failed runs);
+      // some corrupt entirely, some with no query at all
       val nGroups = 1 + rnd.nextInt(4)
       val texts = scala.collection.mutable.Map[String, String]()
-      val pool = (0 until nGroups).map { g =>
+      val fixtures = (0 until nGroups).map { g =>
         val name = s"r$g.json"
-        if (rnd.nextInt(5) == 0) texts(name) = "corrupt {{{"
-        else {
-          val qs = (0 until rnd.nextInt(6)).map { i =>
-            val v = if (rnd.nextInt(4) == 0) -1.0 else rnd.nextDouble() * 10
-            s""""q$i":$v"""
-          }.mkString(",")
-          texts(name) = s"""{"queries":{$qs},"sf":"sf0.1"}"""
-        }
-        Seq(name)
+        val (qs, base) = (randomMap(), randomMap())
+        texts(name) =
+          if (rnd.nextInt(5) == 0) "corrupt {{{"
+          else s"""{"queries":${json(qs)},"sf":"sf0.1","base":${json(base)}}"""
+        (name, qs, base)
       }
-      val read: String => String = texts(_)
-      // k unbounded here: the laws are about the MERGE (the lazy
-      // first-k-non-empty selection gets its own test above), and an
-      // order-reversed pool must resolve the same rounds for law 3
-      val (paths, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", read,
-        k = Int.MaxValue)
-      val resolvedMaps = paths.map(p =>
-        BenchPrior.parsePriorQueries(texts(p), "sf0.1"))
-      // law 1: merged keys are exactly the union of the resolved maps'
-      // (these fixtures carry no "base" field; the base carry's keys
-      // are pinned in its own tests above)
-      assert(merged.keySet == resolvedMaps.flatMap(_.keySet).toSet)
+      val pool = fixtures.map(f => Seq(f._1))
+      val (path, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
+      // the prior is the first group that parses to a non-empty map
+      val first = fixtures.find { case (n, qs, _) =>
+        !texts(n).startsWith("corrupt") && qs.nonEmpty }
+      assert(path == first.fold("")(_._1))
+      val (readings, base) = first.fold(
+        (Map.empty[String, Double], Map.empty[String, Double]))(f => (f._2, f._3))
+      // law 1: keys are exactly the union of the prior's readings and
+      // its carried base
+      assert(merged.keySet == (if (readings.isEmpty) Set.empty[String]
+        else readings.keySet ++ base.keySet))
       // law 2: each value is the min of the positives for that key —
       // a failed run never drags the base down; all-failed stays
       // unflaggable (-1)
       merged.foreach { case (k, v) =>
-        val vs = resolvedMaps.flatMap(_.get(k)).filter(_ > 0)
+        val vs = (readings.get(k) ++ base.get(k)).filter(_ > 0)
         assert(v == (if (vs.nonEmpty) vs.min else -1.0), s"key $k")
       }
-      // law 3: the merge is group-order-independent (the PATH order is
-      // reporting; the BASE must not depend on which round is newest)
-      val (_, reversed) = BenchPrior.resolvePriorPool(pool.reverse, "sf0.1",
-        read, k = Int.MaxValue)
-      assert(reversed == merged)
-      // law 4: adding rounds never RAISES the base on shared keys —
-      // min is monotone, so a truncated pool is always >= the full one
-      val (_, truncated) = BenchPrior.resolvePriorPool(pool.take(1), "sf0.1", read)
-      truncated.foreach { case (k, v) =>
-        if (v > 0 && merged.getOrElse(k, -1.0) > 0)
-          assert(merged(k) <= v, s"key $k: full pool raised the base")
-      }
+      // law 3: rounds older than the resolved one are never read —
+      // appending more of them changes nothing
+      val (p2, m2) = BenchPrior.resolvePriorPool(
+        pool :+ Seq("older.json"), "sf0.1",
+        texts.toMap.updated("older.json", """{"queries":{"q0":0.001},"sf":"sf0.1"}"""))
+      if (first.nonEmpty) assert(p2 == path && m2 == merged)
     }
   }
 
-  test("resolvePriorPool: corrupt groups degrade within themselves; all-bad pool is (Nil, empty)") {
+  test("resolvePriorPool: the newest prior and its carried base equal the three-round min the base was once taken over (seeded sweep)") {
+    // a three-round chain as the runs themselves write it: each round
+    // renders its readings with the base it resolved from the round
+    // before, so the newest artifact carries min(all earlier rounds)
+    val rnd = new scala.util.Random(977)
+    val names = (0 until 8).map(i => s"q$i")
+    (1 to 100).foreach { _ =>
+      def readings() = names.filter(_ => rnd.nextInt(5) > 0).map { n =>
+        n -> (if (rnd.nextInt(6) == 0) -1.0 else 0.1 + rnd.nextDouble() * 5)
+      }
+      val rounds = Seq.fill(3)(readings()).filter(_.nonEmpty)
+      val texts = scala.collection.mutable.Map[String, String]()
+      rounds.zipWithIndex.foreach { case (qs, i) =>
+        val (_, base) = BenchPrior.resolvePriorPool(
+          if (i == 0) Nil else Seq(Seq(s"r${i - 1}.json")), "sf0.1", texts(_))
+        texts(s"r$i.json") = BenchPrior.renderFullLine(1.0, qs, "sf0.1",
+          0.3, 0.3, 400.0, Nil, Nil, "", base = base)
+      }
+      val newest = Seq(Seq(s"r${rounds.size - 1}.json"))
+      val (_, one) = BenchPrior.resolvePriorPool(newest, "sf0.1", texts(_))
+      val threeRoundMin = rounds.flatten.groupMap(_._1)(_._2).map {
+        case (q, vs) => q -> vs.filter(_ > 0).minOption.getOrElse(-1.0) }
+      assert(one == threeRoundMin)
+    }
+  }
+
+  test("resolvePriorPool: corrupt candidates degrade within their round, older rounds stay unread; an all-bad pool is no prior") {
     val texts = Map(
-      "r15_sidecar" -> "garbage {{{",
-      "r15_artifact" -> """{"parsed":{"queries":{"q1":3.0},"sf":"sf0.1"}}""",
-      "r14_sidecar" -> """{"queries":{"q1":1.0,"q2":2.0},"sf":"sf0.1"}""")
-    val (paths, merged) = BenchPrior.resolvePriorPool(
-      Seq(Seq("r15_sidecar", "r15_artifact"), Seq("r14_sidecar")),
-      "sf0.1", texts(_))
-    // the corrupt r15 sidecar fell through to r15's artifact WITHIN
-    // the round group; the merge still spans both rounds
-    assert(paths == Seq("r15_artifact", "r14_sidecar"))
-    assert(merged == Map("q1" -> 1.0, "q2" -> 2.0))
+      "r16_sidecar" -> "garbage {{{",
+      "r16_artifact" -> """{"parsed":{"queries":{"q1":3.0},"sf":"sf0.1"}}""",
+      "r15_sidecar" -> """{"queries":{"q1":1.0,"q2":2.0},"sf":"sf0.1"}""")
+    // the corrupt r16 sidecar falls through to r16's artifact WITHIN
+    // the round group; older rounds stay unread
+    assert(BenchPrior.resolvePriorPool(
+      Seq(Seq("r16_sidecar", "r16_artifact"), Seq("r15_sidecar")),
+      "sf0.1", texts(_)) == ("r16_artifact", Map("q1" -> 3.0)))
     val (p2, m2) = BenchPrior.resolvePriorPool(
       Seq(Seq("x")), "sf0.1", _ => "garbage")
-    assert(p2.isEmpty && m2.isEmpty)
+    assert(p2 == "" && m2.isEmpty)
+  }
+
+  test("resolvePriorPool: a round resolving to nothing falls through to the next older round, never to no base (ADVICE r16)") {
+    val texts = Map(
+      "r16.json" -> "corrupt {{{",
+      "r15.json" -> """{"queries":{},"sf":"sf0.1"}""",
+      "r14.json" -> """{"queries":{"q1":2.0},"sf":"sf0.1"}""",
+      "r13.json" -> """{"queries":{"q1":1.0},"sf":"sf0.1"}""")
+    val pool = Seq("r16.json", "r15.json", "r14.json", "r13.json").map(Seq(_))
+    // a corrupt round and an empty one both fall through; the first
+    // round that resolves is the prior, and the rounds past it stay unread
+    assert(BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_)) ==
+      ("r14.json", Map("q1" -> 2.0)))
   }
 
   test("renderFullLine: hostile names and non-finite values still render valid JSON (ADVICE r15)") {
@@ -376,7 +352,7 @@ class BenchPriorSpec extends AnyFunSuite {
     val line = BenchPrior.renderFullLine(Double.NaN, hostile,
       "/tmp/sf dir/\"x\"", Double.NegativeInfinity, 0.4, Double.NaN,
       Seq(("at\"weird", Double.NaN, 1.0)),
-      Seq(("f\"lag", 0.0, 1.0)), Seq("/p/pr\"ior.json"), Nil, "in\"tra")
+      Seq(("f\"lag", 0.0, 1.0)), "/p/pr\"ior.json")
     // must be ONE parseable JSON object — a parse failure here would
     // silently zero next round's flag coverage
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -392,24 +368,35 @@ class BenchPriorSpec extends AnyFunSuite {
     assert(node.get("flags").get(0).get("ratio").asDouble() == -1.0)
   }
 
-  test("parsePriorCpus + intraCpuCompatible: cross-core-count intra priors are refused; legacy artifacts pass") {
-    // written since r19: the full line records its core count
+  test("cpus: the prior's recorded core count must match this run's — a mismatch is stated and yields no base and no flags; legacy artifacts pass") {
+    // the full line records its core count
     val line = BenchPrior.renderFullLine(1.0, Seq("q1" -> 1.0), "sf0.1",
-      0.35, 0.4, 450.0, Nil, Nil, Nil, Nil, "", cpus = 32)
-    assert(BenchPrior.parsePriorCpus(line, "sf0.1") == Some(32))
-    assert(BenchPrior.intraCpuCompatible(line, "sf0.1", 32))
-    // the r18 hole: an 8-cpu scaling run's map in the next round's
-    // sidecar slot must NOT serve a 32-cpu run as "environment by
-    // construction"
-    assert(!BenchPrior.intraCpuCompatible(line, "sf0.1", 8))
-    // legacy artifacts (no cpus field) stay compatible — local sweeps
-    // are constant-core and losing their intra coverage is the bigger
-    // harm
-    val legacy = """{"queries":{"q1":5.0},"sf":"sf0.1"}"""
-    assert(BenchPrior.parsePriorCpus(legacy, "sf0.1").isEmpty)
-    assert(BenchPrior.intraCpuCompatible(legacy, "sf0.1", 32))
+      0.35, 0.4, 450.0, Nil, Nil, "", base = Map("q1" -> 0.5), cpus = 32)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(om.readTree(line).get("cpus").asInt() == 32)
+    val texts = Map("r19.json" -> line,
+      "r18.json" -> """{"queries":{"q1":0.1},"sf":"sf0.1"}""",
+      "legacy.json" -> """{"queries":{"q1":0.2},"sf":"sf0.1"}""")
+    val pool = Seq(Seq("r19.json"), Seq("r18.json"))
+    // same core count: the prior and its carried base
+    assert(BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_), cpus = 32) ==
+      ("r19.json", Map("q1" -> 0.5)))
+    // a 4-cpu run against a 32-cpu prior: no base, no flags, a note
+    // naming both counts — and no fall-through to r18, which predates
+    // the field and cannot prove its core count
+    val notes = scala.collection.mutable.ListBuffer[String]()
+    val (p, m) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_), notes += _, cpus = 4)
+    assert(p == "" && m.isEmpty)
+    assert(BenchPrior.computeFlags(m, Seq("q1" -> 100.0)).isEmpty)
+    assert(notes.size == 1 && notes.head.contains("32") && notes.head.contains("4"),
+      notes.mkString("; "))
+    // legacy artifacts (no cpus field) and an unknown run count pass
+    assert(BenchPrior.resolvePriorPool(Seq(Seq("legacy.json")), "sf0.1",
+      texts(_), cpus = 4) == ("legacy.json", Map("q1" -> 0.2)))
+    assert(BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))._1 == "r19.json")
     // cpus must ride the sf-selected node, like every other accessor
-    assert(BenchPrior.parsePriorCpus(line, "sf0.01").isEmpty)
+    assert(BenchPrior.resolvePriorPool(Seq(Seq("r19.json")), "sf0.01",
+      texts(_), cpus = 4)._1 == "")
   }
 
   test("parsePriorBase: read from the same node parsePriorQueries selects; pre-r17 artifacts carry none") {
@@ -434,11 +421,11 @@ class BenchPriorSpec extends AnyFunSuite {
   test("base carry: three consecutive degraded rounds still flag against the rotated-out healthy reading — VERDICT r16 item 3") {
     // the decay scenario VERDICT r16 named: r14 was the last healthy
     // window (q1 at 0.5 s); r15–r17 all ran degraded (q1 at ~5 s).
-    // Round 18's K=3 pool is r17+r16+r15 — r14 has rotated out of the
-    // round window. Without the carry the bar inflates to 5.0 and a
-    // real regression to 2.0 sails through; WITH it, each degraded
-    // round's sidecar recorded the merged base it flagged against
-    // (0.5, transitively from r14), and the min folds it back in.
+    // Round 18's prior is r17, three rounds past r14. Without the
+    // carry the bar inflates to a degraded reading and a real
+    // regression to 2.0 sails through; WITH it, each degraded round's sidecar recorded the
+    // merged base it flagged against (0.5, transitively from r14), and
+    // the min folds it back in.
     def sidecar(reading: Double, base: String) =
       s"""{"queries":{"q1":$reading},"sf":"sf0.1","base":$base}"""
     val texts = Map(
@@ -466,37 +453,20 @@ class BenchPriorSpec extends AnyFunSuite {
     assert(m2("q1") == 5.2 && m2("q3") == 0.2)
   }
 
-  test("resolvePriorPool: a round resolving to nothing falls through to round k+1 (ADVICE r16)") {
-    // pre-fix, priorPool.take(k) ran BEFORE resolution: a fully
-    // corrupt round SHRANK the merge to k−1 rounds instead of letting
-    // the next-older round in
-    val texts = Map(
-      "r16.json" -> """{"queries":{"q1":3.0},"sf":"sf0.1"}""",
-      "r15.json" -> "corrupt {{{",
-      "r14.json" -> """{"queries":{"q1":2.0},"sf":"sf0.1"}""",
-      "r13.json" -> """{"queries":{"q1":1.0},"sf":"sf0.1"}""",
-      "r12.json" -> """{"queries":{"q1":0.1},"sf":"sf0.1"}""")
-    val pool = Seq("r16.json", "r15.json", "r14.json", "r13.json", "r12.json")
-      .map(Seq(_))
-    val (paths, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
-    assert(paths == Seq("r16.json", "r14.json", "r13.json"),
-      s"the corrupt r15 round must fall through to r13, and r12 stays outside k=3; got $paths")
-    assert(merged("q1") == 1.0)
-  }
-
   test("renderCompactLine size law: bounded under the driver's tail window at the worst case — every query flagged, real names (VERDICT r16 item 1)") {
     // the r16 failure: 80 flag names inline grew the line to ~2.6 KB
     // against the driver's 2000-char stdout tail, and the committed
     // official BENCH_r16.json landed parsed:null. The law: at the
-    // absolute worst case — all 207 real queries flagged — the line
-    // still fits, with n_flags carrying the true count.
+    // absolute worst case — all 207 real queries flagged, a four-digit
+    // core count — the line still fits, with n_flags carrying the true
+    // count.
     val names = SparkEntry.queries.keys.toSeq.sorted
     assert(names.size >= 200, "worst case must be the real query set")
     val results = names.map(_ -> 12.345678)
     val flags = names.map(n => (n, 0.301, 12.345678))
     val line = BenchPrior.renderCompactLine(2556.0, results,
       "/root/testdata/sf0.1", 0.35, 0.41, 450.0, flags,
-      nFlagsIntra = 111, nRetryWeather = 207)
+      nRetryWeather = 207, cpus = 1024)
     assert(line.length <= 1900, s"line is ${line.length} chars")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(line)
@@ -506,13 +476,15 @@ class BenchPriorSpec extends AnyFunSuite {
     assert(node.get("flags").size() < names.size && node.get("flags").size() > 0)
     assert(node.get("flags_note").asText().startsWith("first "))
     assert(node.get("n_flags_retry_weather").asInt() == 207)
+    assert(node.get("cpus").asInt() == 1024)
     // …and a healthy window elides nothing
     val smallLine = BenchPrior.renderCompactLine(253.6, results,
       "/root/testdata/sf0.1", 0.35, 0.41, 450.0, flags.take(7),
-      nFlagsIntra = 1, nRetryWeather = 7)
+      nRetryWeather = 7, cpus = 4)
     val smallNode = om.readTree(smallLine)
     assert(smallNode.get("flags").size() == 7 &&
-      smallNode.get("flags_note").asText() == "all")
+      smallNode.get("flags_note").asText() == "all" &&
+      smallNode.get("cpus").asInt() == 4)
     assert(smallLine.length <= 1900)
   }
 
@@ -524,7 +496,7 @@ class BenchPriorSpec extends AnyFunSuite {
     val line = BenchPrior.renderCompactLine(Double.NaN,
       Seq("q1" -> Double.PositiveInfinity, "q2" -> 1.0), "sf0.1",
       Double.NegativeInfinity, Double.NaN, Double.NaN,
-      Seq(("q1", 0.5, 2.0)), 0, 0)
+      Seq(("q1", 0.5, 2.0)), nRetryWeather = 0)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(line) // must parse at all
     assert(node.get("value").asDouble() == -1.0)
@@ -552,8 +524,8 @@ class BenchPriorSpec extends AnyFunSuite {
   test("renderFullLine writes the base and retries; parsePriorBase recovers the base through the real parser") {
     val line = BenchPrior.renderFullLine(10.0,
       Seq("q1" -> 5.0, "q2" -> 1.0), "sf0.1", 0.3, 0.4, 400.0,
-      Seq(("start", 0.3, 400.0)), Seq(("q1", 0.5, 5.0)), Seq("/p/prior"),
-      Nil, "", base = Map("q1" -> 0.5, "q2" -> 0.9),
+      Seq(("start", 0.3, 400.0)), Seq(("q1", 0.5, 5.0)), "/p/prior",
+      base = Map("q1" -> 0.5, "q2" -> 0.9),
       retries = Map("q1" -> 0.52))
     assert(BenchPrior.parsePriorBase(line, "sf0.1") ==
       Map("q1" -> 0.5, "q2" -> 0.9))

@@ -1,9 +1,11 @@
 #!/usr/bin/env bash
 # Repo-local bench sweep. Exports SPARK_GRAFT_BENCH_KIND=local so the
-# cross-round regression flags diff against the LOCAL artifact series
+# regression flags diff against the LOCAL artifact series
 # (BENCH_r*_local.json) — like-for-like, never against the driver
-# harness's BENCH_r*.json (a different environment; see Bench.scala's
-# prior-selection comment).
+# harness's BENCH_r*.json (a different environment). The flag base is
+# one prior: the newest local round below the current one, merged by
+# per-query min with the base that artifact recorded (see BenchPrior);
+# a prior recorded at another core count raises no flags.
 #
 # Usage: tools/bench_local.sh [sf_dir]   # default /root/testdata/sf0.1
 set -euo pipefail
