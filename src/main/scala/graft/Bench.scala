@@ -81,7 +81,8 @@ object Bench {
     spark.catalog.listTables() // warmup: derby metastore startup (per-JVM, not per-query)
     // optional comma-separated name-prefix filter for local iteration
     // (the driver never sets it → full set)
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_ONLY") match {
+    val subset = sys.env.get("SPARK_GRAFT_ONLY")
+    val only: String => Boolean = subset match {
       case Some(pfx) => val ps = pfx.split(','); n => ps.exists(n.startsWith)
       case None => _ => true
     }
@@ -127,7 +128,8 @@ object Bench {
     // with the base that prior itself recorded, so the bar is the
     // healthiest reading any earlier round achieved. A cross-kind or
     // cross-core-count diff is environment noise, never a fallback.
-    // SPARK_GRAFT_PRIOR_BENCH names an explicit prior instead.
+    // SPARK_GRAFT_PRIOR_BENCH names an explicit prior instead. A
+    // SPARK_GRAFT_ONLY subset run has no base (BenchPrior.flagBase).
     val kind = sys.env.getOrElse("SPARK_GRAFT_BENCH_KIND", "driver")
     val repoDir = new java.io.File(System.getProperty("user.dir"))
     val repoFiles = Option(repoDir.listFiles()).toSeq.flatten.map(_.getName)
@@ -140,12 +142,14 @@ object Bench {
     val pool = sys.env.get("SPARK_GRAFT_PRIOR_BENCH").map(p => Seq(Seq(p)))
       .getOrElse(BenchPrior.priorPool(kind, repoFiles, sfName)
         .map(_.map(n => new java.io.File(repoDir, n).getPath)))
-    val (priorPath, priorQ) = BenchPrior.resolvePriorPool(pool, sfDir,
-      readText, m => System.err.println(s"[bench] $m"), cpus)
-    System.err.println(
-      if (priorQ.isEmpty) s"[bench] prior ($kind kind): none — no flags"
-      else s"[bench] prior ($kind kind): $priorPath with its carried " +
-        s"base — ${priorQ.size} queries")
+    val note: String => Unit = m => System.err.println(s"[bench] $m")
+    val (priorPath, priorQ) = BenchPrior.flagBase(subset, note) {
+      val (p, q) = BenchPrior.resolvePriorPool(pool, sfDir, readText, note, cpus)
+      note(
+        if (q.isEmpty) s"prior ($kind kind): none — no flags"
+        else s"prior ($kind kind): $p with its carried base — ${q.size} queries")
+      (p, q)
+    }
     val flags = BenchPrior.computeFlags(priorQ, results)
     flags.foreach { case (n, pv, v) => System.err.println(
       f"[bench] FLAG $n%-28s $pv%7.2f -> $v%7.2f s (${v / pv}%.2fx) — " +
@@ -186,7 +190,7 @@ object Bench {
     // round's file and the prior stays round-over-round; never from a
     // local sweep or a SPARK_GRAFT_ONLY subset run (a partial map
     // would shrink next round's flag coverage)
-    if (BenchPrior.shouldWriteSidecar(kind, sys.env.get("SPARK_GRAFT_ONLY"))) {
+    if (BenchPrior.shouldWriteSidecar(kind, subset)) {
       val fullSidecar =
         new java.io.File(repoDir, BenchPrior.sidecarName(round, sfName))
       try {

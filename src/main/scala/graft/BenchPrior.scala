@@ -228,7 +228,26 @@ object BenchPrior {
     * never a SPARK_GRAFT_ONLY subset run (a partial map would shrink
     * the next round's flag coverage to the subset). */
   def shouldWriteSidecar(kind: String, subset: Option[String]): Boolean =
-    kind != "local" && subset.isEmpty
+    kind != "local" && fullRun(subset)
+
+  /** This run's flag base ([[resolvePriorPool]]'s result, by-name):
+    * none for a SPARK_GRAFT_ONLY subset run — so no flags and no flag
+    * retries — with one note saying why. A cold subset diffed against
+    * a base taken deep inside a warm full suite flags warm-up, not
+    * regressions. */
+  def flagBase(subset: Option[String], note: String => Unit)(
+      resolve: => (String, Map[String, Double])): (String, Map[String, Double]) =
+    if (fullRun(subset)) resolve
+    else {
+      note(s"subset run (SPARK_GRAFT_ONLY=${subset.getOrElse("")}): no " +
+        "flags, no flag retries — a cold subset is not comparable with " +
+        "a warm full-suite base")
+      ("", Map.empty)
+    }
+
+  /** No SPARK_GRAFT_ONLY subset: the one predicate behind both the
+    * sidecar write and the flags. */
+  private def fullRun(subset: Option[String]): Boolean = subset.isEmpty
 
   /** The round-keyed sidecar filename this run writes (and the next
     * round's [[priorPool]] will prefer). */

@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.VectorExpressions._
 
-/** Session extension registering every graft native expression as a
-  * permanent SQL function — the canonical integration point, so plain
-  * SQL sessions (thrift server, `spark.sql(...)`, notebooks) get the
-  * functions without calling `VectorExpressions.register` imperatively:
+/** Session extension registering every graft native expression
+  * (`VectorExpressions.functions`) as a permanent SQL function — the
+  * canonical integration point, so plain SQL sessions (thrift server,
+  * `spark.sql(...)`, notebooks) get the functions without calling
+  * `VectorExpressions.register` imperatively:
   *
   * {{{
   * SparkSession.builder()
@@ -24,48 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-      ("graft_dot", "dot product of two double arrays",
-        es => DotProduct(es.head, es(1))),
-      ("graft_sumsq", "sum of squares of a double array",
-        es => SumSquares(es.head)),
-      ("graft_minhash", "64-perm MinHash signature of a string array",
-        es => MinHashSig(es.head)),
-      ("graft_minhash_bands", "32 combined LSH band keys",
-        es => MinHashBands(es.head)),
-      ("graft_shingles", "distinct word 3-gram shingles",
-        es => ShingleSet(es.head, 3)),
-      ("graft_lsh_bucket", "8-bit hyperplane LSH bucket",
-        es => LshBucket(es.head)),
-      ("graft_trigrams", "character trigrams",
-        es => CharGrams(es.head, 3, distinct = false)),
-      ("graft_trigrams_distinct", "distinct character trigrams",
-        es => CharGrams(es.head, 3, distinct = true)),
-      ("graft_simhash32", "32-bit SimHash of a token array",
-        es => SimHash32(es.head)),
-      ("graft_trigram_counts", "per-document trigram -> count map",
-        es => CharGramCounts(es.head, 3)),
-      ("graft_trigram_hashes", "xxhash64 of each distinct trigram",
-        es => CharGramHashes(es.head, 3)),
-      ("graft_trigram_packed_counts", "packed trigram -> count map",
-        es => CharGramPackedCounts(es.head, 3)),
-      ("graft_trigram_packed", "distinct order-preserving packed trigrams",
-        es => CharGramPackedDistinct(es.head, 3)),
-      ("graft_shingles5", "distinct word 5-gram shingles",
-        es => ShingleSet(es.head, 5)),
-      ("graft_word_bigrams", "word bigrams, every occurrence",
-        es => WordGramList(es.head, 2)),
-      ("graft_rproj", "16-dim signed random projection",
-        es => RandomProjection(es.head)),
-      ("graft_simhash64", "64-bit SimHash of a token array",
-        es => SimHash64(es.head)),
-      ("graft_sq_dequantize", "fused 8-bit scalar quantize -> midpoint dequantize",
-        es => SqDequantize(es.head, es(1), es(2))),
-      ("graft_pq_reconstruct", "fused product-quantization encode -> decode",
-        es => PqReconstruct(es.head, es(1))),
-      ("graft_common_sorted", "common-element count of two sorted distinct long arrays",
-        es => SortedCommonCount(es.head, es(1))))
-    fns.foreach { case (name, usage, builder) =>
+    functions.foreach { case (name, usage, builder) =>
       e.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
     e.injectOptimizerRule(_ => GraftRules.DotSelfToSumSq)

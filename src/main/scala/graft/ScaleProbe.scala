@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (Bench/Plans' sibling): measured scale evidence for the
@@ -14,8 +15,8 @@ import org.apache.spark.sql.functions._
   * per-replica token-suffix scramble: vocabularies are disjoint
   * ACROSS replicas (no cross-replica near-dups — the pair count
   * scales exactly 10×, not 100×) while each replica preserves the
-  * original dup/boilerplate structure. Written once under /tmp and
-  * reused (Bench's staging discipline).
+  * original dup/boilerplate structure. Staged once and reused
+  * ([[twin]]).
   *
   * `runMain graft.ScaleProbe 100` answers the question at face value:
   * a 100× twin (6M docs / 2M vectors) probed on the batch headliners
@@ -31,25 +32,47 @@ import org.apache.spark.sql.functions._
   * (the default is [[Session.cpus]]' 4).
   */
 object ScaleProbe {
-  /** The staging key for `src`'s synthesized twins — scheme version +
-    * source size+mtime, so a fixture regeneration or scramble edit
-    * restages instead of silently reusing stale corpora. Factored so
-    * StoreProbe resolves the CURRENT scheme's twin dir instead of
-    * globbing /tmp (where a retired scheme's dir may also survive).
+  private val src = "/root/testdata/sf0.1"
+
+  /** The sf0.1 documents + embeddings at `factor` × (1 = an
+    * equal-layout restage), 32 files per table, staged once by
+    * Staging.ensure over BOTH source tables — regenerating only the
+    * vector fixture restages too. The tag carries the synthesis-scheme
+    * version, so a scramble edit restages instead of silently reusing
+    * a stale corpus. StoreProbe replays the same twin through this
+    * call.
     */
-  private[graft] def stagingKey(src: String): String = {
-    val scheme = "v2-suffix10-emb"
-    // fingerprint BOTH staged tables — the twin includes embeddings,
-    // so regenerating only the vector fixture must restage too
-    val stamp = Seq("documents", "embeddings").map { t =>
-      val f = java.nio.file.Paths.get(s"$src/$t.parquet")
-      s"${java.nio.file.Files.size(f)}:${
-        java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    }.mkString(":")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$scheme:$stamp".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-  }
+  private[graft] def twin(spark: SparkSession, factor: Int): String =
+    graft.core.Staging.ensure(s"scale${factor}x_v2",
+        s"$src/documents.parquet", s"$src/embeddings.parquet") { dir =>
+      val docs = spark.read.parquet(s"$src/documents.parquet")
+      val emb = spark.read.parquet(s"$src/embeddings.parquet")
+      // embeddings for the vector-side probes (e04): the scaled twin
+      // replicates each vector with a small deterministic per-replica
+      // perturbation — exact copies would make every replica its own
+      // 0-distance neighbor and collapse NN-descent's tie-breaking;
+      // the perturbation keeps vectors distinct while leaving the cost
+      // model (rounds × nodes × bounded degree) untouched.
+      val (d, e) =
+        if (factor == 1) (docs, emb)
+        else {
+          val reps = spark.range(0, factor).toDF("k")
+          (docs.crossJoin(reps)
+            .select((col("doc_id") * factor + col("k")).as("doc_id"),
+              array_join(transform(split(col("text"), " "),
+                t => concat(t, lit("_"), col("k"))), " ").as("text"),
+              col("lang"), col("source"))
+            .withColumn("n_chars", length(col("text"))),
+           emb.crossJoin(reps)
+            .selectExpr(s"cast(vec_id * $factor + k AS bigint) AS vec_id",
+              "transform(embedding, (x, i) -> cast(x + 0.001f * " +
+                "cast(pmod(hash(vec_id, k, i), 97) - 48 AS float) AS float)) " +
+                "AS embedding",
+              "label"))
+        }
+      d.repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      e.repartition(32).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
@@ -63,56 +86,13 @@ object ScaleProbe {
       case None => _ => true
     }
     val spark = Session.build()
-    val src = "/root/testdata/sf0.1"
     // EQUAL-LAYOUT baseline: the shipped sf0.1 documents.parquet is a
     // single file (one row group → ONE task owns every narrow stage),
     // which confounds the ratio — d17 measured FASTER on 10× data
     // purely because the big corpus had 32 splits. Both legs are
-    // therefore staged at 32 files. Staging is keyed on the SOURCE
-    // file's size+mtime plus a synthesis-scheme version, so editing
-    // the scramble or regenerating the fixture restages instead of
-    // silently reusing stale corpora (Staging.ensure's discipline).
-    val key = stagingKey(src)
-    val base = s"/tmp/graft_scale1x_$key"
-    val big = s"/tmp/graft_scale${factor}x_$key"
-    if (!new java.io.File(s"$base/documents.parquet/_SUCCESS").exists()) {
-      spark.read.parquet(s"$src/documents.parquet")
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    }
-    if (!new java.io.File(s"$big/documents.parquet/_SUCCESS").exists()) {
-      spark.read.parquet(s"$src/documents.parquet")
-        .crossJoin(spark.range(0, factor).toDF("k"))
-        .select((col("doc_id") * factor + col("k")).as("doc_id"),
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit("_"), col("k"))), " ").as("text"),
-          col("lang"), col("source"))
-        .withColumn("n_chars", length(col("text")))
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$big/documents.parquet")
-    }
-    // embeddings for the vector-side probes (e04): the 10× corpus
-    // replicates each vector with a small deterministic per-replica
-    // perturbation — exact copies would make every replica its own
-    // 0-distance neighbor and collapse NN-descent's tie-breaking;
-    // the perturbation keeps vectors distinct while leaving the cost
-    // model (rounds × nodes × bounded degree) untouched.
-    if (!new java.io.File(s"$base/embeddings.parquet/_SUCCESS").exists()) {
-      spark.read.parquet(s"$src/embeddings.parquet")
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
-    }
-    if (!new java.io.File(s"$big/embeddings.parquet/_SUCCESS").exists()) {
-      spark.read.parquet(s"$src/embeddings.parquet")
-        .crossJoin(spark.range(0, factor).toDF("k"))
-        .selectExpr(s"cast(vec_id * $factor + k AS bigint) AS vec_id",
-          "transform(embedding, (x, i) -> cast(x + 0.001f * " +
-            "cast(pmod(hash(vec_id, k, i), 97) - 48 AS float) AS float)) " +
-            "AS embedding",
-          "label")
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$big/embeddings.parquet")
-    }
+    // therefore staged at 32 files.
+    val base = twin(spark, 1)
+    val big = twin(spark, factor)
     val picks =
       if (factor == 100)
         // batch headliners only: one dedup per family tier (exact,

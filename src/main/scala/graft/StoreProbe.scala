@@ -26,9 +26,11 @@ import org.apache.spark.sql.functions._
   * batch — see EventStreams.commitStores' scaladoc for why that trade is
   * taken over tiered levels at this store's scale).
   *
-  * Corpus: the ScaleProbe 10× twin when already staged (50k docs —
-  * big enough that store growth, not fixed overhead, is what the
-  * series measures), else the sf0.1 fixture.
+  * Corpus: the ScaleProbe twin at the given factor (10× by default:
+  * 50k docs — big enough that store growth, not fixed overhead, is
+  * what the series measures), resolved through `ScaleProbe.twin`, so
+  * it is staged on first use and every series replays the same
+  * corpus.
   *
   * The STORE series runs on 32 cores: export `SPARK_GRAFT_CPUS=32`
   * (the default is [[Session.cpus]]' 4). `SPARK_GRAFT_CENSUS=false`
@@ -68,17 +70,9 @@ object StoreProbe {
     buckets.foreach(b => spark.conf.set("spark.graft.storeBuckets", b.toString))
     graft.functions.VectorExpressions.register(spark)
 
-    // resolve the CURRENT scheme's 10× twin via ScaleProbe's staging
-    // key — a /tmp glob could land on a retired scheme's stale dir
-    // and silently measure the wrong corpus
     // st24 ingests the VECTOR corpus; the dedup stores ingest docs
     val table = if (gate == "st24") "embeddings" else "documents"
-    val twin = Some(s"/tmp/graft_scale${factor}x_" +
-        ScaleProbe.stagingKey("/root/testdata/sf0.1") + s"/$table.parquet")
-      .filter(p => new java.io.File(s"$p/_SUCCESS").exists())
-    require(factor == 10 || twin.nonEmpty,
-      "100x twin not staged — run `runMain graft.ScaleProbe 100` first")
-    val src = twin.getOrElse(s"/root/testdata/sf0.1/$table.parquet")
+    val src = s"${ScaleProbe.twin(spark, factor)}/$table.parquet"
     System.err.println(s"[store] corpus: $src")
 
     // stage one single-file chunk per batch ONCE (untimed), so each
@@ -91,12 +85,8 @@ object StoreProbe {
     // being comparable across rounds (measured: a 49-way restage
     // moved per-batch medians ~2x). The tomb leg gets its genuinely
     // new ids by OFFSET instead (below).
-    val stagedRoot = {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$src:$nBatches".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8)
-      val dir = s"/tmp/graft_storeprobe_$key"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    val stagedRoot =
+      graft.core.Staging.ensure(s"storeprobe_b$nBatches", src) { dir =>
         val (idCol, cols) =
           if (gate == "st24") ("vec_id", Seq(col("vec_id"), col("embedding")))
           else ("doc_id", Seq(col("doc_id"), col("text")))
@@ -105,8 +95,6 @@ object StoreProbe {
           .repartition(nBatches, col("b"))
           .write.mode("overwrite").partitionBy("b").parquet(dir)
       }
-      dir
-    }
 
     val work = graft.core.Staging.tempAtExit(s"graft_storeprobe_${gate}_")
 

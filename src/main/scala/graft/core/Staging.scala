@@ -2,21 +2,26 @@ package graft.core
 
 import java.nio.file.{Files, Path, Paths}
 
-/** Persistent staging for queries that demonstrate an operator OVER a
-  * staged layout (merge targets, fragmented landing zones, multi-
-  * generation schema dirs): the layout is written once per (input
-  * dataset, tag) and reused across JVMs, so steady-state runs pay for
-  * the OPERATOR, not for rebuilding its fixture — the same
-  * amortization the persistent catalog gives q35/q36 and the chunk
-  * cache gives the streaming gates (EventStreams.stageEventChunks,
-  * whose keying/marker discipline this generalizes).
+/** Persistent staging for layouts an operator runs OVER (merge
+  * targets, fragmented landing zones, multi-generation schema dirs,
+  * year-partitioned facts, streaming replay chunks, synthesized scale
+  * twins): [[Staging.ensure]] writes each layout once and reuses it
+  * across queries and JVMs, so steady-state runs pay for the
+  * OPERATOR, not for rebuilding its fixture. It is the one staging
+  * cache in the engine; every staged dir follows its discipline:
   *
-  * Key = md5 over (input dir, tag, source size+mtime): regenerated
-  * testdata at the same path invalidates the cache instead of silently
-  * reusing a stale layout. The completion marker is written LAST — a
-  * JVM dying mid-staging leaves no marker and the next caller
-  * re-stages. Callers may mutate the staged dir only if the mutation
-  * is idempotent and derived from the SOURCE tables (q43/q47's dynamic
+  *   - Key = md5 over the tag and each source's (path, size, mtime),
+  *     so regenerated testdata at the same path restages instead of
+  *     silently reusing a stale layout, and two inputs never share a
+  *     dir.
+  *   - The completion marker `_GRAFT_STAGED` is written LAST, after
+  *     `write` returns: a JVM dying mid-staging (or a `write` that
+  *     throws) leaves no marker, and the next caller deletes the
+  *     partial dir and stages it again. A marked dir is reused
+  *     without calling `write`.
+  *
+  * Callers may mutate the staged dir only if the mutation is
+  * idempotent and derived from the SOURCE tables (q43/q47's dynamic
   * partition overwrite recomputes merged partitions from the source of
   * truth, so a re-run converges to the same bytes).
   */
@@ -71,17 +76,22 @@ object Staging {
     dir
   }
 
-  def ensure(d: String, srcTable: String, tag: String)
-      (write: String => Unit): String = {
-    val src = Paths.get(s"$d/$srcTable.parquet")
-    val ident = s"$d:$tag:${Files.size(src)}:" +
-      Files.getLastModifiedTime(src).toMillis
+  /** The staged dir for `tag` over `sources` (parquet files or dirs
+    * the layout derives from), written by `write` into a fresh,
+    * existing dir unless a completed one is already there. */
+  def ensure(tag: String, sources: String*)(write: String => Unit): String = {
+    val ident = (tag +: sources.map { p =>
+      val f = Paths.get(p)
+      s"$p:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}"
+    }).mkString("\n")
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     val dir: Path = Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_stage_${tag}_$key")
     val marker = dir.resolve("_GRAFT_STAGED")
     if (!Files.exists(marker)) {
+      deleteTree(dir.toString)
+      Files.createDirectories(dir)
       write(dir.toString)
       Files.createFile(marker)
     }

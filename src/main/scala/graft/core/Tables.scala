@@ -59,14 +59,17 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     readNanosAsLong(s)
-    val raw = apply(s, d, "events")
+    eventTs(apply(s, d, "events"))
+  }
+  /** [[events]]' `ts` normalization, for any frame (batch or stream)
+    * read with the events schema. */
+  private[graft] def eventTs(raw: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts DIV 1000")))
+        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+        raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw // already a session-tz timestamp
     }
   }

@@ -767,51 +767,57 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Register as SQL temp functions (`graft_dot`, `graft_sumsq`,
-    * `graft_minhash`) so the query surface reaches them through
-    * `expr(...)` without touching the Column constructor
-    * (session-internal in Spark 4).
+  /** Every graft SQL function: (name, usage, builder). The one table
+    * both [[register]] and `graft.GraftExtensions` read. */
+  val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", "dot product of two double arrays",
+      es => DotProduct(es.head, es(1))),
+    ("graft_sumsq", "sum of squares of a double array",
+      es => SumSquares(es.head)),
+    ("graft_minhash", "64-perm MinHash signature of a string array",
+      es => MinHashSig(es.head)),
+    ("graft_minhash_bands", "32 combined LSH band keys",
+      es => MinHashBands(es.head)),
+    ("graft_shingles", "distinct word 3-gram shingles",
+      es => ShingleSet(es.head, 3)),
+    ("graft_lsh_bucket", "8-bit hyperplane LSH bucket",
+      es => LshBucket(es.head)),
+    ("graft_trigrams", "character trigrams",
+      es => CharGrams(es.head, 3, distinct = false)),
+    ("graft_trigrams_distinct", "distinct character trigrams",
+      es => CharGrams(es.head, 3, distinct = true)),
+    ("graft_simhash32", "32-bit SimHash of a token array",
+      es => SimHash32(es.head)),
+    ("graft_trigram_counts", "per-document trigram -> count map",
+      es => CharGramCounts(es.head, 3)),
+    ("graft_trigram_hashes", "xxhash64 of each distinct trigram",
+      es => CharGramHashes(es.head, 3)),
+    ("graft_trigram_packed_counts", "packed trigram -> count map",
+      es => CharGramPackedCounts(es.head, 3)),
+    ("graft_trigram_packed", "distinct order-preserving packed trigrams",
+      es => CharGramPackedDistinct(es.head, 3)),
+    ("graft_shingles5", "distinct word 5-gram shingles",
+      es => ShingleSet(es.head, 5)),
+    ("graft_word_bigrams", "word bigrams, every occurrence",
+      es => WordGramList(es.head, 2)),
+    ("graft_rproj", "16-dim signed random projection",
+      es => RandomProjection(es.head)),
+    ("graft_simhash64", "64-bit SimHash of a token array",
+      es => SimHash64(es.head)),
+    ("graft_sq_dequantize", "fused 8-bit scalar quantize -> midpoint dequantize",
+      es => SqDequantize(es.head, es(1), es(2))),
+    ("graft_pq_reconstruct", "fused product-quantization encode -> decode",
+      es => PqReconstruct(es.head, es(1))),
+    ("graft_common_sorted", "common-element count of two sorted distinct long arrays",
+      es => SortedCommonCount(es.head, es(1))))
+
+  /** Register [[functions]] as SQL temp functions so the query surface
+    * reaches them through `expr(...)` without touching the Column
+    * constructor (session-internal in Spark 4).
     */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", es => DotProduct(es.head, es(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sumsq", es => SumSquares(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", es => MinHashSig(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands", es => MinHashBands(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", es => ShingleSet(es.head, 3), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_bucket", es => LshBucket(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigrams", es => CharGrams(es.head, 3, distinct = false), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigrams_distinct", es => CharGrams(es.head, 3, distinct = true), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash32", es => SimHash32(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", es => SimHash64(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigram_counts", es => CharGramCounts(es.head, 3), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigram_hashes", es => CharGramHashes(es.head, 3), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigram_packed_counts", es => CharGramPackedCounts(es.head, 3), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigram_packed", es => CharGramPackedDistinct(es.head, 3), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles5", es => ShingleSet(es.head, 5), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_bigrams", es => WordGramList(es.head, 2), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rproj", es => RandomProjection(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sq_dequantize", es => SqDequantize(es.head, es(1), es(2)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_reconstruct", es => PqReconstruct(es.head, es(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_common_sorted", es => SortedCommonCount(es.head, es(1)), "built-in")
-  }
+  def register(s: SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      s.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
 }

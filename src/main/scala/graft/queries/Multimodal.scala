@@ -289,8 +289,7 @@ object Multimodal {
     */
   def m05BinaryIngest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.core.Staging.ensure(d, "documents", "bin_assets") { out =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+    val dir = graft.core.Staging.ensure("bin_assets", s"$d/documents.parquet") { out =>
       // tiny deterministic slice (100 files at sf0.1) — fixture
       // staging, not the operator under test
       Tables.documents(s, d).filter(col("doc_id") % 50 === 0)

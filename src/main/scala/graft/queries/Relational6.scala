@@ -84,19 +84,15 @@ object Relational6 {
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sum_price"))
 
-  /** The year-partitioned orders layout, staged once per input dir —
-    * shared by static (q36) and dynamic (q55) pruning. */
-  private def partitionedOrders(s: SparkSession, d: String): String = {
-    val suffix = math.abs(d.hashCode).toString
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_orders_part_$suffix")
-    if (!java.nio.file.Files.exists(base)) {
+  /** The year-partitioned orders layout, staged once per input
+    * (Staging.ensure) — shared by static (q36) and dynamic (q55)
+    * pruning. */
+  private def partitionedOrders(s: SparkSession, d: String): String =
+    graft.core.Staging.ensure("orders_part", s"$d/orders.parquet") { dir =>
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
-        .write.mode("overwrite").partitionBy("o_year").parquet(base.toString)
+        .write.mode("overwrite").partitionBy("o_year").parquet(dir)
     }
-    base.toString
-  }
 
   /** DYNAMIC partition pruning — q36's static cousin and the bigger
     * 100 TB win: the pruning predicate isn't in the query text at all.

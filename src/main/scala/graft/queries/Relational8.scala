@@ -39,7 +39,7 @@ object Relational8 {
       .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"))
     // staged once per input dir (Staging doc): the merge below mutates
     // only partitions it rebuilds FROM SOURCE, so reuse is idempotent
-    val tmp = graft.core.Staging.ensure(d, "customer", "merge_upsert") { dir =>
+    val tmp = graft.core.Staging.ensure("merge_upsert", s"$d/customer.parquet") { dir =>
       base.write.mode("overwrite").partitionBy("c_nationkey").parquet(dir)
     }
     val delta = Tables.orders(s, d)
@@ -173,7 +173,7 @@ object Relational8 {
   def q47MergeDelete(s: SparkSession, d: String): DataFrame = {
     val base = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey"))
-    val tmp = graft.core.Staging.ensure(d, "customer", "merge_delete") { dir =>
+    val tmp = graft.core.Staging.ensure("merge_delete", s"$d/customer.parquet") { dir =>
       base.write.mode("overwrite").partitionBy("c_nationkey").parquet(dir)
     }
     val active = Tables.orders(s, d).select(col("o_custkey")).distinct()

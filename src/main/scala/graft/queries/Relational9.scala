@@ -23,7 +23,7 @@ object Relational9 {
     val docs = Tables.documents(s, d)
     // the two schema generations are a fixture of the input dataset —
     // staged once per input dir (Staging doc), read-only afterwards
-    val tmp = graft.core.Staging.ensure(d, "documents", "schema_evo") { dir =>
+    val tmp = graft.core.Staging.ensure("schema_evo", s"$d/documents.parquet") { dir =>
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
         .write.mode("overwrite").parquet(s"$dir/gen1")
@@ -76,7 +76,7 @@ object Relational9 {
   def q51Compaction(s: SparkSession, d: String): DataFrame = {
     // the fragmented landing zone is the fixture; compaction (below)
     // is the operator and runs fresh every time
-    val frag = graft.core.Staging.ensure(d, "lineitem", "fragmented") { dir =>
+    val frag = graft.core.Staging.ensure("fragmented", s"$d/lineitem.parquet") { dir =>
       Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
         .repartition(64).write.mode("overwrite").parquet(dir)
     }

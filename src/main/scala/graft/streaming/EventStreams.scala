@@ -43,10 +43,8 @@ object EventStreams {
 
   /** Whole-file replay source (st01/st05/st06): the file stream source
     * requires a directory, so stage a symlink to the single
-    * events.parquet in a temp dir (testdata is read-only). `ts` is
-    * normalized to a micros timestamp here, mirroring Tables.events:
-    * the data has shipped both as TIMESTAMP(NANOS) (read nanos-as-long,
-    * rebuild micros in-plan) and TIMESTAMP(MICROS) (native timestamp).
+    * events.parquet in a temp dir (testdata is read-only). `ts` goes
+    * through Tables.events' own normalization (Tables.eventTs).
     */
   private def eventsFileStream(s: SparkSession, d: String): DataFrame = {
     Tables.readNanosAsLong(s)
@@ -58,16 +56,7 @@ object EventStreams {
       graft.core.Staging.tempAtExit("graft_stream_"))
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"), java.nio.file.Paths.get(s"$d/events.parquet"))
-    val raw = s.readStream.schema(schema).parquet(dir.toString)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // session tz is UTC, so the cast is value-preserving; watermarks
-        // and window() require the session-tz TIMESTAMP type
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    Tables.eventTs(s.readStream.schema(schema).parquet(dir.toString))
   }
 
   /** Chunked replay source (st04/st07/st08/st09): 4 time-ordered
@@ -120,54 +109,42 @@ object EventStreams {
       col("n_events"), col("session_start"), col("session_end"))
   }
 
-  /** Stage the events table ONCE per input dir as 4 TIME-ORDERED
-    * parquet chunks for micro-batch replay. `repartitionByRange` on
+  /** Stage the events table ONCE per input as 4 TIME-ORDERED parquet
+    * chunks for micro-batch replay. `repartitionByRange` on
     * (ts, event_id) produces 4 sorted, non-overlapping time ranges with
     * a sampled range exchange — every partition does bounded work, vs
     * the previous `ntile` over a global un-partitioned window, which
     * moved EVERY event through one task (the single-partition wall
     * Spark itself warns about). Range order must equal replay order so
     * the watermark advances without dropping events as late: part file
-    * names follow partition order, and the file stream source replays
-    * oldest-modification-first, so modification times are stamped in
-    * file-name order. The staged dir is keyed by input dir and reused
-    * across invocations AND JVMs (same idiom as q36's partitioned
-    * layout) — the layout cost is paid once, not per query.
+    * names follow partition order, and [[stampReplayOrder]] stamps
+    * modification times in file-name order. Staged and reused across
+    * invocations AND JVMs by Staging.ensure — the layout cost is paid
+    * once, not per query.
     */
-  private def stageEventChunks(s: SparkSession, d: String): String = {
-    // md5 key over path + source size + source mtime: no cross-dataset
-    // collisions (hashCode had them, and math.abs(Int.MinValue) is
-    // negative), and REGENERATED testdata at the same path invalidates
-    // the cache instead of silently replaying stale events
-    val src = java.nio.file.Paths.get(s"$d/events.parquet")
-    val ident = s"$d:${java.nio.file.Files.size(src)}:" +
-      java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_events_chunks_$key")
-    // _SUCCESS only proves the WRITE finished; the replay-order modtime
-    // stamping must also have finished, so completion is a separate
-    // marker written last — a JVM dying mid-staging leaves no marker
-    // and the next caller re-stages.
-    val marker = dir.resolve("_GRAFT_STAGED")
-    if (!java.nio.file.Files.exists(marker)) {
+  private def stageEventChunks(s: SparkSession, d: String): String =
+    graft.core.Staging.ensure("events4", s"$d/events.parquet") { dir =>
       Tables.events(s, d)
         .repartitionByRange(4, col("ts"), col("event_id"))
-        .write.mode("overwrite").parquet(dir.toString)
-      val files = new java.io.File(dir.toString).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val base = files.map(_.lastModified()).max
-      files.zipWithIndex.foreach { case (f, i) =>
-        // fail loudly: a silently-ignored stamping failure would lock
-        // in an arbitrary replay order behind the completion marker
-        if (!f.setLastModified(base + (i + 1) * 60000L))
-          throw new IllegalStateException(
-            s"setLastModified failed for $f — replay order not guaranteed")
-      }
-      java.nio.file.Files.write(marker, Array.empty[Byte])
+        .write.mode("overwrite").parquet(dir)
+      stampReplayOrder(new java.io.File(dir).listFiles().toSeq
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName))
     }
-    dir.toString
+
+  /** Stamp `files`' modification times in the given order, a minute
+    * apart and after every existing stamp: the file stream source
+    * replays oldest-modification-first, so this order is the replay
+    * order. Fails loudly — replay order is the gates' correctness
+    * precondition, and a silently ignored stamping failure would lock
+    * an arbitrary order in behind the staging marker.
+    */
+  private def stampReplayOrder(files: Seq[java.io.File]): Unit = {
+    val base = (System.currentTimeMillis() +: files.map(_.lastModified())).max
+    files.zipWithIndex.foreach { case (f, i) =>
+      if (!f.setLastModified(base + (i + 1) * 60000L))
+        throw new IllegalStateException(
+          s"setLastModified failed for $f — replay order not guaranteed")
+    }
   }
 
   /** Stateful streaming sessionization via `flatMapGroupsWithState` —
@@ -338,54 +315,21 @@ object EventStreams {
     * (observed: the 2-chunk form dropped nothing). The split
     * predicates are deliberately SQL-expressible (unlike
     * stageEventChunks' sampled ranges) because the DROPPED SET is the
-    * thing under test and the oracle must reproduce it exactly. Same
-    * keyed-dir/marker/modtime discipline as stageEventChunks; subsets
-    * are written to a scratch dir and only the bare part files land
-    * in the replay dir (a nested write dir would read as a partition
-    * column).
+    * thing under test and the oracle must reproduce it exactly.
     */
   private def stageLateChunks(s: SparkSession, d: String): String = {
-    val src = java.nio.file.Paths.get(s"$d/events.parquet")
-    val ident = s"late3:$d:${java.nio.file.Files.size(src)}:" +
-      java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_events_late_$key")
-    val marker = dir.resolve("_GRAFT_STAGED")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(dir)
-      val ev = Tables.events(s, d)
-      val onTime = col("event_id") % 10 =!= 7
+    lazy val ev = Tables.events(s, d)
+    val onTime = col("event_id") % 10 =!= 7
+    stageChunks(d, "events", "late3", ev, {
       // the final on-time hour boundary — a one-row agg, driver-side
       // by nature (it parameterizes the staging layout, not the data)
       val cut = ev.filter(onTime)
         .agg(date_trunc("hour", max(col("ts")))).head().getTimestamp(0)
-      val scratch = java.nio.file.Paths.get(
-        graft.core.Staging.tempAtExit("graft_late_stage_"))
       Seq(
         onTime && col("ts") < lit(cut),
         onTime && col("ts") >= lit(cut),
         col("event_id") % 10 === 7)
-        .zipWithIndex.foreach { case (pred, i) =>
-          val sub = scratch.resolve(s"c$i")
-          ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(sub.toString)
-          val part = new java.io.File(sub.toString).listFiles()
-            .find(_.getName.startsWith("part-")).get
-          val dst = dir.resolve(s"chunk-$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-      val base = System.currentTimeMillis()
-      (0 to 2).foreach { i =>
-        val f = dir.resolve(s"chunk-$i.parquet").toFile
-        if (!f.setLastModified(base + (i + 1) * 60000L))
-          throw new IllegalStateException(
-            s"setLastModified failed for $f — replay order not guaranteed")
-      }
-      java.nio.file.Files.write(marker, Array.empty[Byte])
-    }
-    dir.toString
+    })
   }
 
   /** LATE-DATA semantics under a watermark — the drop path itself,
@@ -840,7 +784,7 @@ object EventStreams {
   private def stageDocChunks(s: SparkSession, d: String): String = {
     val h = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long")
-    stageChunks(s, d, "documents", "docs4", Tables.documents(s, d), Seq(
+    stageChunks(d, "documents", "docs4", Tables.documents(s, d), Seq(
       h % 5 =!= 0 && h % 3 === 0,
       h % 5 =!= 0 && h % 3 === 1,
       h % 5 =!= 0 && h % 3 === 2,
@@ -848,38 +792,34 @@ object EventStreams {
   }
 
   /** Shared replay-chunk staging: write `preds.length` single-file
-    * parquet chunks of `src` under Staging.ensure's (input, tag) key,
-    * modtime-stamped in order so the file stream replays them
-    * deterministically (the setLastModified guard fails loudly if the
-    * FS refuses, because replay order is the gates' correctness
-    * precondition). One mechanism for every gate's staging — the
-    * doc/vector variants differ only in source and predicate list.
+    * parquet chunks of `src` under Staging.ensure's (tag, source) key,
+    * stamped in chunk order ([[stampReplayOrder]]) so the file stream
+    * replays them deterministically. One mechanism for every
+    * predicate-split gate's staging (late events, docs, vectors) —
+    * they differ only in source and predicate list. `src` and `preds`
+    * are by-name: a reused staged dir evaluates neither (st12's cut
+    * aggregate runs only when staging). Subsets are written to a
+    * scratch dir and only the bare part files land in the replay dir
+    * (a nested write dir would read as a partition column).
     */
-  private def stageChunks(s: SparkSession, d: String, table: String,
-      tag: String, src: DataFrame,
-      preds: Seq[Column]): String =
-    graft.core.Staging.ensure(d, table, tag) { dirS =>
+  private def stageChunks(d: String, table: String, tag: String,
+      src: => DataFrame, preds: => Seq[Column]): String =
+    graft.core.Staging.ensure(tag, s"$d/$table.parquet") { dirS =>
       val dir = java.nio.file.Paths.get(dirS)
-      java.nio.file.Files.createDirectories(dir)
       val scratch = java.nio.file.Paths.get(
         graft.core.Staging.tempAtExit("graft_chunk_stage_"))
-      preds.zipWithIndex.foreach { case (pred, i) =>
+      val df = src
+      val chunks = preds.zipWithIndex.map { case (pred, i) =>
         val sub = scratch.resolve(s"c$i")
-        src.filter(pred).coalesce(1)
+        df.filter(pred).coalesce(1)
           .write.mode("overwrite").parquet(sub.toString)
         val part = new java.io.File(sub.toString).listFiles()
           .find(_.getName.startsWith("part-")).get
         java.nio.file.Files.move(part.toPath,
           dir.resolve(s"chunk-$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING).toFile
       }
-      val base = System.currentTimeMillis()
-      preds.indices.foreach { i =>
-        val f = dir.resolve(s"chunk-$i.parquet").toFile
-        if (!f.setLastModified(base + (i + 1) * 60000L))
-          throw new IllegalStateException(
-            s"setLastModified failed for $f — replay order not guaranteed")
-      }
+      stampReplayOrder(chunks)
     }
 
   /** The persisted dedup stores (st20/st21/st24) are laid out
@@ -1886,7 +1826,7 @@ object EventStreams {
   private def stageVecChunks(s: SparkSession, d: String): String = {
     val h = conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
       .cast("long")
-    stageChunks(s, d, "embeddings", "vecs4", Tables.embeddings(s, d),
+    stageChunks(d, "embeddings", "vecs4", Tables.embeddings(s, d),
       (0 to 3).map(i => h % 4 === i))
   }
 

@@ -160,6 +160,22 @@ class BenchPriorSpec extends AnyFunSuite {
     assert(!BenchPrior.shouldWriteSidecar("local", Some("st2")))
   }
 
+  test("flagBase: a subset run gets no base, so no flags and no flag retries, and one note; a full run resolves its prior") {
+    val prior = Map("q01" -> 1.0, "mr07" -> 0.9)
+    val results = Seq("q01" -> 2.0, "mr07" -> 1.25)
+    val notes = scala.collection.mutable.ListBuffer[String]()
+    val (p, base) = BenchPrior.flagBase(Some("q0,mr"), notes += _)(
+      fail("a subset run must not resolve a prior"))
+    assert(p == "" && base.isEmpty)
+    assert(BenchPrior.computeFlags(base, results).isEmpty)
+    assert(notes.size == 1 && notes.head.contains("SPARK_GRAFT_ONLY=q0,mr"),
+      notes.mkString("; "))
+    notes.clear()
+    val (fp, fbase) = BenchPrior.flagBase(None, notes += _)(("prior.json", prior))
+    assert(fp == "prior.json" && fbase == prior && notes.isEmpty)
+    assert(BenchPrior.computeFlags(fbase, results).map(_._1) == Seq("q01", "mr07"))
+  }
+
   test("sidecarName is round-keyed and sf-keyed") {
     assert(BenchPrior.sidecarName(15, "sf0.1") ==
       "BENCH_full_driver_r15_sf0.1.json")
