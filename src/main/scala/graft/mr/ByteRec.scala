@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.UnsafeExternalRowSorter.PrefixComputer
 import org.apache.spark.unsafe.Platform
-import org.apache.spark.unsafe.array.ByteArrayMethods
-import org.apache.spark.util.collection.unsafe.sort.RecordComparator
+import org.apache.spark.unsafe.array.{ByteArrayMethods, LongArray}
+import org.apache.spark.unsafe.memory.MemoryBlock
+import org.apache.spark.util.collection.unsafe.sort.{RadixSort, RecordComparator}
 
 /** A growable byte buffer. */
 private[graft] final class ByteOut {
@@ -177,10 +178,10 @@ private[graft] final class RecCodec[K, S, V](k: ByteCodec[K], s: ByteCodec[S],
 }
 
 private[graft] object RecCodec {
-  private final val Base = Platform.BYTE_ARRAY_OFFSET
+  private[mr] final val Base = Platform.BYTE_ARRAY_OFFSET
   private val LittleEndian = java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
   /** 8 bytes at `at`, big-endian, so unsigned order is byte order. */
-  private def word(a: AnyRef, at: Long): Long =
+  private[mr] def word(a: AnyRef, at: Long): Long =
     if (LittleEndian) java.lang.Long.reverseBytes(Platform.getLong(a, at)) else Platform.getLong(a, at)
 
   /** Unsigned byte order of records of `al` and `bl` bytes (multiples
@@ -205,4 +206,99 @@ private[graft] object RecCodec {
       val u = r.asInstanceOf[UnsafeRow]; p.value = word(u.getBaseObject, u.getBaseOffset); p
     }
   }
+}
+
+/** Orders a reduce task's records in runs, ahead of the row sorter: it
+  * copies them into an on-heap run of at most `page` bytes (grown only
+  * as far as the task's records need), sorts the run in [[RecCodec]]
+  * byte order, hands it on and refills. A run holds at least one
+  * record, so one longer than `page` is a run of its own. The sort is
+  * Spark's radix sort on the 8-byte prefix, each group of equal
+  * prefixes then merge-sorted on [[RecCodec.compare]]. A row sorter fed
+  * these runs finds them as its TimSort's natural runs and only merges
+  * them; it still decides the final order. */
+private[graft] final class RunSorter(page: Int) {
+  import RecCodec.{Base, word}
+
+  private var buf = new Array[Byte](math.min(page, 4096))
+  /** Per record (offset << 32 | length, prefix), then as many longs
+    * again: the radix sort's other half, and the merge sort's room. */
+  private var ptrs = new Array[Long](256)
+
+  def sort(in: Iterator[UnsafeRow]): Iterator[UnsafeRow] = new Iterator[UnsafeRow] {
+    private val row = new UnsafeRow(0)
+    // a record read that did not fit the run; nothing reads `in` before it is copied
+    private var pending: UnsafeRow = null
+    private var n, i, at = 0 // records in the run, records handed on, first sorted pair
+
+    def hasNext: Boolean = i < n || { fill(); n > 0 }
+    def next(): UnsafeRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val p = ptrs(at + 2 * i)
+      i += 1
+      row.pointTo(buf, Base + (p >>> 32), p.toInt); row
+    }
+
+    private def fill(): Unit = {
+      n = 0; i = 0
+      var used = 0
+      var r = if (pending != null) pending else if (in.hasNext) in.next() else null
+      pending = null
+      while (r != null) {
+        val len = r.getSizeInBytes
+        if (n > 0 && used + len > page) { pending = r; r = null }
+        else {
+          if (used + len > buf.length)
+            buf = java.util.Arrays.copyOf(buf, math.max(math.min(2 * buf.length, page), used + len))
+          if (4 * (n + 1) > ptrs.length) ptrs = java.util.Arrays.copyOf(ptrs, 2 * ptrs.length)
+          Platform.copyMemory(r.getBaseObject, r.getBaseOffset, buf, Base + used, len)
+          ptrs(2 * n) = used.toLong << 32 | len
+          ptrs(2 * n + 1) = word(buf, Base + used)
+          n += 1; used += len
+          r = if (in.hasNext) in.next() else null
+        }
+      }
+      at = RadixSort.sortKeyPrefixArray(new LongArray(MemoryBlock.fromLongArray(ptrs)), 0, n, 0, 7, false, false)
+      val room = if (at == 0) 2 * n else 0
+      var lo = 0
+      while (lo < n) {
+        var hi = lo + 1
+        while (hi < n && ptrs(at + 2 * hi + 1) == ptrs(at + 2 * lo + 1)) hi += 1
+        if (hi - lo > 1) {
+          var j = lo; while (j < hi) { ptrs(room + j - lo) = ptrs(at + 2 * j); j += 1 }
+          mergeSort(room, room + hi - lo, room + hi - lo)
+          j = lo; while (j < hi) { ptrs(at + 2 * j) = ptrs(room + j - lo); j += 1 }
+        }
+        lo = hi
+      }
+    }
+  }
+
+  private def cmp(p: Long, q: Long): Int =
+    RecCodec.compare(8, buf, Base + (p >>> 32), p.toInt, buf, Base + (q >>> 32), q.toInt)
+
+  /** Sorts the pointers `ptrs(lo until hi)` with `(hi - lo) / 2`
+    * longs of room from `tmp`; a sorted stretch costs one compare. */
+  private def mergeSort(lo: Int, hi: Int, tmp: Int): Unit =
+    if (hi - lo <= 8) {
+      var j = lo + 1
+      while (j < hi) {
+        val p = ptrs(j); var k = j
+        while (k > lo && cmp(ptrs(k - 1), p) > 0) { ptrs(k) = ptrs(k - 1); k -= 1 }
+        ptrs(k) = p; j += 1
+      }
+    } else {
+      val mid = (lo + hi) >>> 1
+      mergeSort(lo, mid, tmp); mergeSort(mid, hi, tmp)
+      if (cmp(ptrs(mid - 1), ptrs(mid)) > 0) {
+        System.arraycopy(ptrs, lo, ptrs, tmp, mid - lo)
+        var a = tmp; var b = mid; var k = lo
+        val aEnd = tmp + mid - lo
+        while (a < aEnd) {
+          if (b < hi && cmp(ptrs(b), ptrs(a)) < 0) { ptrs(k) = ptrs(b); b += 1 }
+          else { ptrs(k) = ptrs(a); a += 1 }
+          k += 1
+        }
+      }
+    }
 }

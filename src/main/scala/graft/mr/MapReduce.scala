@@ -54,11 +54,12 @@ private[mr] final case class ShuffleRec[K, S, V](e: Emit[K, S, V], part: Int, of
   *     dichotomy of the Python API unifies on `IterableOnce`, SURVEY §7.4)
   *   - partition + secondary sort → one record per emit, ordered by
   *     key then sort key and partitioned by a hash of the key alone:
-  *     order-preserving bytes ([[RecCodec]]) sorted by Spark's
-  *     `UnsafeExternalRowSorter`, or a [[ShuffleRec]] through
-  *     `repartitionAndSortWithinPartitions`. Both sorters can SPILL,
-  *     unlike the reference's driver-resident `defaultdict(list)` +
-  *     `list.sort` (tinymr.py:332-343), the wall this build removes
+  *     order-preserving bytes ([[RecCodec]]), which each reduce task
+  *     orders in page-sized runs ([[RunSorter]]) for Spark's
+  *     `UnsafeExternalRowSorter` to merge, or a [[ShuffleRec]] through
+  *     `repartitionAndSortWithinPartitions`. Both final sorters can
+  *     SPILL, unlike the reference's driver-resident `defaultdict(list)`
+  *     + `list.sort` (tinymr.py:332-343), the wall this build removes
   *   - reduce phase → streaming per-key iterators inside
   *     `mapPartitions` — values of one key never need to fit in a
   *     driver, only in one task
@@ -187,11 +188,13 @@ abstract class MapReduce[I, K: ClassTag: Ordering, S: ClassTag: Ordering,
         shuffled.setSerializer(new UnsafeRowSerializer(0)).mapPartitions({ it =>
           // pages of at most 1/8192 of the heap: the task's 8192-entry page
           // table still spans the heap, and no page is a G1 humongous object
+          val page = math.min(SparkEnv.get.memoryManager.pageSizeBytes, Runtime.getRuntime.maxMemory / 8192)
           val sorter = UnsafeExternalRowSorter.createWithRecordComparator(new StructType(),
-            () => RecCodec.Comparator, PrefixComparators.BINARY, RecCodec.prefixes(),
-            math.min(SparkEnv.get.memoryManager.pageSizeBytes, Runtime.getRuntime.maxMemory / 8192), false)
+            () => RecCodec.Comparator, PrefixComparators.BINARY, RecCodec.prefixes(), page, false)
+          // fed page-sized sorted runs, its TimSort only merges them
+          val runs = new RunSorter(page.toInt).sort(it.map(_._2))
           val r = new codec.Reader
-          grouped(sorter.sort(it.map(_._2)).map(_.asInstanceOf[UnsafeRow]))(r.open, r.same, r.value)
+          grouped(sorter.sort(runs).map(_.asInstanceOf[UnsafeRow]))(r.open, r.same, r.value)
         }, preservesPartitioning = true)
       case None =>
         implicit val ord: Ordering[ShuffleRec[K, S, V]] = recOrdering(withValue, reverse)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.unsafe.Platform
 import org.scalacheck.{Arbitrary, Gen, Prop, Test}
 import org.scalacheck.rng.Seed
@@ -12,7 +13,8 @@ import graft.mr._
   * decoding gives the value back, and no encoding is a proper prefix of
   * another (so encodings concatenate). Then the same order law for
   * whole records: key, absent-before-present flag, sort element and
-  * value, reversed as a unit, and arrival. */
+  * value, reversed as a unit, and arrival. Last, [[RunSorter]]: each
+  * run it hands on is in that record order. */
 class ByteCodecSpec extends AnyFunSuite {
 
   def encode[T](c: ByteCodec[T], x: T): Array[Byte] = {
@@ -162,4 +164,73 @@ class ByteCodecSpec extends AnyFunSuite {
       .withInitialSeed(Seed(11L)), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
+
+  /** Runs filled in arrival order while they hold at most `page` bytes
+    * (at least one record each), each sorted by `RecCodec.compare`. */
+  def inRuns(recs: Seq[Array[Byte]], page: Int): Seq[Array[Byte]] = {
+    val runs = recs.foldLeft(Vector(Vector.empty[Array[Byte]])) { (rs, r) =>
+      if (rs.last.nonEmpty && rs.last.map(_.length).sum + r.length > page) rs :+ Vector(r)
+      else rs.init :+ (rs.last :+ r)
+    }
+    val base = Platform.BYTE_ARRAY_OFFSET.toLong
+    runs.flatMap(_.sortWith((a, b) => RecCodec.compare(0, a, base, a.length, b, base, b.length) < 0))
+  }
+
+  /** The records as a shuffle read serves them: one row over one buffer,
+    * overwritten by every `next()`. */
+  def served(recs: Seq[Array[Byte]]): Iterator[UnsafeRow] = {
+    val buf = new Array[Byte](recs.map(_.length).maxOption.getOrElse(0))
+    val row = new UnsafeRow(0)
+    recs.iterator.map { r =>
+      System.arraycopy(r, 0, buf, 0, r.length)
+      row.pointTo(buf, Platform.BYTE_ARRAY_OFFSET, r.length); row
+    }
+  }
+
+  /** Strings sharing their first 7, 8, 15, 16, 24 or more bytes, then
+    * differing in a unit, a NUL, a multi-byte form or in length. */
+  val sharing: Gen[String] = for {
+    head <- Gen.oneOf(7, 8, 15, 16, 24, 31).map(n => "abcdefghijklmnopqrstuvwxyz012345".take(n))
+    tail <- Gen.oneOf("", "\u0000", "\u0001", "a", "b", "\u00e9", "\uffff", "zz")
+  } yield head + tail
+  val sortKeys: Gen[String] = Gen.frequency(1 -> Gen.oneOf(null, "", "\u0000"), 4 -> sharing,
+    2 -> strings, 2 -> Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, unit).map(_.mkString)))
+
+  /** [[RunSorter]] over records of a job keyed by `ord`'s type: record
+    * sets of 0 and 1 records, random ones, duplicates, and ones that
+    * arrive in reverse order; runs from smaller than a record to larger
+    * than the set. */
+  def runLaw[K](name: String, ord: Ordering[K], keys: Gen[K], seed: Long): Unit =
+    test(s"RunSorter over $name records hands on each run in RecCodec.compare order") {
+      val base = Platform.BYTE_ARRAY_OFFSET.toLong
+      val emits: Gen[Emit[K, Int, Long]] = for {
+        k <- keys; s <- Gen.option(Gen.choose(-1, 1)); v <- Gen.choose(-2L, 300L)
+      } yield s.fold[Emit[K, Int, Long]](KV(k, v))(KSV(k, _, v))
+      val cases = for {
+        withValue <- Gen.oneOf(false, true); reverse <- Gen.oneOf(false, true)
+        stable <- Gen.oneOf(false, true)
+        codec = new RecCodec(ByteCodec.of(ord).get, ByteCodec.IntC, ByteCodec.LongC, withValue, reverse)
+        es <- Gen.frequency(1 -> Gen.choose(0, 1), 4 -> Gen.choose(2, 300)).flatMap(Gen.listOfN(_, emits))
+        recs = { val w = new codec.Writer(1, stable); es.map(w.write(_, first = true).copy().getBytes) }
+        dups = if (recs.isEmpty) Gen.const(recs)
+          else Gen.choose(2, 300).flatMap(Gen.listOfN(_, Gen.oneOf(recs.take(4))))
+        set <- Gen.oneOf(Gen.const(recs), dups,
+          Gen.const(recs.sortWith((a, b) => RecCodec.compare(0, a, base, a.length, b, base, b.length) > 0)))
+        page <- Gen.oneOf(8, 64, 512, 4096, 1 << 20)
+      } yield (set, page)
+      val prop = Prop.forAllNoShrink(cases) { case (recs, page) =>
+        val got = new RunSorter(page).sort(served(recs)).map(_.copy().getBytes).toVector
+        val want = inRuns(recs, page)
+        Prop(got.length == want.length && got.zip(want).forall(p => p._1.sameElements(p._2))) :|
+          s"${recs.length} records, page $page: got ${got.map(_.toSeq)}, want ${want.map(_.toSeq)}"
+      }
+      val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(300)
+        .withInitialSeed(Seed(seed)), prop)
+      assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    }
+
+  runLaw("String", Ordering.String, sortKeys, 12L)
+  runLaw("Long", Ordering.Long, longs, 13L)
+  runLaw("(String, Long)", Ordering.Tuple2(Ordering.String, Ordering.Long),
+    Gen.zip(sortKeys, Gen.choose(-2L, 2L)), 14L)
 }

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import scala.reflect.ClassTag
 import graft.mr._
 
 /** One generated Layer A job: emit arity, sort flags and direction on
@@ -38,8 +39,32 @@ object IntOrder extends Ordering[Int] {
   def compare(a: Int, b: Int): Int = Integer.compare(a, b)
 }
 
-class GenJob(val spec: GenSpec) extends MapReduce[(Int, Int, Int), Int, Int, Int]()(
-    scala.reflect.ClassTag.Int, GenJob.ord(spec), scala.reflect.ClassTag.Int, GenJob.ord(spec),
+/** `Ordering.String`'s order under another identity, `null` first, as
+  * the byte path's `StringC` orders it. */
+object StringOrder extends Ordering[String] {
+  def compare(a: String, b: String): Int =
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null) else a.compareTo(b)
+}
+
+/** A generated job's keys, made from the generator's `Int` keys by
+  * `of` and mapped back by `index` where the reducer re-keys. `ord` is
+  * the byte path's ordering, `objects` one of the same order that is
+  * not `==` to it: the object path's, and the serial model's. */
+final class Keys[K](val of: Int => K, val index: K => Int, val ord: Ordering[K],
+    val objects: Ordering[K])(implicit val tag: ClassTag[K]) extends Serializable
+
+object Keys {
+  val ints = new Keys[Int](identity, identity, Ordering.Int, IntOrder)
+  /** Null-ish keys, keys sharing their first 8, 16 or 24 bytes, and
+    * multi-byte forms; key 0, half the generated items, is `null`. */
+  val table: IndexedSeq[String] = IndexedSeq(null, "", "\u0000", "\u0000\u0000", "a",
+    "abcdefg", "abcdefgh", "abcdefgh\u0000", "abcdefgha", "abcdefghijklmnop",
+    "abcdefghijklmnop\u00e9", "abcdefghijklmnopqrstuvwx", "abcdefghijklmnopqrstuvwxy", "\u00e9", "\uffff")
+  val strings = new Keys[String](i => table(i % table.size), table.indexOf(_), Ordering.String, StringOrder)
+}
+
+class GenJob[K](val spec: GenSpec, val keys: Keys[K]) extends MapReduce[(Int, Int, Int), K, Int, Int]()(
+    keys.tag, if (spec.byObjects) keys.objects else keys.ord, scala.reflect.ClassTag.Int, GenJob.ord(spec),
     scala.reflect.ClassTag.Int, GenJob.ord(spec)) {
   override def sortMapWithValue = spec.mapWithValue
   override def sortReduceWithValue = spec.redWithValue
@@ -49,24 +74,24 @@ class GenJob(val spec: GenSpec) extends MapReduce[(Int, Int, Int), Int, Int, Int
   override def numPartitions = spec.outParts
   override def combiner: Option[(Int, Int) => Int] = if (spec.combine) Some(_ + _) else None
 
-  private def emit(sort: Boolean, k: Int, s: Int, v: Int): Emit[Int, Int, Int] =
+  private def emit(sort: Boolean, k: K, s: Int, v: Int): Emit[K, Int, Int] =
     if (sort) KSV(k, s, v) else KV(k, v)
 
   /** Filters multiples of 7, explodes multiples of 5 into a second key. */
-  def mapper(r: (Int, Int, Int)): IterableOnce[Emit[Int, Int, Int]] = {
+  def mapper(r: (Int, Int, Int)): IterableOnce[Emit[K, Int, Int]] = {
     val (k, s, v) = r
     if (v % 7 == 0) Iterator.empty
-    else if (v % 5 == 0) Iterator(emit(spec.mapSort, k, s, v), emit(spec.mapSort, k + 1, s, v))
-    else Iterator.single(emit(spec.mapSort, k, s, v))
+    else if (v % 5 == 0) Iterator(emit(spec.mapSort, keys.of(k), s, v), emit(spec.mapSort, keys.of(k + 1), s, v))
+    else Iterator.single(emit(spec.mapSort, keys.of(k), s, v))
   }
 
-  def reducer(k: Int, vs: Iterator[Int]): IterableOnce[Emit[Int, Int, Int]] =
+  def reducer(k: K, vs: Iterator[Int]): IterableOnce[Emit[K, Int, Int]] =
     spec.reducerShape match {
-      case 0 => vs.map(v => emit(spec.redSort, k % 3, v % 4, v))
+      case 0 => vs.map(v => emit(spec.redSort, keys.of(keys.index(k) % 3), v % 4, v))
       case 1 => vs.zipWithIndex.map { case (v, i) => emit(spec.redSort, k, i % 3, v * 100 + i) }
       case _ =>
         val sum = vs.sum
-        Iterator.single(emit(spec.redSort, k % 2, sum % 5, sum))
+        Iterator.single(emit(spec.redSort, keys.of(keys.index(k) % 2), sum % 5, sum))
     }
 }
 
@@ -85,9 +110,9 @@ object GenJob {
 object SerialMR {
   type Sorted = Seq[((Option[Int], Option[Int]), Int)]
 
-  def partitionAndSort(recs: Seq[Emit[Int, Int, Int]], withValue: Boolean,
-      reverse: Boolean): ListMap[Int, Sorted] = {
-    val groups = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[Emit[Int, Int, Int]]]
+  def partitionAndSort[K](recs: Seq[Emit[K, Int, Int]], withValue: Boolean,
+      reverse: Boolean): ListMap[K, Sorted] = {
+    val groups = mutable.LinkedHashMap.empty[K, mutable.ArrayBuffer[Emit[K, Int, Int]]]
     recs.foreach(r => groups.getOrElseUpdate(r.key, mutable.ArrayBuffer.empty) += r)
     val ord = Ordering.Tuple2(Ordering.Option[Int], Ordering.Option[Int])
     ListMap.from(groups.map { case (k, rs) =>
@@ -100,10 +125,11 @@ object SerialMR {
     * distributed shuffle hands them over (by hash partition, then by
     * key) instead of tinymr's dict insertion order, which is the
     * arrival order `stable` numbers on the second round. */
-  def run(job: GenJob, items: Seq[(Int, Int, Int)]): ListMap[Int, Sorted] = {
+  def run[K](job: GenJob[K], items: Seq[(Int, Int, Int)]): ListMap[K, Sorted] = {
     val s = job.spec
     val first = partitionAndSort(items.flatMap(job.mapper), s.mapWithValue, s.mapRev)
     val part = new HashPartitioner(s.n)
+    implicit val kOrd: Ordering[K] = job.keys.objects
     val reduced = first.toSeq.sortBy { case (k, _) => (part.getPartition(k), k) }
       .flatMap { case (k, vs) => job.reducer(k, vs.iterator.map(_._2)) }
     partitionAndSort(reduced, s.redWithValue, s.redRev)
@@ -169,12 +195,16 @@ trait SerialDiff extends AnyFunSuite with BeforeAndAfterAll {
     for (s <- specs; n <- Gen.choose(0, 80); xs <- Gen.listOfN(n, item)) yield (s, xs)
   val cases: Gen[(GenSpec, Seq[(Int, Int, Int)])] = casesOf(specs)
 
-  def mismatches(spec: GenSpec, items: Seq[(Int, Int, Int)]): Seq[String] = {
-    val job = new GenJob(spec)
+  def mismatches(spec: GenSpec, items: Seq[(Int, Int, Int)]): Seq[String] =
+    mismatchesOf(Keys.ints)(spec, items)
+
+  def mismatchesOf[K](keys: Keys[K])(spec: GenSpec, items: Seq[(Int, Int, Int)]): Seq[String] = {
+    val job = new GenJob(spec, keys)
+    implicit val (kOrd, kTag): (Ordering[K], ClassTag[K]) = (keys.objects, keys.tag)
     val want = SerialMR.run(job, items)
     val errs = mutable.ArrayBuffer.empty[String]
     if (job.sortsBytes == spec.byObjects) errs += s"sortsBytes is ${job.sortsBytes}"
-    def seqOk(k: Int, got: Seq[Int]): Unit = {
+    def seqOk(k: K, got: Seq[Int]): Unit = {
       val exp = want(k)
       val ok =
         if (spec.stable) got == exp.map(_._2)
@@ -202,7 +232,7 @@ trait SerialDiff extends AnyFunSuite with BeforeAndAfterAll {
         errs += s"runCollapsed key $k: got $v, first run $first"
     }
 
-    val applied = job(rdd).asInstanceOf[ListMap[Int, Seq[Int]]]
+    val applied = job(rdd).asInstanceOf[ListMap[K, Seq[Int]]]
     // apply's insertion order is the shuffle's: hash partition, then key
     val part = new HashPartitioner(spec.n)
     val order = want.keys.toSeq.sortBy(k => (part.getPartition(k), k))
@@ -215,7 +245,7 @@ trait SerialDiff extends AnyFunSuite with BeforeAndAfterAll {
 
   /** `write` to parquet, read back: each key's multiset of values. */
   def writeMismatches(spec: GenSpec, items: Seq[(Int, Int, Int)]): Seq[String] = {
-    val job = new GenJob(spec)
+    val job = new GenJob(spec, Keys.ints)
     val want = SerialMR.run(job, items).map { case (k, vs) => k -> vs.map(_._2).sorted }
     job.write(spark, sc.parallelize(items, spec.inParts), sink)(Encoders.scalaInt, Encoders.scalaInt)
     val back = spark.read.parquet(sink).collect().map(r => (r.getInt(0), r.getInt(1)))
@@ -251,6 +281,10 @@ class MapReducePropSpec extends SerialDiff {
 
   test("write to parquet reads back each key's values of the serial interpreter") {
     check(cases, 30, 20261018L)(writeMismatches)
+  }
+
+  test("String-keyed jobs, with null, empty, NUL and 8-byte-sharing keys, agree with the serial interpreter") {
+    check(cases, 40, 20261020L)(mismatchesOf(Keys.strings))
   }
 
   test("jobs with the sum combiner agree with the serial interpreter run without it") {
@@ -333,6 +367,12 @@ class MapReduceSpillSpec extends SerialDiff {
     test(s"$path-path jobs agree with the serial interpreter while their sorters spill") {
       assert(sc.getConf.get(SpillKey) == SpillEvery.toString)
       val spilled = spilledBy(check(bigCases(byObjects), 20, 20261021L)(mismatches))
+      assert(spilled > 0, s"$path path: no task spilled")
+    }
+
+  for ((path, byObjects) <- Seq("byte" -> false, "object" -> true))
+    test(s"$path-path String-keyed jobs agree with the serial interpreter while their sorters spill") {
+      val spilled = spilledBy(check(bigCases(byObjects), 10, 20261022L)(mismatchesOf(Keys.strings)))
       assert(spilled > 0, s"$path path: no task spilled")
     }
 }

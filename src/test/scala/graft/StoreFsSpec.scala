@@ -284,7 +284,10 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     * starts from. */
   private def freshStore(tag: String): (String, Set[org.apache.spark.sql.Row]) = {
     import spark.implicits._
-    val store = "graftfs:" + tmpDir(s"graft_swap_${tag}_")
+    val dir = tmpDir(s"graft_swap_${tag}_")
+    // the swap's siblings, which an injected failure can strand
+    Seq(".compacting", ".old").foreach(s => graft.core.Staging.registerAtExit(dir + s))
+    val store = "graftfs:" + dir
     val df = (0L until 64L).map(i => (i, s"payload_$i"))
       .toDF("doc_id", "text")
       .withColumn("bucket", pmod(hash(col("doc_id")), lit(4)))
