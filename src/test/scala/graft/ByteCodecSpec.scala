@@ -73,12 +73,6 @@ class ByteCodecSpec extends AnyFunSuite {
     1 -> Gen.const(""),
     6 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, unit).map(_.mkString)),
     2 -> Gen.choose(0x10000, 0x10ffff).map(cp => "a" + new String(Character.toChars(cp))))
-  /** `Ordering.String` with null below every string. */
-  val stringOrd: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int =
-      if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
-      else Ordering.String.compare(a, b)
-  }
 
   val longs: Gen[Long] = Gen.frequency(
     1 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue - 1, Long.MaxValue),
@@ -93,7 +87,7 @@ class ByteCodecSpec extends AnyFunSuite {
     3 -> Arbitrary.arbitrary[Double], 2 -> Gen.choose(-2, 2).map(_.toDouble))
 
   laws("String", Ordering.String, strings.suchThat(_ != null), 1L)()
-  laws("String or null", Ordering.String, strings, 2L)(stringOrd)
+  laws("String or null", Ordering.String, strings, 2L)(StringOrder)
   laws("Long", Ordering.Long, longs, 3L)()
   laws("Int", Ordering.Int, ints, 4L)()
   laws("Double", Ordering.Double.TotalOrdering, doubles, 5L)()
@@ -165,6 +159,11 @@ class ByteCodecSpec extends AnyFunSuite {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
+  def recCompare(a: Array[Byte], b: Array[Byte]): Int = {
+    val base = Platform.BYTE_ARRAY_OFFSET.toLong
+    RecCodec.compare(0, a, base, a.length, b, base, b.length)
+  }
+
   /** Runs filled in arrival order while they hold at most `page` bytes
     * (at least one record each), each sorted by `RecCodec.compare`. */
   def inRuns(recs: Seq[Array[Byte]], page: Int): Seq[Array[Byte]] = {
@@ -172,8 +171,7 @@ class ByteCodecSpec extends AnyFunSuite {
       if (rs.last.nonEmpty && rs.last.map(_.length).sum + r.length > page) rs :+ Vector(r)
       else rs.init :+ (rs.last :+ r)
     }
-    val base = Platform.BYTE_ARRAY_OFFSET.toLong
-    runs.flatMap(_.sortWith((a, b) => RecCodec.compare(0, a, base, a.length, b, base, b.length) < 0))
+    runs.flatMap(_.sortWith(recCompare(_, _) < 0))
   }
 
   /** The records as a shuffle read serves them: one row over one buffer,
@@ -202,7 +200,6 @@ class ByteCodecSpec extends AnyFunSuite {
     * than the set. */
   def runLaw[K](name: String, ord: Ordering[K], keys: Gen[K], seed: Long): Unit =
     test(s"RunSorter over $name records hands on each run in RecCodec.compare order") {
-      val base = Platform.BYTE_ARRAY_OFFSET.toLong
       val emits: Gen[Emit[K, Int, Long]] = for {
         k <- keys; s <- Gen.option(Gen.choose(-1, 1)); v <- Gen.choose(-2L, 300L)
       } yield s.fold[Emit[K, Int, Long]](KV(k, v))(KSV(k, _, v))
@@ -215,7 +212,7 @@ class ByteCodecSpec extends AnyFunSuite {
         dups = if (recs.isEmpty) Gen.const(recs)
           else Gen.choose(2, 300).flatMap(Gen.listOfN(_, Gen.oneOf(recs.take(4))))
         set <- Gen.oneOf(Gen.const(recs), dups,
-          Gen.const(recs.sortWith((a, b) => RecCodec.compare(0, a, base, a.length, b, base, b.length) > 0)))
+          Gen.const(recs.sortWith(recCompare(_, _) > 0)))
         page <- Gen.oneOf(8, 64, 512, 4096, 1 << 20)
       } yield (set, page)
       val prop = Prop.forAllNoShrink(cases) { case (recs, page) =>

@@ -284,7 +284,7 @@ class MapReducePropSpec extends SerialDiff {
   }
 
   test("String-keyed jobs, with null, empty, NUL and 8-byte-sharing keys, agree with the serial interpreter") {
-    check(cases, 40, 20261020L)(mismatchesOf(Keys.strings))
+    check(casesOf(Gen.oneOf(specs, combinerSpecs)), 40, 20261020L)(mismatchesOf(Keys.strings))
   }
 
   test("jobs with the sum combiner agree with the serial interpreter run without it") {
