@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   * corpus.
   *
   * The STORE series runs on 32 cores: export `SPARK_GRAFT_CPUS=32`
-  * (the default is [[Session.cpus]]' 4). `SPARK_GRAFT_CENSUS=false`
-  * A/Bs the catalog-backed file index (build.sbt passes it to every
-  * forked main).
+  * (the default is [[Session.cpus]]' 4). Each batch also records the
+  * wall time of one explicit store refresh (`REFRESH TABLE` plus the
+  * listing that primes the probes' cache) and of creating the probe
+  * frame afterwards.
   */
 object StoreProbe {
   def main(args: Array[String]): Unit = {
@@ -176,20 +177,15 @@ object StoreProbe {
     val times = Array.ofDim[Double](nBatches)
     val files = Array.ofDim[Int](nBatches)
     val listMs = Array.ofDim[Double](nBatches)
-    // the REAL mutation refresh's wall time (listing + fence fan-out),
-    // read from StoreCensus's gauge after each batch — an explicit
-    // re-refresh here would see zero fresh files and skip the fence,
-    // measuring only the walk. This is the series the STORE100
-    // artifacts' refresh_ms band pins (the fence must stay invisible
-    // next to batch times three orders larger). Staleness guard
-    // (ADVICE r15), mirroring the fold leg's: a batch whose ingest
-    // never refreshed the store (e.g. a dedup gate writing zero new
-    // rows) records -1 instead of silently repeating the previous
-    // batch's reading — detected via the store's monotone refresh
-    // SEQUENCE snapshotted BEFORE each batch (ADVICE r16: the old
-    // duration-compare would miss two refreshes that happened to take
-    // identical nanos).
+    // one explicit refresh of the main store after each batch, timed:
+    // the refresh every commit pays (REFRESH TABLE plus one listing),
+    // without the fence, which finds no new file here
     val refreshMs = Array.ofDim[Double](nBatches)
+    def timeRefresh(): Double = {
+      val t0 = System.nanoTime()
+      graft.streaming.StoreCensus.refresh(spark, mainStore)
+      (System.nanoTime() - t0) / 1e6
+    }
     for (i <- 0 until nBatches) {
       if (i % 8 == 0) probeCalib(i)
       if (tombMid && i == midAt) {
@@ -204,10 +200,6 @@ object StoreProbe {
         System.err.println(
           f"[store] $gate MID-SERIES fold at batch $i%3d  $midFoldSec%6.2f s")
       }
-      // snapshot AFTER the mid-series fold (whose swap moves the same
-      // gauge), or the fold's reading would mask a batch that skipped
-      // its refresh on exactly the midAt iteration
-      val preSeq = graft.streaming.StoreCensus.lastRefreshSeq(mainStore)
       val t0 = System.nanoTime()
       runBatch(i)
       times(i) = (System.nanoTime() - t0) / 1e9
@@ -216,18 +208,14 @@ object StoreProbe {
         case "st20" => Seq(s"$work/bands", s"$work/sh")
         case "st24" => Seq(s"$work/idx")
       }).map(graft.streaming.EventStreams.maxFilesPerBucket).max
-      // the listing share a probe pays for creating the store frame —
-      // census-served after every batch's refresh, so this must sit at
-      // ~0 ms however long the ingest has run (the r10 re-listing tax
-      // was 210–280 ms/batch at the 100× layout)
+      refreshMs(i) = timeRefresh()
+      // the cost a probe pays for creating the store frame — served by
+      // the catalog after every refresh, so this must stay flat however
+      // long the ingest has run (the r10 re-listing tax was
+      // 210–280 ms/batch at the 100× layout)
       val tl = System.nanoTime()
       graft.streaming.StoreCensus.read(spark, mainStore)
       listMs(i) = (System.nanoTime() - tl) / 1e6
-      refreshMs(i) = {
-        if (graft.streaming.StoreCensus.lastRefreshSeq(mainStore) != preSeq)
-          graft.streaming.StoreCensus.lastRefreshNanos(mainStore) / 1e6
-        else -1.0
-      }
       System.err.println(
         f"[store] $gate batch $i%3d  ${times(i)}%6.2f s  maxFiles ${files(i)}%3d  " +
           f"list ${listMs(i)}%6.1f ms  refresh ${refreshMs(i)}%6.1f ms")
@@ -253,28 +241,14 @@ object StoreProbe {
     // tombstone leg: fold the slice out of every standing store, then
     // one more replayed batch at the post-fold store
     val tombJson = if (tomb) {
-      // the fold's own refresh is the fence's WORST CASE: the swap
-      // renews every bucket's file, so this one refresh fences the
-      // whole store's width in a single fan-out. Guard against gauge
-      // staleness (an independent-review finding): if the fold's
-      // swap somehow skipped the refresh, the gauge still holds the
-      // last ingest batch's reading — publishing THAT as the worst
-      // case would be a lie, so an unmoved refresh SEQUENCE records
-      // -1 (the sequence, not the duration, is the staleness key —
-      // ADVICE r16).
-      val preFoldSeq = graft.streaming.StoreCensus.lastRefreshSeq(mainStore)
       val foldSec = foldStores(spark.read.parquet(src)
         .select(col(srcIdCol).as("id"))
         .filter(pmod(col("id"), lit(7L)) === 3L))
-      val foldRefreshMs =
-        if (graft.streaming.StoreCensus.lastRefreshSeq(mainStore) != preFoldSeq)
-          graft.streaming.StoreCensus.lastRefreshNanos(mainStore) / 1e6
-        else -1.0
+      val foldRefreshMs = timeRefresh()
       // frame-creation cost against the standing store, both ways:
-      // census-served (the path every probe takes — ~0 regardless of
-      // store size or age) vs cold (what the same frame costs without
-      // the census: InMemoryFileIndex listing + footer schema read,
-      // the r10 per-batch tax, still bounded by compaction)
+      // catalog-served (the path every probe takes) vs cold (a plain
+      // read: InMemoryFileIndex listing + footer schema read, the r10
+      // per-batch tax, still bounded by compaction)
       val tl = System.nanoTime()
       graft.streaming.StoreCensus.read(spark, mainStore)
       val listSec = (System.nanoTime() - tl) / 1e9
@@ -293,23 +267,17 @@ object StoreProbe {
       val postSec = (System.nanoTime() - t1) / 1e9
       System.err.println(
         f"[store] $gate tombstone fold $foldSec%6.2f s  post-fold batch " +
-          f"$postSec%6.2f s  census listing $listSec%6.3f s  cold $listColdSec%6.3f s")
+          f"$postSec%6.2f s  catalog frame $listSec%6.3f s  cold $listColdSec%6.3f s")
       s""","tomb_fold_sec":$foldSec,"fold_refresh_ms":$foldRefreshMs,""" +
         s""""post_fold_batch_sec":$postSec,""" +
         s""""store_list_sec":$listSec,"store_list_cold_sec":$listColdSec"""
     } else ""
     val midJson = if (tombMid)
       s""""mid_fold_at":$midAt,"mid_fold_sec":$midFoldSec,""" else ""
-    // same median convention as the drift halves above (one rule per
-    // artifact, so the two medians stay comparable); -1 staleness
-    // sentinels stay visible in the series but never skew the summary
-    // stats (all-stale → -1, stated rather than fabricated)
-    val refreshSeen = refreshMs.filter(_ >= 0)
+    // same median convention as the drift halves above
     val refreshJson =
-      s""""refresh_ms":{"n":$nBatches,"n_stale":${nBatches - refreshSeen.length},""" +
-        s""""median":${if (refreshSeen.nonEmpty) median(refreshSeen.toSeq) else -1.0},""" +
-        s""""max":${if (refreshSeen.nonEmpty) refreshSeen.max else -1.0},""" +
-        s""""series":[${refreshMs.mkString(",")}]}"""
+      s""""refresh_ms":{"n":$nBatches,"median":${median(refreshMs.toSeq)},""" +
+        s""""max":${refreshMs.max},"series":[${refreshMs.mkString(",")}]}"""
     println(s"""{"metric":"store_econ","gate":"$gate","factor":$factor,"buckets":$nBuckets,"batches":$nBatches,$midJson""" +
       s""""median_first_half":$h1,"median_second_half":$h2,""" +
       s""""drift":${h2 / h1},"max_files":${files.max}$tombJson,""" +

@@ -14,7 +14,8 @@ import java.nio.file.{Files, Path, Paths}
   *     so regenerated testdata at the same path restages instead of
   *     silently reusing a stale layout, and two inputs never share a
   *     dir.
-  *   - The completion marker `_GRAFT_STAGED` is written LAST, after
+  *   - The completion marker `_GRAFT_STAGED` (holding the sources'
+  *     paths) is written LAST, after
   *     `write` returns: a JVM dying mid-staging (or a `write` that
   *     throws) leaves no marker, and the next caller deletes the
   *     partial dir and stages it again. A marked dir is reused
@@ -76,24 +77,40 @@ object Staging {
     dir
   }
 
+  /** A local file's stamp, `path:size:mtime`: what a cache keyed on a
+    * file must change with (a directory is stamped by its own entry). */
+  def stamp(path: String): String = {
+    val f = Paths.get(path)
+    s"$path:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}"
+  }
+
   /** The staged dir for `tag` over `sources` (parquet files or dirs
     * the layout derives from), written by `write` into a fresh,
-    * existing dir unless a completed one is already there. */
+    * existing dir unless a completed one is already there. The marker
+    * holds the sources' paths, so a restage deletes the dirs this tag
+    * staged over the same paths at an older stamp; dirs over other
+    * paths (another scale factor) stay. */
   def ensure(tag: String, sources: String*)(write: String => Unit): String = {
-    val ident = (tag +: sources.map { p =>
-      val f = Paths.get(p)
-      s"$p:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}"
-    }).mkString("\n")
+    val ident = (tag +: sources.map(stamp)).mkString("\n")
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val dir: Path = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_stage_${tag}_$key")
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val prefix = s"graft_stage_${tag}_"
+    val dir: Path = tmp.resolve(prefix + key)
     val marker = dir.resolve("_GRAFT_STAGED")
     if (!Files.exists(marker)) {
       deleteTree(dir.toString)
+      val paths = sources.mkString("\n")
+      Option(tmp.toFile.listFiles()).toSeq.flatten.map(_.toPath).filter { d =>
+        val n = d.getFileName.toString
+        n.startsWith(prefix) && n.length == prefix.length + 16 && d != dir && {
+          val m = d.resolve("_GRAFT_STAGED")
+          Files.isRegularFile(m) && new String(Files.readAllBytes(m), "UTF-8") == paths
+        }
+      }.foreach(d => deleteTree(d.toString))
       Files.createDirectories(dir)
       write(dir.toString)
-      Files.createFile(marker)
+      Files.write(marker, paths.getBytes("UTF-8"))
     }
     dir.toString
   }

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -17,8 +18,33 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Reads with the schema given, so no read after a table's first
+    * pays Spark's schema-inference job ([[schema]]). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(schema(spark, sfDir, name)).parquet(s"$sfDir/$name.parquet")
+
+  /** The parquet confs that change what inference makes of a file. */
+  private val conversionConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive")
+
+  /** Inferred schemas, one per fixture file stamp and setting of the
+    * conversion confs: a regenerated file (new size or mtime) or a
+    * flipped conf (events' `nanosAsLong`) infers again. JVM-wide, since
+    * the key holds everything the inference depends on. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The schema `spark.read.parquet` infers for a fixture table. */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (Staging.stamp(path) +: conversionConfs.map(spark.conf.get))
+      .mkString("\n")
+    schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   /** Spread a small-input scan across cores before heavy NARROW
     * stages: the fixtures ship each table as ONE parquet file (one

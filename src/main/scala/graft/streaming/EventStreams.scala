@@ -48,7 +48,7 @@ object EventStreams {
     */
   private def eventsFileStream(s: SparkSession, d: String): DataFrame = {
     Tables.readNanosAsLong(s)
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.schema(s, d, "events")
     // registry deletion is symlink-safe (Staging.deleteTree): only the
     // LINK is removed at exit — the read-only source dataset behind it
     // is never touched
@@ -755,7 +755,7 @@ object EventStreams {
     * pattern).
     */
   def st19StreamDrift(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = Tables.schema(s, d, "documents")
     val dir = java.nio.file.Paths.get(
       graft.core.Staging.tempAtExit("graft_docstream_"))
     java.nio.file.Files.createSymbolicLink(
@@ -896,11 +896,11 @@ object EventStreams {
     * store scan is the wrong foundation for the O(batch) contract.
     * The bucket list is ≤ StoreBuckets small ints off an
     * already-cached batch frame — the aggregate-broadcast shape.
-    * Listing economics: frames are served off [[StoreCensus]], the
-    * catalog-backed file index — frame creation performs no
-    * filesystem listing and no footer read once a store is tracked
-    * (every mutation refreshes the census); an untracked store falls
-    * back to the raw read's per-call enumeration. */
+    * Listing economics: a registered store is a catalog table
+    * ([[StoreCensus]]), so a bucket's listing is served from the
+    * table's file cache from its second read on and the schema comes
+    * from the catalog; an unregistered store falls back to the raw
+    * read's per-call enumeration. */
   private[graft] def prunedStore(
       sp: SparkSession, dir: String, buckets: Seq[Int]): DataFrame =
     StoreCensus.read(sp, dir).filter(col("bucket").isin(buckets: _*))
@@ -927,8 +927,8 @@ object EventStreams {
   }
 
   /** True iff the store dir holds any part file, at any nesting — the
-    * flat listing would miss bucket=…/part-… layouts. Census-tracked
-    * stores answer from driver memory (zero filesystem calls). */
+    * flat listing would miss bucket=…/part-… layouts. Registered
+    * stores answer from the table's cached index. */
   private[graft] def storeNonEmpty(dir: String): Boolean =
     StoreCensus.nonEmpty(dir).getOrElse {
       val (fs, p) = storeFs(dir)
@@ -954,8 +954,8 @@ object EventStreams {
 
   /** Largest part-file count in any single bucket= dir of a store —
     * the quantity compaction bounds (file count per bucket grows one
-    * per appended batch between compactions). Census-tracked stores
-    * answer from driver memory (zero filesystem calls). */
+    * per appended batch between compactions). Registered stores answer
+    * from the table's cached index. */
   private[graft] def maxFilesPerBucket(dir: String): Int =
     StoreCensus.maxFilesPerBucket(dir).getOrElse {
       val (fs, p) = storeFs(dir)
@@ -999,25 +999,29 @@ object EventStreams {
     *     and a micro-batch's cost is dominated by fixed per-action
     *     commit latency, which they then overlap (~1.5× on st20's gate
     *     when introduced; against serial writes over loaded caches,
-    *     st20 and st21 at sf0.1 on 4 cpus measured a tie);
+    *     st20 and st21 at sf0.1 on 4 cpus measured a tie). A write
+    *     that reads a cache over a store goes before that store's
+    *     append in one closure (st21): the append re-caches it;
     *  3. ALL writes settle before the first failure is rethrown:
     *     propagating while a sibling still runs would leave a zombie
     *     job racing the cache release below and holding executors;
-    *  4. each store's census is refreshed — the writes are the batch's
-    *     only store mutations, so one listing each replaces every
-    *     later probe's — and then COMPACTED when a bucket holds 8
-    *     files. Each batch appends one file per bucket, so file count
-    *     (and the listing every probe pays) grows with batch count;
+    *  4. each store is refreshed (`REFRESH TABLE` through
+    *     [[StoreCensus.refresh]], registering it on its first commit) —
+    *     the writes are the batch's only store mutations, so one
+    *     listing each primes every later probe's — and then COMPACTED
+    *     when a bucket holds 8 files. Each batch appends one file per
+    *     bucket, so file count (and the listing every probe pays)
+    *     grows with batch count;
     *     folding the store back to one file per bucket every 8 batches
     *     amortizes the full-store rewrite to O(corpus/8) per batch, the
     *     synchronous stand-in for a production background compactor.
     *     8 keeps the 4–5-batch gates compaction-free while the
     *     ≥12-batch specs exercise the fold and the bounded-files law;
-    *  5. on ANY failure every store's census entry is dropped: a
-    *     sibling write that committed (bands landed, shingles failed)
-    *     must not leave a caller that catches and continues reading
-    *     the stale pre-write snapshot. Reads fall back to live
-    *     listings until the next successful refresh;
+    *  5. on ANY failure every store's table is dropped: a sibling
+    *     write that committed (bands landed, shingles failed) must not
+    *     leave a caller that catches and continues reading a stale
+    *     listing. Reads list the dirs live until the next successful
+    *     refresh registers them again;
     *  6. `shared` is released, blocking, once everything settled.
     */
   private def commitStores(sp: SparkSession, stores: Seq[String],
@@ -1165,14 +1169,13 @@ object EventStreams {
           s"store swap: promote failed: $tmp -> $live (rolled back)")
       }
       rmTree(old)
-      // the swap is the store's only rewriter: install the post-swap
-      // census (one listing) so every probe until the next mutation
-      // reads from driver memory
+      // the swap is the store's only rewriter: refresh the table (one
+      // listing) so every probe until the next mutation reads cached
       StoreCensus.refresh(sp, base)
     } catch { case e: Throwable =>
       // on ANY failure the on-disk state is one of the readable
-      // recovery states above, but it no longer matches the cached
-      // census — drop it so reads fall back to live listings
+      // recovery states above, but it no longer matches the table's
+      // cached listing — drop the table so reads list live
       StoreCensus.invalidate(base)
       throw e
     }
@@ -1227,7 +1230,7 @@ object EventStreams {
     val bandStore = graft.core.Staging.tempAtExit("graft_st20_bands_")
     val shStore = graft.core.Staging.tempAtExit("graft_st20_sh_")
     val outDir = graft.core.Staging.tempAtExit("graft_st20_out_")
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = Tables.schema(s, d, "documents")
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream
@@ -1273,11 +1276,10 @@ object EventStreams {
     * disjoint output dirs, so [[commitStores]] runs them as
     * CONCURRENT jobs over the batch's loaded caches — overlapping the
     * commit latencies instead of paying them serially (measured ~1.5×
-    * on the gate). The store frames are
-    * created (= file-listed) BEFORE the appends launch, so the probe
-    * reads a pre-append snapshot; the final dropDuplicates is
-    * belt-and-braces against a racing list ever seeing an own-batch
-    * store file the union also carries.
+    * on the gate). The probe may list a store after an append of
+    * the same batch landed; the candidate distinct and the final
+    * dropDuplicates keep an own-batch file the union also carries
+    * from counting twice.
     */
   private[graft] def st20Batch(batch: DataFrame, bandStore: String,
       shStore: String, outDir: String): Unit = {
@@ -1313,15 +1315,14 @@ object EventStreams {
         val kbs = newBands.select("bucket").distinct()
           .collect().map(_.getInt(0)).toSeq
         ph("stage")
-        // pre-append store snapshots, served off the census (tracked
-        // stores: zero listings, zero footer reads — the bucket
-        // filters below prune the cached index exactly as before).
-        // Created only when arrivals exist — the probe path is their
-        // sole consumer, and a corpus-only batch (the steady-state
-        // case) must not pay frame resolutions it never reads. Still
-        // BEFORE the appends launch — and since the census refreshes
-        // only after the appends settle, the pre-append snapshot is
-        // now exact by construction, not by racing a live listing.
+        // the store frames, served off the stores' catalog tables
+        // (the bucket filters below prune partitions before any
+        // listing). Created only when arrivals exist — the probe path
+        // is their sole consumer, and a corpus-only batch (the
+        // steady-state case) must not pay frame resolutions it never
+        // reads. The probe plans its scans while the appends run, so
+        // it may see this batch's own appended files; the band join's
+        // distinct and the verify's dropDuplicates make that harmless.
         val storeBandsDf =
           if (kbs.nonEmpty && storeNonEmpty(bandStore))
             Some(StoreCensus.read(sp, bandStore))
@@ -1336,22 +1337,17 @@ object EventStreams {
         // have a single consumer, so caching would be pure overhead)
         val corpusBandsShared =
           if (kbs.nonEmpty) corpusBands.cache() else corpusBands
-        val appendBands = () => {
-          corpusBandsShared
-            // cluster by bucket first: without this, every shuffle
-            // task writes a sliver into every bucket dir (tasks x
-            // buckets tiny files per batch; measured 3x slower end to
-            // end) -- with it, one file per bucket per batch, the
-            // layout a compacting ingest would produce
-            .repartition(StoreBuckets, col("bucket"))
-            .write.partitionBy("bucket").mode("append").parquet(bandStore)
-        }
-        val appendSh = () => {
+        // cluster by bucket first: without this, every shuffle task
+        // writes a sliver into every bucket dir (tasks x buckets tiny
+        // files per batch; measured 3x slower end to end) -- with it,
+        // one file per bucket per batch, the layout a compacting
+        // ingest would produce
+        val appendBands = () => StoreCensus.append(
+          corpusBandsShared.repartition(StoreBuckets, col("bucket")), bandStore)
+        val appendSh = () => StoreCensus.append(
           corpus.select(col("doc_id"), col("sh"))
             .withColumn("bucket", bucketOf(col("doc_id")))
-            .repartition(StoreBuckets, col("bucket"))
-            .write.partitionBy("bucket").mode("append").parquet(shStore)
-        }
+            .repartition(StoreBuckets, col("bucket")), shStore)
         val probe = () => {
           if (kbs.nonEmpty) {
             val probeBands = corpusBandsShared
@@ -1388,31 +1384,36 @@ object EventStreams {
             // initialNumPartitions) is one job but ships up to
             // partitions × (max+1) rows in exactly the adversarial
             // case the guard exists for. This shape is one COMPUTE
-            // job that materializes the cache while a fully
-            // distributed count rides it (partial-agg partials only —
-            // no row ever moves), then the local path drains ≤ max
-            // rows FROM THE CACHE (a read-only second job, no
+            // job that materializes the persisted candidates while a
+            // count rides it, then the local path drains ≤ max rows
+            // FROM THE PERSISTED RDD (a read-only second job, no
             // recompute): bounded intake at any partition count, and
             // the adversarial batch never sends rows driver-ward at
-            // all.
-            val candShared = candFrame.cache()
+            // all. A persisted RDD, not a Dataset cache: an append
+            // committing while this probe runs re-caches every cached
+            // plan that reads its store, and a re-cache racing the
+            // cache's first build left a persisted RDD that
+            // unpersist() never reached (a listener trace saw it in 2
+            // of 9 arrival batches).
+            val candRows = candFrame.rdd
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             // finally, not happy-path: a verify-join failure must not
-            // leave the cached candidate frame (O(arrivals ×
-            // store-matches) in the adversarial case) pinned in
-            // executor storage for the JVM's remaining lifetime —
-            // st21Batch's sigs/slice discipline (r10 advisory)
+            // leave the candidates (O(arrivals × store-matches) in the
+            // adversarial case) pinned in executor storage for the
+            // JVM's remaining lifetime
             try {
-            val nCand = candShared.count()
+            val nCand = candRows.count()
             if (nCand > 0) {
               val local = nCand <= funnelMax
               val newSide = newDocs.select(col("doc_id").as("new_id"),
                 col("sh").as("sha"))
               val (cands, dbs) = if (local) {
-                val rows = candShared.collect()
+                val rows = candRows.collect()
                   .map(r => (r.getLong(0), r.getLong(1))).toSeq
                 (broadcast(rows.toDF("new_id", "corpus_id")),
                   rows.map(r => bucketOfLong(r._2)).distinct)
               } else {
+                val candShared = sp.createDataFrame(candRows, candFrame.schema)
                 (candShared, candShared
                   .select(bucketOf(col("corpus_id")).as("b")).distinct()
                   .collect().map(_.getInt(0)).toSeq)
@@ -1436,7 +1437,7 @@ object EventStreams {
                 .dropDuplicates("new_id", "corpus_id")
                 .write.mode("append").parquet(outDir)
             }
-            } finally candShared.unpersist()
+            } finally candRows.unpersist()
           }
         }
         commitStores(sp, Seq(bandStore, shStore),
@@ -1457,8 +1458,7 @@ object EventStreams {
     * the next append recreates them anyway).
     */
   private[graft] def expireAppendLog(dir: String, ttlMs: Long): Unit = {
-    // pair logs are not census-tracked today, but if a caller ever
-    // expires a tracked dir the cached file list must not outlive it
+    // an expired store's table would keep serving the deleted files
     StoreCensus.invalidate(dir)
     val cutoff = System.currentTimeMillis() - ttlMs
     val (fs, _) = storeFs(dir)
@@ -1523,7 +1523,7 @@ object EventStreams {
     val outDir = graft.core.Staging.tempAtExit("graft_st26_out_")
     val isNew = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long") % 5 === 0
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = Tables.schema(s, d, "documents")
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream
@@ -1596,7 +1596,7 @@ object EventStreams {
     val pairDir = graft.core.Staging.tempAtExit("graft_st27_pairs_")
     val isNew = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long") % 5 === 0
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = Tables.schema(s, d, "documents")
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream
@@ -1645,7 +1645,7 @@ object EventStreams {
     val chunks = stageDocChunks(s, d)
     val sigStore = graft.core.Staging.tempAtExit("graft_st21_sigs_")
     val pairDir = graft.core.Staging.tempAtExit("graft_st21_pairs_")
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = Tables.schema(s, d, "documents")
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream
@@ -1746,15 +1746,18 @@ object EventStreams {
           col("h"), col("clen"))
       within.unionByName(cross)
     } else within
-    // the pair write and the signature append share only the cached
-    // sigs and slice (and the pair job's slice scan reads the
-    // PRE-append file index, snapshotted when the slice frame was
-    // created), so commitStores runs the two writes concurrently
-    commitStores(sp, Seq(sigStore), Seq(sigs) ++ Option(slice), ph)(
-      () => pairs.write.mode("append").parquet(pairDir),
-      () => sigs.select(col("bucket"), col("doc_id"), col("h"), col("clen"))
-        .repartition(StoreBuckets, col("bucket")) // one file/bucket/batch
-        .write.partitionBy("bucket").mode("append").parquet(sigStore))
+    // the pair write reads the PRE-append slice, so the signature
+    // append runs after it, not beside it: an append re-caches every
+    // cached plan that reads its store, and a pair job still scanning
+    // the slice then rebuilt it into a persisted RDD no cache entry
+    // owned (StoreCommitSpec's leak check caught one)
+    commitStores(sp, Seq(sigStore), Seq(sigs) ++ Option(slice), ph) { () =>
+      pairs.write.mode("append").parquet(pairDir)
+      StoreCensus.append(
+        sigs.select(col("bucket"), col("doc_id"), col("h"), col("clen"))
+          .repartition(StoreBuckets, col("bucket")), // one file/bucket/batch
+        sigStore)
+    }
   }
 
 
@@ -1769,7 +1772,7 @@ object EventStreams {
   def st22StreamWeightedSample(s: SparkSession, d: String): DataFrame = {
     val chunks = stageDocChunks(s, d)
     val candStore = graft.core.Staging.tempAtExit("graft_st22_cands_")
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = Tables.schema(s, d, "documents")
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream
@@ -1803,7 +1806,7 @@ object EventStreams {
     val chunks = stageDocChunks(s, d)
     val w = graft.queries.PipelineOps.lrTrainedWeights(s, d)
     val outDir = graft.core.Staging.tempAtExit("graft_st23_out_")
-    val docSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val docSchema = Tables.schema(s, d, "documents")
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream
@@ -1874,14 +1877,14 @@ object EventStreams {
   private[graft] def st24Batch(batch: DataFrame, store: String): Unit = {
     val sp = batch.sparkSession
     graft.functions.VectorExpressions.register(sp)
-    commitStores(sp, Seq(store))(() => batch
+    commitStores(sp, Seq(store))(() => StoreCensus.append(batch
       .selectExpr("vec_id",
         "transform(embedding, x -> cast(x AS double)) AS v")
       .selectExpr("vec_id", "v", "sqrt(graft_sumsq(v)) AS nrm",
         "graft_lsh_bucket(v) AS lsh")
       .withColumn("bucket", bucketOf(col("lsh")))
-      .repartition(col("bucket")) // one file per bucket per batch
-      .write.partitionBy("bucket").mode("append").parquet(store))
+      .repartition(col("bucket")), // one file per bucket per batch
+      store))
   }
 
   /** The serve-time store read behind st24/st25 — bucket-pruned to
@@ -1894,7 +1897,7 @@ object EventStreams {
   private[graft] def annStoreSlice(s: SparkSession, store: String,
       buckets: Seq[Int]): DataFrame =
     (if (StoreCensus.nonEmpty(store).contains(true)) StoreCensus.read(s, store)
-     else s.read // untracked or empty store: the explicit schema keeps a
+     else s.read // unregistered or empty store: the explicit schema keeps a
        // vector-less corpus readable (inference throws on a dir with
        // no part files — st21's hazard)
        .schema("vec_id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, lsh BIGINT")
@@ -1907,7 +1910,7 @@ object EventStreams {
     import org.apache.spark.sql.expressions.Window
     val chunks = stageVecChunks(s, d)
     val store = graft.core.Staging.tempAtExit("graft_st24_idx_")
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
+    val schema = Tables.schema(s, d, "embeddings")
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(chunks)
     val q = stream.writeStream

@@ -1,499 +1,174 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.StructType
 
-/** CATALOG-BACKED FILE INDEX for the bucket-clustered parquet stores
-  * (st20 band/shingle, st21 CDC signature, st24 ANN) — the r10 gap
-  * closed: every store frame used to pay a driver-side re-listing
-  * (InMemoryFileIndex enumeration) plus a footer schema-inference job
-  * PER PROBE BATCH, measured 0.21–0.28 s at the 100× layout.
-  * Constant thanks to compaction, but a per-batch driver metadata tax
-  * that at 1000s of micro-batches dominates metadata cost — and on an
-  * object store each listing is a paged LIST call.
+/** The bucket-clustered parquet stores (st20 band/shingle, st21 CDC
+  * signature, st24 ANN) as Spark catalog tables: each store is an
+  * external parquet table partitioned by `bucket`, located at the
+  * store dir. Spark's catalog then does what a store needs between
+  * mutations: the table's `CatalogFileIndex` and the session
+  * `FileStatusCache` serve each bucket's listing from memory, the
+  * schema comes from the catalog (no footer job), and the bucket
+  * IN-list of a probe prunes partitions before any listing. From the
+  * second read of a bucket on, creating and planning a store frame
+  * makes no filesystem call (spec-pinned with a call-counting
+  * FileSystem in StoreFsSpec).
   *
-  * The census is the amortization a production deployment gets from a
-  * catalog/metastore: ONE in-memory entry per store — the leaf
-  * part-file statuses and the store's (stable) schema — refreshed
-  * exactly when the store mutates and served to every read in
-  * between. Reads reconstruct a Spark [[HadoopFsRelation]] over an
-  * [[InMemoryFileIndex]] whose [[FileStatusCache]] is pre-populated
-  * from the entry, so frame creation performs ZERO filesystem calls
-  * and ZERO footer reads (spec-pinned with a call-counting
-  * FileSystem in StoreFsSpec), while keeping the full Catalyst scan
-  * machinery — the bucket IN-list still lands in PartitionFilters and
-  * prunes unprobed bucket directories exactly as the raw read did.
+  * MUTATION CONTRACT: a store is registered by its first [[refresh]]
+  * (`CREATE TABLE … LOCATION` plus `ALTER TABLE … RECOVER
+  * PARTITIONS`: one listing and one schema read). From then on
+  * appends go through the table ([[append]]: `saveAsTable` resolves
+  * the frame's columns by name against the table schema, and new
+  * buckets register as partitions), and every commit calls
+  * [[refresh]] (`REFRESH TABLE`, then one listing of every bucket,
+  * which also primes the cache the next probes read). A store nobody
+  * refreshed has no table, and reads fall back to `spark.read.parquet`.
+  * A mutation that does not go through these hooks (an out-of-band
+  * append, a dir recreated at the same path) is served stale until the
+  * next [[refresh]] — the catalog's own refresh law. [[invalidate]]
+  * drops the table (its data stays: the table is external), so after
+  * a failed mutation reads list the dir live until the next
+  * successful refresh registers it again. A restarted driver
+  * registers its stores with one [[refresh]] each.
   *
-  * MUTATION CONTRACT (what keeps the census honest): every mutation
-  * of a tracked store goes through this module's hooks —
-  * [[EventStreams.rewriteStore]] (the ONLY rewriter: compaction and
-  * tombstone folds) calls [[invalidate]] on failure and [[refresh]]
-  * on success, and each batch append calls [[refresh]] after its
-  * write lands. A store nobody refreshed simply has no entry and
-  * every read falls back to the raw `spark.read.parquet` — external
-  * writers (specs, ad-hoc tools) see today's behavior unchanged. The
-  * one listing a mutation pays (O(buckets) directory reads, bounded
-  * by compaction at ≤ threshold × buckets files) replaces the
-  * 2–4 listings + footer job every PROBE used to pay. One corollary
-  * worth naming (spec-pinned in StoreFsSpec): ANY mutation of a
-  * tracked store by a non-census writer — an out-of-band append, or
-  * a deleted dir recreated at the SAME path — is served stale until
-  * [[invalidate]]/[[refresh]] runs; the gates never recycle paths
-  * (store dirs are unique per gate per JVM), and a long-lived
-  * service with external writers must route them through the hooks
-  * like any mutation.
+  * SCHEMA-EVOLUTION FENCE: the catalog schema is fixed at
+  * registration, and a part file an outside writer drops into a bucket
+  * dir would be read under it. So each [[refresh]] reads the footer of
+  * every part file new since the store's last listing (driver-side,
+  * no Spark job) and compares its top-level names and types with the
+  * table schema ([[fenceViolation]]); a drifted file fails the refresh
+  * loudly, naming the store and both column sets, and invalidates the
+  * table. Cost stays bounded by the mutation's width: an append adds
+  * at most one file per touched bucket, a compaction swap renews one
+  * file per bucket.
   *
-  * RESTART RECOVERY (r11 gap closed): entries are JVM memory, so a
-  * restarted driver that only PROBES an existing store would
-  * otherwise fall back to the raw per-probe listing path forever —
-  * the exact tax the census removes, silently reinstated. The first
-  * [[refresh]] of a non-empty store therefore drops a zero-byte
-  * `_graft_census` marker at the store root (detected for free
-  * during the refresh walk; hidden from every parquet reader by the
-  * leading underscore), and the first lookup MISS of a marked dir
-  * lazily rebuilds the entry through the same [[refresh]] — one
-  * listing plus one footer read, exactly what a mutation refresh
-  * pays, once per store per JVM. Unmarked dirs (external writers'
-  * stores) pay at most ONE marker stat per JVM and keep live-listing
-  * semantics; [[invalidate]] suppresses the rebuild until the next
-  * successful refresh, because invalidation means the on-disk state
-  * is mid-mutation or unknown — recovering a census from it would
-  * re-cache exactly the uncertainty the caller just declared.
-  *
-  * SCHEMA-EVOLUTION FENCE: the pinned-schema invariant (store
-  * schemas never change — see [[Entry]]) is enforced, not assumed.
-  * A refresh that finds part files not in the prior entry reads the
-  * footer of EVERY new file (driver-side, no Spark job) and compares
-  * top-level field names (footer columns plus the path's partition
-  * columns) against the pinned schema; a widened/renamed append
-  * fails the refresh loudly, naming the store and both column sets,
-  * and invalidates the entry so reads fall back to live resolution.
-  * Every-file, not first-found (the r12 seam): a mixed-schema
-  * multi-file append where one conforming file happens to list first
-  * must not slip the fence on walk order. Cost stays bounded and
-  * driver-side: an append adds ≤ one file per touched bucket, a
-  * compaction swap renews ≤ one file per bucket — each a local
-  * footer read, never a Spark job. A part file written directly at
-  * the store ROOT (tolerated by [[maxFilesPerBucket]] since r12) is
-  * likewise not drift when its footer carries exactly the pinned
-  * DATA columns — partition columns absent from a root-level PATH
-  * are a layout quirk, not schema evolution ([[fenceViolation]]
-  * holds the exact rule). The fence compares NAMES AND TYPES: a
-  * same-name type change (INT64 -> DOUBLE in an out-of-band append)
-  * used to pass the r13 name-only fence and surface later as a
-  * parquet decode error at SCAN time — loud, but at the reader, far
-  * from the writer that caused it; the footer metadata the fence
-  * already reads carries the field types, so the type check is free
-  * of new I/O and fails the offending REFRESH instead. Path
-  * partition components stay name-based by contract: their types are
-  * derived from path VALUES at read time, not pinned per file.
-  *
-  * Consistency with the micro-batches' concurrent writes: every store
-  * mutation of st20/st21/st24 and st26's fold commits through
-  * `EventStreams.commitStores`, which refreshes the census on the
-  * caller thread only after all of the batch's writes have settled
-  * (and drops the entry of every store it touched on any failure).
-  * The census entry a probe reads is therefore by construction the
-  * PRE-append snapshot, so the probe's "store accumulated from
-  * strictly earlier batches" read is snapshot-exact rather than
-  * racing a live directory listing.
-  *
-  * Scale note (100 TB): entries are driver memory — O(files) statuses
-  * per store, bounded by compaction; at threshold 8 × 1024 buckets
-  * that is ≤ 8192 statuses ≈ a few MB. The refresh listing is the
-  * store filesystem's one unavoidable metadata read per mutation; a
-  * deployment that needs less pins the census to a real table format
-  * catalog, which this module's lookup/refresh split maps onto
-  * directly.
+  * Lifetime: table names are unique per store dir, and every table
+  * still registered is dropped at JVM exit, before Spark stops, so on
+  * a persistent (derby) catalog no entry outlives its store's
+  * exit-time deletion.
   */
 private[graft] object StoreCensus {
 
-  /** One tracked store: leaf part-file statuses (recursive, part-*
-    * only) and the full READ schema (data columns ++ the `bucket`
-    * partition column). The schema is pinned from one cold
-    * `spark.read.parquet` at the store's first refresh — the same
-    * code path every fallback read takes, so census and cold schemas
-    * cannot diverge (writer-frame hints were tried first and differ
-    * on nullability: file scans force top-level fields nullable). A
-    * store's schema never changes over its lifetime (bucket layout is
-    * baked at creation), so the one footer read amortizes to zero. */
-  final case class Entry(files: Array[FileStatus], schema: Option[StructType])
+  /** A registered store: its table, and the part files of its last
+    * listing (the fence's baseline). */
+  private final case class Entry(table: String, files: Set[String], sp: SparkSession)
 
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-  /** Restart-recovery marker dropped at the store root by the first
-    * refresh of a non-empty store (see the class doc). Underscore
-    * prefix = hidden from Spark/Hadoop path filters. Known seam,
-    * accepted (re-adjudicated r16 against VERDICT r15's optional
-    * item): recovery-failure backoff state is per-JVM, so a driver
-    * restarted DURING a store outage forgets an open long window and
-    * re-pays one failed walk on its first probe — bounded (one per
-    * restart). Persisting the ledger has no coherent home: beside the
-    * store is unwritable by construction (the outage the ledger
-    * records is the store FS failing), and the driver's local disk is
-    * not restart-survivable where it matters (a cluster restart lands
-    * the driver on a new host). One failed walk per restart is the
-    * cheapest honest behavior. */
-  private[graft] val MarkerName = "_graft_census"
+  private lazy val dropAtExit: Unit =
+    // above Spark's own hook (priority 40), which stops the context
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() =>
+      entries.values().forEach { e =>
+        try e.sp.sharedState.externalCatalog.dropTable("default",
+          e.table.stripPrefix("default."), ignoreIfNotExists = true, purge = false)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }, 50)
 
-  /** Dirs whose lazy-recovery decision is settled for this JVM: a
-    * successful refresh (entry serves), a consumed marker probe (no
-    * marker → stay on live listings), or an [[invalidate]] (on-disk
-    * state declared unknown → stay on live listings until the next
-    * refresh). Bounds the recovery path to at most one marker stat
-    * per dir per JVM — except across TRANSIENT recovery failures,
-    * which un-settle for a bounded number of retries (below). */
-  private val settled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Failed lazy-recovery state per dir: (attempt count, epoch-ms
-    * before which no retry runs). Failures retry with exponential
-    * backoff — 10 s, 100 s, then every 10 min — which bounds BOTH
-    * bad shapes at once: a persistently broken store (corrupt file,
-    * dead ACL) costs one failed attempt per window instead of a
-    * failed walk + log line per probe, and a store that was merely
-    * unreachable for a burst (object-store throttling) recovers at
-    * the next window instead of being settled dead for the JVM's
-    * lifetime — a hard attempt cap would permanently reinstate the
-    * per-probe listing tax for probe-only workloads, the exact case
-    * restart recovery exists for, off one brief outage. Probes inside
-    * the window pay one map read, nothing else. Covers BOTH failure
-    * points: the recovery refresh dying AND the marker stat itself
-    * dying (a dead ACL usually breaks the stat too). A successful
-    * [[refresh]] clears the entry and re-arms cleanly. */
-  private val recoveryBackoff =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
-
-  private[graft] def backoffMs(attempt: Int): Long =
-    // the schedule is exactly 10 s / 100 s / 600 s-forever, so write it
-    // as a table instead of computing a power: the r13 formula
-    // (10000L * pow(10, attempt-1).toLong) overflowed Long at
-    // attempt >= 20 (~2.8 h of persistent failure), wrapped the window
-    // to -10000 ms — i.e. into the PAST — and degraded the backoff
-    // into the per-probe retry storm it exists to prevent
-    // (VERDICT r13). Spec-pinned at a forced attempt=25 in
-    // StoreFsSpec's storm test.
-    if (attempt >= 3) 600000L else if (attempt == 2) 100000L else 10000L
-
-  /** Record a recovery failure: bump the attempt count, open the next
-    * backoff window, log ONCE (per attempt, not per probe), and
-    * un-settle so the next out-of-window lookup retries. */
-  private def noteRecoveryFailure(key: String, what: String,
-      e: Throwable): Unit = {
-    val prior = recoveryBackoff.get(key)
-    val n = (if (prior == null) 0 else prior._1) + 1
-    val wait = backoffMs(n)
-    recoveryBackoff.put(key, (n, System.currentTimeMillis() + wait))
-    System.err.println(
-      s"[graft] store census: restart recovery of $key failed " +
-        s"($what: ${e.getMessage}); attempt $n, serving live listings, " +
-        s"retry in ${wait / 1000} s")
-    settled.remove(key)
-    ()
-  }
-
-  /** Test hook: simulate a driver restart (fresh JVM census state). */
-  private[graft] def clearForTest(): Unit = {
-    entries.clear(); settled.clear(); recoveryBackoff.clear()
-  }
-
-  /** Test hook: force a dir's backoff window to expire NOW (keeps the
-    * attempt count), so specs can walk the retry schedule without
-    * sleeping through it. */
-  private[graft] def expireRecoveryBackoffForTest(dir: String): Unit = {
-    val (_, q) = qualified(dir)
-    val prior = recoveryBackoff.get(q.toString)
-    if (prior != null) recoveryBackoff.put(q.toString, (prior._1, 0L))
-    ()
-  }
-
-  /** Test hook: force a dir's recovery-failure attempt count, with the
-    * window re-derived from [[backoffMs]] exactly as
-    * [[noteRecoveryFailure]] would — so specs can pin HIGH-attempt
-    * behavior (the r13 power formula wrapped the window negative at
-    * attempt ≥ 20, turning the backoff into a per-probe retry storm
-    * after ~2.8 h of persistent failure) without hours of wall
-    * clock. */
-  private[graft] def forceRecoveryAttemptForTest(dir: String,
-      attempt: Int): Unit = {
-    val (_, q) = qualified(dir)
-    recoveryBackoff.put(q.toString,
-      (attempt, System.currentTimeMillis() + backoffMs(attempt)))
-    ()
-  }
-
-  /** Kill switch (`spark.graft.storeCensus.enabled=false`): every
-    * lookup misses, so reads/emptiness/file-count probes take the raw
-    * listing path while refresh/invalidate keep maintaining entries —
-    * a deployment can flip census serving off without changing any
-    * store semantics, and the probes can A/B the census itself.
-    * Resolved active-then-default, matching [[maybeRecover]]'s session
-    * resolution: a probe thread with no ACTIVE session must still see
-    * the deployment's kill switch, not treat it as unset. TOTAL by
-    * construction: lookup() is a probe path that contractually never
-    * throws, so only a case-insensitive "false" disables — any other
-    * value (a typo'd conf set programmatically, bypassing build.sbt's
-    * validation of SPARK_GRAFT_CENSUS) leaves the default ON rather
-    * than detonating .toBoolean inside a census probe far from the
-    * misconfiguration. */
-  private def enabled: Boolean =
-    !org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .flatMap(_.conf.getOption("spark.graft.storeCensus.enabled"))
-      .exists(_.equalsIgnoreCase("false"))
-
-  /** Qualified-URI key (r10's store-addressing rule: two spellings of
-    * one dir — bare path vs file: URI — must hit one entry). */
-  private def qualified(dir: String): (org.apache.hadoop.fs.FileSystem, Path) = {
+  /** Qualified-URI key: two spellings of one dir (bare path vs file:
+    * URI) are one store. */
+  private def key(dir: String): String = {
     val (fs, p) = EventStreams.storeFs(dir)
-    (fs, fs.makeQualified(p))
+    fs.makeQualified(p).toString
   }
 
-  private[graft] def lookup(dir: String): Option[Entry] = {
-    if (!enabled) None
-    else {
-      val (fs, q) = qualified(dir)
-      Option(entries.get(q.toString)).orElse(maybeRecover(fs, q))
-    }
+  private def entry(dir: String): Option[Entry] = Option(entries.get(key(dir)))
+
+  /** The store's table, if registered. */
+  private[graft] def table(dir: String): Option[String] = entry(dir).map(_.table)
+
+  /** The store frame: the catalog table when registered, else a plain
+    * `spark.read.parquet`. Callers guard emptiness (schema inference
+    * throws on a dir with no part files). */
+  private[graft] def read(sp: SparkSession, dir: String): DataFrame =
+    table(dir).fold(sp.read.parquet(dir))(sp.table)
+
+  /** A registered store's part files, from the cached index. */
+  private def files(dir: String): Option[Array[String]] =
+    entry(dir).map(e => e.sp.table(e.table).inputFiles)
+
+  /** Catalog-served emptiness — EventStreams.storeNonEmpty's fast path. */
+  private[graft] def nonEmpty(dir: String): Option[Boolean] =
+    files(dir).map(_.nonEmpty)
+
+  /** Catalog-served files-per-bucket maximum (compaction's trigger). */
+  private[graft] def maxFilesPerBucket(dir: String): Option[Int] =
+    files(dir).map(_.groupBy(f => new Path(f).getParent).valuesIterator
+      .map(_.length).foldLeft(0)(math.max))
+
+  /** Append `df` (carrying a `bucket` column) to the store: through the
+    * table once registered, by path before. */
+  private[graft] def append(df: DataFrame, dir: String): Unit = table(dir) match {
+    case Some(t) => df.write.mode("append").partitionBy("bucket").saveAsTable(t)
+    case None => df.write.partitionBy("bucket").mode("append").parquet(dir)
   }
 
-  /** Lazy restart recovery (class doc): on the first lookup miss of a
-    * dir this JVM, one marker stat decides — marked dirs were
-    * census-managed by a prior driver and rebuild through [[refresh]]
-    * (one listing + one footer, the mutation-refresh price); unmarked
-    * dirs keep live-listing semantics and are never probed again. */
-  private def maybeRecover(fs: org.apache.hadoop.fs.FileSystem,
-      q: Path): Option[Entry] = {
-    val key = q.toString
-    val sp = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    // no session → cannot pin a schema; leave the decision unsettled
-    // so a later in-session lookup can still recover
-    // inside a failure-backoff window: free miss (one map read) —
-    // neither a stat nor a walk, however often the store is probed
-    val bo = recoveryBackoff.get(key)
-    if (bo != null && System.currentTimeMillis() < bo._2) None
-    else if (sp.isEmpty || !settled.add(key)) None
-    else {
-      val marked =
-        try Right(fs.exists(new Path(q, MarkerName)))
-        catch { case scala.util.control.NonFatal(e) => Left(e) }
-      marked match {
-        case Left(e) =>
-          // the stat ITSELF failed (a dead ACL breaks this before the
-          // walk) — same backoff as a failed refresh, so neither shape
-          // degenerates into a per-probe retry storm
-          noteRecoveryFailure(key, "marker stat", e); None
-        case Right(false) => None
-        case Right(true) =>
-          // recovery rides lookup(), a pure probe path that never threw
-          // before r12 — a listing/footer error here must DEGRADE
-          // (fall back to live listing), not propagate, and must not
-          // permanently settle: refresh's failure path calls invalidate
-          // (which settles), so noteRecoveryFailure un-settles and the
-          // next out-of-window lookup retries
-          try {
-            refresh(sp.get, key)
-            Option(entries.get(key))
-          } catch { case scala.util.control.NonFatal(e) =>
-            noteRecoveryFailure(key, "refresh", e); None
-          }
-      }
-    }
-  }
-
-  /** Probe-only gauge: wall nanos of each store's most recent
-    * SUCCESSFUL [[refresh]] — the real mutation refresh, fence
-    * fan-out included (an explicit re-refresh from a probe would see
-    * zero fresh files and skip the fence entirely, measuring only the
-    * listing). Keyed per store so gates that refresh several stores
-    * per batch (st20's bands+shingles, st21's sigs+pairs) never
-    * interleave readings — StoreProbe asks for its MAIN store's
-    * value. Never consulted by any serving path; unbounded only by
-    * the number of distinct stores, the same cardinality [[entries]]
-    * already holds. */
-  private val lastRefreshNanosByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  /** The gauge for one store, in nanos; -1 before its first
-    * successful refresh in this JVM. */
-  private[graft] def lastRefreshNanos(dir: String): Long = {
-    val (_, q) = qualified(dir)
-    lastRefreshNanosByDir.getOrDefault(q.toString, -1L)
-  }
-
-  /** Monotone per-store refresh SEQUENCE — the staleness check's key
-    * (ADVICE r16): StoreProbe used to detect a moved gauge by
-    * comparing refresh DURATIONS, and two distinct refreshes with
-    * identical nano durations would falsely read as "no refresh
-    * happened". The counter is JVM-global (ticks on every successful
-    * refresh of any store) but READ per store, so "did THIS store
-    * refresh between my two snapshots" is exact. */
-  private val refreshSeqCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val lastRefreshSeqByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  /** The sequence number of one store's most recent successful
-    * refresh; -1 before its first in this JVM. Strictly increases
-    * across that store's refreshes — equality between two snapshots
-    * proves no refresh completed in between. */
-  private[graft] def lastRefreshSeq(dir: String): Long = {
-    val (_, q) = qualified(dir)
-    lastRefreshSeqByDir.getOrDefault(q.toString, -1L)
-  }
-
-  /** Re-list the store (the one metadata read a mutation pays) and
-    * install the entry. The first refresh of a non-empty store also
-    * pins the read schema via one cold resolution (one extra listing
-    * + one footer, once per store lifetime — see [[Entry]]). */
+  /** Commit-time hook after a mutation: register the store if it has
+    * part files and no table yet, else `REFRESH TABLE`; then list it
+    * once and fence the files new since the last listing. */
   private[graft] def refresh(sp: SparkSession, dir: String): Unit = {
-    val refreshT0 = System.nanoTime()
-    val (fs, q) = qualified(dir)
+    val k = key(dir)
     try {
-      val files = scala.collection.mutable.ArrayBuffer[FileStatus]()
-      var hasMarker = false
-      // listStatus walk, NOT fs.listFiles(recursive): listFiles wraps
-      // every entry in a LocatedFileStatus whose constructor forces the
-      // lazy permission load — on a RawLocalFileSystem without the
-      // Hadoop native library that is one `ls -ld` FORK PER FILE
-      // (measured ~3 ms/file: a 512-file census cost 1.9 s and grew
-      // linearly with the store — the very tax this module removes).
-      // listStatus keeps permissions lazy and nothing downstream reads
-      // them. Trade, documented: the statuses carry no block locality,
-      // so on HDFS the scan loses locality PREFERENCE (not correctness)
-      // for these bucket-probe stores — acceptable against a listing
-      // that the probe path would otherwise pay per batch. An HDFS
-      // deployment that wants the locality back flips the conf below:
-      // listLocatedStatus is one RPC per directory there (locations
-      // ride along); on a local FS it is the fork-per-file tax, hence
-      // default off.
-      // read from the PASSED session, not getActiveSession: recovery
-      // may resolve sp from getDefaultSession with no active session
-      // on this thread, and a multi-session driver must honor the
-      // caller's conf, not another session's
-      val located = sp.conf
-        .getOption("spark.graft.storeCensus.locatedStatus")
-        .exists(_.toBoolean)
-      def list(p: Path): Iterator[FileStatus] =
-        if (!located) fs.listStatus(p).iterator
-        else {
-          val it = fs.listLocatedStatus(p)
-          new Iterator[FileStatus] {
-            def hasNext = it.hasNext; def next() = it.next()
-          }
-        }
-      // skip hidden dirs exactly as Spark's own listing does: a failed
-      // append can leave an aborted job's _temporary tree behind, and
-      // its uncommitted task part-files must never enter the census (a
-      // cold read filters them; the census must answer identically)
-      def walk(p: Path, depth: Int): Unit = list(p).foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory) {
-          if (!n.startsWith("_") && !n.startsWith(".")) walk(s.getPath, depth + 1)
-        }
-        else if (n.startsWith("part-")) files += s
-        else if (depth == 0 && n == MarkerName) hasMarker = true
+      val prior = entry(dir)
+      val t = prior match {
+        case Some(e) => sp.catalog.refreshTable(e.table); Some(e.table)
+        case None if EventStreams.storeNonEmpty(dir) => Some(register(sp, k))
+        case None => None
       }
-      if (fs.exists(q)) walk(q, 0)
-      val priorEntry = Option(entries.get(q.toString))
-      val prior = priorEntry.flatMap(_.schema)
-      // schema-evolution fence (class doc): EVERY new part file must
-      // carry the pinned columns — driver-side footer reads bounded
-      // by the mutation's width (append: ≤ touched buckets; swap:
-      // ≤ buckets), never a Spark job, never listing-order-dependent
-      prior.foreach { pinned =>
-        val known = priorEntry.get.files.map(_.getPath.toString).toSet
-        val freshFiles = files.filter(f => !known.contains(f.getPath.toString))
-        if (freshFiles.nonEmpty) {
-          // the store's partition columns, derived from the listing
-          // itself (k=v path segments across ALL files) — what the
-          // root-level-file tolerance in fenceViolation compares against
-          val storeParts = files.iterator
-            .map(f => pathPartitionNames(f, q)).foldLeft(Set.empty[String])(_ ++ _)
-          fenceSchemas(sp, fs, q, freshFiles.toSeq, storeParts, pinned, dir)
-        }
+      t.foreach { t =>
+        val listed = sp.table(t).inputFiles.toSet
+        prior.foreach(p => fenceSchemas(sp, t, dir, (listed -- p.files).toSeq))
+        entries.put(k, Entry(t, listed, sp))
       }
-      val schema = prior.orElse {
-        if (files.isEmpty) None
-        else Some(sp.read.parquet(dir).schema)
-      }
-      // restart-recovery marker (class doc), detected for free during
-      // the walk; dropped once per store lifetime. The marker is an
-      // OPTIMIZATION (it only gates post-restart lazy rebuild), so a
-      // create failure must not fail the refresh — the mutation that
-      // triggered it already committed; the store is then served by
-      // raw listing after a restart until the next mutation's refresh
-      // retries the drop (the crash-window contract, spec-pinned in
-      // StoreFsSpec)
-      if (files.nonEmpty && !hasMarker) {
-        try fs.create(new Path(q, MarkerName), true).close()
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[graft] store census: could not drop restart marker in " +
-              s"$dir (${e.getMessage}); recovery re-arms at the next " +
-              "mutation's refresh")
-        }
-      }
-      entries.put(q.toString, Entry(files.toArray, schema))
-      settled.add(q.toString)
-      recoveryBackoff.remove(q.toString) // success re-arms recovery
-      lastRefreshNanosByDir.put(q.toString, System.nanoTime() - refreshT0)
-      lastRefreshSeqByDir.put(q.toString, refreshSeqCounter.incrementAndGet())
-      ()
     } catch { case e: Throwable =>
-      // a refresh that dies mid-way (listing error, fence violation,
-      // cold schema read) must not leave the PREVIOUS entry serving a
-      // store whose on-disk state already moved — drop it so reads
-      // fall back to live listings until the next successful refresh.
-      // Deliberately Throwable, not NonFatal: a fatal error (OOM mid
-      // listing) must ALSO drop the now-unknown entry before it
-      // propagates — invalidate is two map writes, safe under fatals
+      // a refresh that dies (listing error, fence violation) must not
+      // leave the table serving a store whose state is now unknown
       invalidate(dir)
       throw e
     }
   }
 
-  /** The `k=v` partition-column names on a file's path between the
-    * store root and the file — the columns the PATH contributes to
-    * the file's read schema. */
-  private def pathPartitionNames(f: FileStatus, root: Path): Set[String] = {
-    var names = Set.empty[String]
-    var p = f.getPath.getParent
-    while (p != null && p.toString != root.toString) {
-      val n = p.getName; val i = n.indexOf('=')
-      if (i > 0) names += n.substring(0, i)
-      p = p.getParent
-    }
-    names
+  private def register(sp: SparkSession, k: String): String = {
+    dropAtExit
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(k.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val t = s"default.graft_store_${md5.take(16)}"
+    sp.sql(s"DROP TABLE IF EXISTS $t")
+    sp.sql(s"CREATE TABLE $t USING parquet LOCATION '${k.replace("'", "\\'")}'")
+    sp.sql(s"ALTER TABLE $t RECOVER PARTITIONS")
+    t
   }
 
+  /** Forget the store and drop its table (the data stays) — called
+    * when a store's on-disk state is no longer known: a failed swap or
+    * append, a dying refresh, an expiry of its part files. Reads list
+    * the dir live until the next successful [[refresh]]. */
+  private[graft] def invalidate(dir: String): Unit =
+    Option(entries.remove(key(dir))).foreach(e => e.sp.sql(s"DROP TABLE IF EXISTS ${e.table}"))
+
   /** The fence's comparison rule, factored pure so it is
-    * property-testable (StoreFsSpec's ScalaCheck block). A new file
+    * property-testable (StoreFsSpec's seeded sweep). A new file
     * CONFORMS when the columns it contributes — footer fields plus
     * its path's `k=v` partition components — equal the pinned name
     * set AND every footer field's type equals the pinned type; with
     * ONE tolerance: a file whose path carries none of some store
-    * partition columns (e.g. a stray part file at the store root,
-    * which maxFilesPerBucket already tolerates) may omit exactly
-    * those columns, because a missing PATH component is a layout
-    * quirk, while an added/renamed/dropped DATA column is drift.
-    * Types are nullability-free catalogStrings (file scans force
-    * top-level fields nullable, and writers legitimately vary
-    * required/optional repetition — see [[Entry]]); path partition
-    * components contribute no footer type and stay name-checked.
-    * Returns the violation message, or None when conforming. */
+    * partition columns may omit exactly those columns, because a
+    * missing PATH component is a layout quirk, while an
+    * added/renamed/dropped DATA column is drift. Types are
+    * nullability-free catalogStrings (file scans force top-level
+    * fields nullable, and writers legitimately vary required/optional
+    * repetition); path partition components contribute no footer type
+    * and stay name-checked. Returns the violation message, or None
+    * when conforming. */
   private[graft] def fenceViolation(footerFields: Seq[(String, String)],
       filePartNames: Set[String], storePartNames: Set[String],
       pinnedTypes: Map[String, String]): Option[String] = {
     val pinned = pinnedTypes.keySet
     val found = footerFields.iterator.map(_._1).toSet ++ filePartNames
-    // partition columns this file's PATH does not carry (root-level
-    // or shallower-than-layout files) — tolerated as absent, never as
-    // renamed: any other difference is drift
+    // partition columns this file's PATH does not carry — tolerated as
+    // absent, never as renamed: any other difference is drift
     val missing = (storePartNames & pinned) -- filePartNames
     if (found != pinned && !(missing.nonEmpty && found == pinned -- missing))
       Some(
@@ -501,9 +176,8 @@ private[graft] object StoreCensus {
           s"but the store's pinned schema has " +
           s"${pinned.toSeq.sorted.mkString("[", ",", "]")}")
     else
-      // names conform — now the TYPE dimension (the r13 seam): a
-      // same-name retyped append must fail the writer's refresh, not
-      // the eventual reader's scan
+      // names conform — now the TYPE dimension: a same-name retyped
+      // append must fail the writer's refresh, not the reader's scan
       footerFields.collectFirst {
         case (n, t) if pinnedTypes.get(n).exists(_ != t) =>
           s"carries column `$n` as $t but the store's pinned schema " +
@@ -512,58 +186,42 @@ private[graft] object StoreCensus {
   }
 
   /** One file's footer top-level FIELDS — (name, Spark type) pairs,
-    * the type being what the standard parquet read path would assign
-    * (the same ParquetToSparkSchemaConverter Spark's scans use, over
-    * the footer MessageType) rendered as a nullability-free
-    * catalogString. A schema-only metadata read,
-    * tuned because the every-file fence multiplies it by the
-    * mutation's width: SKIP_ROW_GROUPS elides the row-group metadata
-    * (the bulk of a footer; measured ~9-16 ms full vs ~2.5 ms
-    * schema-only per local file), and the open goes through the RAW
-    * filesystem when the store FS is a ChecksumFileSystem wrapper
-    * (local file: is — ~1 ms vs ~2.5 ms: the crc sidecar read costs
-    * more than the footer). Skipping crc verification is safe here:
-    * a corrupted footer fails the thrift parse or the name compare —
-    * either way the refresh dies loudly and invalidates — and the
-    * actual scan path keeps its own verification. A custom InputFile
-    * (not HadoopInputFile.fromStatus, which re-resolves the FS from
-    * the path and would put the checksum wrapper back) pins the FS
-    * choice. */
+    * the type being what the standard parquet read path would assign,
+    * rendered as a nullability-free catalogString. A schema-only
+    * metadata read: SKIP_ROW_GROUPS elides the row-group metadata (the
+    * bulk of a footer), and the open goes through the RAW filesystem
+    * when the store FS is a ChecksumFileSystem wrapper (the crc
+    * sidecar read costs more than the footer; a corrupted footer still
+    * fails the thrift parse or the compare, and the scan keeps its own
+    * verification). */
   private val fenceReadOptions = org.apache.parquet.ParquetReadOptions.builder()
     .withMetadataFilter(
       org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
     .build()
 
   private def fenceFooterFields(fs: org.apache.hadoop.fs.FileSystem,
-      fresh: FileStatus,
+      file: Path,
       converter: org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter)
       : Seq[(String, String)] = {
     val readFs = fs match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
       case other => other
     }
+    val len = readFs.getFileStatus(file).getLen
     val in = new org.apache.parquet.io.InputFile {
-      override def getLength: Long = fresh.getLen
+      override def getLength: Long = len
       override def newStream(): org.apache.parquet.io.SeekableInputStream =
-        org.apache.parquet.hadoop.util.HadoopStreams.wrap(
-          readFs.open(fresh.getPath))
+        org.apache.parquet.hadoop.util.HadoopStreams.wrap(readFs.open(file))
     }
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in, fenceReadOptions)
     try {
       val fmd = reader.getFooter.getFileMetaData
-      // mirror ParquetFileFormat.readSchemaFromFooter, the function
-      // behind the pin's own schema inference: a Spark-written file
-      // embeds its exact Spark schema in the footer key-value metadata
-      // and inference PREFERS it over MessageType conversion — so the
-      // fence must too, or a conversion-conf override (binaryAsString
-      // etc.) would shift the converter away from an embedded-schema
-      // pin and fence-fail conforming Spark-written appends. Only a
-      // FOREIGN file (no embedded schema, e.g. a non-Spark writer's
-      // out-of-band append) falls through to the converter — which is
-      // built from the refreshing session's SQLConf (ADVICE r14), the
-      // same conf the pin read such files under. An unparseable
-      // embedded schema falls through to the converter rather than
-      // failing the refresh: conversion is the inference fallback too.
+      // mirror ParquetFileFormat.readSchemaFromFooter, the inference the
+      // table schema came from: a Spark-written file embeds its exact
+      // Spark schema and inference PREFERS it over MessageType
+      // conversion; only a FOREIGN file (no embedded schema) falls
+      // through to the converter, built from the refreshing session's
+      // SQLConf. An unparseable embedded schema falls through too.
       val embedded = Option(fmd.getKeyValueMetaData.get(
           org.apache.spark.sql.execution.datasources.parquet
             .ParquetReadSupport.SPARK_METADATA_KEY))
@@ -579,40 +237,21 @@ private[graft] object StoreCensus {
     } finally reader.close()
   }
 
-  /** Which schema the fence trusts for one file's footer (ADVICE
-    * r15). Spark's own inference prefers the embedded Spark schema
-    * over MessageType conversion, and so must the fence (the r15 fix
-    * — a conversion-conf override would otherwise fence conforming
-    * Spark-written appends). But an INCONSISTENT writer — footer
-    * key-value metadata claiming one set of columns while the
-    * physical MessageType carries another — could then slip a
-    * physically-drifted file past a pin its stale/forged metadata
-    * matches, and the drift would only surface at scan time, the
-    * exact seam the fence exists to close. So the embedded schema is
-    * trusted only while its top-level field NAMES agree with the
-    * physical columns; on disagreement the converted PHYSICAL schema
-    * is what the fence compares, because physical columns are what
-    * the eventual scan reads. Types are deliberately NOT
-    * cross-checked: embedded-vs-converted type spellings legitimately
-    * diverge on conforming Spark files (char/varchar are physically
-    * string, UDTs render as their sql type, int96 timestamps follow
-    * session conf), so a type compare would reintroduce the
-    * false-positive class the embedded preference removed. The
-    * remaining seam — a same-NAME physical retype under metadata that
-    * matches the pin — still surfaces only at scan time; accepted: it
-    * requires a writer that lies about its own file, and it cannot
-    * yield wrong results, only a later error. */
+  /** Which schema the fence trusts for one file's footer. The embedded
+    * Spark schema is trusted only while its top-level field NAMES agree
+    * with the physical columns; on disagreement (a writer whose footer
+    * metadata claims other columns than it wrote) the converted
+    * PHYSICAL schema is compared, because physical columns are what the
+    * scan reads. Types are not cross-checked: embedded and converted
+    * spellings legitimately differ on conforming Spark files
+    * (char/varchar, UDTs, int96 timestamps). */
   private[graft] def chooseFooterStruct(embedded: Option[StructType],
       physicalNames: Set[String], converted: => StructType): StructType =
     embedded.filter(_.fields.iterator.map(_.name).toSet == physicalNames)
       .getOrElse(converted)
 
-  /** Shared daemon pool for the fence's footer fan-out — long-lived
-    * (refresh runs per mutation for the JVM's life) so per-refresh
-    * thread spin-up never re-enters the metadata cost it exists to
-    * cut. Sized small: the reads are ~sub-ms each locally; on an
-    * object store each is a ranged GET, where the fan-out matters
-    * more. */
+  /** Shared daemon pool for the fence's footer fan-out (a ranged GET
+    * each on an object store, where the fan-out matters). */
   private lazy val fencePool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(8,
       new java.util.concurrent.ThreadFactory {
@@ -623,41 +262,31 @@ private[graft] object StoreCensus {
         }
       })
 
-  /** Footer every new file (driver-side schema-only reads on
-    * [[fencePool]]) and apply [[fenceViolation]] to each; the first
-    * drift (in path order, deterministic) throws, naming the store,
-    * the file, and both column sets. */
-  private def fenceSchemas(sp: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      freshFiles: Seq[FileStatus], storeParts: Set[String],
-      pinned: StructType, dir: String): Unit = {
-    val pinnedTypes: Map[String, String] =
-      pinned.fields.iterator.map(f => f.name -> f.dataType.catalogString).toMap
-    // one converter per refresh, shared across the pool fan-out (it is
-    // an immutable config holder; convert() is pure). Constructed from
-    // the REFRESHING SESSION's SQLConf (the same conf the pin was
-    // taken under via sp.read.parquet, and the conf the eventual scan
-    // will decode under) — NOT the no-arg defaults ctor (ADVICE r14):
-    // a session overriding a spark.sql.parquet.* conversion conf
-    // (binaryAsString, int96TimestampConversion, inferTimestampNTZ)
-    // shifts the pin but would not shift a defaults-built fence, so
-    // every post-pin refresh of a store with a conversion-affected
-    // column would fence-fail CONFORMING appends — a persistent
-    // false-positive that fails the triggering write. Spec-pinned in
-    // StoreFsSpec with a binaryAsString session whose conforming
-    // append must pass (red under the defaults ctor).
+  /** Footer every fresh file on [[fencePool]] and apply
+    * [[fenceViolation]] to each against table `t`'s schema; the first
+    * drift (in path order, deterministic) throws, naming the store, the
+    * file and both column sets. */
+  private def fenceSchemas(sp: SparkSession, t: String, dir: String,
+      fresh: Seq[String]): Unit = if (fresh.nonEmpty) {
+    val pinnedTypes: Map[String, String] = sp.table(t).schema.fields.iterator
+      .map(f => f.name -> f.dataType.catalogString).toMap
+    val parts = sp.sessionState.catalog.getTableMetadata(
+      TableIdentifier(t.stripPrefix("default."), Some("default")))
+      .partitionColumnNames.toSet
+    // from the refreshing session's SQLConf, the conf the table schema
+    // was inferred under: a defaults-built converter would disagree
+    // with it on foreign files under e.g. binaryAsString
     val converter =
       new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter(sp.sessionState.conf)
-    val ordered = freshFiles.sortBy(_.getPath.toString)
-    val checks = ordered.map { fresh =>
-      fresh -> fencePool.submit(new java.util.concurrent.Callable[Option[String]] {
-        def call(): Option[String] =
-          fenceViolation(fenceFooterFields(fs, fresh, converter),
-            pathPartitionNames(fresh, root), storeParts, pinnedTypes)
+    val (fs, _) = EventStreams.storeFs(dir)
+    val checks = fresh.sorted.map(new Path(_)).map { file =>
+      file -> fencePool.submit(new java.util.concurrent.Callable[Option[String]] {
+        def call(): Option[String] = fenceViolation(
+          fenceFooterFields(fs, file, converter), parts, parts, pinnedTypes)
       })
     }
-    checks.foreach { case (fresh, fut) =>
+    checks.foreach { case (file, fut) =>
       val violation =
         try fut.get()
         catch { case e: java.util.concurrent.ExecutionException =>
@@ -666,80 +295,11 @@ private[graft] object StoreCensus {
       violation.foreach { why =>
         throw new IllegalStateException(
           s"store census: schema drift detected in $dir — new file " +
-            s"${fresh.getPath.getName} $why. " +
+            s"${file.getName} $why. " +
             "Store schemas are immutable by contract (bucket layout and " +
             "columns are baked at creation); route an evolution through " +
             "a new store, or rebuild this one.")
       }
-    }
-  }
-
-  /** Drop the entry — called when a store's on-disk state is no
-    * longer known (a failed swap or append, a dying refresh) or the
-    * dir was mutated by a non-census path. Reads fall back to raw
-    * listing until the next successful refresh; lazy restart
-    * recovery is suppressed too (settled), because rebuilding a
-    * census from a state the caller just declared unknown would
-    * re-cache exactly that uncertainty. */
-  private[graft] def invalidate(dir: String): Unit = {
-    val (_, q) = qualified(dir)
-    entries.remove(q.toString)
-    settled.add(q.toString)
-    ()
-  }
-
-  /** Census-served emptiness — EventStreams.storeNonEmpty's fast
-    * path. */
-  private[graft] def nonEmpty(dir: String): Option[Boolean] =
-    lookup(dir).map(_.files.nonEmpty)
-
-  /** Census-served files-per-bucket maximum (compaction's trigger
-    * quantity) — driver-memory only, grouped by `bucket=` leaf dirs
-    * ONLY, matching the raw-listing fallback's semantics exactly: a
-    * stray root-level part file must not count as its own "bucket",
-    * or flipping the census kill switch would change when compaction
-    * fires for such a store. */
-  private[graft] def maxFilesPerBucket(dir: String): Option[Int] =
-    lookup(dir).map { e =>
-      e.files.iterator
-        .filter(_.getPath.getParent.getName.startsWith("bucket="))
-        .toSeq.groupBy(_.getPath.getParent).valuesIterator
-        .map(_.length).foldLeft(0)(math.max)
-    }
-
-  /** Serves exactly the census' statuses for the store root and
-    * nothing else — InMemoryFileIndex's constructor consults this
-    * cache per root path and skips the filesystem entirely on a hit.
-    * put/invalidate are no-ops: the census owns the lifecycle. */
-  private final class PinnedCache(root: Path, files: Array[FileStatus])
-      extends FileStatusCache {
-    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
-      if (path == root) Some(files) else None
-    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-    override def invalidateAll(): Unit = ()
-  }
-
-  /** The census-backed store frame: a HadoopFsRelation whose file
-    * index is the in-memory entry — no listing, no footer read, full
-    * partition-pruning semantics. Falls back to `spark.read.parquet`
-    * when the store is untracked (or tracked without a schema), so an
-    * untracked store behaves exactly as before this module existed.
-    * Callers guard emptiness (an empty tracked store has no files to
-    * mount and raw inference throws on it, same as today). */
-  private[graft] def read(sp: SparkSession, dir: String): DataFrame = {
-    val (_, q) = qualified(dir)
-    lookup(dir) match {
-      case Some(Entry(files, Some(full))) if files.nonEmpty =>
-        val idx = new InMemoryFileIndex(sp, Seq(q),
-          Map.empty[String, String], Some(full), new PinnedCache(q, files))
-        val partSchema = idx.partitionSpec().partitionColumns
-        val dataSchema = StructType(
-          full.filterNot(f => partSchema.fieldNames.contains(f.name)))
-        val rel = HadoopFsRelation(idx, partSchema, dataSchema, None,
-          new ParquetFileFormat(), Map.empty[String, String])(sp)
-        sp.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          .baseRelationToDataFrame(rel)
-      case _ => sp.read.parquet(dir)
     }
   }
 }

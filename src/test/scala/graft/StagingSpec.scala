@@ -97,4 +97,25 @@ class StagingSpec extends AnyFunSuite {
       assert(Files.exists(partial.resolve("_GRAFT_STAGED")))
     }
   }
+
+  test("a restage deletes this tag's dir over the same sources at an older stamp; dirs over other sources stay") {
+    withSource { (tag, src) =>
+      // the same file name under another root: another scale factor
+      val otherDir = Files.createTempDirectory("graft_staging_spec_other_")
+      val other = otherDir.resolve("t.parquet")
+      Files.write(other, Array[Byte](7))
+      try {
+        val calls = Array(0)
+        val old = stage(tag, src, calls)
+        val kept = stage(tag, other.toString, calls)
+        Files.write(Paths.get(src), Array[Byte](1, 2, 3, 4)) // new stamp
+        val fresh = stage(tag, src, calls)
+        assert(fresh != old && calls(0) == 3)
+        assert(!Files.exists(old), "the older stamp's dir must be deleted")
+        assert(Files.exists(kept.resolve("_GRAFT_STAGED")),
+          "a dir over other sources must survive")
+        assert(Files.exists(fresh.resolve("_GRAFT_STAGED")))
+      } finally Staging.deleteTree(otherDir.toString)
+    }
+  }
 }

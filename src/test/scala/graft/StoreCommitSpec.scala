@@ -5,6 +5,7 @@ import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stress for the store micro-batches' commit path. `st21Batch` caches
@@ -22,9 +23,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * Run alone: `sbt -batch "testOnly graft.StoreCommitSpec"` (about
   * 2 minutes).
   */
-class StoreCommitSpec extends AnyFunSuite {
+class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = Session.build(cpus = 4)
+
+  private var cachedAtStart = true
+  private var persistedAtStart = Set.empty[Int]
+  override def beforeAll(): Unit = {
+    cachedAtStart = !spark.sharedState.cacheManager.isEmpty
+    persistedAtStart = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
+  override def afterAll(): Unit =
+    StoreLeaks.check(spark, cachedAtStart, persistedAtStart)
 
   test("st21Batch commits 50 of 50 batches over its cached sigs and store slice") {
     import spark.implicits._
@@ -62,5 +72,21 @@ class StoreCommitSpec extends AnyFunSuite {
     val all = (preload +: batches).reduce(_ union _)
     assert(spark.read.parquet(sigStore).count() ==
       graft.queries.Dedup.cdcSigs(all).count())
+  }
+}
+
+/** What a store spec must not leave behind once it ran: a persisted
+  * RDD or a cached plan that was not there before it, or a running
+  * job. Snapshot-relative, since specs share one session. */
+object StoreLeaks {
+  def check(spark: SparkSession, cachedAtStart: Boolean,
+      persistedAtStart: Set[Int]): Unit = {
+    val rdds = spark.sparkContext.getPersistentRDDs
+    val left = rdds.keySet -- persistedAtStart
+    assert(left.isEmpty, s"persistent RDDs left behind: ${left.map(rdds)}")
+    assert(cachedAtStart || spark.sharedState.cacheManager.isEmpty,
+      "cached plans left behind")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a job is still active")
   }
 }

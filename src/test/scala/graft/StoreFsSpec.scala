@@ -110,15 +110,18 @@ object GraftTestFs {
   }
 }
 
-/** StoreCensus (the catalog-backed store file index) and
-  * rewriteStore's swap, specified the hard way:
+/** StoreCensus (the stores as catalog tables) and rewriteStore's
+  * swap, specified the hard way:
   *
-  *  - census reads answer EXACTLY what a cold `spark.read.parquet`
+  *  - catalog reads answer EXACTLY what a cold `spark.read.parquet`
   *    answers, across appends, a compaction swap, and a tombstone
   *    fold (the mutation-contract equivalence);
-  *  - a census-served probe frame performs ZERO filesystem metadata
-  *    calls on the store (counted by GraftTestFs, with a positive
-  *    control proving the counter sees cold reads);
+  *  - creating and planning a catalog-served probe frame performs
+  *    ZERO filesystem metadata calls on the store (counted by
+  *    GraftTestFs, with a positive control proving the counter sees
+  *    cold reads);
+  *  - an out-of-band mutation is served stale until the next refresh,
+  *    and the schema fence fails a refresh that finds a drifted file;
   *  - the swap stays data-safe under an injected failure at EVERY
   *    step — stale-cleanup delete, tmp write, rename-aside, promote
   *    (with rollback), delete-last — the store remains readable with
@@ -146,7 +149,16 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   import graft.streaming.{EventStreams => ES, StoreCensus}
 
-  override def afterAll(): Unit = { GraftTestFs.reset() }
+  private var cachedAtStart = true
+  private var persistedAtStart = Set.empty[Int]
+  override def beforeAll(): Unit = {
+    cachedAtStart = !spark.sharedState.cacheManager.isEmpty
+    persistedAtStart = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
+  override def afterAll(): Unit = {
+    GraftTestFs.reset()
+    StoreLeaks.check(spark, cachedAtStart, persistedAtStart)
+  }
 
   private def tmpDir(prefix: String): String =
     graft.core.Staging.tempAtExit(prefix)
@@ -205,14 +217,6 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cold = spark.read.parquet(store).collect().toSet
     assert(census == cold, "census/cold divergence after tombstone fold")
     assert(ES.maxFilesPerBucket(store) == 1, "fold must reset files/bucket")
-    // the HDFS-locality refresh variant (listLocatedStatus) must build
-    // an identical census
-    spark.conf.set("spark.graft.storeCensus.locatedStatus", "true")
-    try {
-      StoreCensus.refresh(spark, store)
-      assert(StoreCensus.read(spark, store).collect().toSet == cold,
-        "locatedStatus refresh must census the same files")
-    } finally spark.conf.unset("spark.graft.storeCensus.locatedStatus")
   }
 
   test("a census-served probe frame makes zero store metadata calls (cold read as positive control)") {
@@ -222,27 +226,30 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pairs = "graftfs:" + tmpDir("graft_cens0_pairs_")
     ES.st21Batch(docBatch(0 until 30), store, pairs)
     ES.st21Batch(docBatch(30 until 60), store, pairs)
-    // census-served: frame creation (listing + schema resolution in
-    // the raw path) must touch the filesystem zero times
+    assert(StoreCensus.table(store).nonEmpty, "the commits must register the store")
+    // catalog-served: creating and planning the frame (listing +
+    // schema resolution in the raw path) must touch the filesystem
+    // zero times — the commit's refresh listed every bucket
     GraftTestFs.reset()
     val frame = ES.prunedStore(spark, store, 0 until 16)
+    frame.queryExecution.executedPlan
     assert(GraftTestFs.metadataCalls(local) == 0,
-      s"census read listed the store: ${GraftTestFs.metadataCalls(local)} calls")
+      s"catalog read listed the store: ${GraftTestFs.metadataCalls(local)} calls")
     // ... and still answers correctly (the scan itself may open files)
     val rows = frame.count()
-    // positive control: the same frame cold (census dropped) MUST list
+    // positive control: the same frame cold (table dropped) MUST list
     StoreCensus.invalidate(store)
     GraftTestFs.reset()
     val coldFrame = ES.prunedStore(spark, store, 0 until 16)
     assert(GraftTestFs.metadataCalls(local) > 0,
       "counter failed to observe a cold read — the zero above proves nothing")
     assert(coldFrame.count() == rows)
-    // storeNonEmpty/maxFilesPerBucket: fallbacks list, census doesn't
+    // storeNonEmpty/maxFilesPerBucket: fallbacks list, the table doesn't
     StoreCensus.refresh(spark, store)
     GraftTestFs.reset()
     ES.storeNonEmpty(store); ES.maxFilesPerBucket(store)
     assert(GraftTestFs.metadataCalls(local) == 0,
-      "census-tracked emptiness/file-count probes must not list")
+      "registered stores' emptiness/file-count probes must not list")
   }
 
   test("a census-served probe frame still partition-prunes to the probed buckets") {
@@ -253,13 +260,13 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .withColumn("bucket", ES.bucketOf(col("k")))
         .write.partitionBy("bucket").mode("append").parquet(dir)
     }
-    // track the store — from here every read is the census relation
-    // (HadoopFsRelation over the pinned index), and the economics
-    // claim must survive the swap of file-index implementations:
-    // the bucket IN-list lands in PartitionFilters and the scan
-    // touches only the probed bucket dirs' files
+    // register the store — from here every read is the catalog table
+    // (CatalogFileIndex), and the economics claim must survive the
+    // swap of file-index implementations: the bucket IN-list lands in
+    // PartitionFilters and the scan touches only the probed bucket
+    // dirs' files
     StoreCensus.refresh(spark, dir)
-    val total = StoreCensus.lookup(dir).get.files.length
+    val total = StoreCensus.read(spark, dir).inputFiles.length
     val buckets = Seq(17).toDF("k")
       .select(ES.bucketOf(col("k")).as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
@@ -371,6 +378,7 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("failed swap invalidates the census (reads fall back, stay correct)") {
     val (store, before) = freshStore("cens")
     StoreCensus.refresh(spark, store)
+    assert(StoreCensus.nonEmpty(store).contains(true))
     val e = interceptSwapFailure(store) {
       GraftTestFs.failRenameSrcSuffix = ".compacting"
     }
@@ -382,84 +390,44 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("census survives a driver restart: probe-only reads regain zero-listing from the second read on") {
+    import spark.implicits._
     graft.functions.VectorExpressions.register(spark)
     val local = tmpDir("graft_censrec_sigs_")
     val store = "graftfs:" + local
     val pairs = "graftfs:" + tmpDir("graft_censrec_pairs_")
     ES.st21Batch(docBatch(0 until 30), store, pairs)
     ES.st21Batch(docBatch(30 until 60), store, pairs)
+    // a tombstone fold first: the swap renames the live dir aside and
+    // promotes a rewritten tree, and a restart must still find it
+    ES.deleteFromStore(spark, store, "doc_id", (0L until 10L).toDF("doc_id"))
     val cold = spark.read.parquet(store).collect().toSet
-    // simulated restart: entries are JVM memory and are gone
-    StoreCensus.clearForTest()
-    // first probe-only read pays the lazy rebuild — one marker stat +
-    // one listing + one footer, the same price a mutation refresh pays
+    // simulated restart: the driver holds no table for the store
+    StoreCensus.invalidate(store)
+    assert(StoreCensus.table(store).isEmpty)
+    // the restarted driver registers its store: CREATE TABLE … LOCATION
+    // plus RECOVER PARTITIONS, one listing
     GraftTestFs.reset()
-    val first = ES.prunedStore(spark, store, 0 until 16)
+    StoreCensus.refresh(spark, store)
     assert(GraftTestFs.metadataCalls(local) > 0,
-      "first post-restart read must rebuild (marker stat + listing)")
+      "registration must list the store")
+    val first = ES.prunedStore(spark, store, 0 until 16)
     assert(first.collect().toSet == cold)
-    // ...and from the second read on the census serves again: ZERO
-    // filesystem calls — without recovery this would be the raw
-    // per-probe listing tax forever (the r11 gap)
+    // ...and from then on the catalog serves: ZERO filesystem calls
+    // to create and plan a probe frame
     GraftTestFs.reset()
     val second = ES.prunedStore(spark, store, 0 until 16)
+    second.queryExecution.executedPlan
     assert(GraftTestFs.metadataCalls(local) == 0,
-      s"post-restart reads must be census-served again: " +
+      s"post-restart reads must be catalog-served again: " +
         s"${GraftTestFs.metadataCalls(local)} calls")
     assert(second.collect().toSet == cold)
-    // an UNMARKED dir (external writer's store) keeps live-listing
-    // semantics and pays at most one marker stat per JVM
-    import spark.implicits._
+    // a dir nobody refreshed (an external writer's) is never adopted
+    // by a read
     val ext = "graftfs:" + tmpDir("graft_censrec_ext_")
     (0L until 8L).toDF("doc_id").write.mode("overwrite").parquet(ext)
     assert(ES.storeNonEmpty(ext))
     assert(StoreCensus.nonEmpty(ext).isEmpty,
-      "an unmarked external store must not be adopted by the census")
-  }
-
-  test("the restart marker survives a compaction swap (recovery stays armed after rewrites)") {
-    import spark.implicits._
-    val (store, before) = freshStore("marker_swap")
-    StoreCensus.refresh(spark, store) // first refresh drops the marker
-    val localRoot = store.stripPrefix("graftfs:")
-    def markerOnDisk: Boolean = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(localRoot, StoreCensus.MarkerName))
-    assert(markerOnDisk, "first refresh must drop the marker")
-    // the swap renames the live dir aside (marker travels into .old and
-    // is deleted with it) and promotes the rewritten tree — the
-    // post-swap refresh must re-drop the marker or restart recovery
-    // silently dies for every compacted store
-    ES.rewriteStore(spark, store,
-      spark.read.parquet(store).filter(col("doc_id") =!= 0L))
-    assert(markerOnDisk, "post-swap refresh must re-drop the marker")
-    StoreCensus.clearForTest() // simulated restart AFTER a compaction
-    val cold = spark.read.parquet(store).collect().toSet
-    assert(StoreCensus.read(spark, store).collect().toSet == cold)
-    assert(StoreCensus.nonEmpty(store).contains(true),
-      "recovery must have re-installed the entry")
-    assert(cold == before.filterNot(_.getLong(0) == 0L))
-  }
-
-  test("refresh sequence gauge: strictly monotone per successful refresh, per store, -1 before the first (ADVICE r16)") {
-    // StoreProbe's staleness guard keys on this sequence — the old
-    // duration-compare could read two refreshes with identical nano
-    // durations as "no refresh happened" and falsely record -1
-    val (store, _) = freshStore("seq_gauge")
-    assert(StoreCensus.lastRefreshSeq(store) == -1L,
-      "untracked store must read -1")
-    StoreCensus.refresh(spark, store)
-    val s1 = StoreCensus.lastRefreshSeq(store)
-    assert(s1 >= 0L)
-    StoreCensus.refresh(spark, store)
-    val s2 = StoreCensus.lastRefreshSeq(store)
-    assert(s2 > s1,
-      "a second refresh of the SAME unchanged store must still move the sequence")
-    // per-store reads: another store's refresh never moves this one's
-    val (other, _) = freshStore("seq_gauge_other")
-    StoreCensus.refresh(spark, other)
-    assert(StoreCensus.lastRefreshSeq(store) == s2)
-    assert(StoreCensus.lastRefreshSeq(other) > s2,
-      "the counter is global, so the other store's seq is newer")
+      "an unregistered external store must not be adopted by a read")
   }
 
   test("docstring corollary pinned: out-of-band mutation of a tracked store is served stale until invalidate/refresh") {
@@ -612,10 +580,11 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Array[Byte](1, 2, 3))
     assert(!ES.storeNonEmpty(ghost),
       "uncommitted _temporary task files must not count as store content")
-    // and the census walk agrees: refresh sees no files either
+    // and refresh agrees: a store with no committed part file gets no
+    // table
     StoreCensus.refresh(spark, ghost)
-    assert(StoreCensus.nonEmpty(ghost).contains(false),
-      "census walk must skip hidden dirs exactly like the fallback")
+    assert(StoreCensus.table(ghost).isEmpty,
+      "refresh must not register a store over uncommitted files only")
   }
 
   /** Writes `df` as ONE parquet part file and moves it to
@@ -654,28 +623,22 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ES.storeNonEmpty(store), "fallback paths must still answer")
   }
 
-  test("schema fence tolerates a stray root-level part file carrying the pinned DATA columns (widened root files still fire)") {
+  test("a stray root-level part file lies outside every bucket partition: the catalog neither serves nor fences it") {
     import spark.implicits._
-    val (store, _) = freshStore("fence_root")
+    val (store, before) = freshStore("fence_root")
     StoreCensus.refresh(spark, store)
     val root = java.nio.file.Paths.get(store.stripPrefix("graftfs:"))
-    val before = StoreCensus.lookup(store).get.files.length
-    // r12's fence false-positived here: a root-level path carries no
-    // k=v components, so `found` lacked `bucket` and a schema-exact
-    // file failed as "drift" — inconsistent with maxFilesPerBucket,
-    // which tolerates stray root files by design (ADVICE r12)
+    val files = StoreCensus.read(spark, store).inputFiles.length
+    // the table's files are its partitions' files: a part file at the
+    // store ROOT is in none of them, conforming or widened
     plantPartFile((910L to 913L).map(i => (i, s"r_$i")).toDF("doc_id", "text"),
       root, "part-00000-stray-root.parquet")
-    StoreCensus.refresh(spark, store) // must NOT throw
-    assert(StoreCensus.lookup(store).get.files.length == before + 1,
-      "the stray root file must be censused, not fenced out")
-    // ...while an actually-widened root-level file is still drift
     plantPartFile((914L to 915L).map(i => (i, s"w_$i", i * 3))
         .toDF("doc_id", "text", "wide_col"),
       root, "part-00001-widened-root.parquet")
-    val e = intercept[IllegalStateException] { StoreCensus.refresh(spark, store) }
-    assert(e.getMessage.contains("schema drift") &&
-      e.getMessage.contains("wide_col"), e.getMessage)
+    StoreCensus.refresh(spark, store) // must NOT throw
+    assert(StoreCensus.read(spark, store).inputFiles.length == files)
+    assert(StoreCensus.read(spark, store).collect().toSet == before)
   }
 
   test("fence comparator laws: fires iff a non-path-explicable name OR type difference exists (seeded sweep)") {
@@ -735,8 +698,7 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val (store, _) = freshStore("fence_retype")
     StoreCensus.refresh(spark, store) // pins doc_id BIGINT, text STRING
-    val root = java.nio.file.Paths.get(store.stripPrefix("graftfs:"))
-    val b0 = root.resolve("bucket=0")
+    val b0 = java.nio.file.Paths.get(store.stripPrefix("graftfs:"), "bucket=0")
     // same names, doc_id written as INT32 — r13's name-only fence let
     // this into the census and the failure surfaced later as a scan
     // decode error (mutation: drop fenceViolation's type pass — this
@@ -750,13 +712,6 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(StoreCensus.nonEmpty(store).isEmpty,
       "a type-drift violation must invalidate the entry")
     assert(ES.storeNonEmpty(store), "fallback paths must still answer")
-    // the root-level NAME tolerance never excuses a retype either
-    java.nio.file.Files.delete(b0.resolve("part-00000-retyped.parquet"))
-    StoreCensus.refresh(spark, store) // back to a clean pin
-    plantPartFile((924 to 925).map(i => (i, s"rr_$i")).toDF("doc_id", "text"),
-      root, "part-00001-retyped-root.parquet")
-    val e2 = intercept[IllegalStateException] { StoreCensus.refresh(spark, store) }
-    assert(e2.getMessage.contains("doc_id"), e2.getMessage)
   }
 
   /** A parquet file written through parquet-hadoop's Group API — a
@@ -794,18 +749,18 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // converter with the no-arg ctor in fenceSchemas — the first
     // refresh below throws.
     val store = tmpDir("graft_fence_foreign_")
-    val root = java.nio.file.Paths.get(store)
+    val root = java.nio.file.Paths.get(store, "bucket=0")
     writeForeignFile(root, "part-00000-foreign.parquet", 0 until 8)
     spark.conf.set("spark.sql.parquet.binaryAsString", "true")
     try {
       StoreCensus.refresh(spark, store)
-      assert(StoreCensus.lookup(store).get.schema.get("payload")
+      assert(StoreCensus.read(spark, store).schema("payload")
         .dataType.typeName == "string",
         "precondition: binaryAsString must shift a foreign pin to string")
-      val before = StoreCensus.lookup(store).get.files.length
+      val before = StoreCensus.read(spark, store).inputFiles.length
       writeForeignFile(root, "part-00001-foreign.parquet", 8 until 16)
       StoreCensus.refresh(spark, store) // must NOT throw
-      assert(StoreCensus.lookup(store).get.files.length == before + 1,
+      assert(StoreCensus.read(spark, store).inputFiles.length == before + 1,
         "a conforming foreign append must be censused, not fenced out")
       // ...and the fence still fires on REAL foreign drift under the
       // same overridden conf (the session converter is not a bypass)
@@ -846,17 +801,17 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.parquet.binaryAsString", "true")
     try {
       StoreCensus.refresh(spark, store)
-      assert(StoreCensus.lookup(store).get.schema.get("payload")
+      assert(StoreCensus.read(spark, store).schema("payload")
         .dataType.typeName == "binary",
         "precondition: the embedded Spark schema must win the pin over binaryAsString")
-      val before = StoreCensus.lookup(store).get.files.length
+      val before = StoreCensus.read(spark, store).inputFiles.length
       plantPartFile((100L to 103L).map(i => (i, s"ok_$i"))
           .toDF("doc_id", "text")
           .withColumn("payload", col("text").cast("binary")),
         java.nio.file.Paths.get(store.stripPrefix("graftfs:"), "bucket=0"),
         "part-00000-conforming-binary.parquet")
       StoreCensus.refresh(spark, store) // must NOT throw
-      assert(StoreCensus.lookup(store).get.files.length == before + 1,
+      assert(StoreCensus.read(spark, store).inputFiles.length == before + 1,
         "a conforming Spark-written append must be censused, not fenced out")
       // real drift in a Spark-written append still fires: the
       // embedded schema is compared, not trusted blindly
@@ -928,224 +883,28 @@ class StoreFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!forced, "trusted-embedded path must not force the converter")
   }
 
-  test("refresh gauge is per-store: set by a successful refresh, isolated between stores, -1 before first refresh") {
-    val (a, _) = freshStore("gauge_a")
-    val (b, _) = freshStore("gauge_b")
-    assert(StoreCensus.lastRefreshNanos(a) == -1L,
-      "a never-refreshed store must read -1")
-    StoreCensus.refresh(spark, a)
-    val ga = StoreCensus.lastRefreshNanos(a)
-    assert(ga > 0L, "a successful refresh must set the gauge")
-    assert(StoreCensus.lastRefreshNanos(b) == -1L,
-      "refreshing store A must not touch store B's gauge")
-    StoreCensus.refresh(spark, b)
-    assert(StoreCensus.lastRefreshNanos(b) > 0L)
-    assert(StoreCensus.lastRefreshNanos(a) == ga,
-      "store B's refresh must not overwrite store A's reading — " +
-        "the JVM-wide gauge this replaces interleaved exactly here")
-  }
-
   test("a transient FS error during restart recovery degrades to live listing and retries — never throws from a probe, never settles permanently") {
     val (store, before) = freshStore("hiccup")
-    StoreCensus.refresh(spark, store) // drops the marker
-    StoreCensus.clearForTest()        // simulated restart
+    StoreCensus.refresh(spark, store)
+    StoreCensus.invalidate(store) // simulated restart
     val localRoot = store.stripPrefix("graftfs:")
-    // the recovery refresh's FIRST listing dies (transient); the probe
-    // read must fall back to live listing and answer — r12 threw the
-    // error out of lookup() (a pure probe path that never threw) AND
-    // permanently settled the dir via refresh's invalidate-on-failure,
-    // silently reinstating the per-probe listing tax for the JVM's
-    // lifetime (ADVICE r12, medium; mutation: remove maybeRecover's
-    // catch)
+    // the restart's registering refresh dies on a transient listing
+    // error: it throws to its caller and registers nothing...
     GraftTestFs.failListOnce = localRoot
-    val rows = StoreCensus.read(spark, store).collect().toSet
-    assert(rows == before, "hiccup read must fall back and stay correct")
-    // a later lookup — once the failure's backoff window passes
-    // (test hook; 10 s wall otherwise) — RETRIES recovery and wins...
-    StoreCensus.expireRecoveryBackoffForTest(store)
-    assert(ES.storeNonEmpty(store))
-    // ...after which reads are census-served again: FRAME CREATION
-    // makes zero metadata calls (the scan itself may open files)
+    intercept[java.io.IOException] { StoreCensus.refresh(spark, store) }
+    assert(StoreCensus.table(store).isEmpty)
+    // ...while a probe read lists the dir live and answers correctly
+    assert(StoreCensus.read(spark, store).collect().toSet == before)
+    // the next refresh registers the store, and frame creation is
+    // catalog-served again (the scan itself may open files)
+    StoreCensus.refresh(spark, store)
     GraftTestFs.reset()
     val frame = StoreCensus.read(spark, store)
+    frame.queryExecution.executedPlan
     assert(GraftTestFs.metadataCalls(localRoot) == 0,
-      s"recovery must have retried after the hiccup: " +
+      s"the retried refresh must serve from the catalog: " +
         s"${GraftTestFs.metadataCalls(localRoot)} metadata calls")
     assert(frame.collect().toSet == before)
-  }
-
-  test("recovery failures back off exponentially — no per-probe storm, never permanently dead") {
-    val (store, before) = freshStore("storm")
-    StoreCensus.refresh(spark, store) // drops the marker
-    StoreCensus.clearForTest()        // simulated restart
-    val localRoot = store.stripPrefix("graftfs:")
-    // a broken-but-marked store (dead ACL, corrupt dir): the first
-    // probe pays one failed attempt and opens a backoff window...
-    GraftTestFs.failListUnder = localRoot
-    try {
-      assert(StoreCensus.nonEmpty(store).isEmpty,
-        "attempt 1 must degrade, not serve")
-      // ...inside the window every probe is FREE (one map read):
-      // without the backoff gate every probe of a broken store
-      // re-pays a failed walk + log line forever, a worse tax than
-      // the one recovery removes (mutation: drop the window check in
-      // maybeRecover)
-      val baseline = GraftTestFs.metadataCalls(localRoot)
-      (1 to 5).foreach(_ => assert(StoreCensus.nonEmpty(store).isEmpty))
-      assert(GraftTestFs.metadataCalls(localRoot) == baseline,
-        "in-window probes must make zero filesystem calls")
-      // when the window expires the next probe RETRIES (one more
-      // attempt, longer window): persistent failure costs one attempt
-      // per window, not one per probe
-      StoreCensus.expireRecoveryBackoffForTest(store)
-      assert(StoreCensus.nonEmpty(store).isEmpty)
-      assert(GraftTestFs.metadataCalls(localRoot) > baseline,
-        "an out-of-window probe must retry recovery")
-      val after2 = GraftTestFs.metadataCalls(localRoot)
-      (1 to 5).foreach(_ => assert(StoreCensus.nonEmpty(store).isEmpty))
-      assert(GraftTestFs.metadataCalls(localRoot) == after2,
-        "the second window must gate probes like the first")
-      // HIGH-attempt regime (VERDICT r13's one bug): the r13 power
-      // formula overflowed Long at attempt >= 20 (~2.8 h of persistent
-      // failure) and wrapped the window into the PAST, so every probe
-      // of a still-broken store re-paid a failed walk — the exact
-      // storm this test exists to forbid. Force attempt 25 (seam keeps
-      // the window derivation honest: it calls backoffMs) and assert
-      // the window still gates (mutation: restore the
-      // `10000L * pow(10, attempt-1).toLong` formula — red here)
-      StoreCensus.forceRecoveryAttemptForTest(store, 25)
-      val after25 = GraftTestFs.metadataCalls(localRoot)
-      (1 to 5).foreach(_ => assert(StoreCensus.nonEmpty(store).isEmpty))
-      assert(GraftTestFs.metadataCalls(localRoot) == after25,
-        "attempt-25 in-window probes must make zero filesystem calls " +
-          "(a negative/overflowed window lands in the past and storms)")
-      // and the schedule itself is law-pinned: positive, bounded by
-      // the 10-min ceiling, and monotone across the whole attempt
-      // range a multi-day outage can reach
-      (1 to 1000).foreach { a =>
-        val w = StoreCensus.backoffMs(a)
-        assert(w > 0 && w <= 600000L, s"backoffMs($a) = $w out of band")
-        assert(w >= StoreCensus.backoffMs(math.max(1, a - 1)),
-          s"backoffMs must be monotone at $a")
-      }
-      assert(StoreCensus.backoffMs(1) == 10000L &&
-        StoreCensus.backoffMs(2) == 100000L &&
-        StoreCensus.backoffMs(3) == 600000L,
-        "the documented 10 s / 100 s / 600 s schedule must hold exactly")
-      // and when the OUTAGE clears (not the JVM), the next
-      // out-of-window probe recovers — a hard attempt cap would have
-      // settled the store dead for the JVM's lifetime off one brief
-      // outage, silently reinstating the per-probe listing tax for
-      // probe-only workloads, the exact case recovery exists for
-      // (mutation: settle permanently after N failures)
-      GraftTestFs.reset()
-      StoreCensus.expireRecoveryBackoffForTest(store)
-      assert(StoreCensus.nonEmpty(store).contains(true),
-        "recovery must succeed once the outage clears")
-      assert(StoreCensus.read(spark, store).collect().toSet == before)
-    } finally GraftTestFs.reset()
-  }
-
-  test("marker crash window pinned: a refresh that cannot drop the marker still commits; recovery re-arms at the next mutation") {
-    val (store, before) = freshStore("marker_crash")
-    val localRoot = store.stripPrefix("graftfs:")
-    def markerOnDisk: Boolean = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(localRoot, StoreCensus.MarkerName))
-    // the first refresh lists and installs the entry but dies at the
-    // marker create — the marker only gates post-restart lazy rebuild,
-    // so the refresh (and the mutation that triggered it) must still
-    // succeed (mutation: unwrap the marker create's catch)
-    GraftTestFs.failCreateUnder = StoreCensus.MarkerName
-    StoreCensus.refresh(spark, store)
-    GraftTestFs.reset()
-    assert(!markerOnDisk, "the injection must have suppressed the marker")
-    assert(StoreCensus.nonEmpty(store).contains(true),
-      "a marker-create failure must not fail the refresh")
-    // restart INSIDE the window: the store is unmarked, so reads take
-    // the correct-but-slower live-listing path — the designed shape
-    StoreCensus.clearForTest()
-    assert(StoreCensus.read(spark, store).collect().toSet == before)
-    assert(StoreCensus.nonEmpty(store).isEmpty,
-      "an unmarked store must not be adopted mid-window")
-    // the window CLOSES at the next mutation: its refresh re-drops the
-    // marker, and recovery works after the next restart — by design,
-    // not by accident
-    StoreCensus.refresh(spark, store)
-    assert(markerOnDisk, "the next refresh must re-drop the marker")
-    StoreCensus.clearForTest()
-    assert(StoreCensus.read(spark, store).collect().toSet == before)
-    assert(StoreCensus.nonEmpty(store).contains(true),
-      "recovery must be re-armed once the window closes")
-  }
-
-  test("gate-level census kill-switch equivalence: st24 end-to-end, census-on == census-off") {
-    // CENSUS_AB_r12 proved this once, manually, for all st2x gates;
-    // this is the standing in-suite analogue (VERDICT r12 item 3) so
-    // the property cannot rot between artifact rounds. One
-    // representative store gate, full pipeline — staged chunks,
-    // micro-batch ingest, compaction, store-served probes — run both
-    // ways; sorted-row equality. Mutation: a census serving a wrong
-    // file set (e.g. skip refresh after append) turns it red.
-    val sf = "/root/testdata/sf0.001"
-    assume(new java.io.File(sf).isDirectory)
-    def run(): Seq[String] =
-      ES.st24StreamAnnIndex(spark, sf).collect().map(_.toString).sorted.toSeq
-    val on = run()
-    spark.conf.set("spark.graft.storeCensus.enabled", "false")
-    val off =
-      try run()
-      finally spark.conf.unset("spark.graft.storeCensus.enabled")
-    assert(on.nonEmpty, "the gate must produce rows")
-    assert(on == off,
-      "census-on and census-off must be row-identical end-to-end")
-  }
-
-  test("gate-level census kill-switch equivalence: st26 end-to-end, census-on == census-off") {
-    // second standing gate (VERDICT r13 item 3): st24 covers the
-    // ANN-index probe shape; st26 is the TOMBSTONE FOLD — the probe
-    // shape most entangled with invalidate/refresh ordering
-    // (deleteFromStore rides rewriteStore's swap: invalidate on
-    // failure, refresh on success, then the post-delete probe must
-    // see the folded store, not a stale pre-delete census). Mutation:
-    // a census serving a wrong file set after the fold (e.g. skip
-    // rewriteStore's refresh) turns it red. sf0.01, not st24's
-    // sf0.001: the tiny corpus yields ZERO near-dup matches after the
-    // fold there, and empty==empty would pass with a broken census —
-    // the nonEmpty guard below is what makes the equivalence mean
-    // anything.
-    val sf = "/root/testdata/sf0.01"
-    assume(new java.io.File(sf).isDirectory)
-    def run(): Seq[String] =
-      ES.st26TombstoneDedup(spark, sf).collect().map(_.toString).sorted.toSeq
-    val on = run()
-    spark.conf.set("spark.graft.storeCensus.enabled", "false")
-    val off =
-      try run()
-      finally spark.conf.unset("spark.graft.storeCensus.enabled")
-    assert(on.nonEmpty, "the gate must produce rows")
-    assert(on == off,
-      "census-on and census-off must be row-identical end-to-end")
-  }
-
-  test("a garbage kill-switch conf value never throws from a census probe (default-on)") {
-    // lookup() is a probe path that contractually never throws; the
-    // r13 resolution did .toBoolean on the conf, so a value that
-    // bypassed the operator-facing env validation (set directly on
-    // the session) detonated IllegalArgumentException out of every
-    // probe. Only a case-insensitive "false" disables; anything else
-    // stays default-ON — and loudness for typos lives at the set
-    // sites (Verify/StoreProbe fail fast on non-boolean env values).
-    val (store, before) = freshStore("killswitch_garbage")
-    StoreCensus.refresh(spark, store)
-    spark.conf.set("spark.graft.storeCensus.enabled", "bogus")
-    try {
-      assert(StoreCensus.nonEmpty(store).contains(true),
-        "a garbage value must leave census serving ON, not throw")
-      assert(StoreCensus.read(spark, store).collect().toSet == before)
-      spark.conf.set("spark.graft.storeCensus.enabled", "FALSE")
-      assert(StoreCensus.nonEmpty(store).isEmpty,
-        "case-insensitive false must still disable")
-    } finally spark.conf.unset("spark.graft.storeCensus.enabled")
   }
 
   test("non-atomic-rename schemes are refused loudly unless opted in") {
