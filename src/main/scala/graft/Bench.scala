@@ -4,7 +4,14 @@ package graft
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (a bare count() would let Catalyst prune computed columns),
   * after one warmup query to absorb JVM/codegen first-run cost.
-  * Prints ONE JSON line for the driver.
+  * Prints two JSON lines on stdout (the full map, then the compact
+  * line the driver keeps) and writes no file.
+  *
+  * Environment: SPARK_GRAFT_SF_DIR (the fixture dir, default sf0.1),
+  * SPARK_GRAFT_ONLY (comma-separated name prefixes; a subset run
+  * raises no flags), SPARK_GRAFT_PRIOR_BENCH (the one record the
+  * regression flags diff against; unset → no flags), plus
+  * SPARK_GRAFT_CPUS through [[Session.cpus]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -118,36 +125,25 @@ object Bench {
     probe("end")
     // REGRESSION FLAGS: every per-query mover >1.3x AND >0.3s against
     // the flag base gets a same-boot retry, and survivors an A/B,
-    // before it is believed. BenchPrior (a pure unit, spec'd in
-    // BenchPriorSpec) picks the base: the newest prior round strictly
-    // below the current one (the driver artifact series is the round
-    // clock) of the SAME kind — local sweeps (tools/bench_local.sh
-    // exports SPARK_GRAFT_BENCH_KIND=local) diff against
-    // BENCH_r*_local.json, anything else against the driver's own
-    // round-keyed full-map sidecar, then its BENCH_r*.json — merged
-    // with the base that prior itself recorded, so the bar is the
-    // healthiest reading any earlier round achieved. A cross-kind or
-    // cross-core-count diff is environment noise, never a fallback.
-    // SPARK_GRAFT_PRIOR_BENCH names an explicit prior instead. A
-    // SPARK_GRAFT_ONLY subset run has no base (BenchPrior.flagBase).
-    val kind = sys.env.getOrElse("SPARK_GRAFT_BENCH_KIND", "driver")
-    val repoDir = new java.io.File(System.getProperty("user.dir"))
-    val repoFiles = Option(repoDir.listFiles()).toSeq.flatten.map(_.getName)
-    val sfName = BenchPrior.canonicalSf(sfDir)
-    val round = BenchPrior.currentRound(repoFiles)
+    // before it is believed. The base is the ONE record named by
+    // SPARK_GRAFT_PRIOR_BENCH (tools/bench_local.sh names
+    // BENCH_local.json), merged with the base that record carries
+    // (BenchPrior.resolvePrior, spec'd in BenchPriorSpec), so the bar
+    // is the healthiest reading any run in its chain achieved. Unset,
+    // or a record taken at another sf or core count: no flags, stated.
+    // A SPARK_GRAFT_ONLY subset run has no base (BenchPrior.flagBase).
     def readText(p: String): String = {
       val srcF = scala.io.Source.fromFile(p)
       try srcF.mkString finally srcF.close()
     }
-    val pool = sys.env.get("SPARK_GRAFT_PRIOR_BENCH").map(p => Seq(Seq(p)))
-      .getOrElse(BenchPrior.priorPool(kind, repoFiles, sfName)
-        .map(_.map(n => new java.io.File(repoDir, n).getPath)))
     val note: String => Unit = m => System.err.println(s"[bench] $m")
     val (priorPath, priorQ) = BenchPrior.flagBase(subset, note) {
-      val (p, q) = BenchPrior.resolvePriorPool(pool, sfDir, readText, note, cpus)
+      val (p, q) = sys.env.get("SPARK_GRAFT_PRIOR_BENCH").filter(_.nonEmpty)
+        .fold(("", Map.empty[String, Double]))(
+          BenchPrior.resolvePrior(_, sfDir, readText, note, cpus))
       note(
-        if (q.isEmpty) s"prior ($kind kind): none — no flags"
-        else s"prior ($kind kind): $p with its carried base — ${q.size} queries")
+        if (q.isEmpty) "prior: none — no flags"
+        else s"prior: $p with its carried base — ${q.size} queries")
       (p, q)
     }
     val flags = BenchPrior.computeFlags(priorQ, results)
@@ -179,28 +175,11 @@ object Bench {
     // Full-detail line FIRST: every query at full precision plus the
     // interleaved calibration series (repo-local sweeps capture all of
     // stdout, so nothing is lost for analysis). Rendered by the same
-    // unit that parses it next round — round-trip spec-pinned.
-    val fullLine = BenchPrior.renderFullLine(total, results, sfDir,
+    // unit that parses it when a later run names it as its prior —
+    // round-trip spec-pinned.
+    println(BenchPrior.renderFullLine(total, results, sfDir,
       calibStart, calibEnd, diskMbps, calibs.toSeq, flags, priorPath,
-      base = priorQ, retries = flagRetries, cpus = cpus)
-    println(fullLine)
-    // persist the full-precision line as the next round's driver-kind
-    // prior — round-keyed (BENCH_full_driver_r{N}_{sf}.json, ADVICE
-    // r14) so a stray same-sf run or a re-run overwrites only its own
-    // round's file and the prior stays round-over-round; never from a
-    // local sweep or a SPARK_GRAFT_ONLY subset run (a partial map
-    // would shrink next round's flag coverage)
-    if (BenchPrior.shouldWriteSidecar(kind, subset)) {
-      val fullSidecar =
-        new java.io.File(repoDir, BenchPrior.sidecarName(round, sfName))
-      try {
-        val w = new java.io.PrintWriter(fullSidecar, "UTF-8")
-        try w.println(fullLine) finally w.close()
-      } catch { case e: Throwable => // the sidecar is an optimization;
-        // a read-only checkout must not fail the bench
-        System.err.println(s"[bench] full-map sidecar write failed: ${e.getMessage}")
-      }
-    }
+      base = priorQ, retries = flagRetries, cpus = cpus))
     // Compact summary LAST: the driver keeps only the final ~2,000
     // chars of stdout, and with 125 queries the full line is ~6 KB —
     // the r2/r3 artifacts show it beheaded mid-map ("parsed": null).

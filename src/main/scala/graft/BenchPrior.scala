@@ -1,107 +1,39 @@
 package graft
 
-/** Pure prior-selection and regression-flag logic for [[Bench]],
-  * extracted into a directly-testable unit (VERDICT r14 item 3): the
-  * inline version produced two consecutive rounds of silent
-  * flag-coverage loss — r13's driver runs diffed against a slowest-20
-  * artifact, and r14's local sweeps diffed against the round's OWN
-  * committed artifact once it existed (both r14 "zero-flag healthy
-  * windows" recorded `flags_prior = BENCH_r14_local.json`, i.e.
-  * themselves; against the true r13 prior they carried 16 and 1
-  * flags). This logic decides what the whole perf discipline can see,
-  * so every rule here is spec-pinned in BenchPriorSpec, with the
-  * mutations that reproduce both historical failures asserted red.
+/** Pure flag-base and regression-flag logic for [[Bench]], a
+  * directly testable unit spec'd in BenchPriorSpec. The flag base is
+  * ONE record, the one `SPARK_GRAFT_PRIOR_BENCH` names (none when
+  * unset, so no flags), merged with the `base` it carries. A record
+  * carries its own context (`sf`, `cpus`, and the merged `base` its
+  * run flagged against), so nothing here depends on where a record
+  * sits in a file series.
   *
-  * Nothing here touches the filesystem: callers pass file NAMES (a
-  * directory listing) and a `readText` thunk, so the spec drives every
-  * branch with in-memory fixtures.
+  * Nothing here touches the filesystem: callers pass a `readText`
+  * thunk, so the spec drives every branch with in-memory fixtures.
   */
 object BenchPrior {
 
-  /** `BENCH_r{N}.json` — the driver-harness artifact series, one per
-    * round, committed at round end. This series is the repo's ROUND
-    * CLOCK: during round N the newest committed driver artifact is
-    * N-1 (locals can run ahead mid-round; driver artifacts cannot). */
-  private val DriverArtifact = "BENCH_r(\\d+)\\.json".r
-
-  /** `BENCH_r{N}_local.json` — the repo-local sweep series
-    * (tools/bench_local.sh), promoted by hand once per round. */
-  private val LocalArtifact = "BENCH_r(\\d+)_local\\.json".r
-
-  /** `BENCH_full_driver_r{N}_{sf}.json` — the full-precision 207-query
-    * sidecar a driver-kind run persists (the official BENCH_r*.json
-    * "parsed" carries only the slowest 20 — VERDICT r13 item 4).
-    * Round-keyed since r15 (ADVICE r14): a stray same-sf manual run or
-    * a re-run within a round overwrites only its OWN round's file, so
-    * the prior stays round-over-round. */
-  private val Sidecar = "BENCH_full_driver_r(\\d+)_(.+)\\.json".r
-
   /** Canonical scale-factor identity: the basename ("sf0.1"), so
     * relative/absolute/trailing-slash spellings of the same sf dir
-    * compare equal (ADVICE r14 — an exact-string compare parsed the
-    * sidecar to 0 queries on a respelled path and silently dropped
-    * flag coverage to zero). */
+    * compare equal (an exact-string compare once parsed a record to 0
+    * queries on a respelled path and silently dropped flag coverage
+    * to zero). */
   def canonicalSf(s: String): String = {
     val t = s.replace('\\', '/').reverse.dropWhile(_ == '/').reverse
     t.substring(t.lastIndexOf('/') + 1)
   }
 
-  /** The round currently being built: one past the newest committed
-    * driver artifact. No driver artifacts → round 1 (no prior exists
-    * either way). */
-  def currentRound(fileNames: Seq[String]): Int =
-    fileNames.collect { case DriverArtifact(n) => n.toInt }
-      .maxOption.getOrElse(0) + 1
-
-  /** Prior-artifact candidates for the regression flags, GROUPED BY
-    * PRIOR ROUND, newest round first; each inner list is best-first
-    * within its round.
-    *
-    * SELF-PRIOR EXCLUSION (the r14 defect): only rounds STRICTLY BELOW
-    * [[currentRound]] qualify. Once a round's own artifact is
-    * committed mid-round, a bare newest-first pick resolves the prior
-    * to the file the run promotes into, and regressions vs last round
-    * go unflagged — exactly what happened to both r14 local windows.
-    *
-    * Kind routing (VERDICT r12 item 2): local sweeps diff only against
-    * the local series; driver runs prefer the round-keyed full-map
-    * sidecar over the slowest-20 artifact WITHIN a round, and rounds
-    * stay ordered first — so a missing round-16 sidecar degrades to
-    * BENCH_r16.json's slowest 20, never silently to a stale r14
-    * sidecar. The r14-era UNKEYED sidecar name is deliberately NOT
-    * read: it carries no round, so a stale binary could write the
-    * current round's own map into it and re-open the self-prior hole
-    * through that slot. A cross-kind diff is environment noise, never
-    * a fallback. [[resolvePriorPool]] walks the groups. */
-  def priorPool(kind: String, fileNames: Seq[String],
-      sfName: String): Seq[Seq[String]] = {
-    val cur = currentRound(fileNames)
-    if (kind == "local")
-      fileNames.collect { case f @ LocalArtifact(n) => (n.toInt, f) }
-        .filter(_._1 < cur).sortBy(-_._1).map(t => Seq(t._2))
-    else {
-      // rank within a round: sidecar (full map) before artifact
-      val ranked =
-        fileNames.collect {
-          case f @ Sidecar(n, sf) if sf == sfName => (n.toInt, 0, f)
-        } ++
-        fileNames.collect { case f @ DriverArtifact(n) => (n.toInt, 1, f) }
-      ranked.filter(_._1 < cur).groupBy(_._1).toSeq.sortBy(-_._1)
-        .map(_._2.sortBy(_._2).map(_._3))
-    }
-  }
-
-  /** The node both parse accessors read: covers both artifact shapes —
-    * raw stdout sweeps carry one JSON per line (full-precision line +
-    * compact slowest-20 line — the biggest query map wins); the
-    * driver's artifact is ONE pretty-printed object whose query map
-    * sits under "parsed". Only sf-matching nodes qualify — by
-    * canonical identity ([[canonicalSf]]), so an absolute sfDir
-    * matches a sidecar that recorded a relative spelling of the same
-    * scale factor, while a genuinely different sf (a sf0.01 dev sweep
-    * vs the sf0.1 series) still filters out. ONE selection for
-    * queries AND base: the base must come from the same node whose
-    * readings it annotates, never a different line's. */
+  /** The node every accessor reads: covers both record shapes — raw
+    * stdout sweeps carry one JSON per line (full-precision line +
+    * compact slowest-20 line — the biggest query map wins); a driver
+    * artifact is ONE pretty-printed object whose query map sits under
+    * "parsed". Only sf-matching nodes qualify — by canonical identity
+    * ([[canonicalSf]]), so an absolute sfDir matches a record that
+    * wrote a relative spelling of the same scale factor, while a
+    * genuinely different sf (a sf0.01 dev sweep vs sf0.1) still
+    * filters out. ONE selection for queries, base and cpus: each must
+    * come from the same node whose readings it annotates, never a
+    * different line's. */
   private def bestNode(text: String, sfDir: String)
       : Option[com.fasterxml.jackson.databind.JsonNode] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -125,119 +57,90 @@ object BenchPrior {
       .map(e => e.getKey -> e.getValue.asDouble()).toMap
   }
 
-  /** Parse a prior artifact's text into its query→seconds map (see
+  /** Parse a record's text into its query→seconds map (see
     * [[bestNode]] for shape and sf rules). */
   def parsePriorQueries(text: String, sfDir: String): Map[String, Double] =
     bestNode(text, sfDir).map(n => nodeToMap(n.get("queries")))
       .getOrElse(Map.empty[String, Double])
 
-  /** Parse a prior artifact's recorded flag BASE — the merged
-    * per-query base the prior run itself flagged against, written by
-    * [[renderFullLine]] since r17. Pre-r17 artifacts carry no "base"
-    * → empty map (the carry starts from this round's readings).
-    * Read from the SAME node [[parsePriorQueries]] selects. */
+  /** Parse a record's flag BASE — the merged per-query base its run
+    * flagged against, written by [[renderFullLine]]. Older records
+    * carry no "base" → empty map (the carry starts from the record's
+    * readings). Read from the SAME node [[parsePriorQueries]]
+    * selects. */
   def parsePriorBase(text: String, sfDir: String): Map[String, Double] =
     bestNode(text, sfDir)
       .flatMap(n => Option(n.get("base")).filter(_.isObject))
       .map(nodeToMap).getOrElse(Map.empty[String, Double])
 
-  /** Walk the candidate list (paths, best first) and return the first
-    * that parses to a NON-EMPTY sf-matching query map, with (path,
-    * map); corrupt or empty candidates degrade to the next with a loud
-    * note instead of silently zeroing flag coverage (ADVICE r14 — the
-    * pre-r15 code took exactly one candidate and ate its failure).
-    * All-bad → ("", empty): no prior, no flags, stated. */
-  def resolvePrior(candidates: Seq[String], sfDir: String,
-      readText: String => String,
-      note: String => Unit = _ => ()): (String, Map[String, Double]) =
-    candidates.iterator.map { p =>
-      val m =
-        try {
-          val parsed = parsePriorQueries(readText(p), sfDir)
-          if (parsed.isEmpty) note(
-            s"prior candidate has no sf-matching query map ($p) — trying next")
-          parsed
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            note(s"prior candidate unreadable ($p): ${e.getMessage}")
-            Map.empty[String, Double]
-        }
-      (p, m)
-    }.find(_._2.nonEmpty).getOrElse(("", Map.empty[String, Double]))
-
-  /** The flag base: the NEWEST prior round that resolves
-    * ([[resolvePrior]] within its group; a round whose every candidate
-    * is corrupt or sf-mismatched falls through to the next older
-    * round, ADVICE r16), merged per query with that artifact's own
-    * carried `base` map by the MIN of positive readings.
+  /** The flag base: the record at `path` merged per query with the
+    * `base` it carries, by the MIN of positive readings. Returns
+    * (path, merged map), or ("", empty) with one note when the record
+    * is unreadable, has no non-empty sf-matching query map, or was
+    * recorded at another core count — never a silent zero-coverage
+    * base.
     *
-    * Why min (VERDICT r15 item 1): a prior recorded in a degraded
-    * window (r15's driver sidecar: q69 at 18.40 s vs its healthy 0.52)
-    * cannot produce false flags — it MASKS true ones, the worse
-    * direction for a regression gate. Failed runs (negative seconds)
-    * never participate, so a query that failed once but ran healthily
-    * elsewhere still flags against the healthy reading.
+    * Why min: a record taken in a degraded window (q69 at 18.40 s vs
+    * its healthy 0.52) cannot produce false flags — it MASKS true
+    * ones, the worse direction for a regression gate. Failed runs
+    * (negative seconds) never participate, so a query that failed once
+    * but ran healthily elsewhere still flags against the healthy
+    * reading.
     *
-    * Why one prior is enough (BASE CARRY, VERDICT r16 item 3): each
-    * run RECORDS the merged base it flagged against (the `"base"` map
+    * Why one record is enough (BASE CARRY): each run RECORDS the
+    * merged base it flagged against (the `"base"` map
     * [[renderFullLine]] writes), so base_N = min(readings_{N−1},
     * base_{N−1}) holds, transitively, the healthiest reading every
-    * earlier round achieved; the bar stays monotone across any streak
-    * of bad weather. The deliberate trade: a slowdown ACCEPTED on
-    * purpose keeps flagging until a later prior records it — a flag
-    * is a to-verify marker, never a verdict.
+    * earlier run achieved; the bar stays monotone across any streak
+    * of bad weather, and a record that is the run's own earlier,
+    * regressed reading still carries the healthy bar it flagged
+    * against. The deliberate trade: a slowdown ACCEPTED on purpose
+    * keeps flagging until a later record resets the chain — a flag is
+    * a to-verify marker, never a verdict.
     *
-    * Core count: a prior that records a `cpus` other than this run's
-    * (both known) is machine shape, not weather — stated, and it
-    * yields no base (no flags, and the carry restarts from this run's
-    * readings). Older rounds are not tried instead: they predate the
-    * field and cannot prove their core count.
-    *
-    * Returns (path merged, merged map); ("", empty) when nothing
-    * resolves or the core count differs. */
-  def resolvePriorPool(pool: Seq[Seq[String]], sfDir: String,
+    * Core count: a record whose `cpus` differs from this run's (both
+    * known) is machine shape, not weather — stated, and it yields no
+    * base (no flags, and the carry restarts from this run's readings).
+    */
+  def resolvePrior(path: String, sfDir: String,
       readText: String => String,
       note: String => Unit = _ => (),
-      cpus: Int = 0): (String, Map[String, Double]) =
-    pool.iterator.map(g => resolvePrior(g, sfDir, readText, note))
-      .find(_._2.nonEmpty) match {
-      case None => ("", Map.empty)
-      case Some((p, readings)) =>
-        // readText already succeeded for p inside resolvePrior, but a
-        // re-read can still race a deletion; the carried base is an
-        // extra defense layer, so its failure degrades to none
-        val text = try readText(p)
-          catch { case scala.util.control.NonFatal(_) => "" }
-        val priorCpus = bestNode(text, sfDir).flatMap(n => Option(n.get("cpus")))
-          .filter(_.isInt).map(_.asInt())
-        priorCpus.filter(c => cpus > 0 && c != cpus) match {
-          case Some(c) =>
-            note(s"prior $p was recorded at $c cpus, this run at $cpus " +
-              "— no flags (a cross-core-count diff is machine shape)")
-            ("", Map.empty)
-          case None =>
-            val base = parsePriorBase(text, sfDir)
-            (p, Seq(readings, base).flatten.groupMap(_._1)(_._2)
-              .map { case (q, vs) =>
-                q -> vs.filter(_ > 0).minOption.getOrElse(-1.0) })
-        }
+      cpus: Int = 0): (String, Map[String, Double]) = {
+    val none = ("", Map.empty[String, Double])
+    val node =
+      try {
+        val n = bestNode(readText(path), sfDir).filter(_.get("queries").size() > 0)
+        if (n.isEmpty) note(s"prior $path has no sf-matching query map — no flags")
+        n
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          note(s"prior $path unreadable: ${e.getMessage} — no flags")
+          None
+      }
+    node.fold(none) { n =>
+      Option(n.get("cpus")).filter(_.isInt).map(_.asInt())
+        .filter(c => cpus > 0 && c != cpus) match {
+        case Some(c) =>
+          note(s"prior $path was recorded at $c cpus, this run at $cpus " +
+            "— no flags (a cross-core-count diff is machine shape)")
+          none
+        case None =>
+          val base = Option(n.get("base")).filter(_.isObject).map(nodeToMap)
+          (path, (nodeToMap(n.get("queries")).toSeq ++ base.toSeq.flatten)
+            .groupMap(_._1)(_._2).map { case (q, vs) =>
+              q -> vs.filter(_ > 0).minOption.getOrElse(-1.0) })
+      }
     }
+  }
 
-  /** Whether this run's full-map line may be persisted as a future
-    * round's sidecar prior: never a local-kind sweep (wrong series),
-    * never a SPARK_GRAFT_ONLY subset run (a partial map would shrink
-    * the next round's flag coverage to the subset). */
-  def shouldWriteSidecar(kind: String, subset: Option[String]): Boolean =
-    kind != "local" && fullRun(subset)
-
-  /** This run's flag base ([[resolvePriorPool]]'s result, by-name):
-    * none for a SPARK_GRAFT_ONLY subset run — so no flags and no flag
+  /** This run's flag base ([[resolvePrior]]'s result, by-name): none
+    * for a SPARK_GRAFT_ONLY subset run — so no flags and no flag
     * retries — with one note saying why. A cold subset diffed against
     * a base taken deep inside a warm full suite flags warm-up, not
     * regressions. */
   def flagBase(subset: Option[String], note: String => Unit)(
       resolve: => (String, Map[String, Double])): (String, Map[String, Double]) =
-    if (fullRun(subset)) resolve
+    if (subset.isEmpty) resolve
     else {
       note(s"subset run (SPARK_GRAFT_ONLY=${subset.getOrElse("")}): no " +
         "flags, no flag retries — a cold subset is not comparable with " +
@@ -245,19 +148,10 @@ object BenchPrior {
       ("", Map.empty)
     }
 
-  /** No SPARK_GRAFT_ONLY subset: the one predicate behind both the
-    * sidecar write and the flags. */
-  private def fullRun(subset: Option[String]): Boolean = subset.isEmpty
-
-  /** The round-keyed sidecar filename this run writes (and the next
-    * round's [[priorPool]] will prefer). */
-  def sidecarName(round: Int, sfName: String): String =
-    s"BENCH_full_driver_r${round}_$sfName.json"
-
   /** JSON string literal with full escaping (ADVICE r15): query names
     * are SparkEntry keys and prior paths are POSIX paths today, but a
-    * parse failure in this artifact silently zeroes NEXT round's flag
-    * coverage — the exact failure class this unit exists to close —
+    * parse failure in a record silently zeroes the flag coverage of
+    * every run that names it — the exact failure class this unit exists to close —
     * so the renderer must not depend on those invariants holding
     * forever. */
   private[graft] def jstr(s: String): String = {
@@ -275,7 +169,7 @@ object BenchPrior {
     * exactly), but NaN/Infinity are not JSON — they render as -1, the
     * artifact's standing failed-run sentinel, which [[computeFlags]]
     * already never flags against (ADVICE r15: a non-finite leaking
-    * into the line would fail the whole parse next round). */
+    * into the line would fail the whole record's parse). */
   private[graft] def jnum(d: Double): String =
     if (java.lang.Double.isFinite(d)) d.toString else "-1.0"
 
@@ -319,19 +213,20 @@ object BenchPrior {
       .mkString("[", ",", "]")
 
   /** The core count the readings were produced at, for both lines (0 =
-    * unknown, omitted): [[resolvePriorPool]] refuses a prior recorded
-    * at another count. */
+    * unknown, omitted): [[resolvePrior]] refuses a record taken at
+    * another count. */
   private def cpusField(cpus: Int): String =
     if (cpus > 0) s""""cpus":$cpus,""" else ""
 
-  /** Render the full-precision artifact line — the EXACT shape
-    * [[parsePriorQueries]] consumes next round. Writer and parser
+  /** Render the full-precision line — the EXACT shape
+    * [[parsePriorQueries]] consumes when a later run names this line's
+    * record as its prior. Writer and parser
     * live in this one unit so they cannot drift apart silently; the
     * round-trip law (render → parse recovers every query at full
     * precision, for the matching sf and only the matching sf) is
     * property-swept in BenchPriorSpec, including hostile names and
-    * non-finite values. `priorPath` is the prior the flag base merged
-    * ([[resolvePriorPool]]), "" for none. */
+    * non-finite values. `priorPath` is the record the flag base merged
+    * ([[resolvePrior]]), "" for none. */
   def renderFullLine(total: Double, queries: Seq[(String, Double)],
       sfDir: String, calibStart: Double, calibEnd: Double,
       diskMbps: Double, calibs: Seq[(String, Double, Double)],
@@ -347,8 +242,9 @@ object BenchPrior {
     val priorArr = Seq(priorPath).filter(_.nonEmpty).map(jstr)
       .mkString("[", ",", "]")
     // the merged base this run flagged against, sorted for stable
-    // diffs — what resolvePriorPool's base carry mins back in next
-    // round, making the bar monotone across persistent bad weather
+    // diffs — what resolvePrior's base carry mins back in when a later
+    // run names this record, making the bar monotone across
+    // persistent bad weather
     val baseObj = base.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + jnum(v) }
       .mkString("{", ",", "}")
@@ -378,7 +274,7 @@ object BenchPrior {
     * flag names while they fit. `n_flags` always carries the TRUE
     * count and `flags_note` says what was elided; the full flag set
     * with priors/ratios/retries lives on the full-precision first
-    * line and in the sidecar, so nothing is lost — only the compact
+    * line, so nothing is lost — only the compact
     * VIEW narrows. All numerics render via [[jnum]]/[[jnumF]]
     * (ADVICE r16: one non-finite through raw %f breaks the whole
     * artifact's parse). */

@@ -88,8 +88,9 @@ object Staging {
     * the layout derives from), written by `write` into a fresh,
     * existing dir unless a completed one is already there. The marker
     * holds the sources' paths, so a restage deletes the dirs this tag
-    * staged over the same paths at an older stamp; dirs over other
-    * paths (another scale factor) stay. */
+    * staged over the same paths at an older stamp, and those whose
+    * marker is empty (written before markers held paths); dirs over
+    * other paths (another scale factor) stay. */
   def ensure(tag: String, sources: String*)(write: String => Unit): String = {
     val ident = (tag +: sources.map(stamp)).mkString("\n")
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -98,14 +99,23 @@ object Staging {
     val prefix = s"graft_stage_${tag}_"
     val dir: Path = tmp.resolve(prefix + key)
     val marker = dir.resolve("_GRAFT_STAGED")
-    if (!Files.exists(marker)) {
+    val paths = sources.mkString("\n")
+    if (Files.exists(marker)) {
+      // an empty marker predates the recorded paths: record them, so a
+      // later restage can find this dir
+      if (Files.size(marker) == 0) Files.write(marker, paths.getBytes("UTF-8"))
+    } else {
       deleteTree(dir.toString)
-      val paths = sources.mkString("\n")
       Option(tmp.toFile.listFiles()).toSeq.flatten.map(_.toPath).filter { d =>
         val n = d.getFileName.toString
         n.startsWith(prefix) && n.length == prefix.length + 16 && d != dir && {
           val m = d.resolve("_GRAFT_STAGED")
-          Files.isRegularFile(m) && new String(Files.readAllBytes(m), "UTF-8") == paths
+          Files.isRegularFile(m) && {
+            val held = new String(Files.readAllBytes(m), "UTF-8")
+            // an empty marker's sources are unknown: deleting its dir
+            // costs at most one restage
+            held == paths || held.isEmpty
+          }
         }
       }.foreach(d => deleteTree(d.toString))
       Files.createDirectories(dir)

@@ -232,44 +232,6 @@ object VectorExpressions {
       copy(child = newChild)
   }
 
-  /** Character n-grams of a string in one native pass, optionally
-    * first-occurrence-distinct. Gram extraction uses
-    * `UTF8String.substringSQL` — the exact same primitive SQL
-    * `substr(text, i, n)` lowers to — so the produced strings are
-    * byte-identical to the oracle's `substr` formulation (the grams ARE
-    * oracle-visible, unlike the minhash internals). Replaces
-    * `transform(sequence(...), i -> substring(text, i, 3))`, which pays
-    * an interpreted lambda per gram and re-enters the
-    * InferFiltersFromGenerate duplication trap under explode.
-    */
-  case class CharGrams(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def dataType: DataType =
-      ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-    override protected def nullSafeEval(a: Any): Any = {
-      val s = a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      val len = s.numChars()
-      val count = math.max(0, len - n + 1)
-      if (distinct) {
-        val out = new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
-        var i = 0
-        while (i < count) { out.add(s.substringSQL(i + 1, n)); i += 1 }
-        val arr = new Array[Any](out.size)
-        val it = out.iterator(); var k = 0
-        while (it.hasNext) { arr(k) = it.next(); k += 1 }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-      } else {
-        val arr = new Array[Any](count)
-        var i = 0
-        while (i < count) { arr(i) = s.substringSQL(i + 1, n); i += 1 }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-      }
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** Character n-gram COUNTS of a string in one native pass: a map of
     * gram → occurrence count (first-occurrence key order). Emitting
     * per-document pre-combined counts instead of one row per gram
@@ -381,10 +343,9 @@ object VectorExpressions {
   }
 
   /** Distinct packed grams of a string in one native pass — the
-    * document side of t08's intersection (long-keyed twin of
-    * CharGramHashes, but collision-FREE: packing is injective, so the
-    * long intersection count equals the string intersection count
-    * exactly, no 2⁻⁶⁴ caveat).
+    * document side of t08's intersection. Packing is injective, so
+    * the long intersection count equals the string intersection count
+    * exactly (no hash-collision caveat).
     */
   case class CharGramPackedDistinct(child: Expression, n: Int)
     extends UnaryExpression
@@ -407,88 +368,20 @@ object VectorExpressions {
       copy(child = newChild)
   }
 
-  /** xxhash64 of each distinct character n-gram of a string, in one
-    * native pass. Hashing goes through Spark's own `XxHash64Function`
-    * (seed 42) so the longs are bit-identical to SQL `xxhash64(gram)` —
-    * the other side of t08's intersection is built with the SQL
-    * function, and the scores are oracle-checked. Replaces
-    * `transform(graft_trigrams_distinct(text), x -> xxhash64(x))`,
-    * which pays an interpreted lambda per gram (~10 M evals at sf0.1).
-    */
-  case class CharGramHashes(child: Expression, n: Int)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def dataType: DataType =
-      ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-    override protected def nullSafeEval(a: Any): Any = {
-      val s = a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-      val count = math.max(0, s.numChars() - n + 1)
-      val seen = new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
-      var i = 0
-      while (i < count) { seen.add(s.substringSQL(i + 1, n)); i += 1 }
-      val arr = new Array[Long](seen.size)
-      val it = seen.iterator(); var k = 0
-      while (it.hasNext) {
-        arr(k) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-          .hash(it.next(), org.apache.spark.sql.types.StringType, 42L)
-        k += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** 32-bit SimHash over a token array in one native pass: per token a
-    * polynomial hash over its characters (code points, mod 1e9+7 —
-    * matching the oracle's `ascii()`-based `list_reduce` exactly for
-    * BMP text), then per-bit ±1 votes over every occurrence, sign →
-    * bit. Replaces a tokens×32 explode (10.6 M rows at sf0.1) with one
-    * call per document; the signature is oracle-visible and the
-    * arithmetic is identical to the SQL formulation.
-    */
-  case class SimHash32(child: Expression)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
-    override protected def nullSafeEval(a: Any): Any = {
-      val arr = a.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val votes = new Array[Long](32)
-      var j = 0
-      while (j < n) {
-        val s = arr.getUTF8String(j).toString
-        var h = 7L; var i = 0
-        while (i < s.length) { h = (h * 31 + s.charAt(i).toLong) % MinHashP; i += 1 }
-        var b = 0
-        while (b < 32) {
-          votes(b) += (if (((h >> b) & 1L) == 1L) 1L else -1L)
-          b += 1
-        }
-        j += 1
-      }
-      var sig = 0L; var b = 0
-      while (b < 32) { if (votes(b) > 0) sig += 1L << b; b += 1 }
-      sig
-    }
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** 64-bit SimHash over a token array in one native pass — the
-    * scale-grade widening of SimHash32 (whose 32-bit space gives only
-    * 4×8-bit bands = 1,024 buckets total; candidate pairs measured ~9 %
-    * of ALL pairs at sf0.1, i.e. a constant fraction of N² — quadratic
-    * at 100 TB). Two independent polynomial hashes per token, each mod
-    * a prime just under 2³² (4294967291 = 2³²−5 and 4294967279 = 2³²−17,
+  /** 64-bit SimHash over a token array in one native pass (a 32-bit
+    * signature gives only 4×8-bit bands = 1,024 buckets total;
+    * candidate pairs measured ~9 % of ALL pairs at sf0.1, i.e. a
+    * constant fraction of N² — quadratic at 100 TB). Two independent
+    * polynomial hashes per token, each mod a prime just under 2³²
+    * (4294967291 = 2³²−5 and 4294967279 = 2³²−17,
     * so all 32 low bits of each are uniform): h1 (seed 7, mult 31)
     * votes bits 0–31, h2 (seed 13, mult 33) votes bits 32–63. Per-bit
     * ±1 votes over every occurrence, sign → bit — identical shape to
     * the oracle's `list_reduce`/`unnest(range(0,64))` formulation
-    * (`ascii()` per char ↔ `charAt` here: matching for BMP text, the
-    * SimHash32 convention). Bit 63 makes the signature negative as a
-    * Java long; the oracle mirrors two's complement explicitly since
-    * DuckDB rejects `1::BIGINT << 63` as overflow. With 4×16-bit bands
+    * (`ascii()` per char ↔ `charAt` here: matching for BMP text).
+    * Bit 63 makes the signature negative as a Java long; the oracle
+    * mirrors two's complement explicitly since DuckDB rejects
+    * `1::BIGINT << 63` as overflow. With 4×16-bit bands
     * the bucket space per band is 65,536 (vs 256) and the Hamming ≤ 3
     * pigeonhole guarantee is unchanged: 3 differing bits touch at most
     * 3 of the 4 bands, so some band matches exactly.
@@ -782,16 +675,8 @@ object VectorExpressions {
       es => ShingleSet(es.head, 3)),
     ("graft_lsh_bucket", "8-bit hyperplane LSH bucket",
       es => LshBucket(es.head)),
-    ("graft_trigrams", "character trigrams",
-      es => CharGrams(es.head, 3, distinct = false)),
-    ("graft_trigrams_distinct", "distinct character trigrams",
-      es => CharGrams(es.head, 3, distinct = true)),
-    ("graft_simhash32", "32-bit SimHash of a token array",
-      es => SimHash32(es.head)),
     ("graft_trigram_counts", "per-document trigram -> count map",
       es => CharGramCounts(es.head, 3)),
-    ("graft_trigram_hashes", "xxhash64 of each distinct trigram",
-      es => CharGramHashes(es.head, 3)),
     ("graft_trigram_packed_counts", "packed trigram -> count map",
       es => CharGramPackedCounts(es.head, 3)),
     ("graft_trigram_packed", "distinct order-preserving packed trigrams",

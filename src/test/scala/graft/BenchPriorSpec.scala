@@ -2,95 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Direct tests on [[BenchPrior]] — the prior-selection and flag
-  * logic that decides what the whole perf discipline can see. The
-  * inline predecessor produced two consecutive rounds of silent
-  * coverage loss (r13: driver runs diffed against a slowest-20
-  * artifact; r14: local sweeps diffed against the round's OWN
-  * committed artifact), so each historical failure is asserted red
-  * here: restoring the bare newest-first pick (dropping the
-  * strictly-below-current-round filter) fails the self-prior tests;
-  * restoring the take-one-candidate parse fails the fall-through
-  * tests; restoring the exact-string sf compare fails the
-  * canonical-sf tests.
+/** Direct tests on [[BenchPrior]] — the flag-base and flag logic
+  * that decides what the whole perf discipline can see. Each
+  * historical failure is asserted red here: restoring the exact-string
+  * sf compare fails the canonical-sf tests; dropping the carried base
+  * fails the carry and weather-defense tests (a degraded or
+  * self-regressed record would mask a real regression).
   */
 class BenchPriorSpec extends AnyFunSuite {
-
-  // a repo listing mid-round-15: driver artifacts through r14 (the
-  // round clock), local artifacts through r15 (the round's own,
-  // already promoted), both sidecar generations
-  private val midRound15 = Seq(
-    "BENCH_r13.json", "BENCH_r14.json",
-    "BENCH_r13_local.json", "BENCH_r14_local.json", "BENCH_r15_local.json",
-    "BENCH_full_driver_r14_sf0.1.json", "BENCH_full_driver_r15_sf0.1.json",
-    "BENCH_full_driver_r14_sf0.01.json",
-    "CORRECTNESS_r14.json", "SURVEY.md", "src")
-
-  test("currentRound: one past the newest driver artifact; locals and sidecars are not the clock") {
-    assert(BenchPrior.currentRound(midRound15) == 15)
-    assert(BenchPrior.currentRound(Seq("BENCH_r3.json", "BENCH_r14.json")) == 15)
-    // locals running ahead must not advance the clock
-    assert(BenchPrior.currentRound(
-      Seq("BENCH_r14.json", "BENCH_r15_local.json",
-        "BENCH_full_driver_r15_sf0.1.json")) == 15)
-    assert(BenchPrior.currentRound(Seq("SURVEY.md")) == 1)
-    assert(BenchPrior.currentRound(Nil) == 1)
-  }
-
-  test("local kind: self-prior excluded — the r14 defect") {
-    // during round 15, with the round's own BENCH_r15_local.json
-    // already committed, the prior must be r14_local, never r15_local
-    val c = BenchPrior.priorPool("local", midRound15, "sf0.1").flatten
-    assert(c == Seq("BENCH_r14_local.json", "BENCH_r13_local.json"),
-      s"a bare newest-first pick would put BENCH_r15_local.json (self) first; got $c")
-  }
-
-  test("local kind: only the local series, never driver artifacts or sidecars") {
-    val c = BenchPrior.priorPool("local",
-      Seq("BENCH_r14.json", "BENCH_full_driver_r14_sf0.1.json"), "sf0.1")
-    assert(c.isEmpty, s"cross-kind priors are noise, not a fallback; got $c")
-  }
-
-  test("driver kind: round-keyed sidecar preferred, self-round excluded, sf filtered, artifact fallback ordered") {
-    val c = BenchPrior.priorPool("driver", midRound15, "sf0.1").flatten
-    assert(c == Seq(
-      "BENCH_full_driver_r14_sf0.1.json", // newest prior-round sidecar, right sf
-      "BENCH_r14.json", "BENCH_r13.json"), // slowest-20 artifacts, newest first
-      s"got $c")
-    assert(!c.contains("BENCH_full_driver_r15_sf0.1.json"),
-      "the current round's own sidecar (a re-run or stray same-sf run) must never be the prior")
-    assert(!c.contains("BENCH_full_driver_r14_sf0.01.json"),
-      "another scale factor's sidecar must never be the prior")
-  }
-
-  test("priorPool: candidates grouped by prior round, newest first; one group per round, the sidecar ahead of its round's artifact") {
-    val pool = BenchPrior.priorPool("driver", midRound15, "sf0.1")
-    assert(pool == Seq(
-      Seq("BENCH_full_driver_r14_sf0.1.json", "BENCH_r14.json"),
-      Seq("BENCH_r13.json")), s"got $pool")
-    // local kind: one candidate per round
-    assert(BenchPrior.priorPool("local", midRound15, "sf0.1") ==
-      Seq(Seq("BENCH_r14_local.json"), Seq("BENCH_r13_local.json")))
-  }
-
-  test("driver kind: candidates ordered by round first — a missing newest sidecar degrades to that round's artifact, never to an older sidecar") {
-    // independent-review finding on the first r15 cut: ranking ALL
-    // sidecars ahead of ALL artifacts made a missing r16 sidecar fall
-    // back to a three-round-stale r14 sidecar instead of r16's own
-    // slowest-20 artifact
-    val files = Seq("BENCH_r13.json", "BENCH_r14.json", "BENCH_r16.json",
-      "BENCH_full_driver_r14_sf0.1.json") // r16 sidecar never written
-    val c = BenchPrior.priorPool("driver", files, "sf0.1").flatten
-    assert(c == Seq("BENCH_r16.json", // round beats sidecar-ness…
-      "BENCH_full_driver_r14_sf0.1.json", "BENCH_r14.json", // …within a round the full map wins
-      "BENCH_r13.json"), s"got $c")
-  }
-
-  test("driver kind: the legacy unkeyed sidecar name is never read (it carries no round, so it could self-prior)") {
-    val files = Seq("BENCH_r14.json", "BENCH_full_driver_sf0.1.json")
-    assert(BenchPrior.priorPool("driver", files, "sf0.1") ==
-      Seq(Seq("BENCH_r14.json")))
-  }
 
   test("canonicalSf: absolute, relative, and trailing-slash spellings collapse to the basename") {
     for (s <- Seq("/root/testdata/sf0.1", "sf0.1", "/root/testdata/sf0.1/",
@@ -128,36 +47,38 @@ class BenchPriorSpec extends AnyFunSuite {
   }
 
   test("resolvePrior: corrupt and sf-mismatched candidates degrade to the next, loudly") {
+    // the flag base is one named record, so "the next" is no base: a
+    // missing, corrupt, sf-mismatched or empty record gives nothing and
+    // one note naming it, while a good record still resolves
     val texts = Map(
       "corrupt.json" -> "not json at all {{{",
       "wrong_sf.json" -> """{"queries":{"q1":9.9},"sf":"sf0.01"}""",
+      "empty.json" -> """{"queries":{},"sf":"sf0.1"}""",
       "good.json" -> """{"queries":{"q1":1.0,"q2":2.0},"sf":"sf0.1"}""")
-    val notes = scala.collection.mutable.ListBuffer[String]()
     val reader: String => String =
       p => texts.getOrElse(p, throw new java.io.FileNotFoundException(p))
-    val (path, m) = BenchPrior.resolvePrior(
-      Seq("missing.json", "corrupt.json", "wrong_sf.json", "good.json"),
-      "/root/testdata/sf0.1", reader, notes += _)
+    for (p <- Seq("missing.json", "corrupt.json", "wrong_sf.json", "empty.json")) {
+      val notes = scala.collection.mutable.ListBuffer[String]()
+      val (path, m) = BenchPrior.resolvePrior(p, "/root/testdata/sf0.1",
+        reader, notes += _)
+      assert(path == "" && m.isEmpty, p)
+      // silence was the failure: a named record that yields nothing
+      // says so, naming the file
+      assert(notes.size == 1 && notes.head.contains(p), notes.mkString("; "))
+    }
+    val notes = scala.collection.mutable.ListBuffer[String]()
+    val (path, m) = BenchPrior.resolvePrior("good.json", "/root/testdata/sf0.1",
+      reader, notes += _)
     assert(path == "good.json" && m == Map("q1" -> 1.0, "q2" -> 2.0))
-    // every skipped candidate is noted (missing→unreadable,
-    // corrupt→no map, wrong sf→no map); silence was the pre-r15 bug
-    assert(notes.size == 3, notes.mkString("; "))
-    assert(notes.exists(_.contains("missing.json")))
-    assert(notes.exists(_.contains("wrong_sf.json")))
+    assert(notes.isEmpty, notes.mkString("; "))
   }
 
   test("resolvePrior: all candidates bad → no prior, no flags, stated") {
-    val (path, m) = BenchPrior.resolvePrior(
-      Seq("a", "b"), "sf0.1", _ => "garbage", _ => ())
+    val notes = scala.collection.mutable.ListBuffer[String]()
+    val (path, m) = BenchPrior.resolvePrior("a", "sf0.1", _ => "garbage", notes += _)
     assert(path == "" && m.isEmpty)
     assert(BenchPrior.computeFlags(m, Seq("q1" -> 100.0)).isEmpty)
-  }
-
-  test("shouldWriteSidecar: never local kind, never a subset run") {
-    assert(BenchPrior.shouldWriteSidecar("driver", None))
-    assert(!BenchPrior.shouldWriteSidecar("local", None))
-    assert(!BenchPrior.shouldWriteSidecar("driver", Some("st2")))
-    assert(!BenchPrior.shouldWriteSidecar("local", Some("st2")))
+    assert(notes.size == 1 && notes.head.contains("a"), notes.mkString("; "))
   }
 
   test("flagBase: a subset run gets no base, so no flags and no flag retries, and one note; a full run resolves its prior") {
@@ -174,11 +95,6 @@ class BenchPriorSpec extends AnyFunSuite {
     val (fp, fbase) = BenchPrior.flagBase(None, notes += _)(("prior.json", prior))
     assert(fp == "prior.json" && fbase == prior && notes.isEmpty)
     assert(BenchPrior.computeFlags(fbase, results).map(_._1) == Seq("q01", "mr07"))
-  }
-
-  test("sidecarName is round-keyed and sf-keyed") {
-    assert(BenchPrior.sidecarName(15, "sf0.1") ==
-      "BENCH_full_driver_r15_sf0.1.json")
   }
 
   test("round-trip law: renderFullLine → parsePriorQueries recovers every query at full precision (seeded sweep)") {
@@ -213,31 +129,26 @@ class BenchPriorSpec extends AnyFunSuite {
   }
 
   test("weather defense: a degraded newest prior must not mask a regression the healthy round-before would flag — VERDICT r15 item 1") {
-    // the exact r15→r16 shape: the newest prior round's sidecar was
-    // recorded in a degraded window (q69 at 18.40 s; its healthy r14
-    // reading was 0.52 s). This run regresses q69 to 2.0 s — a real
+    // the exact r15→r16 shape: the named record was taken in a
+    // degraded window (q69 at 18.40 s; its healthy reading the run
+    // before was 0.52 s). This run regresses q69 to 2.0 s — a real
     // 3.8× regression vs healthy that reads as a 9× "improvement" vs
-    // the degraded prior. The r15 run recorded the base it flagged
-    // against, which holds r14's healthy reading.
-    val texts = Map(
-      "BENCH_full_driver_r15_sf0.1.json" ->
-        """{"queries":{"q69":18.40,"q01":0.9},"sf":"sf0.1","base":{"q69":0.52,"q01":0.95}}""",
-      "BENCH_full_driver_r14_sf0.1.json" ->
-        """{"queries":{"q69":0.52,"q01":0.95},"sf":"sf0.1"}""")
-    val files = texts.keys.toSeq ++ Seq("BENCH_r14.json", "BENCH_r15.json")
-    val pool = BenchPrior.priorPool("driver", files, "sf0.1")
-    val (path, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
-    assert(path == "BENCH_full_driver_r15_sf0.1.json")
+    // the degraded record. The degraded run recorded the base it
+    // flagged against, which holds the healthy reading.
+    val texts = Map("r15.json" ->
+      """{"queries":{"q69":18.40,"q01":0.9},"sf":"sf0.1","base":{"q69":0.52,"q01":0.95}}""")
+    val (path, merged) = BenchPrior.resolvePrior("r15.json", "sf0.1", texts(_))
+    assert(path == "r15.json")
     // the merged base is the per-query min: the healthiest reading
     assert(merged("q69") == 0.52 && merged("q01") == 0.9)
     val flags = BenchPrior.computeFlags(merged, Seq("q69" -> 2.0, "q01" -> 1.0))
     assert(flags == Seq(("q69", 0.52, 2.0)),
       "the regression must flag against the healthy carried base")
-    // the r15-era mutation, red: the newest readings alone mask it
-    val stripped = texts.updated("BENCH_full_driver_r15_sf0.1.json",
+    // the mutation, red: the record's readings alone mask it
+    val stripped = Map("r15.json" ->
       """{"queries":{"q69":18.40,"q01":0.9},"sf":"sf0.1"}""")
-    val (_, newestOnly) = BenchPrior.resolvePriorPool(pool, "sf0.1", stripped(_))
-    assert(BenchPrior.computeFlags(newestOnly, Seq("q69" -> 2.0)).isEmpty,
+    val (_, readingsOnly) = BenchPrior.resolvePrior("r15.json", "sf0.1", stripped(_))
+    assert(BenchPrior.computeFlags(readingsOnly, Seq("q69" -> 2.0)).isEmpty,
       "this is the masking failure the carried base exists to close")
   }
 
@@ -245,17 +156,16 @@ class BenchPriorSpec extends AnyFunSuite {
     val texts = Map(
       "a.json" -> """{"queries":{"q1":-1.0},"sf":"sf0.1","base":{"q1":0.5}}""",
       "b.json" -> """{"queries":{"q1":-1.0},"sf":"sf0.1"}""")
-    val (_, merged) = BenchPrior.resolvePriorPool(Seq(Seq("a.json")), "sf0.1", texts(_))
+    val (_, merged) = BenchPrior.resolvePrior("a.json", "sf0.1", texts(_))
     // min(-1, 0.5) = -1 would disable flagging for q1 entirely
     assert(merged("q1") == 0.5)
     // …and a query that failed everywhere stays unflaggable
-    val (_, allFailed) = BenchPrior.resolvePriorPool(
-      Seq(Seq("b.json")), "sf0.1", texts(_))
+    val (_, allFailed) = BenchPrior.resolvePrior("b.json", "sf0.1", texts(_))
     assert(allFailed("q1") == -1.0)
     assert(BenchPrior.computeFlags(allFailed, Seq("q1" -> 100.0)).isEmpty)
   }
 
-  test("resolvePriorPool laws: the base is the newest resolving prior merged with its carried base — union of keys, per-key min of positives, failed runs never in the min, older rounds never read (seeded sweep)") {
+  test("resolvePrior laws: the base is the named record merged with its carried base — union of keys, per-key min of positives, failed runs never in the min (seeded sweep)") {
     val rnd = new scala.util.Random(163)
     def randomMap(): Map[String, Double] =
       (0 until rnd.nextInt(6)).map { i =>
@@ -264,31 +174,21 @@ class BenchPriorSpec extends AnyFunSuite {
     def json(m: Map[String, Double]) =
       m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     (1 to 200).foreach { _ =>
-      // random pool: up to 4 round groups, each one candidate with a
-      // random reading map and carried base (negatives = failed runs);
-      // some corrupt entirely, some with no query at all
-      val nGroups = 1 + rnd.nextInt(4)
-      val texts = scala.collection.mutable.Map[String, String]()
-      val fixtures = (0 until nGroups).map { g =>
-        val name = s"r$g.json"
-        val (qs, base) = (randomMap(), randomMap())
-        texts(name) =
-          if (rnd.nextInt(5) == 0) "corrupt {{{"
-          else s"""{"queries":${json(qs)},"sf":"sf0.1","base":${json(base)}}"""
-        (name, qs, base)
-      }
-      val pool = fixtures.map(f => Seq(f._1))
-      val (path, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
-      // the prior is the first group that parses to a non-empty map
-      val first = fixtures.find { case (n, qs, _) =>
-        !texts(n).startsWith("corrupt") && qs.nonEmpty }
-      assert(path == first.fold("")(_._1))
-      val (readings, base) = first.fold(
-        (Map.empty[String, Double], Map.empty[String, Double]))(f => (f._2, f._3))
-      // law 1: keys are exactly the union of the prior's readings and
+      // a random record: a reading map and a carried base (negatives =
+      // failed runs); some corrupt entirely, some with no query at all
+      val (readings, base) = (randomMap(), randomMap())
+      val corrupt = rnd.nextInt(5) == 0
+      val text =
+        if (corrupt) "corrupt {{{"
+        else s"""{"queries":${json(readings)},"sf":"sf0.1","base":${json(base)}}"""
+      val (path, merged) = BenchPrior.resolvePrior("r.json", "sf0.1", _ => text)
+      // a record resolves when it parses to a non-empty map
+      val resolves = !corrupt && readings.nonEmpty
+      assert(path == (if (resolves) "r.json" else ""))
+      // law 1: keys are exactly the union of the record's readings and
       // its carried base
-      assert(merged.keySet == (if (readings.isEmpty) Set.empty[String]
-        else readings.keySet ++ base.keySet))
+      assert(merged.keySet == (if (resolves) readings.keySet ++ base.keySet
+        else Set.empty[String]))
       // law 2: each value is the min of the positives for that key —
       // a failed run never drags the base down; all-failed stays
       // unflaggable (-1)
@@ -296,67 +196,35 @@ class BenchPriorSpec extends AnyFunSuite {
         val vs = (readings.get(k) ++ base.get(k)).filter(_ > 0)
         assert(v == (if (vs.nonEmpty) vs.min else -1.0), s"key $k")
       }
-      // law 3: rounds older than the resolved one are never read —
-      // appending more of them changes nothing
-      val (p2, m2) = BenchPrior.resolvePriorPool(
-        pool :+ Seq("older.json"), "sf0.1",
-        texts.toMap.updated("older.json", """{"queries":{"q0":0.001},"sf":"sf0.1"}"""))
-      if (first.nonEmpty) assert(p2 == path && m2 == merged)
     }
   }
 
-  test("resolvePriorPool: the newest prior and its carried base equal the three-round min the base was once taken over (seeded sweep)") {
-    // a three-round chain as the runs themselves write it: each round
-    // renders its readings with the base it resolved from the round
-    // before, so the newest artifact carries min(all earlier rounds)
+  test("resolvePrior: a record and its carried base equal the three-run min the base was once taken over (seeded sweep)") {
+    // a three-run chain as the runs themselves write it: each run
+    // renders its readings with the base it resolved from the record
+    // before, so the newest record carries min(all earlier runs)
     val rnd = new scala.util.Random(977)
     val names = (0 until 8).map(i => s"q$i")
     (1 to 100).foreach { _ =>
       def readings() = names.filter(_ => rnd.nextInt(5) > 0).map { n =>
         n -> (if (rnd.nextInt(6) == 0) -1.0 else 0.1 + rnd.nextDouble() * 5)
       }
-      val rounds = Seq.fill(3)(readings()).filter(_.nonEmpty)
+      val runs = Seq.fill(3)(readings()).filter(_.nonEmpty)
       val texts = scala.collection.mutable.Map[String, String]()
-      rounds.zipWithIndex.foreach { case (qs, i) =>
-        val (_, base) = BenchPrior.resolvePriorPool(
-          if (i == 0) Nil else Seq(Seq(s"r${i - 1}.json")), "sf0.1", texts(_))
+      runs.zipWithIndex.foreach { case (qs, i) =>
+        val base = if (i == 0) Map.empty[String, Double]
+          else BenchPrior.resolvePrior(s"r${i - 1}.json", "sf0.1", texts(_))._2
         texts(s"r$i.json") = BenchPrior.renderFullLine(1.0, qs, "sf0.1",
           0.3, 0.3, 400.0, Nil, Nil, "", base = base)
       }
-      val newest = Seq(Seq(s"r${rounds.size - 1}.json"))
-      val (_, one) = BenchPrior.resolvePriorPool(newest, "sf0.1", texts(_))
-      val threeRoundMin = rounds.flatten.groupMap(_._1)(_._2).map {
-        case (q, vs) => q -> vs.filter(_ > 0).minOption.getOrElse(-1.0) }
-      assert(one == threeRoundMin)
+      if (runs.nonEmpty) {
+        val (_, one) = BenchPrior.resolvePrior(s"r${runs.size - 1}.json",
+          "sf0.1", texts(_))
+        val threeRunMin = runs.flatten.groupMap(_._1)(_._2).map {
+          case (q, vs) => q -> vs.filter(_ > 0).minOption.getOrElse(-1.0) }
+        assert(one == threeRunMin)
+      }
     }
-  }
-
-  test("resolvePriorPool: corrupt candidates degrade within their round, older rounds stay unread; an all-bad pool is no prior") {
-    val texts = Map(
-      "r16_sidecar" -> "garbage {{{",
-      "r16_artifact" -> """{"parsed":{"queries":{"q1":3.0},"sf":"sf0.1"}}""",
-      "r15_sidecar" -> """{"queries":{"q1":1.0,"q2":2.0},"sf":"sf0.1"}""")
-    // the corrupt r16 sidecar falls through to r16's artifact WITHIN
-    // the round group; older rounds stay unread
-    assert(BenchPrior.resolvePriorPool(
-      Seq(Seq("r16_sidecar", "r16_artifact"), Seq("r15_sidecar")),
-      "sf0.1", texts(_)) == ("r16_artifact", Map("q1" -> 3.0)))
-    val (p2, m2) = BenchPrior.resolvePriorPool(
-      Seq(Seq("x")), "sf0.1", _ => "garbage")
-    assert(p2 == "" && m2.isEmpty)
-  }
-
-  test("resolvePriorPool: a round resolving to nothing falls through to the next older round, never to no base (ADVICE r16)") {
-    val texts = Map(
-      "r16.json" -> "corrupt {{{",
-      "r15.json" -> """{"queries":{},"sf":"sf0.1"}""",
-      "r14.json" -> """{"queries":{"q1":2.0},"sf":"sf0.1"}""",
-      "r13.json" -> """{"queries":{"q1":1.0},"sf":"sf0.1"}""")
-    val pool = Seq("r16.json", "r15.json", "r14.json", "r13.json").map(Seq(_))
-    // a corrupt round and an empty one both fall through; the first
-    // round that resolves is the prior, and the rounds past it stay unread
-    assert(BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_)) ==
-      ("r14.json", Map("q1" -> 2.0)))
   }
 
   test("renderFullLine: hostile names and non-finite values still render valid JSON (ADVICE r15)") {
@@ -370,7 +238,7 @@ class BenchPriorSpec extends AnyFunSuite {
       Seq(("at\"weird", Double.NaN, 1.0)),
       Seq(("f\"lag", 0.0, 1.0)), "/p/pr\"ior.json")
     // must be ONE parseable JSON object — a parse failure here would
-    // silently zero next round's flag coverage
+    // silently zero the coverage of every run that names this record
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(line)
     assert(node.get("queries").size() == 4)
@@ -391,28 +259,24 @@ class BenchPriorSpec extends AnyFunSuite {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     assert(om.readTree(line).get("cpus").asInt() == 32)
     val texts = Map("r19.json" -> line,
-      "r18.json" -> """{"queries":{"q1":0.1},"sf":"sf0.1"}""",
       "legacy.json" -> """{"queries":{"q1":0.2},"sf":"sf0.1"}""")
-    val pool = Seq(Seq("r19.json"), Seq("r18.json"))
-    // same core count: the prior and its carried base
-    assert(BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_), cpus = 32) ==
+    // same core count: the record and its carried base
+    assert(BenchPrior.resolvePrior("r19.json", "sf0.1", texts(_), cpus = 32) ==
       ("r19.json", Map("q1" -> 0.5)))
-    // a 4-cpu run against a 32-cpu prior: no base, no flags, a note
-    // naming both counts — and no fall-through to r18, which predates
-    // the field and cannot prove its core count
+    // a 4-cpu run against a 32-cpu record: no base, no flags, a note
+    // naming both counts
     val notes = scala.collection.mutable.ListBuffer[String]()
-    val (p, m) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_), notes += _, cpus = 4)
+    val (p, m) = BenchPrior.resolvePrior("r19.json", "sf0.1", texts(_), notes += _, cpus = 4)
     assert(p == "" && m.isEmpty)
     assert(BenchPrior.computeFlags(m, Seq("q1" -> 100.0)).isEmpty)
     assert(notes.size == 1 && notes.head.contains("32") && notes.head.contains("4"),
       notes.mkString("; "))
-    // legacy artifacts (no cpus field) and an unknown run count pass
-    assert(BenchPrior.resolvePriorPool(Seq(Seq("legacy.json")), "sf0.1",
-      texts(_), cpus = 4) == ("legacy.json", Map("q1" -> 0.2)))
-    assert(BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))._1 == "r19.json")
+    // legacy records (no cpus field) and an unknown run count pass
+    assert(BenchPrior.resolvePrior("legacy.json", "sf0.1", texts(_), cpus = 4) ==
+      ("legacy.json", Map("q1" -> 0.2)))
+    assert(BenchPrior.resolvePrior("r19.json", "sf0.1", texts(_))._1 == "r19.json")
     // cpus must ride the sf-selected node, like every other accessor
-    assert(BenchPrior.resolvePriorPool(Seq(Seq("r19.json")), "sf0.01",
-      texts(_), cpus = 4)._1 == "")
+    assert(BenchPrior.resolvePrior("r19.json", "sf0.01", texts(_), cpus = 4)._1 == "")
   }
 
   test("parsePriorBase: read from the same node parsePriorQueries selects; pre-r17 artifacts carry none") {
@@ -435,37 +299,39 @@ class BenchPriorSpec extends AnyFunSuite {
   }
 
   test("base carry: three consecutive degraded rounds still flag against the rotated-out healthy reading — VERDICT r16 item 3") {
-    // the decay scenario VERDICT r16 named: r14 was the last healthy
-    // window (q1 at 0.5 s); r15–r17 all ran degraded (q1 at ~5 s).
-    // Round 18's prior is r17, three rounds past r14. Without the
-    // carry the bar inflates to a degraded reading and a real
-    // regression to 2.0 sails through; WITH it, each degraded round's sidecar recorded the
-    // merged base it flagged against (0.5, transitively from r14), and
-    // the min folds it back in.
-    def sidecar(reading: Double, base: String) =
+    // the decay scenario: r14 was the last healthy window (q1 at
+    // 0.5 s); r15–r17 all ran degraded (q1 at ~5 s). The named record
+    // is r17, three runs past r14. Without the carry the bar inflates
+    // to a degraded reading and a real regression to 2.0 sails
+    // through; WITH it, each degraded run recorded the merged base it
+    // flagged against (0.5, transitively from r14), and the min folds
+    // it back in.
+    def record(reading: Double, base: String) =
       s"""{"queries":{"q1":$reading},"sf":"sf0.1","base":$base}"""
     val texts = Map(
-      "r17.json" -> sidecar(5.2, """{"q1":0.5}"""),
-      "r16.json" -> sidecar(5.1, """{"q1":0.5}"""),
-      "r15.json" -> sidecar(5.0, """{"q1":0.5}"""))
-    val pool = Seq(Seq("r17.json"), Seq("r16.json"), Seq("r15.json"))
-    val (_, merged) = BenchPrior.resolvePriorPool(pool, "sf0.1", texts(_))
-    assert(merged("q1") == 0.5,
-      s"the carried base must survive the healthy round rotating out; got $merged")
-    assert(BenchPrior.computeFlags(merged, Seq("q1" -> 2.0)) ==
-      Seq(("q1", 0.5, 2.0)))
-    // the mutation, red: strip the carried bases (the pre-r17 shape)
-    // and the bar quietly inflates to the degraded readings' min
-    val stripped = texts.map { case (k, _) =>
-      k -> s"""{"queries":{"q1":5.0},"sf":"sf0.1"}""" }
-    val (_, decayed) = BenchPrior.resolvePriorPool(pool, "sf0.1", stripped(_))
-    assert(decayed("q1") == 5.0 &&
-      BenchPrior.computeFlags(decayed, Seq("q1" -> 2.0)).isEmpty,
-      "this is the rolling-decay failure the carry exists to close")
+      "r17.json" -> record(5.2, """{"q1":0.5}"""),
+      // the r14 defect's shape: the record is this run's OWN earlier,
+      // regressed reading (a re-run naming what the first pass wrote);
+      // that pass flagged q1 against 0.5 and recorded it, so the
+      // re-run still flags
+      "self.json" -> record(2.0, """{"q1":0.5}"""))
+    for (name <- texts.keys) {
+      val (_, merged) = BenchPrior.resolvePrior(name, "sf0.1", texts(_))
+      assert(merged("q1") == 0.5,
+        s"$name: the carried base must survive the healthy run rotating out; got $merged")
+      assert(BenchPrior.computeFlags(merged, Seq("q1" -> 2.0)) ==
+        Seq(("q1", 0.5, 2.0)), name)
+      // the mutation, red: strip the carried base (the pre-r17 shape)
+      // and the bar quietly inflates to the record's own reading
+      val stripped = texts(name).replaceAll(""","base":.*}$""", "}")
+      val (_, decayed) = BenchPrior.resolvePrior(name, "sf0.1", _ => stripped)
+      assert(decayed("q1") >= 2.0 &&
+        BenchPrior.computeFlags(decayed, Seq("q1" -> 2.0)).isEmpty,
+        s"$name: this is the masking failure the carry exists to close")
+    }
     // a failed-run sentinel in a carried base never participates
-    val withNeg = Map("r17.json" -> sidecar(5.2, """{"q1":-1.0,"q3":0.2}"""))
-    val (_, m2) = BenchPrior.resolvePriorPool(Seq(Seq("r17.json")), "sf0.1",
-      withNeg(_))
+    val withNeg = record(5.2, """{"q1":-1.0,"q3":0.2}""")
+    val (_, m2) = BenchPrior.resolvePrior("r17.json", "sf0.1", _ => withNeg)
     assert(m2("q1") == 5.2 && m2("q3") == 0.2)
   }
 
@@ -551,10 +417,9 @@ class BenchPriorSpec extends AnyFunSuite {
     val flag = om.readTree(line).get("flags").get(0)
     assert(flag.get("retry").asDouble() == 0.52 &&
       flag.get("retry_verdict").asText() == "weather")
-    // the carry, end-to-end: next round resolving THIS line as a
-    // prior must min the recorded base into its own flag base
-    val (_, merged) = BenchPrior.resolvePriorPool(
-      Seq(Seq("me.json")), "sf0.1", _ => line)
+    // the carry, end-to-end: a later run naming THIS line's record as
+    // its prior must min the recorded base into its own flag base
+    val (_, merged) = BenchPrior.resolvePrior("me.json", "sf0.1", _ => line)
     assert(merged == Map("q1" -> 0.5, "q2" -> 0.9))
   }
 

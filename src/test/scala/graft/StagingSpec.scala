@@ -118,4 +118,25 @@ class StagingSpec extends AnyFunSuite {
       } finally Staging.deleteTree(otherDir.toString)
     }
   }
+
+  test("an empty marker is rewritten with the sources' paths on reuse, and a restage deletes this tag's dirs whose marker is empty") {
+    withSource { (tag, src) =>
+      val calls = Array(0)
+      val dir = stage(tag, src, calls)
+      // a marker written before markers held the sources' paths
+      Files.write(dir.resolve("_GRAFT_STAGED"), Array.emptyByteArray)
+      assert(stage(tag, src, calls) == dir && calls(0) == 1)
+      assert(new String(Files.readAllBytes(dir.resolve("_GRAFT_STAGED")), "UTF-8") == src)
+      // an orphan of this tag, over sources no marker names
+      val orphan = Paths.get(System.getProperty("java.io.tmpdir"),
+        s"graft_stage_${tag}_0123456789abcdef")
+      Files.createDirectories(orphan)
+      Files.write(orphan.resolve("_GRAFT_STAGED"), Array.emptyByteArray)
+      Files.write(Paths.get(src), Array[Byte](1, 2, 3, 4)) // new stamp
+      val fresh = stage(tag, src, calls)
+      assert(fresh != dir && calls(0) == 2)
+      assert(!Files.exists(orphan), "a dir with an empty marker must be deleted on restage")
+      assert(!Files.exists(dir), "the older stamp's dir must be deleted")
+    }
+  }
 }
